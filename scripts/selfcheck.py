@@ -3,9 +3,13 @@
 in DuckDB over the sf tables and compare to the Spark result parquet
 written by graft.Verify. Usage:
     python3 scripts/selfcheck.py <sfDir> <verifyOutDir>
+
+SPARK_GRAFT_ONLY=q250,q255 checks only the queries Verify ran under the
+same filter (its prefix rule); the rest are counted on one SKIP line.
 """
 import glob
 import json
+import os
 import sys
 
 import duckdb
@@ -21,14 +25,28 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df.reset_index(drop=True)
 
 
+def selection():
+    """Verify's SPARK_GRAFT_ONLY contract: None when unset, else the set
+    of comma-separated, trimmed, non-empty name prefixes."""
+    env = os.environ.get("SPARK_GRAFT_ONLY")
+    if env is None:
+        return None
+    return {p.strip() for p in env.split(",") if p.strip()}
+
+
+def selected(name: str, only) -> bool:
+    return only is None or any(name.startswith(p) for p in only)
+
+
 def main(sf_dir: str, out_dir: str) -> int:
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    only = selection()
     n_pass = n_fail = n_missing = 0
     results = {}
-    for name in sorted(oracle):
+    for name in sorted(n for n in oracle if selected(n, only)):
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not files:
             print(f"FAIL {name}: no spark result written")
@@ -80,7 +98,7 @@ def main(sf_dir: str, out_dir: str) -> int:
     # rows-only queries (no oracle): check rows > 0
     for path in sorted(glob.glob(f"{out_dir}/*/")):
         name = path.rstrip("/").split("/")[-1]
-        if name in oracle:
+        if name in oracle or not selected(name, only):
             continue
         files = glob.glob(f"{path}/*.parquet")
         n = len(con.sql(f"SELECT * FROM '{path}/*.parquet'").df()) if files else 0
@@ -90,13 +108,16 @@ def main(sf_dir: str, out_dir: str) -> int:
             n_pass += 1
         else:
             n_fail += 1
+    n_skip = sum(not selected(n, only) for n in oracle)
+    if n_skip:
+        print(f"SKIP {n_skip} (SPARK_GRAFT_ONLY)")
     print(f"== {n_pass} pass / {n_fail} fail")
     # Machine-readable mirror of the driver gate's per-query shape, so
     # RegistryDoc can label queries added SINCE the last driver gate
     # from local evidence instead of leaving them "pending". Written
     # only for a FULL run (a SPARK_GRAFT_ONLY-filtered Verify leaves
     # most queries unwritten, which must not read as evidence).
-    if n_missing == 0 and len(results) == len(oracle):
+    if only is None and n_missing == 0 and len(results) == len(oracle):
         json.dump(
             {"sf_dir": sf_dir, "queries": results},
             open("SELFCHECK.json", "w"),

@@ -3298,6 +3298,12 @@ object SimilarityOps {
     * stage, top-3 page) — consumers that need a deeper served page
     * (q244's 20-row fusion leg, q245's graded top-10) widen both; the
     * ADC stage must stay >= the page or the refine starves.
+    *
+    * EAGER AND POINT-IN-TIME: the call runs the ADC stage and collects
+    * the candidates when the frame is BUILT, not when it executes — the
+    * returned frame re-ranks that fixed candidate set, so it never sees
+    * a later codes commit. Build it per request: under a live stream,
+    * once per batch, after [[graft.operators.TieredIndex.fenceAligned]].
     */
   private[graft] def ivfadcServe(
       s: SparkSession, root: String, q: DataFrame, iv: DataFrame, k: Int,

@@ -14,8 +14,9 @@ import org.apache.spark.sql.streaming.OutputMode
   * result, which must equal the batch semantics the DuckDB oracle
   * expresses. The index lifecycles (dedup q174/q176, ANN
   * q210-q228/q241/q249/q253, lexical q236/q237/q246/q248, hybrid
-  * q250) share the staging helpers below and the TieredIndex
-  * exactly-once batch watermarks.
+  * q250/q255/q257-q262/q265) share the staging helpers below and the
+  * TieredIndex exactly-once batch watermarks; the dual-index hybrid
+  * CDC lifecycles all run through ONE runner, [[runHybrid]].
   */
 object StreamOps {
 
@@ -79,10 +80,17 @@ object StreamOps {
     * the resumed micro-batch ids continue exactly where the offsets
     * log stopped.
     */
-  private def stageBatchSlices(
+  private[streaming] def stageBatchSlices(
       df: org.apache.spark.sql.DataFrame, work: String,
       batchExpr: org.apache.spark.sql.Column, slices: Seq[Int]): String = {
     val incoming = s"$work/incoming"
+    // a restaged slice would replay as a NEW micro-batch (the file
+    // source tracks files, not slices): refuse before writing anything
+    val clash = slices.map(b => new java.io.File(incoming, f"slice-$b%05d.parquet")).filter(_.exists)
+    require(
+      clash.isEmpty,
+      s"stageBatchSlices: ${clash.map(_.getName).mkString(", ")} already staged under " +
+        s"$incoming — staging phases must be disjoint (each slice is staged exactly once)")
     val staged = Option(new java.io.File(incoming).listFiles).getOrElse(Array.empty)
       .filter(_.getName.endsWith(".parquet"))
     val base = math.max(
@@ -178,27 +186,26 @@ object StreamOps {
       }
   }
 
-  /** Run a micro-batch's two INDEPENDENT index legs concurrently —
-    * guide §2.6 "overlap independent jobs": the lexical (postings) and
-    * dense (codes) legs of one CDC batch touch DISJOINT TieredIndex
-    * dirs (each with its own writer lock and watermarks), so their
-    * jobs can back-fill each other's scheduling/planning gaps on the
-    * driver; actions were only sequential because the loop called
-    * them sequentially. The ORDER CONTRACTS all hold: order WITHIN a
+  /** Run a micro-batch's two INDEPENDENT index legs concurrently on
+    * the lifecycle's own bounded `pool` — guide §2.6 "overlap
+    * independent jobs": the lexical (postings) and dense (codes) legs
+    * of one CDC batch touch DISJOINT TieredIndex dirs (each with its
+    * own writer lock and watermarks), so their jobs back-fill each
+    * other's scheduling/planning gaps on the driver. Order WITHIN a
     * leg is preserved (tombstone before append, append before
-    * maintain), and the serve/fence runs strictly AFTER both legs
-    * (both Awaits return first). A failure in either leg rethrows at
-    * the Await and fails the batch loudly, exactly as the sequential
-    * spelling did.
+    * maintain), and the call returns only after BOTH legs finish — a
+    * failed leg never leaves the other still writing behind the
+    * batch's failure — then rethrows the first failure (leg a's
+    * before leg b's), failing the batch loudly.
     */
-  private def legsInParallel(a: => Unit)(b: => Unit): Unit = {
+  private[streaming] def legsInParallel(pool: scala.concurrent.ExecutionContext)(
+      a: => Unit)(b: => Unit): Unit = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fa = Future(a)
-    val fb = Future(b)
-    Await.result(fa, Duration.Inf)
-    Await.result(fb, Duration.Inf)
+    Seq(Future(a)(pool), Future(b)(pool))
+      .map(f => scala.util.Try(Await.result(f, Duration.Inf)))
+      .collectFirst { case scala.util.Failure(e) => e }
+      .foreach(e => throw e)
   }
 
   /** The MID-STREAM-SEARCHABILITY lifecycle at system depth (k,
@@ -1826,11 +1833,7 @@ object StreamOps {
     // path.
     QueryDef(
       "q250_hybrid_live_serve",
-      (s, dir) => {
-        val work = hybridLiveIngest(s, dir, "q250", phases = Seq(0 until 4))
-        s.read.option("recursiveFileLookup", "true").parquet(s"$work/pages")
-          .orderBy(col("batch_id"), col("rk"))
-      },
+      (s, dir) => hybridPages(s, dir, Hybrid("q250", OpMix.Arrivals)),
       Some(hybridLiveServeOracleSql)
     ),
     // --------------------------------------------------------------- q253
@@ -1940,24 +1943,15 @@ object StreamOps {
     // BLUE (biased-half) dense serve, batches 2-3 with the GREEN
     // (retrained) one, so a missed swap, a stale codebook, or a
     // dropped lexical append anywhere in the lifecycle fails the
-    // hash. The lexical collection stats ride a q248-style EPOCH
-    // CACHE whose key includes the LIVE GENERATION as well as the
-    // postings watermark — the round-15 verdict named the stale-epoch
-    // serve across a swap as the bug class, and keying the epoch on
-    // (postings watermark, generation) is the invalidation rule that
-    // prevents it (each batch here moves both, so every page is
-    // gated against full recompute). At 100 TB: the retrain is
-    // O(sample) Lloyd + one O(corpus) encode paid at the trigger, the
-    // swap O(1), and neither leg's per-batch ingest or per-request
+    // hash. Every page recomputes the lexical collection stats from the
+    // live postings: each batch here moves the postings watermark, so
+    // a q248-style epoch cache would never hit. At 100 TB: the retrain
+    // is O(sample) Lloyd + one O(corpus) encode paid at the trigger,
+    // the swap O(1), and neither leg's per-batch ingest or per-request
     // cost changes shape.
     QueryDef(
       "q257_hybrid_retrain_swap",
-      (s, dir) => {
-        val (work, _) = hybridRetrainIngest(
-          s, dir, "q257", graft.operators.TieredIndex.Policy())
-        s.read.option("recursiveFileLookup", "true").parquet(s"$work/pages")
-          .orderBy(col("batch_id"), col("rk"))
-      },
+      (s, dir) => hybridPages(s, dir, Hybrid("q257", OpMix.Arrivals, SwapAfter)),
       Some(hybridRetrainSwapOracleSql)
     ),
     // --------------------------------------------------------------- q259
@@ -1982,47 +1976,24 @@ object StreamOps {
     QueryDef(
       "q259_hybrid_page_time_travel",
       (s, dir) => {
-        val S = graft.queries.SimilarityOps
-        val R = graft.queries.RetrievalOps
         val T = graft.operators.TieredIndex
         val G = graft.operators.Generations
-        val (work, root) = hybridRetrainIngest(
-          s, dir, "q259",
-          graft.operators.TieredIndex.Policy(retainGenerations = 16))
-        val docs = graft.Engine.table(s, dir, "documents")
-        val iv = S.ivecs(s, dir)
-        // the fixed request's DISTINCT terms as a driver-side literal
-        // list, pulled ONCE per lifecycle (termsLiteral's bounded
-        // 1-row fetch) — every batch's tf leg pushes `word IN (...)`
-        // to the word-clustered postings scan instead of paying a
-        // broadcast join that never reaches the scan
-        val qWords = R.termsLiteral(docs
-          .filter(col("doc_id") === 7)
-          .select(explode(graft.queries.Tokenize.toksExpr).as("word")))
-        val q7 = iv
-          .filter(col("vec_id") === 7)
-          .select(col("vec_id").as("qid"), col("iv").as("qiv"))
-          .localCheckpoint()
+        val work = runHybrid(s, dir, Hybrid(
+          "q259", OpMix.Arrivals, SwapAfter,
+          policy = graft.operators.TieredIndex.Policy(retainGenerations = 16)))
+        val iv = graft.queries.SimilarityOps.ivecs(s, dir)
+        val qWords = queryDocTerms(graft.Engine.table(s, dir, "documents"))
+        val q7 = queryDocVec(iv)
+        // each page replays the live request against the snapshot
+        // postings, the generation that served batch b, and that
+        // generation's codes as of b
         (0 until 4)
           .map { b =>
-            val post = T.readAsOf(s, s"$work/postings", b.toLong)
-            val wL = org.apache.spark.sql.expressions.Window
-              .orderBy(col("score").desc, col("doc_id"))
-            val lex = R.bm25FromPostingsPushed(post, qWords)
-              .filter(col("doc_id") =!= 7)
-              .orderBy(col("score").desc, col("doc_id"))
-              .limit(20)
-              .withColumn("lex_rk", row_number().over(wL).cast("long"))
-              .select(col("doc_id"), col("lex_rk"))
-            val vec = S
-              .ivfadcServe(
-                s, G.resolveAsOf(root, b.toLong), q7, iv, k = 16,
-                candN = 32, topN = 20, asOf = Some(b.toLong))
-              .select(col("vec_id").as("doc_id"), col("rn").as("vec_rk"))
-            R.rrfFuse(lex, vec)
-              .select(
-                lit(b.toLong).as("batch_id"), col("rk"), col("doc_id"),
-                col("rrf"), col("lex_rk"), col("vec_rk"))
+            hybridPage(
+              s,
+              graft.queries.RetrievalOps.bm25FromPostingsPushed(
+                T.readAsOf(s, s"$work/postings", b.toLong), qWords),
+              G.resolveAsOf(s"$work/ann", b.toLong), q7, iv, b.toLong, asOf = Some(b.toLong))
           }
           .reduce(_ unionAll _)
           .orderBy(col("batch_id"), col("rk"))
@@ -2056,107 +2027,7 @@ object StreamOps {
     // LSM maintenance both indexes already run.
     QueryDef(
       "q255_hybrid_cdc_retract",
-      (s, dir) => {
-        val S = graft.queries.SimilarityOps
-        val R = graft.queries.RetrievalOps
-        val T = graft.operators.TieredIndex
-        val work = graft.Engine.scratchDir("q255", dir)
-        graft.Engine.deleteRecursively(work)
-        val docs = graft.Engine.table(s, dir, "documents")
-        val ids = graft.Engine.table(s, dir, "embeddings").select(col("vec_id"))
-        val uni = docs.join(ids, docs("doc_id") === ids("vec_id"), "left_semi")
-        // day-0 standing population (includes the %5==1 docs that the
-        // stream will retract — deletes arrive AFTER the build, the
-        // deployment's actual order)
-        val postDir = s"$work/postings"
-        T.create(
-          s, postDir, R.postingsOf(uni.filter(col("doc_id") % 5 =!= 0)),
-          4, Seq(col("word"), col("doc_id")))
-        val iv = S.ivecs(s, dir)
-        S.writeIvfAdcArtifacts(
-          s, work.toString, iv.filter(col("vec_id") % 5 =!= 0), k = 16, rounds = 1)
-        val codesDir = s"$work/codes"
-        // the CDC stream: arrivals + retractions, both ops per batch
-        val incoming = stageBatches(
-          uni.filter(col("doc_id") % 5 === 0 || col("doc_id") % 5 === 1)
-            .select(col("doc_id"), col("text"))
-            .withColumn("op", when(col("doc_id") % 5 === 0, lit("add")).otherwise(lit("del"))),
-          work.toString, expr("(doc_id div 5) % 4"), 4)
-        val pagesDir = s"$work/pages"
-        // the fixed request's DISTINCT terms as a driver-side literal
-        // list, pulled ONCE per lifecycle (termsLiteral's bounded
-        // 1-row fetch) — every batch's tf leg pushes `word IN (...)`
-        // to the word-clustered postings scan instead of paying a
-        // broadcast join that never reaches the scan
-        val qWords = R.termsLiteral(docs
-          .filter(col("doc_id") === 7)
-          .select(explode(graft.queries.Tokenize.toksExpr).as("word")))
-        val q7 = iv
-          .filter(col("vec_id") === 7)
-          .select(col("vec_id").as("qid"), col("iv").as("qiv"))
-          .localCheckpoint()
-        // frozen-quantizer frames hoisted out of the per-batch loop
-        val coarse = s.read.parquet(s"$work/coarse")
-        val codebook = s.read.parquet(s"$work/codebook")
-        val stream = s.readStream
-          .schema(s.read.parquet(incoming).schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(incoming)
-        val query = stream.writeStream
-          .option("checkpointLocation", s"$work/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            val ss = batch.sparkSession
-            val adds = batch.filter(col("op") === "add")
-            val dels = batch.filter(col("op") === "del")
-            // the two index legs run CONCURRENTLY (disjoint dirs, §2.6)
-            legsInParallel {
-              // LEXICAL upsert + retract — the append under the append
-              // watermark, the doc-keyed tombstone under the SEPARATE
-              // delete watermark (one CDC batch commits both marks)
-              if (bid > T.lastBatch(postDir))
-                T.append(ss, postDir, R.postingsOf(adds), batchId = bid)
-              T.delete(ss, postDir, dels.select(col("doc_id")), batchId = bid)
-              T.maintain(ss, postDir, Seq(col("word"), col("doc_id"))): Unit
-            } {
-              // VECTOR upsert + retract — q227's loop at the q250 depth
-              if (bid > T.lastBatch(codesDir)) {
-                val arrivals = iv.join(
-                  broadcast(adds.select(col("doc_id").as("vec_id"))),
-                  Seq("vec_id"), "left_semi")
-                val enc = S.ivfadcEncode(arrivals, coarse, codebook)
-                T.append(ss, codesDir, S.packCodes(enc), batchId = bid)
-              }
-              T.delete(
-                ss, codesDir, dels.select(col("doc_id").as("vec_id")), batchId = bid)
-              T.maintain(ss, codesDir, Seq(col("ccid"), col("vec_id"))): Unit
-            }
-            // HYBRID serve — retracted docs must be gone from BOTH
-            // legs, and the sparse scores must carry the SHRUNK stats;
-            // fenced: one CDC batch commits FOUR marks (append+delete
-            // on each index), and the page waits for all of them
-            T.fenceAligned(postDir, codesDir): Unit
-            val wL = org.apache.spark.sql.expressions.Window
-              .orderBy(col("score").desc, col("doc_id"))
-            val lex = R.bm25FromPostingsPushed(T.read(ss, postDir), qWords)
-              .filter(col("doc_id") =!= 7)
-              .orderBy(col("score").desc, col("doc_id"))
-              .limit(20)
-              .withColumn("lex_rk", row_number().over(wL).cast("long"))
-              .select(col("doc_id"), col("lex_rk"))
-            val vec = S.ivfadcServe(ss, work.toString, q7, iv, k = 16, candN = 32, topN = 20)
-              .select(col("vec_id").as("doc_id"), col("rn").as("vec_rk"))
-            R.rrfFuse(lex, vec)
-              .select(
-                lit(bid).as("batch_id"), col("rk"), col("doc_id"),
-                col("rrf"), col("lex_rk"), col("vec_rk"))
-              .write.mode("overwrite").parquet(s"$pagesDir/b$bid")
-          }
-          .start()
-        query.awaitTermination()
-        s.read.option("recursiveFileLookup", "true").parquet(pagesDir)
-          .orderBy(col("batch_id"), col("rk"))
-      },
+      (s, dir) => hybridPages(s, dir, Hybrid("q255", OpMix.Retract)),
       Some(hybridCdcRetractOracleSql)
     ),
     // --------------------------------------------------------------- q258
@@ -2189,112 +2060,8 @@ object StreamOps {
     // maintenance already running.
     QueryDef(
       "q258_cdc_upsert_lifecycle",
-      (s, dir) => {
-        val S = graft.queries.SimilarityOps
-        val R = graft.queries.RetrievalOps
-        val T = graft.operators.TieredIndex
-        val work = graft.Engine.scratchDir("q258", dir)
-        graft.Engine.deleteRecursively(work)
-        val docs = graft.Engine.table(s, dir, "documents")
-        val emb = graft.Engine.table(s, dir, "embeddings")
-        val uni = docs.join(
-          emb.select(col("vec_id")), docs("doc_id") === col("vec_id"), "left_semi")
-        // day-0: BOTH indexes hold the full pre-update corpus; the
-        // quantizers train EXCLUDING the updatable slice (frozen
-        // artifacts must not move when content does — the update
-        // path re-encodes against them)
-        val postDir = s"$work/postings"
-        T.create(s, postDir, R.postingsOf(uni), 4, Seq(col("word"), col("doc_id")))
-        val iv = S.ivecs(s, dir)
-        S.writeIvfAdcArtifacts(
-          s, work.toString, iv, k = 16, rounds = 1,
-          trainIv = Some(iv.filter(col("vec_id") % 7 =!= 3)))
-        val codesDir = s"$work/codes"
-        // the update stream: slice doc_id % 7 = 3, four batches
-        val incoming = stageBatches(
-          uni.filter(col("doc_id") % 7 === 3).select(col("doc_id"), col("text")),
-          work.toString, expr("(doc_id div 7) % 4"), 4)
-        val pagesDir = s"$work/pages"
-        // the request's terms, sorted — pushed per batch as `word IN
-        // (...)` literals (the termsLiteral convention for the fixed
-        // frames; here the set is already a literal)
-        val qWords = Seq("hash", "join", "refreshed")
-        val q7 = iv
-          .filter(col("vec_id") === 7)
-          .select(col("vec_id").as("qid"), col("iv").as("qiv"))
-          .localCheckpoint()
-        // frozen-quantizer frames hoisted out of the per-batch loop
-        val coarse = s.read.parquet(s"$work/coarse")
-        val codebook = s.read.parquet(s"$work/codebook")
-        val stream = s.readStream
-          .schema(s.read.parquet(incoming).schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(incoming)
-        val query = stream.writeStream
-          .option("checkpointLocation", s"$work/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            val ss = batch.sparkSession
-            val updated = batch.withColumn(
-              "text", concat(col("text"), lit(" graft refreshed revision")))
-            // the two index legs run CONCURRENTLY (disjoint dirs, §2.6)
-            legsInParallel {
-              // LEXICAL upsert: tombstone FIRST (masks the pre-update
-              // postings), re-tokenized postings second — both under
-              // batchId bid against their separate watermarks
-              T.delete(ss, postDir, batch.select(col("doc_id")), batchId = bid)
-              if (bid > T.lastBatch(postDir))
-                T.append(ss, postDir, R.postingsOf(updated), batchId = bid)
-              T.maintain(ss, postDir, Seq(col("word"), col("doc_id"))): Unit
-            } {
-              // VECTOR upsert: tombstone, then the re-embedded content
-              // frozen-encoded against the day-0 quantizers
-              T.delete(
-                ss, codesDir, batch.select(col("doc_id").as("vec_id")), batchId = bid)
-              if (bid > T.lastBatch(codesDir)) {
-                val reEmb = emb
-                  .join(broadcast(batch.select(col("doc_id").as("vec_id"))),
-                    Seq("vec_id"), "left_semi")
-                  .withColumn("embedding", reverse(col("embedding")))
-                val enc = S.ivfadcEncode(S.toIv(reEmb), coarse, codebook)
-                T.append(ss, codesDir, S.packCodes(enc), batchId = bid)
-              }
-              T.maintain(ss, codesDir, Seq(col("ccid"), col("vec_id"))): Unit
-            }
-            // SERVE both legs with metrics, fenced (the upsert batch
-            // commits all four marks before either leg serves). The
-            // exact re-rank corpus is the AS-UPDATED state (updates
-            // <= bid applied) — a candidate's distance must reflect
-            // its live content
-            T.fenceAligned(postDir, codesDir): Unit
-            val ivLive = S.toIv(emb.withColumn(
-              "embedding",
-              when(
-                col("vec_id") % 7 === 3 && expr("(vec_id div 7) % 4") <= bid,
-                reverse(col("embedding"))).otherwise(col("embedding"))))
-            val wL = org.apache.spark.sql.expressions.Window
-              .orderBy(col("score").desc, col("doc_id"))
-            val lex = R.bm25FromPostingsPushed(T.read(ss, postDir), qWords)
-              .orderBy(col("score").desc, col("doc_id"))
-              .limit(10)
-              .withColumn("rk", row_number().over(wL).cast("long"))
-              .select(
-                lit(bid).as("batch_id"), lit("lex").as("leg"), col("rk"),
-                col("doc_id"), col("score"), lit(null).cast("long").as("d"))
-            val vec = S
-              .ivfadcServe(ss, work.toString, q7, ivLive, k = 16, candN = 32, topN = 10)
-              .select(
-                lit(bid).as("batch_id"), lit("vec").as("leg"),
-                col("rn").as("rk"), col("vec_id").as("doc_id"),
-                lit(null).cast("double").as("score"), col("d"))
-            lex.unionAll(vec)
-              .write.mode("overwrite").parquet(s"$pagesDir/b$bid")
-          }
-          .start()
-        query.awaitTermination()
-        s.read.option("recursiveFileLookup", "true").parquet(pagesDir)
-          .orderBy(col("batch_id"), col("leg"), col("rk"))
-      },
+      (s, dir) => hybridPages(s, dir, Hybrid(
+        "q258", OpMix.Upsert, serve = LegPages(Seq("hash", "join", "refreshed")))),
       Some(cdcUpsertLifecycleOracleSql)
     ),
     // --------------------------------------------------------------- q260
@@ -2324,167 +2091,7 @@ object StreamOps {
     // costs what its parts cost.
     QueryDef(
       "q260_hybrid_full_cdc_retrain",
-      (s, dir) => {
-        val S = graft.queries.SimilarityOps
-        val R = graft.queries.RetrievalOps
-        val T = graft.operators.TieredIndex
-        val G = graft.operators.Generations
-        val work = graft.Engine.scratchDir("q260", dir)
-        graft.Engine.deleteRecursively(work)
-        val docs = graft.Engine.table(s, dir, "documents")
-        val emb = graft.Engine.table(s, dir, "embeddings")
-        val uni = docs.join(
-          emb.select(col("vec_id")), docs("doc_id") === col("vec_id"), "left_semi")
-        val postDir = s"$work/postings"
-        T.create(
-          s, postDir, R.postingsOf(uni.filter(col("doc_id") % 5 =!= 0)),
-          4, Seq(col("word"), col("doc_id")))
-        val root = s"$work/ann"
-        val iv = S.ivecs(s, dir)
-        val day0 = iv.filter(col("vec_id") % 5 =!= 0)
-        // BLUE: biased-half day-0 quantizers, training EXCLUDING the
-        // updatable class (frozen artifacts must be reproducible from
-        // content that never changes — the oracle's decomposition
-        // hinges on it)
-        S.writeIvfAdcArtifacts(
-          s, s"$root/gen-00000", day0, k = 16, rounds = 1,
-          trainIv = Some(day0.filter(
-            (col("vec_id") < 32 || col("vec_id") % 2 === 0) &&
-              col("vec_id") % 5 =!= 3)))
-        G.commit(root, "gen-00000", mark = -1L)
-        val incoming = stageBatches(
-          uni.filter(
-            col("doc_id") % 5 === 0 || col("doc_id") % 5 === 1 ||
-              col("doc_id") % 5 === 3)
-            .select(col("doc_id"), col("text"))
-            .withColumn(
-              "op",
-              when(col("doc_id") % 5 === 0, lit("add"))
-                .when(col("doc_id") % 5 === 1, lit("del"))
-                .otherwise(lit("upd"))),
-          work.toString, expr("(doc_id div 5) % 4"), 4)
-        val pagesDir = s"$work/pages"
-        // the fixed request's DISTINCT terms as a driver-side literal
-        // list, pulled ONCE per lifecycle (termsLiteral's bounded
-        // 1-row fetch) — every batch's tf leg pushes `word IN (...)`
-        // to the word-clustered postings scan instead of paying a
-        // broadcast join that never reaches the scan
-        val qWords = R.termsLiteral(docs
-          .filter(col("doc_id") === 7)
-          .select(explode(graft.queries.Tokenize.toksExpr).as("word")))
-        val q7 = iv
-          .filter(col("vec_id") === 7)
-          .select(col("vec_id").as("qid"), col("iv").as("qiv"))
-          .localCheckpoint()
-        // the embedding corpus as of update-slice prefix u
-        def embAsOf(u: Long) = emb.withColumn(
-          "embedding",
-          when(
-            col("vec_id") % 5 === 3 && expr("(vec_id div 5) % 4") <= u,
-            reverse(col("embedding"))).otherwise(col("embedding")))
-        // per-generation frozen-quantizer memo (read once per
-        // generation, not once per batch)
-        val quant = quantReader()
-        val stream = s.readStream
-          .schema(s.read.parquet(incoming).schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(incoming)
-        val query = stream.writeStream
-          .option("checkpointLocation", s"$work/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            val ss = batch.sparkSession
-            val adds = batch.filter(col("op") === "add")
-            val dels = batch.filter(col("op") === "del")
-            val upds = batch.filter(col("op") === "upd")
-              .withColumn("text", concat(col("text"), lit(" graft refreshed revision")))
-            // the two index legs run CONCURRENTLY (disjoint dirs,
-            // §2.6); the retrain below waits for BOTH (it must see
-            // batch-2's dense ops land in blue before the swap)
-            legsInParallel {
-              // LEXICAL: retractions + superseded content tombstone
-              // FIRST, fresh postings second (order contract: the
-              // tombstone must predate the re-appended rows)
-              T.delete(
-                ss, postDir,
-                dels.select(col("doc_id")).unionAll(upds.select(col("doc_id"))),
-                batchId = bid)
-              if (bid > T.lastBatch(postDir))
-                T.append(ss, postDir, R.postingsOf(adds.unionByName(upds)), batchId = bid)
-              T.maintain(ss, postDir, Seq(col("word"), col("doc_id"))): Unit
-            } {
-              // DENSE: the same discipline against the LIVE generation
-              val cur = G.resolve(root)
-              T.delete(
-                ss, s"$cur/codes",
-                dels.select(col("doc_id").as("vec_id"))
-                  .unionAll(upds.select(col("doc_id").as("vec_id"))),
-                batchId = bid)
-              if (bid > T.lastBatch(s"$cur/codes")) {
-                val addIv = iv.join(
-                  broadcast(adds.select(col("doc_id").as("vec_id"))),
-                  Seq("vec_id"), "left_semi")
-                val updIv = S.toIv(emb
-                  .join(
-                    broadcast(upds.select(col("doc_id").as("vec_id"))),
-                    Seq("vec_id"), "left_semi")
-                  .withColumn("embedding", reverse(col("embedding"))))
-                val (cc, cb) = quant(ss, cur)
-                val enc = S.ivfadcEncode(addIv.unionByName(updIv), cc, cb)
-                T.append(ss, s"$cur/codes", S.packCodes(enc), batchId = bid)
-              }
-              T.maintain(ss, s"$cur/codes", Seq(col("ccid"), col("vec_id"))): Unit
-            }
-            // MID-STREAM RETRAIN on the current population STATE —
-            // membership minus retractions plus arrivals as of batch
-            // 2, content with updates <= 2 applied; BOTH fresh
-            // watermarks seeded so a replayed batch-2 append OR
-            // delete no-ops against the new generation
-            if (bid == 2 && G.resolve(root).endsWith("gen-00000")) {
-              graft.Engine.deleteRecursively(new java.io.File(s"$root/gen-00001"))
-              val popPred =
-                (col("vec_id") % 5 === 2 || col("vec_id") % 5 === 3 ||
-                  col("vec_id") % 5 === 4) ||
-                  (col("vec_id") % 5 === 1 && expr("(vec_id div 5) % 4") > 2) ||
-                  (col("vec_id") % 5 === 0 && expr("(vec_id div 5) % 4") <= 2)
-              val ivState2 = S.toIv(embAsOf(2L)).filter(popPred)
-              S.writeIvfAdcArtifacts(
-                ss, s"$root/gen-00001", ivState2, k = 16, rounds = 1,
-                trainIv = Some(ivState2.filter(
-                  S.sampledTrainCol && col("vec_id") % 5 =!= 3)),
-                seedBatch = bid, seedDeleteBatch = bid)
-              G.commit(root, "gen-00001", mark = bid)
-            }
-            // HYBRID page from the two live indexes: moving stats on
-            // the sparse leg, as-updated exact re-rank on the dense —
-            // fenced across the full CDC matrix (append AND delete
-            // watermarks of both indexes agree, the seeded generation
-            // included)
-            T.fenceAligned(postDir, s"${G.resolve(root)}/codes"): Unit
-            val wL = org.apache.spark.sql.expressions.Window
-              .orderBy(col("score").desc, col("doc_id"))
-            val lex = R.bm25FromPostingsPushed(T.read(ss, postDir), qWords)
-              .filter(col("doc_id") =!= 7)
-              .orderBy(col("score").desc, col("doc_id"))
-              .limit(20)
-              .withColumn("lex_rk", row_number().over(wL).cast("long"))
-              .select(col("doc_id"), col("lex_rk"))
-            val vec = S
-              .ivfadcServe(
-                ss, G.resolve(root), q7, S.toIv(embAsOf(bid)), k = 16,
-                candN = 32, topN = 20)
-              .select(col("vec_id").as("doc_id"), col("rn").as("vec_rk"))
-            R.rrfFuse(lex, vec)
-              .select(
-                lit(bid).as("batch_id"), col("rk"), col("doc_id"),
-                col("rrf"), col("lex_rk"), col("vec_rk"))
-              .write.mode("overwrite").parquet(s"$pagesDir/b$bid")
-          }
-          .start()
-        query.awaitTermination()
-        s.read.option("recursiveFileLookup", "true").parquet(pagesDir)
-          .orderBy(col("batch_id"), col("rk"))
-      },
+      (s, dir) => hybridPages(s, dir, Hybrid("q260", OpMix.FullCdc, SwapAfter)),
       Some(hybridFullCdcRetrainOracleSql)
     ),
     // --------------------------------------------------------------- q261
@@ -2512,139 +2119,7 @@ object StreamOps {
     // paid once — and the rollback stays zero-downtime on both legs.
     QueryDef(
       "q261_rollback_catchup",
-      (s, dir) => {
-        val S = graft.queries.SimilarityOps
-        val R = graft.queries.RetrievalOps
-        val T = graft.operators.TieredIndex
-        val G = graft.operators.Generations
-        val work = graft.Engine.scratchDir("q261", dir)
-        graft.Engine.deleteRecursively(work)
-        val docs = graft.Engine.table(s, dir, "documents")
-        val ids = graft.Engine.table(s, dir, "embeddings").select(col("vec_id"))
-        val uni = docs.join(ids, docs("doc_id") === ids("vec_id"), "left_semi")
-        val postDir = s"$work/postings"
-        T.create(
-          s, postDir, R.postingsOf(uni.filter(col("doc_id") % 5 =!= 0)),
-          4, Seq(col("word"), col("doc_id")))
-        val root = s"$work/ann"
-        val iv = S.ivecs(s, dir)
-        val day0 = iv.filter(col("vec_id") % 5 =!= 0)
-        S.writeIvfAdcArtifacts(
-          s, s"$root/gen-00000", day0, k = 16, rounds = 1,
-          trainIv = Some(day0.filter(col("vec_id") < 32 || col("vec_id") % 2 === 0)))
-        G.commit(root, "gen-00000", mark = -1L)
-        val incoming = stageBatches(
-          uni.filter(col("doc_id") % 5 === 0).select(col("doc_id"), col("text")),
-          work.toString, expr("(doc_id div 5) % 4"), 4)
-        val pagesDir = s"$work/pages"
-        // the fixed request's DISTINCT terms as a driver-side literal
-        // list, pulled ONCE per lifecycle (termsLiteral's bounded
-        // 1-row fetch) — every batch's tf leg pushes `word IN (...)`
-        // to the word-clustered postings scan instead of paying a
-        // broadcast join that never reaches the scan
-        val qWords = R.termsLiteral(docs
-          .filter(col("doc_id") === 7)
-          .select(explode(graft.queries.Tokenize.toksExpr).as("word")))
-        val q7 = iv
-          .filter(col("vec_id") === 7)
-          .select(col("vec_id").as("qid"), col("iv").as("qiv"))
-          .localCheckpoint()
-        // the retained staged source IS the catch-up's replay log
-        // (Kafka-retention's stand-in): batch b's arrivals, by the
-        // staged membership
-        val batchDocs = (b: Long) =>
-          s.read.parquet(incoming).filter(expr("(doc_id div 5) % 4") === b)
-        // per-generation frozen-quantizer memo (read once per
-        // generation — blue AND green — not once per batch)
-        val quant = quantReader()
-        val stream = s.readStream
-          .schema(s.read.parquet(incoming).schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(incoming)
-        val query = stream.writeStream
-          .option("checkpointLocation", s"$work/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            val ss = batch.sparkSession
-            // the LEXICAL leg runs CONCURRENTLY with the dense leg's
-            // ordered retrain->append->rollback sequence (disjoint
-            // dirs, §2.6); the fence below waits for both
-            legsInParallel {
-              // LEXICAL leg: appends through swap AND rollback
-              if (bid > T.lastBatch(postDir)) {
-                T.append(ss, postDir, R.postingsOf(batch), batchId = bid)
-                T.maintain(ss, postDir, Seq(col("word"), col("doc_id"))): Unit
-              }
-            } {
-              // the mid-stream retrain fires BEFORE this batch's dense
-              // append (pointer-guarded): green trains on the prefix-1
-              // population, it is seeded at batch 1, and batches 2-3
-              // land ONLY in green — the exact gap the rollback must
-              // close
-              if (bid == 2 && G.resolve(root).endsWith("gen-00000")) {
-                graft.Engine.deleteRecursively(new java.io.File(s"$root/gen-00001"))
-                val pop = iv.filter(
-                  col("vec_id") % 5 =!= 0 || expr("(vec_id div 5) % 4") <= 1)
-                S.writeIvfAdcArtifacts(
-                  ss, s"$root/gen-00001", pop, k = 16, rounds = 1,
-                  trainIv = Some(pop.filter(S.sampledTrainCol)), seedBatch = bid - 1)
-                G.commit(root, "gen-00001", mark = bid)
-              }
-              // DENSE append to the LIVE generation
-              val cur = G.resolve(root)
-              if (bid > T.lastBatch(s"$cur/codes")) {
-                val arr = iv.join(
-                  broadcast(batch.select(col("doc_id").as("vec_id"))),
-                  Seq("vec_id"), "left_semi")
-                val (cc, cb) = quant(ss, cur)
-                val enc = S.ivfadcEncode(arr, cc, cb)
-                T.append(ss, s"$cur/codes", S.packCodes(enc), batchId = bid)
-                T.maintain(ss, s"$cur/codes", Seq(col("ccid"), col("vec_id"))): Unit
-              }
-              // THE ROLLBACK EVENT: green regressed — roll back to blue
-              // at batch 3 with ingest continuing (pointer-guarded, the
-              // retrain's replay discipline); each missed batch
-              // re-encodes from the retained staged source against
-              // BLUE's frozen quantizers under its original id
-              if (bid == 3 && G.resolve(root).endsWith("gen-00001"))
-                rollbackCatchUp(root, "gen-00000", upTo = bid, mark = bid) {
-                  (tgt, b) =>
-                    val arr = iv.join(
-                      broadcast(batchDocs(b).select(col("doc_id").as("vec_id"))),
-                      Seq("vec_id"), "left_semi")
-                    val (cc, cb) = quant(ss, tgt)
-                    val enc = S.ivfadcEncode(arr, cc, cb)
-                    T.append(ss, s"$tgt/codes", S.packCodes(enc), batchId = b)
-                    T.maintain(
-                      ss, s"$tgt/codes", Seq(col("ccid"), col("vec_id"))): Unit
-                }
-            }
-            // HYBRID page from the live pair, fenced — at batch 3 the
-            // fence itself proves the catch-up (a frozen blue index
-            // would disagree with the postings watermark)
-            T.fenceAligned(postDir, s"${G.resolve(root)}/codes"): Unit
-            val wL = org.apache.spark.sql.expressions.Window
-              .orderBy(col("score").desc, col("doc_id"))
-            val lex = R.bm25FromPostingsPushed(T.read(ss, postDir), qWords)
-              .filter(col("doc_id") =!= 7)
-              .orderBy(col("score").desc, col("doc_id"))
-              .limit(20)
-              .withColumn("lex_rk", row_number().over(wL).cast("long"))
-              .select(col("doc_id"), col("lex_rk"))
-            val vec = S
-              .ivfadcServe(ss, G.resolve(root), q7, iv, k = 16, candN = 32, topN = 20)
-              .select(col("vec_id").as("doc_id"), col("rn").as("vec_rk"))
-            R.rrfFuse(lex, vec)
-              .select(
-                lit(bid).as("batch_id"), col("rk"), col("doc_id"),
-                col("rrf"), col("lex_rk"), col("vec_rk"))
-              .write.mode("overwrite").parquet(s"$pagesDir/b$bid")
-          }
-          .start()
-        query.awaitTermination()
-        s.read.option("recursiveFileLookup", "true").parquet(pagesDir)
-          .orderBy(col("batch_id"), col("rk"))
-      },
+      (s, dir) => hybridPages(s, dir, Hybrid("q261", OpMix.Arrivals, SwapRollback)),
       Some(rollbackCatchUpOracleSql)
     ),
     // --------------------------------------------------------------- q262
@@ -2672,12 +2147,7 @@ object StreamOps {
     // watermark pair is what makes that invisible.
     QueryDef(
       "q262_restart_recovery",
-      (s, dir) => {
-        val work = hybridLiveIngest(
-          s, dir, "q262", phases = Seq(Seq(0, 1), Seq(2, 3)))
-        s.read.option("recursiveFileLookup", "true").parquet(s"$work/pages")
-          .orderBy(col("batch_id"), col("rk"))
-      },
+      (s, dir) => hybridPages(s, dir, Hybrid("q262", OpMix.Arrivals, phases = Seq(Seq(0, 1), Seq(2, 3)))),
       Some(hybridLiveServeOracleSql)
     ),
     // --------------------------------------------------------------- q264
@@ -2797,169 +2267,7 @@ object StreamOps {
     // rollback stays zero-downtime on both legs.
     QueryDef(
       "q265_full_cdc_rollback",
-      (s, dir) => {
-        val S = graft.queries.SimilarityOps
-        val R = graft.queries.RetrievalOps
-        val T = graft.operators.TieredIndex
-        val G = graft.operators.Generations
-        val work = graft.Engine.scratchDir("q265", dir)
-        graft.Engine.deleteRecursively(work)
-        val docs = graft.Engine.table(s, dir, "documents")
-        val emb = graft.Engine.table(s, dir, "embeddings")
-        val uni = docs.join(
-          emb.select(col("vec_id")), docs("doc_id") === col("vec_id"), "left_semi")
-        val postDir = s"$work/postings"
-        T.create(
-          s, postDir, R.postingsOf(uni.filter(col("doc_id") % 5 =!= 0)),
-          4, Seq(col("word"), col("doc_id")))
-        val root = s"$work/ann"
-        val iv = S.ivecs(s, dir)
-        val day0 = iv.filter(col("vec_id") % 5 =!= 0)
-        S.writeIvfAdcArtifacts(
-          s, s"$root/gen-00000", day0, k = 16, rounds = 1,
-          trainIv = Some(day0.filter(
-            (col("vec_id") < 32 || col("vec_id") % 2 === 0) &&
-              col("vec_id") % 5 =!= 3)))
-        G.commit(root, "gen-00000", mark = -1L)
-        val incoming = stageBatches(
-          uni.filter(
-            col("doc_id") % 5 === 0 || col("doc_id") % 5 === 1 ||
-              col("doc_id") % 5 === 3)
-            .select(col("doc_id"), col("text"))
-            .withColumn(
-              "op",
-              when(col("doc_id") % 5 === 0, lit("add"))
-                .when(col("doc_id") % 5 === 1, lit("del"))
-                .otherwise(lit("upd"))),
-          work.toString, expr("(doc_id div 5) % 4"), 4)
-        val pagesDir = s"$work/pages"
-        // the fixed request's DISTINCT terms as a driver-side literal
-        // list, pulled ONCE per lifecycle (termsLiteral's bounded
-        // 1-row fetch) — every batch's tf leg pushes `word IN (...)`
-        // to the word-clustered postings scan instead of paying a
-        // broadcast join that never reaches the scan
-        val qWords = R.termsLiteral(docs
-          .filter(col("doc_id") === 7)
-          .select(explode(graft.queries.Tokenize.toksExpr).as("word")))
-        val q7 = iv
-          .filter(col("vec_id") === 7)
-          .select(col("vec_id").as("qid"), col("iv").as("qiv"))
-          .localCheckpoint()
-        def embAsOf(u: Long) = emb.withColumn(
-          "embedding",
-          when(
-            col("vec_id") % 5 === 3 && expr("(vec_id div 5) % 4") <= u,
-            reverse(col("embedding"))).otherwise(col("embedding")))
-        // per-generation frozen-quantizer memo (read once per
-        // generation — blue AND green — not once per batch)
-        val quant = quantReader()
-        val stream = s.readStream
-          .schema(s.read.parquet(incoming).schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(incoming)
-        val query = stream.writeStream
-          .option("checkpointLocation", s"$work/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            val ss = batch.sparkSession
-            val adds = batch.filter(col("op") === "add")
-            val dels = batch.filter(col("op") === "del")
-            val upds = batch.filter(col("op") === "upd")
-              .withColumn("text", concat(col("text"), lit(" graft refreshed revision")))
-            // ONE dense CDC apply for the live path AND the catch-up:
-            // batch b's staged rows (the retained source), tombstones
-            // first, fresh codes second, exactly-once per watermark
-            def applyDense(gen: String, b: Long): Unit = {
-              val rows = ss.read.parquet(incoming)
-                .filter(expr("(doc_id div 5) % 4") === b)
-              val bDels = rows.filter(col("op") === "del")
-              val bUpds = rows.filter(col("op") === "upd")
-              val bAdds = rows.filter(col("op") === "add")
-              T.delete(
-                ss, s"$gen/codes",
-                bDels.select(col("doc_id").as("vec_id"))
-                  .unionAll(bUpds.select(col("doc_id").as("vec_id"))),
-                batchId = b)
-              if (b > T.lastBatch(s"$gen/codes")) {
-                val addIv = iv.join(
-                  broadcast(bAdds.select(col("doc_id").as("vec_id"))),
-                  Seq("vec_id"), "left_semi")
-                val updIv = S.toIv(emb
-                  .join(
-                    broadcast(bUpds.select(col("doc_id").as("vec_id"))),
-                    Seq("vec_id"), "left_semi")
-                  .withColumn("embedding", reverse(col("embedding"))))
-                val (cc, cb) = quant(ss, gen)
-                val enc = S.ivfadcEncode(addIv.unionByName(updIv), cc, cb)
-                T.append(ss, s"$gen/codes", S.packCodes(enc), batchId = b)
-              }
-              T.maintain(ss, s"$gen/codes", Seq(col("ccid"), col("vec_id"))): Unit
-            }
-            // the LEXICAL leg runs CONCURRENTLY with the dense leg's
-            // ordered retrain->apply->rollback sequence (disjoint
-            // dirs, §2.6); the fence below waits for both
-            legsInParallel {
-              // LEXICAL: tombstones first, fresh postings second
-              T.delete(
-                ss, postDir,
-                dels.select(col("doc_id")).unionAll(upds.select(col("doc_id"))),
-                batchId = bid)
-              if (bid > T.lastBatch(postDir))
-                T.append(ss, postDir, R.postingsOf(adds.unionByName(upds)), batchId = bid)
-              T.maintain(ss, postDir, Seq(col("word"), col("doc_id"))): Unit
-            } {
-              // the mid-stream retrain fires BEFORE this batch's dense
-              // ops: green trains on the CDC STATE as of batch 1, both
-              // watermarks seeded there, and CDC batches 2-3 land ONLY
-              // in green — the full-matrix gap the rollback must close
-              if (bid == 2 && G.resolve(root).endsWith("gen-00000")) {
-                graft.Engine.deleteRecursively(new java.io.File(s"$root/gen-00001"))
-                val popPred =
-                  (col("vec_id") % 5 === 2 || col("vec_id") % 5 === 3 ||
-                    col("vec_id") % 5 === 4) ||
-                    (col("vec_id") % 5 === 1 && expr("(vec_id div 5) % 4") > 1) ||
-                    (col("vec_id") % 5 === 0 && expr("(vec_id div 5) % 4") <= 1)
-                val ivState1 = S.toIv(embAsOf(1L)).filter(popPred)
-                S.writeIvfAdcArtifacts(
-                  ss, s"$root/gen-00001", ivState1, k = 16, rounds = 1,
-                  trainIv = Some(ivState1.filter(
-                    S.sampledTrainCol && col("vec_id") % 5 =!= 3)),
-                  seedBatch = 1L, seedDeleteBatch = 1L)
-                G.commit(root, "gen-00001", mark = bid)
-              }
-              applyDense(G.resolve(root), bid)
-              // THE ROLLBACK EVENT at batch 3: the catch-up re-drives
-              // the missed CDC batches — tombstones AND appends —
-              // through the same applyDense, then moves the pointer
-              if (bid == 3 && G.resolve(root).endsWith("gen-00001"))
-                rollbackCatchUp(root, "gen-00000", upTo = bid, mark = bid)(applyDense)
-            }
-            // HYBRID page, fenced across the full matrix
-            T.fenceAligned(postDir, s"${G.resolve(root)}/codes"): Unit
-            val wL = org.apache.spark.sql.expressions.Window
-              .orderBy(col("score").desc, col("doc_id"))
-            val lex = R.bm25FromPostingsPushed(T.read(ss, postDir), qWords)
-              .filter(col("doc_id") =!= 7)
-              .orderBy(col("score").desc, col("doc_id"))
-              .limit(20)
-              .withColumn("lex_rk", row_number().over(wL).cast("long"))
-              .select(col("doc_id"), col("lex_rk"))
-            val vec = S
-              .ivfadcServe(
-                ss, G.resolve(root), q7, S.toIv(embAsOf(bid)), k = 16,
-                candN = 32, topN = 20)
-              .select(col("vec_id").as("doc_id"), col("rn").as("vec_rk"))
-            R.rrfFuse(lex, vec)
-              .select(
-                lit(bid).as("batch_id"), col("rk"), col("doc_id"),
-                col("rrf"), col("lex_rk"), col("vec_rk"))
-              .write.mode("overwrite").parquet(s"$pagesDir/b$bid")
-          }
-          .start()
-        query.awaitTermination()
-        s.read.option("recursiveFileLookup", "true").parquet(pagesDir)
-          .orderBy(col("batch_id"), col("rk"))
-      },
+      (s, dir) => hybridPages(s, dir, Hybrid("q265", OpMix.FullCdc, SwapRollback)),
       Some(fullCdcRollbackOracleSql)
     )
   )
@@ -3015,114 +2323,311 @@ object StreamOps {
     work.toString
   }
 
-  /** q250's dual-index hybrid deployment — ONE definition site for
-    * q250 (one continuous run over all four arrival batches) and q262
-    * (the SAME lifecycle split across a real STOP/RESTART: each
-    * `phases` element stages its slices and runs a NEW streaming query
-    * to completion against the ONE checkpoint dir, so the resumed
-    * query must recover from the offsets log — micro-batch ids
-    * continue where the previous query stopped, consumed files are
-    * never re-read, and a replayed foreachBatch no-ops via the index
-    * watermarks). Per batch: exactly-once postings + codes appends
-    * with LSM maintenance, the cross-index serve fence, and the fixed
-    * hybrid request's fused page into `<work>/pages`. Returns the
-    * work dir.
+  /** The CDC op mix of a hybrid lifecycle's document stream: a
+    * document whose `doc_id % mod` is a key of `ops` is staged with
+    * that op — "add" (an arrival, absent from the day-0 indexes), "del"
+    * (a retraction of a standing doc) or "upd" (a content update of a
+    * standing doc: its text gains a suffix, its embedding reverses — the
+    * deterministic stand-in for re-embedding changed content). Slice b
+    * of every op is micro-batch b, by `(doc_id div mod) % 4`.
     */
-  private def hybridLiveIngest(
-      s: org.apache.spark.sql.SparkSession, dir: String, tag: String,
-      phases: Seq[Seq[Int]]): String = {
+  private final case class OpMix(mod: Int, ops: Map[Int, String])
+
+  private object OpMix {
+    val Arrivals = OpMix(5, Map(0 -> "add"))
+    val Retract = OpMix(5, Map(0 -> "add", 1 -> "del"))
+    val Upsert = OpMix(7, Map(3 -> "upd"))
+    val FullCdc = OpMix(5, Map(0 -> "add", 1 -> "del", 3 -> "upd"))
+  }
+
+  /** How the dense leg's quantizer generation moves under the stream —
+    * the drift-adaptation policy (*Continuously Adaptive Similarity
+    * Search*): `Fixed` keeps one artifact set at the work root;
+    * `SwapAfter` retrains at batch 2 AFTER that batch's dense ops land
+    * in blue (green trains on the batch-2 state, watermarks seeded at
+    * 2); `SwapRollback` retrains at batch 2 BEFORE them (batch-1 state,
+    * seeded at 1, so batches 2-3 land only in green) and rolls back to
+    * blue at batch 3 with catch-up. The blue quantizers of a swapping
+    * lifecycle train on the biased half (the aged-codebook stand-in).
+    */
+  private sealed trait GenPolicy
+  private case object Fixed extends GenPolicy
+  private case object SwapAfter extends GenPolicy
+  private case object SwapRollback extends GenPolicy
+
+  /** What every batch serves after the fence: the fused top-10 RRF page
+    * of the doc-7 request ([[hybridPage]]), or each leg's own top-10
+    * with its metric (score / exact distance) for the fixed term list
+    * `words`.
+    */
+  private sealed trait ServeShape
+  private case object FusedPage extends ServeShape
+  private final case class LegPages(words: Seq[String]) extends ServeShape
+
+  private final case class Hybrid(
+      tag: String, mix: OpMix, gens: GenPolicy = Fixed, serve: ServeShape = FusedPage,
+      phases: Seq[Seq[Int]] = Seq(0 until 4),
+      policy: graft.operators.TieredIndex.Policy = graft.operators.TieredIndex.Policy())
+
+  /** The dual-index hybrid CDC lifecycle — ONE definition site for
+    * q250/q262, q255, q257/q259, q258, q260, q261 and q265. Day 0 builds
+    * the postings TieredIndex and the IVFADC artifacts (at `work`, or
+    * blue `ann/gen-00000` committed at mark -1) over the standing
+    * population (every doc but the arrivals); the stream then runs each
+    * `phases` element as one query on the ONE checkpoint dir (q262's
+    * stop/restart: the resumed query recovers from the offsets log).
+    * Per batch, the lexical and dense legs run concurrently — each
+    * tombstones the batch's retracted and superseded docs, appends its
+    * fresh rows exactly-once, and maintains — the generation policy
+    * fires, and the serve shape's page lands in `work/pages` behind the
+    * cross-index fence. Returns the work dir.
+    */
+  private def runHybrid(
+      s: org.apache.spark.sql.SparkSession, dir: String, h: Hybrid): String = {
     val S = graft.queries.SimilarityOps
     val R = graft.queries.RetrievalOps
     val T = graft.operators.TieredIndex
-    val work = graft.Engine.scratchDir(tag, dir)
+    val G = graft.operators.Generations
+    val work = graft.Engine.scratchDir(h.tag, dir)
     graft.Engine.deleteRecursively(work)
     val docs = graft.Engine.table(s, dir, "documents")
-    val ids = graft.Engine.table(s, dir, "embeddings").select(col("vec_id"))
+    val emb = graft.Engine.table(s, dir, "embeddings")
     // the hybrid universe: docs that BOTH legs can reach
-    val uni = docs.join(ids, docs("doc_id") === ids("vec_id"), "left_semi")
+    val uni = docs.join(
+      emb.select(col("vec_id")), docs("doc_id") === col("vec_id"), "left_semi")
+    def residues(op: String) = h.mix.ops.collect { case (r, `op`) => r }.toSeq
+    val (adds, dels, upds) = (residues("add"), residues("del"), residues("upd"))
+    val retracts = (dels ++ upds).nonEmpty
+    def res(c: String) = col(c) % h.mix.mod
+    def slice(c: String) = expr(s"($c div ${h.mix.mod}) % 4")
+
     val postDir = s"$work/postings"
     T.create(
-      s, postDir, R.postingsOf(uni.filter(col("doc_id") % 5 =!= 0)),
+      s, postDir, R.postingsOf(uni.filter(!res("doc_id").isin(adds: _*))),
       4, Seq(col("word"), col("doc_id")))
     val iv = S.ivecs(s, dir)
+    val day0 = iv.filter(!res("vec_id").isin(adds: _*))
+    // frozen artifacts must be reproducible from content that never
+    // changes: training excludes the updatable class
+    val stable = if (upds.isEmpty) None else Some(!res("vec_id").isin(upds: _*))
+    val biased = col("vec_id") < 32 || col("vec_id") % 2 === 0
+    val root = s"$work/ann"
+    val blue = if (h.gens == Fixed) work.toString else s"$root/gen-00000"
     S.writeIvfAdcArtifacts(
-      s, work.toString, iv.filter(col("vec_id") % 5 =!= 0), k = 16, rounds = 1)
-    val codesDir = s"$work/codes"
-    val arrivals = uni.filter(col("doc_id") % 5 === 0).select(col("doc_id"), col("text"))
-    val pagesDir = s"$work/pages"
-    // hoisted request inputs (q218 rationale): the fixed query's
-    // terms (a driver-side literal list — termsLiteral's bounded
-    // 1-row fetch, so every batch's tf leg pushes `word IN (...)` to
-    // the postings scan) and micro-vector are shared by all batches
-    val qWords = R.termsLiteral(docs
+      s, blue, day0, k = 16, rounds = 1,
+      trainIv = (Seq(biased).filter(_ => h.gens != Fixed) ++ stable)
+        .reduceOption(_ && _).map(day0.filter))
+    if (h.gens != Fixed) G.commit(root, "gen-00000", mark = -1L)
+    def live(): String = if (h.gens == Fixed) blue else G.resolve(root)
+    // the batch at which a swapping policy retrains (the commit mark)
+    val swapAt = 2L
+
+    // the CDC source: an upsert event carries the updated text
+    val staged = uni.filter(res("doc_id").isin(h.mix.ops.keys.toSeq: _*))
+      .select(col("doc_id"), col("text"))
+      .withColumn("op", h.mix.ops.map { case (r, op) =>
+        when(res("doc_id") === r, lit(op)) }.reduce(coalesce(_, _)))
+      .withColumn("text", when(col("op") === "upd",
+        concat(col("text"), lit(" graft refreshed revision"))).otherwise(col("text")))
+    // the embedding corpus as of batch b (updates <= b applied)
+    def ivAsOf(b: Long) =
+      if (upds.isEmpty) iv
+      else S.toIv(emb.withColumn("embedding", when(
+        res("vec_id").isin(upds: _*) && slice("vec_id") <= b,
+        reverse(col("embedding"))).otherwise(col("embedding"))))
+    // a batch's tombstone keys (retracted + superseded docs) and fresh
+    // rows (arrivals + updated content)
+    def gone(rows: org.apache.spark.sql.DataFrame) =
+      rows.filter(col("op").isin("del", "upd")).select(col("doc_id"))
+    def fresh(rows: org.apache.spark.sql.DataFrame) =
+      rows.filter(col("op").isin("add", "upd"))
+
+    // ONE CDC step on one index, both legs: tombstone, exactly-once
+    // append, maintain, each against its own watermark. A tombstone
+    // masks only rows committed before it (the LSM order contract), so
+    // superseded content is tombstoned BEFORE its update is appended;
+    // pure retractions go after the append, which keeps the masked read
+    // at one branch per distinct tombstone suffix
+    def applyCdc(ss: org.apache.spark.sql.SparkSession, index: String, b: Long,
+        keys: => org.apache.spark.sql.DataFrame, keyCols: Seq[org.apache.spark.sql.Column])(
+        rows: => org.apache.spark.sql.DataFrame): Unit = {
+      def retract(): Unit = if (retracts) T.delete(ss, index, keys, batchId = b)
+      if (upds.nonEmpty) retract()
+      if (b > T.lastBatch(index)) T.append(ss, index, rows, batchId = b)
+      if (upds.isEmpty) retract()
+      T.maintain(ss, index, keyCols, h.policy): Unit
+    }
+    def lexical(ss: org.apache.spark.sql.SparkSession, b: Long,
+        batch: org.apache.spark.sql.DataFrame): Unit =
+      applyCdc(ss, postDir, b, gone(batch), Seq(col("word"), col("doc_id")))(
+        R.postingsOf(fresh(batch)))
+    val quant = quantReader()
+    def dense(ss: org.apache.spark.sql.SparkSession, gen: String, b: Long,
+        batch: org.apache.spark.sql.DataFrame): Unit =
+      applyCdc(
+        ss, s"$gen/codes", b, gone(batch).select(col("doc_id").as("vec_id")),
+        Seq(col("ccid"), col("vec_id"))) {
+        val vecs = ivAsOf(b).join(
+          broadcast(fresh(batch).select(col("doc_id").as("vec_id"))), Seq("vec_id"), "left_semi")
+        val (cc, cb) = quant(ss, gen)
+        S.packCodes(S.ivfadcEncode(vecs, cc, cb))
+      }
+    // the mid-stream retrain on the population STATE as of batch `b`
+    // (membership minus retractions plus arrivals, updates applied),
+    // pointer-guarded: a replay after the swap skips it, a replay after
+    // a crash mid-retrain overwrites the un-pointed orphan dir. Green's
+    // watermarks are seeded at `b` (the delete mark too when the mix
+    // retracts), so a replayed batch <= b no-ops against it; the
+    // pointer commits at `mark`, the batch that swaps
+    def retrain(ss: org.apache.spark.sql.SparkSession, b: Long, mark: Long): Unit =
+      if (G.resolve(root).endsWith("gen-00000")) {
+        graft.Engine.deleteRecursively(new java.io.File(s"$root/gen-00001"))
+        val pop = ivAsOf(b).filter((
+          Seq(!res("vec_id").isin(adds ++ dels: _*)) ++
+            dels.map(r => res("vec_id") === r && slice("vec_id") > b) ++
+            adds.map(r => res("vec_id") === r && slice("vec_id") <= b)).reduce(_ || _))
+        S.writeIvfAdcArtifacts(
+          ss, s"$root/gen-00001", pop, k = 16, rounds = 1,
+          trainIv = Some(pop.filter((S.sampledTrainCol +: stable.toSeq).reduce(_ && _))),
+          seedBatch = b, seedDeleteBatch = if (retracts) b else -1L)
+        G.commit(root, "gen-00001", mark = mark)
+      }
+
+    // the fixed request: its terms (a driver-side literal list pushed
+    // to every batch's postings scan) and doc 7's micro-vector
+    val qWords = h.serve match {
+      case LegPages(words) => words
+      case FusedPage => queryDocTerms(docs)
+    }
+    val q7 = queryDocVec(iv)
+    def serve(ss: org.apache.spark.sql.SparkSession, b: Long): org.apache.spark.sql.DataFrame = {
+      val gen = live()
+      // one CDC batch commits up to four marks; the page waits for all
+      T.fenceAligned(postDir, s"$gen/codes"): Unit
+      val post = T.read(ss, postDir)
+      h.serve match {
+        case LegPages(_) =>
+          val (lex, vec) = servedLegs(
+            ss, R.bm25FromPostingsPushed(post, qWords), gen, q7, ivAsOf(b),
+            topN = 10, excludeSelf = false)
+          lex.select(
+            lit(b).as("batch_id"), lit("lex").as("leg"), col("rk"),
+            col("doc_id"), col("score"), lit(null).cast("long").as("d"))
+            .unionAll(vec.select(
+              lit(b).as("batch_id"), lit("vec").as("leg"), col("rn").as("rk"),
+              col("vec_id").as("doc_id"), lit(null).cast("double").as("score"), col("d")))
+        case FusedPage =>
+          hybridPage(ss, R.bm25FromPostingsPushed(post, qWords), gen, q7, ivAsOf(b), b)
+      }
+    }
+
+    // the legs' pool is the lifecycle's own, bounded at two threads
+    val legs = scala.concurrent.ExecutionContext.fromExecutorService(
+      java.util.concurrent.Executors.newFixedThreadPool(2))
+    try {
+      for (slices <- h.phases) {
+        val incoming = stageBatchSlices(staged, work.toString, slice("doc_id"), slices)
+        s.readStream
+          .schema(s.read.parquet(incoming).schema)
+          .option("maxFilesPerTrigger", 1)
+          .parquet(incoming)
+          .writeStream
+          .option("checkpointLocation", s"$work/ckpt")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
+            val ss = batch.sparkSession
+            legsInParallel(legs)(lexical(ss, bid, batch)) {
+              if (h.gens == SwapRollback && bid == swapAt) retrain(ss, bid - 1, mark = bid)
+              dense(ss, live(), bid, batch)
+              // green regressed: roll back to blue with ingest
+              // continuing; the catch-up re-drives each missed batch
+              // from the retained staged source through the same leg
+              if (h.gens == SwapRollback && bid == swapAt + 1 &&
+                  G.resolve(root).endsWith("gen-00001"))
+                rollbackCatchUp(root, "gen-00000", upTo = bid, mark = bid) { (tgt, b) =>
+                  dense(ss, tgt, b, ss.read.parquet(incoming).filter(slice("doc_id") === b))
+                }
+            }
+            // SwapAfter waits for BOTH legs: batch 2's dense ops land
+            // in blue before the swap
+            if (h.gens == SwapAfter && bid == swapAt) retrain(ss, bid, mark = bid)
+            serve(ss, bid).write.mode("overwrite").parquet(s"$work/pages/b$bid")
+          }
+          .start()
+          .awaitTermination()
+      }
+    } finally legs.shutdown()
+    work.toString
+  }
+
+  /** [[runHybrid]]'s gated observable: every batch's page, in order. */
+  private def hybridPages(
+      s: org.apache.spark.sql.SparkSession, dir: String, h: Hybrid)
+      : org.apache.spark.sql.DataFrame = {
+    val pages = s.read.option("recursiveFileLookup", "true")
+      .parquet(s"${runHybrid(s, dir, h)}/pages")
+    h.serve match {
+      case LegPages(_) => pages.orderBy(col("batch_id"), col("leg"), col("rk"))
+      case FusedPage => pages.orderBy(col("batch_id"), col("rk"))
+    }
+  }
+
+  /** Doc 7's DISTINCT terms as a driver-side literal list, pulled ONCE
+    * per lifecycle (termsLiteral's bounded 1-row fetch) — every page's
+    * tf leg pushes `word IN (...)` to the word-clustered postings scan
+    * instead of paying a broadcast join that never reaches the scan.
+    */
+  private def queryDocTerms(docs: org.apache.spark.sql.DataFrame): Seq[String] =
+    graft.queries.RetrievalOps.termsLiteral(docs
       .filter(col("doc_id") === 7)
       .select(explode(graft.queries.Tokenize.toksExpr).as("word")))
-    val q7 = iv
-      .filter(col("vec_id") === 7)
+
+  /** Doc 7's micro-vector as the dense request (qid, qiv). */
+  private def queryDocVec(iv: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    iv.filter(col("vec_id") === 7)
       .select(col("vec_id").as("qid"), col("iv").as("qiv"))
       .localCheckpoint()
-    // frozen-quantizer frames hoisted out of the per-batch loop: the
-    // artifacts are immutable once written, and re-resolving them
-    // every micro-batch re-lists the dir + re-reads footers on the
-    // driver (lazy plans — each batch still reads the bytes at
-    // execution, nothing caches data)
-    val coarse = s.read.parquet(s"$work/coarse")
-    val codebook = s.read.parquet(s"$work/codebook")
-    for (slices <- phases) {
-      val incoming = stageBatchSlices(
-        arrivals, work.toString, expr("(doc_id div 5) % 4"), slices)
-      val stream = s.readStream
-        .schema(s.read.parquet(incoming).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(incoming)
-      val query = stream.writeStream
-        .option("checkpointLocation", s"$work/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-          val ss = batch.sparkSession
-          // the two index legs run CONCURRENTLY (disjoint dirs, §2.6)
-          legsInParallel {
-            // LEXICAL upsert — exactly-once postings append + maintain
-            if (bid > T.lastBatch(postDir)) {
-              T.append(ss, postDir, R.postingsOf(batch), batchId = bid)
-              T.maintain(ss, postDir, Seq(col("word"), col("doc_id"))): Unit
-            }
-          } {
-            // VECTOR upsert — the batch's embeddings frozen-encode
-            // against the day-0 quantizers (q210's contract)
-            if (bid > T.lastBatch(codesDir)) {
-              val arr = iv.join(
-                broadcast(batch.select(col("doc_id").as("vec_id"))),
-                Seq("vec_id"), "left_semi")
-              val enc = S.ivfadcEncode(arr, coarse, codebook)
-              T.append(ss, codesDir, S.packCodes(enc), batchId = bid)
-              T.maintain(ss, codesDir, Seq(col("ccid"), col("vec_id"))): Unit
-            }
-          }
-          // HYBRID serve of the two LIVE indexes this batch mutated —
-          // behind the cross-index fence (both watermark pairs agree,
-          // so the page can never fuse two different corpus states)
-          T.fenceAligned(postDir, codesDir): Unit
-          val wL = org.apache.spark.sql.expressions.Window
-            .orderBy(col("score").desc, col("doc_id"))
-          val lex = R.bm25FromPostingsPushed(T.read(ss, postDir), qWords)
-            .filter(col("doc_id") =!= 7)
-            .orderBy(col("score").desc, col("doc_id"))
-            .limit(20)
-            .withColumn("lex_rk", row_number().over(wL).cast("long"))
-            .select(col("doc_id"), col("lex_rk"))
-          val vec = S.ivfadcServe(ss, work.toString, q7, iv, k = 16, candN = 32, topN = 20)
-            .select(col("vec_id").as("doc_id"), col("rn").as("vec_rk"))
-          R.rrfFuse(lex, vec)
-            .select(
-              lit(bid).as("batch_id"), col("rk"), col("doc_id"),
-              col("rrf"), col("lex_rk"), col("vec_rk"))
-            .write.mode("overwrite").parquet(s"$pagesDir/b$bid")
-        }
-        .start()
-      query.awaitTermination()
-    }
-    work.toString
+
+  /** The doc-7 request's two served legs at one corpus state: the
+    * lexical top-`topN` of `scored` (doc_id, score) positioned as `rk`
+    * (the query doc itself excluded when `excludeSelf`), and the dense
+    * two-stage top-`topN` (qid, rn, vec_id, d) against generation `gen`
+    * (its codes read as of `asOf` when given).
+    */
+  private def servedLegs(
+      ss: org.apache.spark.sql.SparkSession, scored: org.apache.spark.sql.DataFrame,
+      gen: String, q: org.apache.spark.sql.DataFrame, iv: org.apache.spark.sql.DataFrame,
+      topN: Int, excludeSelf: Boolean, asOf: Option[Long] = None)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    val w = org.apache.spark.sql.expressions.Window.orderBy(col("score").desc, col("doc_id"))
+    val lex = (if (excludeSelf) scored.filter(col("doc_id") =!= 7) else scored)
+      .orderBy(col("score").desc, col("doc_id"))
+      .limit(topN)
+      .withColumn("rk", row_number().over(w).cast("long"))
+    // ivfadcServe is EAGER and point-in-time (see its scaladoc): it
+    // collects the candidates here, so this frame is built per batch,
+    // after the caller's fenceAligned
+    val vec = graft.queries.SimilarityOps.ivfadcServe(
+      ss, gen, q, iv, k = 16, candN = 32, topN = topN, asOf = asOf)
+    (lex, vec)
+  }
+
+  /** The fused hybrid page of batch `b`: RRF over both legs' top-20 —
+    * ONE definition for every live page and q259's post-hoc replays,
+    * so live and historical pages cannot drift.
+    */
+  private def hybridPage(
+      ss: org.apache.spark.sql.SparkSession, scored: org.apache.spark.sql.DataFrame,
+      gen: String, q: org.apache.spark.sql.DataFrame, iv: org.apache.spark.sql.DataFrame,
+      b: Long, asOf: Option[Long] = None): org.apache.spark.sql.DataFrame = {
+    val (lex, vec) = servedLegs(ss, scored, gen, q, iv, topN = 20, excludeSelf = true, asOf)
+    graft.queries.RetrievalOps
+      .rrfFuse(
+        lex.select(col("doc_id"), col("rk").as("lex_rk")),
+        vec.select(col("vec_id").as("doc_id"), col("rn").as("vec_rk")))
+      .select(
+        lit(b).as("batch_id"), col("rk"), col("doc_id"),
+        col("rrf"), col("lex_rk"), col("vec_rk"))
   }
 
   /** q253's retrain-under-stream lifecycle — ONE definition site for
@@ -3215,148 +2720,6 @@ object StreamOps {
     (work.toString, root)
   }
 
-  /** q257's dual-index retrain-under-hybrid lifecycle — ONE
-    * definition site for q257 (which gates the LIVE per-batch hybrid
-    * pages) and q259 (which re-derives every page POST-HOC through
-    * the composed time-travel resolves): q250's dual-index CDC stream
-    * (postings + codes, exactly-once, LSM maintenance under `policy`)
-    * with q253's mid-stream sampled retrain + blue/green swap at
-    * batch 2 (marks recorded in the pointer history) on the dense
-    * leg, the lexical epoch stats cached per (postings watermark,
-    * live generation) — the swap alone invalidates, the stale-epoch
-    * bug class of this composition — and a hybrid RRF page served
-    * after every batch into `<work>/pages`. Returns (work dir,
-    * generations root).
-    */
-  private def hybridRetrainIngest(
-      s: org.apache.spark.sql.SparkSession, dir: String, tag: String,
-      policy: graft.operators.TieredIndex.Policy): (String, String) = {
-    val S = graft.queries.SimilarityOps
-    val R = graft.queries.RetrievalOps
-    val T = graft.operators.TieredIndex
-    val G = graft.operators.Generations
-    val work = graft.Engine.scratchDir(tag, dir)
-    graft.Engine.deleteRecursively(work)
-    val docs = graft.Engine.table(s, dir, "documents")
-    val ids = graft.Engine.table(s, dir, "embeddings").select(col("vec_id"))
-    val uni = docs.join(ids, docs("doc_id") === ids("vec_id"), "left_semi")
-    val postDir = s"$work/postings"
-    T.create(
-      s, postDir, R.postingsOf(uni.filter(col("doc_id") % 5 =!= 0)),
-      4, Seq(col("word"), col("doc_id")))
-    val root = s"$work/ann"
-    val iv = S.ivecs(s, dir)
-    val day0 = iv.filter(col("vec_id") % 5 =!= 0)
-    S.writeIvfAdcArtifacts(
-      s, s"$root/gen-00000", day0, k = 16, rounds = 1,
-      trainIv = Some(day0.filter(col("vec_id") < 32 || col("vec_id") % 2 === 0)))
-    G.commit(root, "gen-00000", mark = -1L)
-    val incoming = stageBatches(
-      uni.filter(col("doc_id") % 5 === 0).select(col("doc_id"), col("text")),
-      work.toString, expr("(doc_id div 5) % 4"), 4)
-    val pagesDir = s"$work/pages"
-    // the fixed request's terms as a once-per-lifecycle driver-side
-    // literal list: every batch's tf leg pushes `word IN (...)` to
-    // the word-clustered postings scan (a broadcast-join restriction
-    // never reaches the scan)
-    val qWords = R.termsLiteral(docs
-      .filter(col("doc_id") === 7)
-      .select(explode(graft.queries.Tokenize.toksExpr).as("word")))
-    val q7 = iv
-      .filter(col("vec_id") === 7)
-      .select(col("vec_id").as("qid"), col("iv").as("qiv"))
-      .localCheckpoint()
-    // the q248 epoch cache with the GENERATION in its key: dl and the
-    // 1-row stats are recomputed only when (postings watermark, live
-    // generation) moves — the swap alone is enough to invalidate,
-    // which is exactly the stale-epoch bug class the composition
-    // introduces
-    var epochKey: (Long, String) = null
-    var dlCache: org.apache.spark.sql.DataFrame = null
-    var statsCache: org.apache.spark.sql.DataFrame = null
-    // per-generation frozen-quantizer memo (read once per generation,
-    // not once per batch)
-    val quant = quantReader()
-    val stream = s.readStream
-      .schema(s.read.parquet(incoming).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(incoming)
-    val query = stream.writeStream
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-        val ss = batch.sparkSession
-        // the two index legs run CONCURRENTLY (disjoint dirs, §2.6);
-        // the retrain below waits for BOTH (batch-2's dense append
-        // must land in blue before the swap)
-        legsInParallel {
-          // LEXICAL leg: appends straight through the swap
-          if (bid > T.lastBatch(postDir)) {
-            T.append(ss, postDir, R.postingsOf(batch), batchId = bid)
-            T.maintain(ss, postDir, Seq(col("word"), col("doc_id")), policy): Unit
-          }
-        } {
-          // DENSE leg: append to the LIVE generation
-          val cur = G.resolve(root)
-          if (bid > T.lastBatch(s"$cur/codes")) {
-            val arrivals = iv.join(
-              broadcast(batch.select(col("doc_id").as("vec_id"))),
-              Seq("vec_id"), "left_semi")
-            val (cc, cb) = quant(ss, cur)
-            val enc = S.ivfadcEncode(arrivals, cc, cb)
-            T.append(ss, s"$cur/codes", S.packCodes(enc), batchId = bid)
-            T.maintain(ss, s"$cur/codes", Seq(col("ccid"), col("vec_id")), policy): Unit
-          }
-        }
-        // the mid-stream retrain, pointer-guarded (q253's shape)
-        if (bid == 2 && G.resolve(root).endsWith("gen-00000")) {
-          graft.Engine.deleteRecursively(new java.io.File(s"$root/gen-00001"))
-          val pop = iv.filter(
-            col("vec_id") % 5 =!= 0 || expr("(vec_id div 5) % 4") <= 2)
-          S.writeIvfAdcArtifacts(
-            ss, s"$root/gen-00001", pop, k = 16, rounds = 1,
-            trainIv = Some(pop.filter(S.sampledTrainCol)), seedBatch = bid)
-          G.commit(root, "gen-00001", mark = bid)
-        }
-        // EPOCH BOUNDARY: refresh the cached lexical stats iff the
-        // epoch key moved (postings watermark OR generation)
-        val post = T.read(ss, postDir)
-        val key = (T.lastBatch(postDir), new java.io.File(G.resolve(root)).getName)
-        if (key != epochKey) {
-          dlCache = post
-            .groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-            .localCheckpoint()
-          statsCache = R.statsOf(dlCache).localCheckpoint()
-          epochKey = key
-        }
-        // HYBRID serve: cached-epoch BM25 + the live generation's
-        // two-stage dense request, fused — behind the cross-index
-        // fence (the live generation's codes must agree with the
-        // postings on both watermark pairs before a page fuses them)
-        T.fenceAligned(postDir, s"${G.resolve(root)}/codes"): Unit
-        val wL = org.apache.spark.sql.expressions.Window
-          .orderBy(col("score").desc, col("doc_id"))
-        val tf = R.termTfPushed(post, qWords)
-        val lex = R.bm25Score(tf, dlCache, statsCache)
-          .filter(col("doc_id") =!= 7)
-          .orderBy(col("score").desc, col("doc_id"))
-          .limit(20)
-          .withColumn("lex_rk", row_number().over(wL).cast("long"))
-          .select(col("doc_id"), col("lex_rk"))
-        val vec = S
-          .ivfadcServe(ss, G.resolve(root), q7, iv, k = 16, candN = 32, topN = 20)
-          .select(col("vec_id").as("doc_id"), col("rn").as("vec_rk"))
-        R.rrfFuse(lex, vec)
-          .select(
-            lit(bid).as("batch_id"), col("rk"), col("doc_id"),
-            col("rrf"), col("lex_rk"), col("vec_rk"))
-          .write.mode("overwrite").parquet(s"$pagesDir/b$bid")
-      }
-      .start()
-    query.awaitTermination()
-    (work.toString, root)
-  }
-
   /** ROLLBACK WITH CATCH-UP — the lifecycle arrow q254's pointer write
     * alone cannot serve under a LIVE stream (round-16 verdict #1):
     * ingest appends only to the LIVE generation, so after a mid-stream
@@ -3367,9 +2730,10 @@ object StreamOps {
     * watermarks already provide: blue's `lastBatch` NAMES the first
     * missed batch, and each missed batch re-applies against BLUE
     * through the SAME `applyBatch` function the live stream uses on
-    * the current generation (q261 re-encodes arrivals from the
-    * retained staged source against blue's frozen quantizers; q265
-    * replays the full add+retract+upsert matrix, tombstones first) —
+    * the current generation ([[runHybrid]]'s dense leg, fed from the
+    * retained staged source: q261 re-encodes arrivals against blue's
+    * frozen quantizers; q265 replays the full add+retract+upsert
+    * matrix, tombstones first) —
     * exactly-once by construction, so a crashed catch-up resumes
     * where it stopped (the loop re-derives `from` from the watermark)
     * and a concurrent replay no-ops. The pointer only moves AFTER the
@@ -3899,7 +3263,7 @@ object StreamOps {
   /** q257's oracle — q250's per-prefix hybrid replay with the dense
     * leg SWITCHING CHAINS at the swap batch: the sparse legs are the
     * prefixed bm25Sql recomputes over each growing population (so a
-    * cached-but-stale epoch stat fails the hash), the dense legs for
+    * stale collection stat fails the hash), the dense legs for
     * batches 0-1 ride the BLUE chain (biased-half day-0 training)
     * and for batches 2-3 the GREEN chain (sampled prefix-2 training,
     * prefix `g` — the two complete quantizer chains coexist via the
