@@ -1,10 +1,10 @@
 package graft.mr
 
 import java.io.File
-import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.Partitioner
+import org.apache.spark.{Aggregator, Partitioner}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.SparkSession
 
 /** A MapReduce job spec — the engine-API form of the reference's JSON job
@@ -57,16 +57,33 @@ object MapReduceJob {
 
   /** Unsigned-UTF-8-byte (= Unicode codepoint) line ordering — matches
     * Python `sorted()` on str (`mapreduce/worker/__main__.py:98-99`).
-    * (String.compareTo would differ for supplementary-plane chars.)
+    * String.compareTo orders UTF-16 code units, which agrees with code
+    * points except that a surrogate (part of a code point above U+FFFF)
+    * must sort after U+E000..U+FFFF. So compare chars and remap only at
+    * the first differing position: surrogates move up by 0x2000 and
+    * U+E000..U+FFFF down by 0x800 (ICU's code-point-order fix-up).
+    * Allocation-free: this comparator runs inside every shuffle sort.
     */
   val utf8Ordering: Ordering[String] = new Ordering[String] {
-    def compare(a: String, b: String): Int =
-      java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8))
+    def compare(a: String, b: String): Int = {
+      val n = math.min(a.length, b.length)
+      var i = 0
+      while (i < n) {
+        val x = a.charAt(i)
+        val y = b.charAt(i)
+        if (x != y) return Integer.compare(codePointRank(x), codePointRank(y))
+        i += 1
+      }
+      Integer.compare(a.length, b.length)
+    }
+    private def codePointRank(c: Char): Int =
+      if (c < '\uD800') c
+      else if (c <= '\uDFFF') c + 0x2000
+      else c - 0x800
   }
 
   /** Hash partitioner over the group key extracted from the sort key
-    * (the full line). Same key -> same partition; partitions arrive
-    * fully sorted via repartitionAndSortWithinPartitions.
+    * (the full line). Same key -> same partition.
     */
   private final class GroupKeyPartitioner(n: Int, legacy: Boolean) extends Partitioner {
     def numPartitions: Int = n
@@ -96,14 +113,15 @@ object MapReduceJob {
   }
 
   /** Map + group stages: the sorted, key-partitioned intermediate RDD
-    * (the content of the reference's grouper-output). Also returns the
+    * (the content of the reference's grouper-output) as line runs —
+    * (line, n) stands for n adjacent copies of line. Also returns the
     * persisted map-stage RDD to unpersist after materialization (parity
     * mode only).
     */
   private def groupedRdd(
       spark: SparkSession,
       spec: JobSpec
-  ): (org.apache.spark.rdd.RDD[(String, Null)], Option[org.apache.spark.rdd.RDD[String]]) = {
+  ): (RDD[(String, Long)], Option[RDD[String]]) = {
     val sc = spark.sparkContext
 
     // --- source: sorted file listing, round-robined into numMappers
@@ -122,8 +140,16 @@ object MapReduceJob {
       .flatMap(fileList => fileList.iterator.flatMap(f => Pipes.pipeFile(mapperCmd, f)))
 
     // --- group stage: shuffle on group key, external sort by full line
-    // (O2/O3/O5 collapse into Spark's sort-based shuffle)
-    implicit val ord: Ordering[String] = utf8Ordering
+    // (O2/O3/O5 collapse into Spark's sort-based shuffle). The shuffle
+    // carries line runs, not lines: identical lines are summed into
+    // (line, n) in each map task and again at the reducer, so each
+    // reducer sorts only its distinct lines. Lossless because the sort
+    // key is the WHOLE line: the n copies of a line are always adjacent
+    // in a sorted partition, so expanding each run to n copies where the
+    // partition is written (Pipes.pipePartition, the reduceNN sink)
+    // gives back the same bytes. Both sides still spill (ExternalSorter
+    // on the map side, ExternalAppendOnlyMap + ExternalSorter on read).
+    //
     // Parity mode reads `mapped` twice (rank pass + shuffle): persist it
     // so the mapper executables run exactly once — rerunning them would
     // both double the work and, for a non-deterministic mapper, emit
@@ -144,9 +170,10 @@ object MapReduceJob {
         new KeyRankPartitioner(ranks, spec.numReducers, spec.legacyKeyExtraction)
       } else new GroupKeyPartitioner(spec.numReducers, spec.legacyKeyExtraction)
 
-    val grouped = mapped
-      .map(l => (l, null))
-      .repartitionAndSortWithinPartitions(partitioner)
+    val grouped = new ShuffledRDD[String, Long, Long](mapped.map(l => (l, 1L)), partitioner)
+      .setAggregator(new Aggregator[String, Long, Long](n => n, _ + _, _ + _))
+      .setMapSideCombine(true)
+      .setKeyOrdering(utf8Ordering)
     (grouped, if (spec.parityPartitioning) Some(mapped) else None)
   }
 
@@ -155,21 +182,24 @@ object MapReduceJob {
     * test_integration_03.py:79).
     */
   private def saveNumbered(
-      rdd: org.apache.spark.rdd.RDD[String],
+      rdd: RDD[String],
       n: Int,
       outDir: String,
       prefix: String
   ): Seq[File] = {
-    val tmpOut = Files.createTempDirectory("graft-mr-").toString + "/out"
-    rdd.saveAsTextFile(tmpOut)
-    new File(outDir).mkdirs()
-    (0 until n).map { i =>
-      val part = Paths.get(tmpOut, f"part-$i%05d")
-      val dest = Paths.get(outDir, f"$prefix${i + 1}%02d")
-      if (Files.exists(part)) Files.move(part, dest, StandardCopyOption.REPLACE_EXISTING)
-      else Files.write(dest, Array.emptyByteArray)
-      dest.toFile
-    }
+    val staging = Files.createTempDirectory("graft-mr-")
+    try {
+      val tmpOut = staging.resolve("out").toString
+      rdd.saveAsTextFile(tmpOut)
+      new File(outDir).mkdirs()
+      (0 until n).map { i =>
+        val part = Paths.get(tmpOut, f"part-$i%05d")
+        val dest = Paths.get(outDir, f"$prefix${i + 1}%02d")
+        if (Files.exists(part)) Files.move(part, dest, StandardCopyOption.REPLACE_EXISTING)
+        else Files.write(dest, Array.emptyByteArray)
+        dest.toFile
+      }
+    } finally graft.Engine.deleteRecursively(staging.toFile) // _SUCCESS and .crc files
   }
 
   /** Run a full map -> sort/group -> reduce job. Returns the output files
@@ -181,7 +211,7 @@ object MapReduceJob {
 
     // --- reduce stage: one external process per sorted partition (O6)
     val reducerCmd = spec.reducerCmd
-    val reduced = grouped.mapPartitions(it => Pipes.pipePartition(reducerCmd, it.map(_._1)))
+    val reduced = grouped.mapPartitions(runs => Pipes.pipePartition(reducerCmd, runs))
 
     // --- sink: exactly numReducers files named outputfileNN (S4)
     val out = saveNumbered(reduced, spec.numReducers, spec.outputDir, "outputfile")
@@ -199,7 +229,10 @@ object MapReduceJob {
     */
   def mapAndGroup(spark: SparkSession, spec: JobSpec, groupOutDir: String): Seq[File] = {
     val (grouped, toRelease) = groupedRdd(spark, spec)
-    val out = saveNumbered(grouped.map(_._1), spec.numReducers, groupOutDir, "reduce")
+    val lines = grouped.flatMap { case (line, n) =>
+      Iterator.iterate(n)(_ - 1).takeWhile(_ > 0).map(_ => line)
+    }
+    val out = saveNumbered(lines, spec.numReducers, groupOutDir, "reduce")
     toRelease.foreach(_.unpersist(blocking = false))
     out
   }

@@ -1,6 +1,6 @@
 package graft.mr
 
-import java.io.{BufferedReader, File, InputStreamReader}
+import java.io.{BufferedOutputStream, BufferedReader, File, InputStreamReader}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
@@ -28,16 +28,21 @@ object Pipes {
     streamOutput(pb.start(), cmd, cleanup = None)
   }
 
-  /** Run a partition's lines through `cmd`: spill the iterator to a temp
-    * file (bounded memory — the partition may not fit in RAM), then
-    * invoke exactly like pipeFile. Reduce stage: one process per sorted
+  /** Run a partition's line runs through `cmd`: spill the iterator to a
+    * temp file (bounded memory — the partition may not fit in RAM), then
+    * invoke exactly like pipeFile. A run (line, n) is written as n copies
+    * of the line, encoded once. Reduce stage: one process per sorted
     * partition (= the reference's reduceNN file).
     */
-  def pipePartition(cmd: String, lines: Iterator[String]): Iterator[String] = {
+  def pipePartition(cmd: String, runs: Iterator[(String, Long)]): Iterator[String] = {
     val tmp = Files.createTempFile("graft-reduce-", ".txt")
-    val w = Files.newBufferedWriter(tmp, UTF_8)
+    val w = new BufferedOutputStream(Files.newOutputStream(tmp), 1 << 16)
     try {
-      lines.foreach { l => w.write(l); w.write('\n') }
+      runs.foreach { case (line, n) =>
+        val bytes = (line + "\n").getBytes(UTF_8)
+        var i = 0L
+        while (i < n) { w.write(bytes); i += 1 }
+      }
     } finally w.close()
     val pb = new ProcessBuilder("/bin/sh", "-c", cmd, tmp.toString)
     pb.redirectInput(tmp.toFile)

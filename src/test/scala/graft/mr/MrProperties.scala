@@ -18,9 +18,31 @@ object MrProperties extends Properties("graft.mr") {
     Integer.compare(x.length, y.length)
   }
 
+  /** Well-formed strings that also hold supplementary-plane characters
+    * (surrogate pairs) and U+E000..U+FFFF, the range UTF-16 code-unit
+    * order gets wrong against them. Scalacheck's default String has no
+    * surrogates. A small alphabet per range makes shared prefixes, and
+    * so deep comparisons, common.
+    */
+  private val codePointGen: Gen[Int] = Gen.frequency(
+    3 -> Gen.choose(0x61, 0x63),
+    1 -> Gen.choose(0x00, 0x7f),
+    1 -> Gen.choose(0xe9, 0xeb),
+    1 -> Gen.choose(0xd7fe, 0xd7ff),
+    2 -> Gen.oneOf(0xe000, 0xfffd, 0xffff),
+    2 -> Gen.oneOf(0x10000, 0x1f600, 0x1f601, 0x10ffff)
+  )
+  private val unicodeString: Gen[String] =
+    Gen.listOf(codePointGen).map(cps => new String(cps.toArray, 0, cps.length))
+
   property("utf8Ordering == codepoint order") = Prop.forAll { (a: String, b: String) =>
     math.signum(MapReduceJob.utf8Ordering.compare(a, b)) == math.signum(codepointCompare(a, b))
   }
+
+  property("utf8Ordering == codepoint order across planes") =
+    Prop.forAll(unicodeString, unicodeString) { (a, b) =>
+      math.signum(MapReduceJob.utf8Ordering.compare(a, b)) == math.signum(codepointCompare(a, b))
+    }
 
   property("utf8Ordering is reflexive and antisymmetric") = Prop.forAll { (a: String, b: String) =>
     val ab = MapReduceJob.utf8Ordering.compare(a, b)
