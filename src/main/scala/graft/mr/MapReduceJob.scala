@@ -1,6 +1,6 @@
 package graft.mr
 
-import java.io.File
+import java.io.{File, FileNotFoundException}
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.{Aggregator, Partitioner}
@@ -112,6 +112,23 @@ object MapReduceJob {
     }
   }
 
+  /** The entries of a job's input directory. `File.listFiles` returns
+    * null for a missing path, a regular file or an unreadable directory;
+    * refuse the job there, naming the path, before any Spark work.
+    */
+  private def listInput(inputDir: String): Array[File] = {
+    val dir = new File(inputDir)
+    val entries = dir.listFiles
+    if (entries == null) {
+      val why =
+        if (!dir.exists) "does not exist"
+        else if (!dir.isDirectory) "is not a directory"
+        else "cannot be listed"
+      throw new FileNotFoundException(s"MapReduce input directory $inputDir $why")
+    }
+    entries
+  }
+
   /** Map + group stages: the sorted, key-partitioned intermediate RDD
     * (the content of the reference's grouper-output) as line runs —
     * (line, n) stands for n adjacent copies of line. Also returns the
@@ -126,7 +143,7 @@ object MapReduceJob {
 
     // --- source: sorted file listing, round-robined into numMappers
     // tasks by index (mapreduce/manager/__main__.py:311-328)
-    val files = new File(spec.inputDir).listFiles
+    val files = listInput(spec.inputDir)
       .filter(_.isFile)
       .map(_.getAbsolutePath)
       .sorted(Ordering.String)

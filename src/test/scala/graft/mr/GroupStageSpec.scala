@@ -97,4 +97,18 @@ class GroupStageSpec extends AnyFunSuite {
     assertGroups(2, parity = false, expected(2, k => Math.floorMod(k.hashCode, 2)))
     assert(staged() -- before == Set.empty)
   }
+
+  test("an input directory that is missing or a regular file is refused, naming the path") {
+    val tmp = Files.createTempDirectory("mr-no-input-")
+    val missing = tmp.resolve("absent").toString
+    val regular = Files.write(tmp.resolve("file01"), "a\t1\n".getBytes(UTF_8)).toString
+    for ((inputDir, why) <- Seq(missing -> "does not exist", regular -> "is not a directory")) {
+      val spec = JobSpec(inputDir, tmp.resolve("out").toString, "cat", "cat", numMappers = 1, numReducers = 1)
+      for (job <- Seq[() => Any](() => MapReduceJob.run(spark, spec),
+                                  () => MapReduceJob.mapAndGroup(spark, spec, tmp.resolve("group").toString))) {
+        val e = intercept[java.io.FileNotFoundException](job())
+        assert(e.getMessage.contains(inputDir) && e.getMessage.contains(why), e.getMessage)
+      }
+    }
+  }
 }

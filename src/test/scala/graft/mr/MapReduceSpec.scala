@@ -5,12 +5,20 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Golden-parity tests for the generic MapReduce path, replaying the
-  * reference's integration contract (tests/test_integration_01/02/03):
-  * real executables, real corpus, sorted-line equality vs golden files.
+/** Tests for the generic MapReduce path, replaying the reference's
+  * integration contract (tests/test_integration_01/02/03): real
+  * executables, real corpus, sorted-line equality of the outputs.
+  *
+  * Tests of the engine's behaviour run on the committed fixture tree
+  * (`src/test/resources/graft/mr/tests/testdata`: the reference's layout
+  * and executable contract, a small corpus written for this repo), with
+  * expected outputs folded from that corpus in plain Scala. Tests whose
+  * subject is the reference's own data (its goldens, its large corpus)
+  * read the reference checkout and fail on the missing path without it.
   */
 class MapReduceSpec extends AnyFunSuite {
   private val ref = "/root/reference"
+  private lazy val fixtures = Paths.get(getClass.getResource("tests").toURI).getParent.toString
   private lazy val spark = graft.Engine.session("test")
 
   private def sortedLines(files: Seq[java.io.File]): Seq[String] =
@@ -18,6 +26,37 @@ class MapReduceSpec extends AnyFunSuite {
 
   private def golden(name: String): Seq[String] =
     Files.readAllLines(Paths.get(s"$ref/tests/testdata/correct/$name")).asScala.toSeq
+      .sorted(MapReduceJob.utf8Ordering)
+
+  /** Every line of every file in `dir`, split as `tr` and `awk` read
+    * them: at each '\n', the last line with or without its '\n'.
+    */
+  private def corpusLines(dir: String): Seq[String] =
+    new java.io.File(dir).listFiles.toSeq.flatMap { f =>
+      val text = Files.readString(f.toPath)
+      if (text.isEmpty) Nil else text.stripSuffix("\n").split("\n", -1).toSeq
+    }
+
+  /** wc_map.sh + wc_reduce.sh over the fixture corpus as a plain fold.
+    * `tr '[ \t]' '\n'` ends a token at each of '[', space, TAB and ']',
+    * so adjacent separators leave empty tokens; `tr '[:upper:]'
+    * '[:lower:]'` lowercases ASCII A-Z only; the reducer counts tokens.
+    */
+  private lazy val fixtureWordCount: Seq[String] =
+    corpusLines(s"$fixtures/tests/testdata/input")
+      .flatMap(_.split("[\\[ \t\\]]", -1))
+      .map(_.map(c => if (c >= 'A' && c <= 'Z') (c + ('a' - 'A')).toChar else c))
+      .groupMapReduce(identity)(_ => 1L)(_ + _)
+      .map { case (token, n) => s"$token\t$n" }
+      .toSeq
+      .sorted(MapReduceJob.utf8Ordering)
+
+  /** grep_map.py + grep_reduce.py over the fixture corpus: the lines
+    * containing "product", case-insensitively.
+    */
+  private lazy val fixtureGrep: Seq[String] =
+    corpusLines(s"$fixtures/tests/testdata/input")
+      .filter(_.toLowerCase(java.util.Locale.ROOT).contains("product"))
       .sorted(MapReduceJob.utf8Ordering)
 
   test("word count job matches reference golden output") {
@@ -45,11 +84,11 @@ class MapReduceSpec extends AnyFunSuite {
     val out = Files.createTempDirectory("mr-parity-").toString
     val files = MapReduceJob.run(
       spark,
-      JobSpec(s"$ref/tests/testdata/input", out, s"$ref/tests/testdata/exec/wc_map.sh",
-        s"$ref/tests/testdata/exec/wc_reduce.sh", numMappers = 2, numReducers = 2,
+      JobSpec(s"$fixtures/tests/testdata/input", out, s"$fixtures/tests/testdata/exec/wc_map.sh",
+        s"$fixtures/tests/testdata/exec/wc_reduce.sh", numMappers = 2, numReducers = 2,
         parityPartitioning = true)
     )
-    assert(sortedLines(files) == golden("word_count_correct.txt"))
+    assert(sortedLines(files) == fixtureWordCount)
     // reference semantics: k-th distinct key (sorted) -> partition k % 2,
     // so the two files partition the sorted key space alternately
     // (mapreduce/manager/__main__.py:431-437)
@@ -63,8 +102,8 @@ class MapReduceSpec extends AnyFunSuite {
     val out = Files.createTempDirectory("mr-empty-").toString
     val files = MapReduceJob.run(
       spark,
-      JobSpec(s"$ref/tests/testdata/input_small", out, s"$ref/tests/testdata/exec/wc_map.sh",
-        s"$ref/tests/testdata/exec/wc_reduce.sh", numMappers = 2, numReducers = 8)
+      JobSpec(s"$fixtures/tests/testdata/input_small", out, s"$fixtures/tests/testdata/exec/wc_map.sh",
+        s"$fixtures/tests/testdata/exec/wc_reduce.sh", numMappers = 2, numReducers = 8)
     )
     assert(files.length == 8)
     assert(files.forall(_.exists))
@@ -75,14 +114,14 @@ class MapReduceSpec extends AnyFunSuite {
     // manager/__main__.py:154-173); engine-API form: sequential run()
     val out1 = Files.createTempDirectory("mr-fifo1-").toString
     val out2 = Files.createTempDirectory("mr-fifo2-").toString
-    val wc = JobSpec(s"$ref/tests/testdata/input", out1, s"$ref/tests/testdata/exec/wc_map.sh",
-      s"$ref/tests/testdata/exec/wc_reduce.sh", numMappers = 2, numReducers = 1)
-    val grep = JobSpec(s"$ref/tests/testdata/input", out2, s"python3 $ref/tests/testdata/exec/grep_map.py",
-      s"python3 $ref/tests/testdata/exec/grep_reduce.py", numMappers = 2, numReducers = 2)
+    val wc = JobSpec(s"$fixtures/tests/testdata/input", out1, s"$fixtures/tests/testdata/exec/wc_map.sh",
+      s"$fixtures/tests/testdata/exec/wc_reduce.sh", numMappers = 2, numReducers = 1)
+    val grep = JobSpec(s"$fixtures/tests/testdata/input", out2, s"python3 $fixtures/tests/testdata/exec/grep_map.py",
+      s"python3 $fixtures/tests/testdata/exec/grep_reduce.py", numMappers = 2, numReducers = 2)
     val f1 = MapReduceJob.run(spark, wc)
     val f2 = MapReduceJob.run(spark, grep)
-    assert(sortedLines(f1) == golden("word_count_correct.txt"))
-    assert(sortedLines(f2) == golden("grep_correct.txt"))
+    assert(sortedLines(f1) == fixtureWordCount)
+    assert(sortedLines(f2) == fixtureGrep)
   }
 
   test("task retry recovers from a failing executable (dead-worker semantics)") {
@@ -97,18 +136,18 @@ class MapReduceSpec extends AnyFunSuite {
       s"""#!/bin/sh
          |# fail the first invocation ever (atomically), then behave as wc_map
          |if mkdir "$marker" 2>/dev/null; then exit 1; fi
-         |exec $ref/tests/testdata/exec/wc_map.sh
+         |exec $fixtures/tests/testdata/exec/wc_map.sh
          |""".stripMargin
     )
     script.toFile.setExecutable(true)
     val out = Files.createTempDirectory("mr-flaky-out-").toString
     val files = MapReduceJob.run(
       spark,
-      JobSpec(s"$ref/tests/testdata/input", out, script.toString,
-        s"$ref/tests/testdata/exec/wc_reduce.sh", numMappers = 2, numReducers = 2)
+      JobSpec(s"$fixtures/tests/testdata/input", out, script.toString,
+        s"$fixtures/tests/testdata/exec/wc_reduce.sh", numMappers = 2, numReducers = 2)
     )
     assert(Files.exists(marker), "the flaky mapper never triggered its failure")
-    assert(sortedLines(files) == golden("word_count_correct.txt"))
+    assert(sortedLines(files) == fixtureWordCount)
   }
 
   test("round-robin input partitioning matches the reference task layout") {
@@ -128,8 +167,8 @@ class MapReduceSpec extends AnyFunSuite {
     val t0 = System.nanoTime()
     val files = MapReduceJob.run(
       spark,
-      JobSpec(s"$ref/tests/testdata/input_small", out, s"$ref/tests/testdata/exec/wc_map_slow.sh",
-        s"$ref/tests/testdata/exec/wc_reduce.sh", numMappers = 2, numReducers = 1)
+      JobSpec(s"$fixtures/tests/testdata/input_small", out, s"$fixtures/tests/testdata/exec/wc_map_slow.sh",
+        s"$fixtures/tests/testdata/exec/wc_reduce.sh", numMappers = 2, numReducers = 1)
     )
     val secs = (System.nanoTime() - t0) / 1e9
     assert(secs < 30.0, s"slow-variant job took ${secs}s")
@@ -252,10 +291,10 @@ class MapReduceSpec extends AnyFunSuite {
     val out = Files.createTempDirectory("mr-submit-").toString
     val msg = s"""{
       "message_type": "new_manager_job",
-      "input_directory": "$ref/tests/testdata/input",
+      "input_directory": "$fixtures/tests/testdata/input",
       "output_directory": "$out",
-      "mapper_executable": "$ref/tests/testdata/exec/wc_map.sh",
-      "reducer_executable": "$ref/tests/testdata/exec/wc_reduce.sh",
+      "mapper_executable": "$fixtures/tests/testdata/exec/wc_map.sh",
+      "reducer_executable": "$fixtures/tests/testdata/exec/wc_reduce.sh",
       "num_mappers": 2,
       "num_reducers": 2
     }"""
@@ -263,7 +302,7 @@ class MapReduceSpec extends AnyFunSuite {
     assert(spec.numMappers == 2 && spec.numReducers == 2)
     assert(spec.inputDir.endsWith("tests/testdata/input"))
     val files = MapReduceJob.run(spark, spec)
-    assert(sortedLines(files) == golden("word_count_correct.txt"))
+    assert(sortedLines(files) == fixtureWordCount)
     // defaults match submit.py's when fields are absent
     val dflt = Submit.parseJob("""{"message_type": "new_manager_job"}""")
     assert(dflt.numMappers == 4 && dflt.numReducers == 1)
@@ -281,11 +320,11 @@ class MapReduceSpec extends AnyFunSuite {
     val out = Files.createTempDirectory("mr-legacy-").toString
     val files = MapReduceJob.run(
       spark,
-      JobSpec(s"$ref/tests/testdata/input", out, s"python3 $ref/tests/testdata/exec/grep_map.py",
-        s"python3 $ref/tests/testdata/exec/grep_reduce.py", numMappers = 2, numReducers = 2,
+      JobSpec(s"$fixtures/tests/testdata/input", out, s"python3 $fixtures/tests/testdata/exec/grep_map.py",
+        s"python3 $fixtures/tests/testdata/exec/grep_reduce.py", numMappers = 2, numReducers = 2,
         legacyKeyExtraction = true)
     )
-    assert(sortedLines(files) == golden("grep_correct.txt"))
+    assert(sortedLines(files) == fixtureGrep)
   }
 
   test("group key extraction: tab contract and legacy space quirk") {
