@@ -3,7 +3,7 @@ package graft.mr
 import java.io.{File, FileNotFoundException}
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.{Aggregator, Partitioner}
+import org.apache.spark.{Aggregator, Partitioner, TaskContext}
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.SparkSession
 
@@ -131,13 +131,16 @@ object MapReduceJob {
 
   /** Map + group stages: the sorted, key-partitioned intermediate RDD
     * (the content of the reference's grouper-output) as line runs —
-    * (line, n) stands for n adjacent copies of line. Also returns the
-    * persisted map-stage RDD to unpersist after materialization (parity
-    * mode only).
+    * (line, n) stands for n adjacent copies of line, one run per distinct
+    * line of a partition. Also returns the persisted map-stage RDD to
+    * unpersist after materialization (parity mode only).
+    * `combineBudget` is the map-side combine map's byte budget; jobs use
+    * [[LineRuns.CombineBudget]], tests shrink it to force early emits.
     */
-  private def groupedRdd(
+  private[mr] def groupedRdd(
       spark: SparkSession,
-      spec: JobSpec
+      spec: JobSpec,
+      combineBudget: Long
   ): (RDD[(String, Long)], Option[RDD[String]]) = {
     val sc = spark.sparkContext
 
@@ -157,15 +160,20 @@ object MapReduceJob {
       .flatMap(fileList => fileList.iterator.flatMap(f => Pipes.pipeFile(mapperCmd, f)))
 
     // --- group stage: shuffle on group key, external sort by full line
-    // (O2/O3/O5 collapse into Spark's sort-based shuffle). The shuffle
-    // carries line runs, not lines: identical lines are summed into
-    // (line, n) in each map task and again at the reducer, so each
-    // reducer sorts only its distinct lines. Lossless because the sort
-    // key is the WHOLE line: the n copies of a line are always adjacent
-    // in a sorted partition, so expanding each run to n copies where the
-    // partition is written (Pipes.pipePartition, the reduceNN sink)
-    // gives back the same bytes. Both sides still spill (ExternalSorter
-    // on the map side, ExternalAppendOnlyMap + ExternalSorter on read).
+    // (O2/O3/O5 collapse into Spark's shuffle). The shuffle carries line
+    // runs, not lines: each map task sums identical lines into (line, n)
+    // in a bounded hash map (LineRuns.combine, the Hadoop combiner), and
+    // the reducer sums runs again, so each reducer sorts only its
+    // distinct lines. Lossless because the sort key is the WHOLE line:
+    // the n copies of a line are always adjacent in a sorted partition,
+    // so expanding each run to n copies where the partition is written
+    // (Pipes.writeRuns: the reducer's stdin file, the reduceNN sink)
+    // gives back the same bytes.
+    // The shuffle itself neither combines nor sorts on the map side
+    // (setMapSideCombine(false)): up to 200 reducers Spark then writes
+    // with BypassMergeSortShuffleWriter, straight to per-reducer files.
+    // The reduce side merges runs in ExternalAppendOnlyMap and sorts them
+    // in ExternalSorter; both spill.
     //
     // Parity mode reads `mapped` twice (rank pass + shuffle): persist it
     // so the mapper executables run exactly once — rerunning them would
@@ -187,51 +195,58 @@ object MapReduceJob {
         new KeyRankPartitioner(ranks, spec.numReducers, spec.legacyKeyExtraction)
       } else new GroupKeyPartitioner(spec.numReducers, spec.legacyKeyExtraction)
 
-    val grouped = new ShuffledRDD[String, Long, Long](mapped.map(l => (l, 1L)), partitioner)
+    val runs = mapped.mapPartitions(lines => LineRuns.combine(lines, combineBudget))
+    val grouped = new ShuffledRDD[String, Long, Long](runs, partitioner)
       .setAggregator(new Aggregator[String, Long, Long](n => n, _ + _, _ + _))
-      .setMapSideCombine(true)
+      .setMapSideCombine(false)
       .setKeyOrdering(utf8Ordering)
     (grouped, if (spec.parityPartitioning) Some(mapped) else None)
   }
 
-  /** Materialize an RDD's partitions as exactly `n` sequentially-named
-    * files under `outDir` (empty partitions still produce files —
-    * test_integration_03.py:79).
+  /** Write a run RDD's partitions as sequentially named files under
+    * `outDir`, one per partition, empty partitions included
+    * (test_integration_03.py:79), in one Spark job. Each task writes its
+    * partition to a file unique to its attempt in a staging directory and
+    * renames it to part-NNNNN once complete, so a failed or retried
+    * attempt leaves no partial or duplicated part. The driver moves the
+    * parts to their final names only after the job succeeds: a failed job
+    * writes nothing under `outDir`. Driver and tasks share one local
+    * filesystem, as the reference's workers do.
     */
-  private def saveNumbered(
-      rdd: RDD[String],
-      n: Int,
-      outDir: String,
-      prefix: String
-  ): Seq[File] = {
+  private def saveNumbered(runs: RDD[(String, Long)], outDir: String, prefix: String): Seq[File] = {
     val staging = Files.createTempDirectory("graft-mr-")
     try {
-      val tmpOut = staging.resolve("out").toString
-      rdd.saveAsTextFile(tmpOut)
+      val dir = staging.toString
+      runs.sparkContext.runJob(runs, (ctx: TaskContext, part: Iterator[(String, Long)]) => {
+        val name = f"part-${ctx.partitionId}%05d"
+        val attempt = Paths.get(dir, s"$name.attempt-${ctx.taskAttemptId}")
+        Pipes.writeRuns(attempt, part)
+        Files.move(attempt, Paths.get(dir, name), StandardCopyOption.ATOMIC_MOVE): Unit
+      })
       new File(outDir).mkdirs()
-      (0 until n).map { i =>
-        val part = Paths.get(tmpOut, f"part-$i%05d")
+      (0 until runs.getNumPartitions).map { i =>
         val dest = Paths.get(outDir, f"$prefix${i + 1}%02d")
-        if (Files.exists(part)) Files.move(part, dest, StandardCopyOption.REPLACE_EXISTING)
-        else Files.write(dest, Array.emptyByteArray)
+        Files.move(staging.resolve(f"part-$i%05d"), dest, StandardCopyOption.REPLACE_EXISTING)
         dest.toFile
       }
-    } finally graft.Engine.deleteRecursively(staging.toFile) // _SUCCESS and .crc files
+    } finally graft.Engine.deleteRecursively(staging.toFile) // failed attempts' files
   }
 
   /** Run a full map -> sort/group -> reduce job. Returns the output files
     * (exactly numReducers, named outputfileNN like
     * `mapreduce/manager/__main__.py:486-487`).
     */
-  def run(spark: SparkSession, spec: JobSpec): Seq[File] = {
-    val (grouped, toRelease) = groupedRdd(spark, spec)
+  def run(spark: SparkSession, spec: JobSpec): Seq[File] = run(spark, spec, LineRuns.CombineBudget)
+
+  private[mr] def run(spark: SparkSession, spec: JobSpec, combineBudget: Long): Seq[File] = {
+    val (grouped, toRelease) = groupedRdd(spark, spec, combineBudget)
 
     // --- reduce stage: one external process per sorted partition (O6)
     val reducerCmd = spec.reducerCmd
     val reduced = grouped.mapPartitions(runs => Pipes.pipePartition(reducerCmd, runs))
 
     // --- sink: exactly numReducers files named outputfileNN (S4)
-    val out = saveNumbered(reduced, spec.numReducers, spec.outputDir, "outputfile")
+    val out = saveNumbered(reduced.map(l => (l, 1L)), spec.outputDir, "outputfile")
     toRelease.foreach(_.unpersist(blocking = false))
     out
   }
@@ -244,12 +259,17 @@ object MapReduceJob {
     * the files replay the reference's grouping byte-for-byte (pinned
     * against the test_manager_08 goldens in MapReduceSpec).
     */
-  def mapAndGroup(spark: SparkSession, spec: JobSpec, groupOutDir: String): Seq[File] = {
-    val (grouped, toRelease) = groupedRdd(spark, spec)
-    val lines = grouped.flatMap { case (line, n) =>
-      Iterator.iterate(n)(_ - 1).takeWhile(_ > 0).map(_ => line)
-    }
-    val out = saveNumbered(lines, spec.numReducers, groupOutDir, "reduce")
+  def mapAndGroup(spark: SparkSession, spec: JobSpec, groupOutDir: String): Seq[File] =
+    mapAndGroup(spark, spec, groupOutDir, LineRuns.CombineBudget)
+
+  private[mr] def mapAndGroup(
+      spark: SparkSession,
+      spec: JobSpec,
+      groupOutDir: String,
+      combineBudget: Long
+  ): Seq[File] = {
+    val (grouped, toRelease) = groupedRdd(spark, spec, combineBudget)
+    val out = saveNumbered(grouped, groupOutDir, "reduce")
     toRelease.foreach(_.unpersist(blocking = false))
     out
   }

@@ -2,7 +2,7 @@ package graft.mr
 
 import java.io.{BufferedOutputStream, BufferedReader, File, InputStreamReader}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
 /** External-executable plumbing mirroring the reference worker's
   * invocation contract (`/root/reference/mapreduce/worker/__main__.py:75-77`):
@@ -36,7 +36,18 @@ object Pipes {
     */
   def pipePartition(cmd: String, runs: Iterator[(String, Long)]): Iterator[String] = {
     val tmp = Files.createTempFile("graft-reduce-", ".txt")
-    val w = new BufferedOutputStream(Files.newOutputStream(tmp), 1 << 16)
+    writeRuns(tmp, runs)
+    val pb = new ProcessBuilder("/bin/sh", "-c", cmd, tmp.toString)
+    pb.redirectInput(tmp.toFile)
+    pb.redirectError(ProcessBuilder.Redirect.INHERIT)
+    streamOutput(pb.start(), cmd, cleanup = Some(() => Files.deleteIfExists(tmp)))
+  }
+
+  /** Write line runs to `file` as UTF-8 lines, each followed by '\n': a
+    * run (line, n) is n copies of the line, encoded once.
+    */
+  def writeRuns(file: Path, runs: Iterator[(String, Long)]): Unit = {
+    val w = new BufferedOutputStream(Files.newOutputStream(file), 1 << 16)
     try {
       runs.foreach { case (line, n) =>
         val bytes = (line + "\n").getBytes(UTF_8)
@@ -44,10 +55,6 @@ object Pipes {
         while (i < n) { w.write(bytes); i += 1 }
       }
     } finally w.close()
-    val pb = new ProcessBuilder("/bin/sh", "-c", cmd, tmp.toString)
-    pb.redirectInput(tmp.toFile)
-    pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-    streamOutput(pb.start(), cmd, cleanup = Some(() => Files.deleteIfExists(tmp)))
   }
 
   /** Lazily stream a process's stdout as lines; on exhaustion wait for

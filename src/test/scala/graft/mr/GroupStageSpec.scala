@@ -63,15 +63,19 @@ class GroupStageSpec extends AnyFunSuite {
   private def bytes(files: Seq[File]): Seq[ArraySeq[Byte]] =
     files.map(f => ArraySeq.unsafeWrapArray(Files.readAllBytes(f.toPath)))
 
-  /** Run the cat/cat job and mapAndGroup; both must give `want`. */
-  private def assertGroups(n: Int, parity: Boolean, want: Seq[ArraySeq[Byte]]): Unit = {
-    val spec = JobSpec(inputDir, Files.createTempDirectory("mr-group-out-").toString, "cat", "cat",
+  private def spec(n: Int, parity: Boolean, reducer: String = "cat"): JobSpec =
+    JobSpec(inputDir, Files.createTempDirectory("mr-group-out-").toString, "cat", reducer,
       numMappers = 2, numReducers = n, parityPartitioning = parity)
-    val out = MapReduceJob.run(spark, spec)
+
+  /** Run the cat/cat job and mapAndGroup; both must give `want`. */
+  private def assertGroups(n: Int, parity: Boolean, want: Seq[ArraySeq[Byte]],
+      combineBudget: Long = LineRuns.CombineBudget): Unit = {
+    val spec = this.spec(n, parity)
+    val out = MapReduceJob.run(spark, spec, combineBudget)
     assert(out.map(_.getName) == Seq.tabulate(n)(i => f"outputfile${i + 1}%02d"))
     assert(bytes(out) == want, s"outputfileNN, n=$n parity=$parity")
     val groupDir = Files.createTempDirectory("mr-group-reduce-").toString
-    val grouped = MapReduceJob.mapAndGroup(spark, spec, groupDir)
+    val grouped = MapReduceJob.mapAndGroup(spark, spec, groupDir, combineBudget)
     assert(grouped.map(_.getName) == Seq.tabulate(n)(i => f"reduce${i + 1}%02d"))
     assert(bytes(grouped) == want, s"reduceNN, n=$n parity=$parity")
   }
@@ -87,6 +91,51 @@ class GroupStageSpec extends AnyFunSuite {
   test("parity mode: file i holds the keys whose sorted-distinct rank % n == i") {
     val rank = lines.map(key).distinct.sorted(byCodePoint).zipWithIndex.toMap
     for (n <- Seq(1, 3, 8)) assertGroups(n, parity = true, expected(n, k => rank(k) % n))
+  }
+
+  test("a combine budget below one partition's distinct lines emits runs early; outputs are unchanged") {
+    // 256 bytes holds about two distinct lines, so every map task emits a
+    // line in several runs and the reduce side must sum them again
+    val budget = 256L
+    val inOneTask = spark.sparkContext.parallelize(lines, 1)
+      .mapPartitions(ls => LineRuns.combine(ls, budget)).collect().toSeq
+    assert(inOneTask.size > distinct.size, "the budget never made the combiner emit early")
+    assert(inOneTask.groupMapReduce(_._1)(_._2)(_ + _) == distinct.map { case (l, n) => l -> n.toLong }.toMap)
+    val rank = lines.map(key).distinct.sorted(byCodePoint).zipWithIndex.toMap
+    for ((parity, partition) <- Seq[(Boolean, String => Int)](
+        false -> (k => Math.floorMod(k.hashCode, 3)), true -> (k => rank(k) % 3))) {
+      assertGroups(3, parity, expected(3, partition), budget)
+      // each reducer receives one run per distinct line, in code-point order
+      val (grouped, persisted) = MapReduceJob.groupedRdd(spark, spec(3, parity), budget)
+      val parts = grouped.glom().collect().toSeq
+      persisted.foreach(_.unpersist())
+      val want = Seq.tabulate(3)(i =>
+        distinct.filter(d => partition(key(d._1)) == i).sortBy(_._1)(byCodePoint).map { case (l, n) => (l, n.toLong) })
+      assert(parts.map(_.toSeq) == want, s"parity=$parity")
+    }
+  }
+
+  test("sink: a reducer that fails after printing is retried cleanly; a failed job writes no output") {
+    val dir = Files.createTempDirectory("mr-sink-")
+    val marker = dir.resolve("failed-once")
+    val flaky = dir.resolve("flaky_reduce.sh")
+    Files.writeString(
+      flaky,
+      s"""#!/bin/sh
+         |# the first invocation ever prints part of its input, then fails
+         |if mkdir "$marker" 2>/dev/null; then head -n 3; exit 1; fi
+         |exec cat
+         |""".stripMargin
+    )
+    flaky.toFile.setExecutable(true)
+    val out = MapReduceJob.run(spark, spec(3, parity = false, reducer = flaky.toString))
+    assert(Files.exists(marker), "the flaky reducer never failed")
+    assert(bytes(out) == expected(3, k => Math.floorMod(k.hashCode, 3)))
+
+    val failing = spec(3, parity = false, reducer = "cat; exit 1")
+    val outDir = new File(failing.outputDir, "out")
+    intercept[org.apache.spark.SparkException](MapReduceJob.run(spark, failing.copy(outputDir = outDir.toString)))
+    assert(!outDir.exists, s"a failed job left ${Option(outDir.list).fold("")(_.mkString(", "))}")
   }
 
   test("a job leaves no graft-mr-* staging directory in java.io.tmpdir") {

@@ -28,34 +28,15 @@ class MapReduceSpec extends AnyFunSuite {
     Files.readAllLines(Paths.get(s"$ref/tests/testdata/correct/$name")).asScala.toSeq
       .sorted(MapReduceJob.utf8Ordering)
 
-  /** Every line of every file in `dir`, split as `tr` and `awk` read
-    * them: at each '\n', the last line with or without its '\n'.
-    */
-  private def corpusLines(dir: String): Seq[String] =
-    new java.io.File(dir).listFiles.toSeq.flatMap { f =>
-      val text = Files.readString(f.toPath)
-      if (text.isEmpty) Nil else text.stripSuffix("\n").split("\n", -1).toSeq
-    }
-
-  /** wc_map.sh + wc_reduce.sh over the fixture corpus as a plain fold.
-    * `tr '[ \t]' '\n'` ends a token at each of '[', space, TAB and ']',
-    * so adjacent separators leave empty tokens; `tr '[:upper:]'
-    * '[:lower:]'` lowercases ASCII A-Z only; the reducer counts tokens.
-    */
+  /** wc_map.sh + wc_reduce.sh over the fixture corpus as a plain fold. */
   private lazy val fixtureWordCount: Seq[String] =
-    corpusLines(s"$fixtures/tests/testdata/input")
-      .flatMap(_.split("[\\[ \t\\]]", -1))
-      .map(_.map(c => if (c >= 'A' && c <= 'Z') (c + ('a' - 'A')).toChar else c))
-      .groupMapReduce(identity)(_ => 1L)(_ + _)
-      .map { case (token, n) => s"$token\t$n" }
-      .toSeq
-      .sorted(MapReduceJob.utf8Ordering)
+    TextFolds.wordCount(TextFolds.corpusLines(s"$fixtures/tests/testdata/input"))
 
   /** grep_map.py + grep_reduce.py over the fixture corpus: the lines
     * containing "product", case-insensitively.
     */
   private lazy val fixtureGrep: Seq[String] =
-    corpusLines(s"$fixtures/tests/testdata/input")
+    TextFolds.corpusLines(s"$fixtures/tests/testdata/input")
       .filter(_.toLowerCase(java.util.Locale.ROOT).contains("product"))
       .sorted(MapReduceJob.utf8Ordering)
 
@@ -236,6 +217,80 @@ class MapReduceSpec extends AnyFunSuite {
     // contract has no Spark analog below the page-allocation floor.
     val pageMiB = org.apache.spark.GraftTestAccess.pageSizeBytes / (1024.0 * 1024.0)
     info(f"memory-manager page size: $pageMiB%.2f MiB")
+    assert(
+      peakMiB < 32.5 + pageMiB,
+      f"per-task peak execution memory $peakMiB%.1f MiB vs the 32.5 MiB floor + one $pageMiB%.1f MiB page — merge is not streaming"
+    )
+  }
+
+  /** A wc corpus of exactly `records` tokens: a truncated Zipf(1.15)
+    * draw over 20,000 ASCII words in lower, Capitalized and UPPER case,
+    * about 1% empty tokens, separated mostly by spaces, some tabs and a
+    * newline about every 12 tokens (perfbench/gen.py's shape).
+    */
+  private def zipfLines(seed: Long, records: Int): Seq[String] = {
+    val rnd = new scala.util.Random(seed)
+    val vocab = Array.tabulate(20000)(r => Array.fill(2 + r * 5 % 8)(('a' + rnd.nextInt(26)).toChar).mkString)
+    val cdf = vocab.indices.scanLeft(0.0)((acc, r) => acc + math.pow(r + 1.0, -1.15)).tail.toArray
+    def token(): String =
+      if (rnd.nextDouble() < 0.01) ""
+      else {
+        val i = java.util.Arrays.binarySearch(cdf, rnd.nextDouble() * cdf.last)
+        val w = vocab(if (i < 0) -i - 1 else i)
+        val c = rnd.nextDouble()
+        if (c < 0.8) w else if (c < 0.95) w.capitalize else w.toUpperCase(java.util.Locale.ROOT)
+      }
+    val lines = Seq.newBuilder[String]
+    val line = new StringBuilder
+    for (i <- 0 until records) {
+      line ++= token()
+      val u = rnd.nextDouble()
+      if (i == records - 1 || u < 1.0 / 12) { lines += line.result(); line.clear() }
+      else line += (if (u < 0.16) '\t' else ' ')
+    }
+    lines.result()
+  }
+
+  test("large generated corpus (700k intermediate records) groups inside the same budget") {
+    // the reference-free twin of the input_large test above: a seeded
+    // Zipf corpus written here, the committed wc executables, the same
+    // 2x2 job shape, the same <10 s bound and the same per-task
+    // peak-execution-memory ceiling (floor + one configured page),
+    // checked against a plain-Scala fold
+    val records = 700000
+    val lines = zipfLines(seed = 8, records)
+    val in = Files.createTempDirectory("mr-zipf-in-")
+    lines.grouped((lines.size + 7) / 8).zipWithIndex.foreach { case (ls, i) =>
+      Files.writeString(in.resolve(f"file$i%02d"), ls.map(_ + "\n").mkString)
+    }
+    val peak = new java.util.concurrent.atomic.AtomicLong(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(te.taskMetrics).foreach(m => peak.getAndAccumulate(m.peakExecutionMemory, math.max(_, _)))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val out = Files.createTempDirectory("mr-zipf-").toString
+    val t0 = System.nanoTime()
+    val files =
+      try
+        MapReduceJob.run(
+          spark,
+          JobSpec(in.toString, out, s"$fixtures/tests/testdata/exec/wc_map.sh",
+            s"$fixtures/tests/testdata/exec/wc_reduce.sh", numMappers = 2, numReducers = 2)
+        )
+      finally {
+        org.apache.spark.GraftTestAccess.drainListenerBus(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    val secs = (System.nanoTime() - t0) / 1e9
+    val got = sortedLines(files)
+    assert(got.map(_.split("\t")(1).toLong).sum == records.toLong)
+    assert(got == TextFolds.wordCount(lines))
+    assert(secs < 10.0, s"full generated-corpus job took ${secs}s (reference group stage alone: <10s)")
+    assert(peak.get > 0, "task metrics did not report peak execution memory")
+    val peakMiB = peak.get / (1024.0 * 1024.0)
+    val pageMiB = org.apache.spark.GraftTestAccess.pageSizeBytes / (1024.0 * 1024.0)
+    info(f"per-task peak execution memory: $peakMiB%.2f MiB; page: $pageMiB%.2f MiB")
     assert(
       peakMiB < 32.5 + pageMiB,
       f"per-task peak execution memory $peakMiB%.1f MiB vs the 32.5 MiB floor + one $pageMiB%.1f MiB page — merge is not streaming"

@@ -12,4 +12,7 @@ package org.apache.spark
   */
 object GraftTestAccess {
   def pageSizeBytes: Long = SparkEnv.get.memoryManager.pageSizeBytes
+
+  /** Block until every posted listener event has been delivered. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
