@@ -129,19 +129,18 @@ object MapReduceJob {
     entries
   }
 
-  /** Map + group stages: the sorted, key-partitioned intermediate RDD
-    * (the content of the reference's grouper-output) as line runs —
-    * (line, n) stands for n adjacent copies of line, one run per distinct
-    * line of a partition. Also returns the persisted map-stage RDD to
-    * unpersist after materialization (parity mode only).
+  /** Map + group stages: hands `use` the sorted, key-partitioned
+    * intermediate RDD (the content of the reference's grouper-output) as
+    * line runs — (line, n) stands for n adjacent copies of line, one run
+    * per distinct line of a partition — and returns its result. Parity
+    * mode persists the map-stage RDD; it is released when this returns
+    * or throws (a failing mapper in the rank pass, a failing reducer or
+    * sink in `use`), so no job leaves it in the session.
     * `combineBudget` is the map-side combine map's byte budget; jobs use
     * [[LineRuns.CombineBudget]], tests shrink it to force early emits.
     */
-  private[mr] def groupedRdd(
-      spark: SparkSession,
-      spec: JobSpec,
-      combineBudget: Long
-  ): (RDD[(String, Long)], Option[RDD[String]]) = {
+  private[mr] def withGrouped[A](spark: SparkSession, spec: JobSpec, combineBudget: Long)(
+      use: RDD[(String, Long)] => A): A = {
     val sc = spark.sparkContext
 
     // --- source: sorted file listing, round-robined into numMappers
@@ -183,24 +182,25 @@ object MapReduceJob {
     // recomputed, breaking exactly that invariant.
     if (spec.parityPartitioning)
       mapped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val partitioner: Partitioner =
-      if (spec.parityPartitioning) {
-        val ranks = mapped
-          .map(l => groupKey(l, spec.legacyKeyExtraction))
-          .distinct()
-          .collect()
-          .sorted(utf8Ordering)
-          .zipWithIndex
-          .toMap
-        new KeyRankPartitioner(ranks, spec.numReducers, spec.legacyKeyExtraction)
-      } else new GroupKeyPartitioner(spec.numReducers, spec.legacyKeyExtraction)
+    try {
+      val partitioner: Partitioner =
+        if (spec.parityPartitioning) {
+          val ranks = mapped
+            .map(l => groupKey(l, spec.legacyKeyExtraction))
+            .distinct()
+            .collect()
+            .sorted(utf8Ordering)
+            .zipWithIndex
+            .toMap
+          new KeyRankPartitioner(ranks, spec.numReducers, spec.legacyKeyExtraction)
+        } else new GroupKeyPartitioner(spec.numReducers, spec.legacyKeyExtraction)
 
-    val runs = mapped.mapPartitions(lines => LineRuns.combine(lines, combineBudget))
-    val grouped = new ShuffledRDD[String, Long, Long](runs, partitioner)
-      .setAggregator(new Aggregator[String, Long, Long](n => n, _ + _, _ + _))
-      .setMapSideCombine(false)
-      .setKeyOrdering(utf8Ordering)
-    (grouped, if (spec.parityPartitioning) Some(mapped) else None)
+      val runs = mapped.mapPartitions(lines => LineRuns.combine(lines, combineBudget))
+      use(new ShuffledRDD[String, Long, Long](runs, partitioner)
+        .setAggregator(new Aggregator[String, Long, Long](n => n, _ + _, _ + _))
+        .setMapSideCombine(false)
+        .setKeyOrdering(utf8Ordering))
+    } finally if (spec.parityPartitioning) mapped.unpersist(blocking = false): Unit
   }
 
   /** Write a run RDD's partitions as sequentially named files under
@@ -238,18 +238,15 @@ object MapReduceJob {
     */
   def run(spark: SparkSession, spec: JobSpec): Seq[File] = run(spark, spec, LineRuns.CombineBudget)
 
-  private[mr] def run(spark: SparkSession, spec: JobSpec, combineBudget: Long): Seq[File] = {
-    val (grouped, toRelease) = groupedRdd(spark, spec, combineBudget)
+  private[mr] def run(spark: SparkSession, spec: JobSpec, combineBudget: Long): Seq[File] =
+    withGrouped(spark, spec, combineBudget) { grouped =>
+      // --- reduce stage: one external process per sorted partition (O6)
+      val reducerCmd = spec.reducerCmd
+      val reduced = grouped.mapPartitions(runs => Pipes.pipePartition(reducerCmd, runs))
 
-    // --- reduce stage: one external process per sorted partition (O6)
-    val reducerCmd = spec.reducerCmd
-    val reduced = grouped.mapPartitions(runs => Pipes.pipePartition(reducerCmd, runs))
-
-    // --- sink: exactly numReducers files named outputfileNN (S4)
-    val out = saveNumbered(reduced.map(l => (l, 1L)), spec.outputDir, "outputfile")
-    toRelease.foreach(_.unpersist(blocking = false))
-    out
-  }
+      // --- sink: exactly numReducers files named outputfileNN (S4)
+      saveNumbered(reduced.map(l => (l, 1L)), spec.outputDir, "outputfile")
+    }
 
   /** Map + group only, written as the reference's grouper-output files
     * `reduceNN` (`tmp/job-N/grouper-output/reduce01..` —
@@ -267,10 +264,6 @@ object MapReduceJob {
       spec: JobSpec,
       groupOutDir: String,
       combineBudget: Long
-  ): Seq[File] = {
-    val (grouped, toRelease) = groupedRdd(spark, spec, combineBudget)
-    val out = saveNumbered(grouped, groupOutDir, "reduce")
-    toRelease.foreach(_.unpersist(blocking = false))
-    out
-  }
+  ): Seq[File] =
+    withGrouped(spark, spec, combineBudget)(saveNumbered(_, groupOutDir, "reduce"))
 }

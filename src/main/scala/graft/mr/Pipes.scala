@@ -32,15 +32,26 @@ object Pipes {
     * temp file (bounded memory — the partition may not fit in RAM), then
     * invoke exactly like pipeFile. A run (line, n) is written as n copies
     * of the line, encoded once. Reduce stage: one process per sorted
-    * partition (= the reference's reduceNN file).
+    * partition (= the reference's reduceNN file). The temp file is
+    * deleted once the output is drained or the task ends, and at once if
+    * the spill or the process start fails (a shuffle fetch failure
+    * surfaces inside `runs`).
     */
   def pipePartition(cmd: String, runs: Iterator[(String, Long)]): Iterator[String] = {
     val tmp = Files.createTempFile("graft-reduce-", ".txt")
-    writeRuns(tmp, runs)
-    val pb = new ProcessBuilder("/bin/sh", "-c", cmd, tmp.toString)
-    pb.redirectInput(tmp.toFile)
-    pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-    streamOutput(pb.start(), cmd, cleanup = Some(() => Files.deleteIfExists(tmp)))
+    val proc =
+      try {
+        writeRuns(tmp, runs)
+        val pb = new ProcessBuilder("/bin/sh", "-c", cmd, tmp.toString)
+        pb.redirectInput(tmp.toFile)
+        pb.redirectError(ProcessBuilder.Redirect.INHERIT)
+        pb.start()
+      } catch {
+        case e: Throwable =>
+          Files.deleteIfExists(tmp)
+          throw e
+      }
+    streamOutput(proc, cmd, cleanup = Some(() => Files.deleteIfExists(tmp)))
   }
 
   /** Write line runs to `file` as UTF-8 lines, each followed by '\n': a

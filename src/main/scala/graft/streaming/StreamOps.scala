@@ -3,8 +3,9 @@ package graft.streaming
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.QueryDef
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 /** Driver-registry entries for the Structured Streaming surface: each
   * replays a finite table (events for the windowed/stateful family;
@@ -12,11 +13,15 @@ import org.apache.spark.sql.streaming.OutputMode
   * a real streaming query (file-stream source -> transform -> memory
   * sink or exactly-once index mutation) and returns the materialized
   * result, which must equal the batch semantics the DuckDB oracle
-  * expresses. The index lifecycles (dedup q174/q176, ANN
-  * q210-q228/q241/q249/q253, lexical q236/q237/q246/q248, hybrid
+  * expresses. The index lifecycles (dedup q174/q176/q181, ANN
+  * q210-q228/q241/q249/q253, lexical q236/q237/q246/q248/q264, hybrid
   * q250/q255/q257-q262/q265) share the staging helpers below and the
-  * TieredIndex exactly-once batch watermarks; the dual-index hybrid
-  * CDC lifecycles all run through ONE runner, [[runHybrid]].
+  * TieredIndex exactly-once batch watermarks, and every one of them
+  * runs its stream through ONE micro-batch driver, [[microBatches]];
+  * per-batch observables go through ONE output pair, [[writeBatch]] /
+  * [[readBatches]]. On top of the driver, the three incremental-dedup
+  * lifecycles share [[incrementalDedup]] and the dual-index hybrid CDC
+  * lifecycles share [[runHybrid]].
   */
 object StreamOps {
 
@@ -24,9 +29,9 @@ object StreamOps {
   private def sinkName(prefix: String): String = s"${prefix}_${seq.incrementAndGet()}"
 
   /** Stage "today's arrivals" (doc_id % 5 = 0) for the incremental-dedup
-    * streams (q174/q176): 4 doc_id-range parquet files under
-    * `work/incoming`, mtimes spaced 60 s so the file source's
-    * oldest-first replay order IS doc_id order — which makes
+    * streams (q174/q176/q181; q210 stages vec_ids): 4 doc_id-range
+    * parquet files under `work/incoming`, mtimes spaced 60 s so the file
+    * source's oldest-first replay order IS doc_id order — which makes
     * "first arrival wins" coincide with the batch oracles' min(doc_id)
     * / lowest-id-earlier rules (range k's ids all precede range k+1's).
     */
@@ -151,7 +156,7 @@ object StreamOps {
       // scramble micro-batch ids and fail the gate undiagnosably)
       require(
         dest.setLastModified(base + i * 60000L),
-        s"stageBatches: setLastModified failed for ${dest.getPath} — " +
+        s"stageBatchSlices: setLastModified failed for ${dest.getPath} — " +
           "micro-batch ids would not equal the staged batch numbers")
     }
     graft.Engine.deleteRecursively(tmp)
@@ -208,6 +213,90 @@ object StreamOps {
       .foreach(e => throw e)
   }
 
+  /** THE micro-batch driver — every file-stream lifecycle runs its
+    * stream through here: the files staged under `incoming` replay as
+    * one Structured Streaming query run to completion
+    * (`AvailableNow`), and `body` runs once per micro-batch with the
+    * batch's session, rows and id. One file per trigger: file ==
+    * micro-batch, so micro-batch k is staged file k (the invariant
+    * [[stageBatchSlices]] asserts), which is what the per-batch
+    * observables and the index watermarks key on. The checkpoint at
+    * `ckpt` makes a later call on the same dir resume after the last
+    * committed batch, its ids continuing there (q262's stop/restart).
+    * foreachBatch is at-least-once: each body makes a replayed batch a
+    * no-op through the index watermarks and [[writeBatch]]'s overwrite.
+    */
+  private[streaming] def microBatches(s: SparkSession, incoming: String, ckpt: String)(
+      body: (SparkSession, DataFrame, Long) => Unit): Unit =
+    s.readStream
+      .schema(s.read.parquet(incoming).schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(incoming)
+      .writeStream
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, bid: Long) => body(batch.sparkSession, batch, bid) }
+      .start()
+      .awaitTermination()
+
+  /** A micro-batch's observable rows land in their own dir `dir/b<bid>`,
+    * OVERWRITING it: a replayed batch replaces its own output instead
+    * of appending duplicate rows, so the per-batch output is
+    * exactly-once. [[readBatches]] reads every batch's rows back.
+    */
+  private def writeBatch(df: DataFrame, dir: String, bid: Long): Unit =
+    df.write.mode("overwrite").parquet(s"$dir/b$bid")
+
+  /** The union of every [[writeBatch]] dir under `dir`. */
+  private def readBatches(s: SparkSession, dir: String): DataFrame =
+    s.read.option("recursiveFileLookup", "true").parquet(dir)
+
+  /** The incremental-dedup lifecycle — ONE definition site for q174
+    * (exact text hash), q176 (MinHash band buckets) and q181 (the
+    * curation gate's clean-token hash). Day 0 writes `day0Keys` (one
+    * column, `key`) as a TieredIndex at `work/<index>`, range-clustered
+    * on `key`; today's arrivals (doc_id % 5 = 0) stream in as
+    * [[stageIncoming]]'s doc_id-range files, so a cross-batch
+    * duplicate's first arrival is its lowest doc_id. Per batch,
+    * `perBatch(batch, index)` gets the index as it stands before the
+    * batch and returns (the survivor rows to keep, the keys to append),
+    * so micro-batch k+1 dedups against everything up to and including
+    * micro-batch k. The survivors are written BEFORE the keys are
+    * appended, and `perBatch` returns them materialized (an eager
+    * localCheckpoint): a lazy anti-join evaluated after the append would
+    * see the batch's own keys and drop everything. Replay guard over
+    * the WHOLE body: a committed watermark implies the batch's
+    * survivors are already durable, and a replay against an index
+    * holding its own keys would clobber them with an empty overwrite.
+    * Each batch runs the size/tier-aware maintenance (deltas-only
+    * minors, size-triggered majors, content-neutral), the end of the
+    * window forces pending deltas into a tier (StreamIncrementalSpec
+    * pins the bounded file count), and the survivors read back in
+    * doc_id order.
+    */
+  private def incrementalDedup(
+      s: SparkSession, dir: String, tag: String, index: String, key: String,
+      day0Keys: DataFrame)(perBatch: (DataFrame, DataFrame) => (DataFrame, DataFrame))
+      : DataFrame = {
+    val T = graft.operators.TieredIndex
+    val work = graft.Engine.scratchDir(tag, dir)
+    graft.Engine.deleteRecursively(work)
+    val indexDir = s"$work/$index"
+    T.create(s, indexDir, day0Keys, 4, Seq(col(key)))
+    val incoming = stageIncoming(s, dir, work.toString)
+    val survDir = s"$work/survivors"
+    microBatches(s, incoming, s"$work/ckpt") { (ss, batch, bid) =>
+      if (bid > T.lastBatch(indexDir)) {
+        val (surv, keys) = perBatch(batch, T.read(ss, indexDir))
+        writeBatch(surv, survDir, bid)
+        T.append(ss, indexDir, keys, batchId = bid)
+        T.maintain(ss, indexDir, Seq(col(key))): Unit
+      }
+    }
+    T.maintain(s, indexDir, Seq(col(key)), force = true): Unit
+    readBatches(s, survDir).orderBy(col("doc_id"))
+  }
+
   /** The MID-STREAM-SEARCHABILITY lifecycle at system depth (k,
     * rounds) — ONE definition site for q214 (16, 1) and q219 (256, 2),
     * so the shallow gate and the production-depth gate run the same
@@ -255,39 +344,28 @@ object StreamOps {
     // listing/footer work — lazy plans, nothing caches data)
     val coarse = s.read.parquet(s"$work/coarse")
     val codebook = s.read.parquet(s"$work/codebook")
-    val stream = s.readStream
-      .schema(s.read.parquet(incoming).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(incoming)
-    val query = stream.writeStream
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-        val ss = batch.sparkSession
-        if (bid > graft.operators.TieredIndex.lastBatch(codesDir)) {
-          val enc = S.ivfadcEncode(S.toIv(batch), coarse, codebook)
-          // pack at the index's own depth — the same dispatch the
-          // artifact writer used for the day-0 base segment
-          val packed = if (k <= 16) S.packCodes(enc) else S.packCodesHex(enc)
-          graft.operators.TieredIndex.append(ss, codesDir, packed, batchId = bid)
-          graft.operators.TieredIndex
-            .maintain(ss, codesDir, Seq(col("ccid"), col("vec_id")), policy): Unit
-        }
-        // probe the LIVE index this batch just committed into —
-        // batch bid's arrivals must already be hits here (via the
-        // one artifact-serving path: pushed-literal list pruning).
-        // q241 skips the mid-stream probes: its observables are the
-        // post-hoc time-travel probes of the same lifecycle.
-        if (midProbes)
-          S.ivfadcProbeIndex(ss, work.toString, q, k = k)
-            .select(lit(bid).as("batch_id"), col("qid"), col("rn"), col("vec_id"), col("ad"))
-            .write.mode("overwrite").parquet(s"$probesDir/b$bid")
+    microBatches(s, incoming, s"$work/ckpt") { (ss, batch, bid) =>
+      if (bid > graft.operators.TieredIndex.lastBatch(codesDir)) {
+        val enc = S.ivfadcEncode(S.toIv(batch), coarse, codebook)
+        // pack at the index's own depth — the same dispatch the
+        // artifact writer used for the day-0 base segment
+        val packed = if (k <= 16) S.packCodes(enc) else S.packCodesHex(enc)
+        graft.operators.TieredIndex.append(ss, codesDir, packed, batchId = bid)
+        graft.operators.TieredIndex
+          .maintain(ss, codesDir, Seq(col("ccid"), col("vec_id")), policy): Unit
       }
-      .start()
-    query.awaitTermination()
-    if (midProbes)
-      s.read.option("recursiveFileLookup", "true").parquet(probesDir)
-        .orderBy(col("batch_id"), col("qid"), col("rn"))
+      // probe the LIVE index this batch just committed into —
+      // batch bid's arrivals must already be hits here (via the
+      // one artifact-serving path: pushed-literal list pruning).
+      // q241 skips the mid-stream probes: its observables are the
+      // post-hoc time-travel probes of the same lifecycle.
+      if (midProbes)
+        writeBatch(
+          S.ivfadcProbeIndex(ss, work.toString, q, k = k)
+            .select(lit(bid).as("batch_id"), col("qid"), col("rn"), col("vec_id"), col("ad")),
+          probesDir, bid)
+    }
+    if (midProbes) readBatches(s, probesDir).orderBy(col("batch_id"), col("qid"), col("rn"))
     else s.emptyDataFrame
   }
 
@@ -759,73 +837,22 @@ object StreamOps {
     // shapes, one contract.
     QueryDef(
       "q174_stream_incremental_dedup",
-      (s, dir) => {
-        val work = graft.Engine.scratchDir("q174", dir)
-        graft.Engine.deleteRecursively(work) // idempotent: survivors/checkpoint/index from a prior run
-        // day-0: the standing corpus's hash index as a TIERED index
-        // (base generation range-clustered on h; q136's flat builder
-        // reads the same historyHashes frame — one history definition)
-        val indexDir = s"$work/hash_index"
-        graft.operators.TieredIndex.create(
-          s, indexDir, graft.queries.DedupOps.historyHashes(s, dir), 4, Seq(col("h")))
-        val incoming = stageIncoming(s, dir, work.toString)
-        val survDir = s"$work/survivors"
-        val stream = s.readStream
-          .schema(s.read.parquet(incoming).schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(incoming)
-        val query = stream.writeStream
-          .option("checkpointLocation", s"$work/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            // REPLAY GUARD — foreachBatch is at-least-once: if a batch
-            // crashed AFTER its index append committed (watermark
-            // advanced) but BEFORE the streaming checkpoint commit, the
-            // replay's anti-join would see the batch's OWN hashes, surv
-            // would recompute empty, and the overwrite below would
-            // clobber the batch's previously-written correct survivors.
-            // The survivor write commits before the index append, so a
-            // committed watermark implies the survivors are already
-            // durable — skip the whole body.
-            if (bid > graft.operators.TieredIndex.lastBatch(indexDir)) {
-            val ss = batch.sparkSession
-            // hash the arrivals ONCE (first-of-hash agg + survivors
-            // join both consume this — q136's checkpoint rationale)
-            val keyed = batch
-              .select(col("doc_id"), col("lang"), col("source"), md5(col("text")).as("h"))
-              .localCheckpoint(eager = false)
-            val first = keyed.groupBy(col("h")).agg(min(col("doc_id")).as("doc_id"))
-            val surv = keyed
-              .join(first.select(col("doc_id")), Seq("doc_id"), "left_semi")
-              .join(graft.operators.TieredIndex.read(ss, indexDir), Seq("h"), "left_anti")
-              // materialize BEFORE the index append: appending first
-              // would make the lazy anti-join see this batch's own
-              // hashes and drop everything
-              .localCheckpoint()
-            // exactly-once under foreachBatch retries, like the index
-            // append below: each batch owns a deterministic subdir and
-            // OVERWRITES it, so a replayed batch replaces its own
-            // output instead of appending duplicate survivor rows
-            surv
-              .select(col("doc_id"), col("lang"), col("source"))
-              .write.mode("overwrite").parquet(s"$survDir/b$bid")
-            graft.operators.TieredIndex.append(ss, indexDir, surv.select(col("h")).distinct(), batchId = bid)
-            // per-batch index MAINTENANCE: size/tier-aware — a no-op
-            // manifest read until a threshold trips, then a MINOR
-            // compaction of the accumulated deltas only (O(batch), not
-            // O(index)); the base is rewritten only when the small
-            // generations reach a fraction of its size. Content-neutral:
-            // gate + cumulative-index spec see identical results.
-            graft.operators.TieredIndex.maintain(ss, indexDir, Seq(col("h"))): Unit
-            }
-          }
-          .start()
-        query.awaitTermination()
-        // end-of-window maintenance: force pending deltas into a tier so
-        // the index sits at its bounded steady-state file count for the
-        // next ingest window — StreamIncrementalSpec pins it
-        graft.operators.TieredIndex.maintain(s, indexDir, Seq(col("h")), force = true): Unit
-        s.read.option("recursiveFileLookup", "true").parquet(survDir).orderBy(col("doc_id"))
+      // day-0: the standing corpus's hash index (q136's flat builder
+      // reads the same historyHashes frame — one history definition)
+      (s, dir) => incrementalDedup(
+          s, dir, "q174", "hash_index", "h",
+          graft.queries.DedupOps.historyHashes(s, dir)) { (batch, index) =>
+        // hash the arrivals ONCE (first-of-hash agg + survivors
+        // join both consume this — q136's checkpoint rationale)
+        val keyed = batch
+          .select(col("doc_id"), col("lang"), col("source"), md5(col("text")).as("h"))
+          .localCheckpoint(eager = false)
+        val first = keyed.groupBy(col("h")).agg(min(col("doc_id")).as("doc_id"))
+        val surv = keyed
+          .join(first.select(col("doc_id")), Seq("doc_id"), "left_semi")
+          .join(index, Seq("h"), "left_anti")
+          .localCheckpoint()
+        (surv.select(col("doc_id"), col("lang"), col("source")), surv.select(col("h")).distinct())
       },
       Some(graft.queries.DedupOps.incrementalOracleSql)
     ),
@@ -849,10 +876,8 @@ object StreamOps {
     QueryDef(
       "q176_stream_fuzzy_dedup",
       (s, dir) => {
-        val work = graft.Engine.scratchDir("q176", dir)
-        graft.Engine.deleteRecursively(work)
         val bandsExpr = graft.functions.TextHashOps.bandBuckets(col("sig"), 4, 2)
-        def buckets(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+        def buckets(docs: DataFrame): DataFrame =
           docs
             .select(col("doc_id"), graft.queries.Tokenize.toksExpr.as("toks"))
             .filter(size(col("toks")) >= 3)
@@ -863,68 +888,28 @@ object StreamOps {
                   array_distinct(graft.functions.TextHashOps.gramsText(col("toks"), 3)), 8)
                 .as("sig"))
             .select(col("doc_id"), explode(bandsExpr).as("bucket"))
-        // day-0: the standing corpus's band buckets as a TIERED index
-        // (base generation range-clustered so the per-batch semi-join
-        // reads sorted stats-pruned files)
-        val indexDir = s"$work/bucket_index"
-        graft.operators.TieredIndex.create(
-          s,
-          indexDir,
-          buckets(graft.Engine.table(s, dir, "documents").filter(col("doc_id") % 5 =!= 0))
-            .select(col("bucket"))
-            .distinct(),
-          4,
-          Seq(col("bucket")))
-        val incoming = stageIncoming(s, dir, work.toString)
-        val survDir = s"$work/survivors"
-        val stream = s.readStream
-          .schema(s.read.parquet(incoming).schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(incoming)
-        val query = stream.writeStream
-          .option("checkpointLocation", s"$work/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            // replay guard — a committed watermark implies this batch's
-            // survivors are already durable (q174's rationale): without
-            // it, a replay lands in the window where the bucket index
-            // already holds this batch's buckets, dropExt matches
-            // everything, and the overwrite clobbers correct survivors
-            if (bid > graft.operators.TieredIndex.lastBatch(indexDir)) {
-            val ss = batch.sparkSession
-            val rows = batch
-              .select(col("doc_id"), col("lang"), col("source"), col("text"))
-              .localCheckpoint(eager = false)
-            // shingle+sign the arrivals ONCE: three consumers (external
-            // drop, within-batch min, index append)
-            val bk = buckets(rows).localCheckpoint(eager = false)
-            val dropExt = bk
-              .join(graft.operators.TieredIndex.read(ss, indexDir), Seq("bucket"), "left_semi")
-              .select(col("doc_id"))
-            val bmin = bk.groupBy(col("bucket")).agg(min(col("doc_id")).as("m"))
-            val dropIn = bk
-              .join(bmin, "bucket")
-              .filter(col("m") < col("doc_id"))
-              .select(col("doc_id"))
-            val dropped = dropExt.union(dropIn).distinct()
-            val surv = rows
-              .join(dropped, Seq("doc_id"), "left_anti")
-              // materialize BEFORE the index append (q174's rationale)
-              .localCheckpoint()
-            // per-batch overwrite dir = exactly-once on retry (q174's rationale)
-            surv.select(col("doc_id"), col("lang"), col("source")).write.mode("overwrite").parquet(s"$survDir/b$bid")
-            graft.operators.TieredIndex.append(ss, indexDir, bk.select(col("bucket")).distinct(), batchId = bid)
-            // per-batch size/tier-aware maintenance (q174's cycle):
-            // deltas-only minors, size-triggered majors; content-neutral
-            graft.operators.TieredIndex.maintain(ss, indexDir, Seq(col("bucket"))): Unit
-            }
-          }
-          .start()
-        query.awaitTermination()
-        // end-of-window maintenance — StreamIncrementalSpec pins the
-        // bounded steady-state file count + per-segment clustering
-        graft.operators.TieredIndex.maintain(s, indexDir, Seq(col("bucket")), force = true): Unit
-        s.read.option("recursiveFileLookup", "true").parquet(survDir).orderBy(col("doc_id"))
+        // day-0: the standing corpus's band buckets
+        val day0 = buckets(graft.Engine.table(s, dir, "documents").filter(col("doc_id") % 5 =!= 0))
+          .select(col("bucket"))
+          .distinct()
+        incrementalDedup(s, dir, "q176", "bucket_index", "bucket", day0) { (batch, index) =>
+          val rows = batch
+            .select(col("doc_id"), col("lang"), col("source"), col("text"))
+            .localCheckpoint(eager = false)
+          // shingle+sign the arrivals ONCE: three consumers (external
+          // drop, within-batch min, index append)
+          val bk = buckets(rows).localCheckpoint(eager = false)
+          val dropExt = bk.join(index, Seq("bucket"), "left_semi").select(col("doc_id"))
+          val bmin = bk.groupBy(col("bucket")).agg(min(col("doc_id")).as("m"))
+          val dropIn = bk
+            .join(bmin, "bucket")
+            .filter(col("m") < col("doc_id"))
+            .select(col("doc_id"))
+          val dropped = dropExt.union(dropIn).distinct()
+          val surv = rows.join(dropped, Seq("doc_id"), "left_anti").localCheckpoint()
+          // ALL the batch's buckets, dropped docs' too
+          (surv.select(col("doc_id"), col("lang"), col("source")), bk.select(col("bucket")).distinct())
+        }
       },
       Some(s"""WITH t AS (SELECT doc_id, lang, source, ${graft.queries.Tokenize.toksSql} AS toks
                FROM documents),
@@ -965,66 +950,28 @@ object StreamOps {
     // partitions); no state store; the hash index is the only state.
     QueryDef(
       "q181_stream_ingest_recipe",
-      (s, dir) => {
-        val work = graft.Engine.scratchDir("q181", dir)
-        graft.Engine.deleteRecursively(work)
-        // day-0: the standing corpus through the SAME gate; index = its
-        // survivors' distinct clean-token hashes as a TIERED index
-        val indexDir = s"$work/clean_hash_index"
-        graft.operators.TieredIndex.create(
-          s,
-          indexDir,
+      // day-0: the standing corpus through the SAME gate; index = its
+      // survivors' distinct clean-token hashes
+      (s, dir) => incrementalDedup(
+          s, dir, "q181", "clean_hash_index", "cm",
           graft.queries.CurationOps
             .ingestGate(graft.Engine.table(s, dir, "documents").filter(col("doc_id") % 5 =!= 0))
             .select(col("cm"))
-            .distinct(),
-          4,
-          Seq(col("cm")))
-        val incoming = stageIncoming(s, dir, work.toString)
-        val survDir = s"$work/survivors"
-        val stream = s.readStream
-          .schema(s.read.parquet(incoming).schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(incoming)
-        val query = stream.writeStream
-          .option("checkpointLocation", s"$work/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            // replay guard — a committed watermark implies this batch's
-            // survivors are already durable (q174's rationale): without
-            // it, a replay anti-joins against an index that already
-            // holds this batch's hashes and clobbers correct survivors
-            if (bid > graft.operators.TieredIndex.lastBatch(indexDir)) {
-            val ss = batch.sparkSession
-            // gate the arrivals ONCE (within-batch first-of-hash and
-            // the survivors join both consume this)
-            val gated = graft.queries.CurationOps
-              .ingestGate(batch)
-              .localCheckpoint(eager = false)
-            val first = gated.groupBy(col("cm")).agg(min(col("doc_id")).as("doc_id"))
-            val surv = gated
-              .join(first.select(col("doc_id")), Seq("doc_id"), "left_semi")
-              .join(graft.operators.TieredIndex.read(ss, indexDir), Seq("cm"), "left_anti")
-              // materialize BEFORE the index append (q174's rationale)
-              .localCheckpoint()
-            surv
-              .select(
-                col("doc_id"), col("lang"), col("source"), col("pii_ppm"),
-                col("n_words"), col("logit_micro"))
-              // per-batch overwrite dir = exactly-once on retry (q174's rationale)
-              .write.mode("overwrite").parquet(s"$survDir/b$bid")
-            graft.operators.TieredIndex.append(ss, indexDir, surv.select(col("cm")).distinct(), batchId = bid)
-            // per-batch size/tier-aware maintenance (q174's cycle):
-            // deltas-only minors, size-triggered majors; content-neutral
-            graft.operators.TieredIndex.maintain(ss, indexDir, Seq(col("cm"))): Unit
-            }
-          }
-          .start()
-        query.awaitTermination()
-        // end-of-window maintenance — StreamIncrementalSpec pins the
-        // bounded steady-state file count + per-segment clustering
-        graft.operators.TieredIndex.maintain(s, indexDir, Seq(col("cm")), force = true): Unit
-        s.read.option("recursiveFileLookup", "true").parquet(survDir).orderBy(col("doc_id"))
+            .distinct()) { (batch, index) =>
+        // gate the arrivals ONCE (within-batch first-of-hash and
+        // the survivors join both consume this)
+        val gated = graft.queries.CurationOps
+          .ingestGate(batch)
+          .localCheckpoint(eager = false)
+        val first = gated.groupBy(col("cm")).agg(min(col("doc_id")).as("doc_id"))
+        val surv = gated
+          .join(first.select(col("doc_id")), Seq("doc_id"), "left_semi")
+          .join(index, Seq("cm"), "left_anti")
+          .localCheckpoint()
+        (surv.select(
+            col("doc_id"), col("lang"), col("source"), col("pii_ppm"),
+            col("n_words"), col("logit_micro")),
+          surv.select(col("cm")).distinct())
       },
       Some(graft.queries.CurationOps.ingestRecipeOracleSql)
     ),
@@ -1134,29 +1081,19 @@ object StreamOps {
         // frozen-quantizer frames hoisted out of the per-batch loop
         val coarse = s.read.parquet(s"$work/coarse")
         val codebook = s.read.parquet(s"$work/codebook")
-        val stream = s.readStream
-          .schema(s.read.parquet(incoming).schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(incoming)
-        val query = stream.writeStream
-          .option("checkpointLocation", s"$work/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            // replay guard (q174's rationale) — the append itself
-            // already no-ops on a replayed id; skipping the body spares
-            // the replay the whole frozen-encode recompute as well
-            if (bid > graft.operators.TieredIndex.lastBatch(codesDir)) {
-            val ss = batch.sparkSession
+        microBatches(s, incoming, s"$work/ckpt") { (ss, batch, bid) =>
+          // replay guard — the append itself already no-ops on a
+          // replayed id; skipping the body spares the replay the whole
+          // frozen-encode recompute as well
+          if (bid > graft.operators.TieredIndex.lastBatch(codesDir)) {
             // frozen-codebook encode of the arrivals: the quantizers
             // come from the artifacts, never from this batch
             val enc = S.ivfadcEncode(S.toIv(batch), coarse, codebook)
             graft.operators.TieredIndex.append(ss, codesDir, S.packCodes(enc), batchId = bid)
             // per-batch size/tier-aware maintenance (q174's cycle)
             graft.operators.TieredIndex.maintain(ss, codesDir, Seq(col("ccid"), col("vec_id"))): Unit
-            }
           }
-          .start()
-        query.awaitTermination()
+        }
         // end-of-window maintenance: bounded steady-state file count
         graft.operators.TieredIndex.maintain(
           s, codesDir, Seq(col("ccid"), col("vec_id")), force = true): Unit
@@ -1249,26 +1186,14 @@ object StreamOps {
         // batch (ivfadcStreamSearch hoists its reused frames the same way)
         val iv = S.ivecs(s, dir)
         val servesDir = s"$work/serves"
-        val stream = s.readStream
-          .schema(s.read.parquet(incoming).schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(incoming)
-        val query = stream.writeStream
-          .option("checkpointLocation", s"$work/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            val ss = batch.sparkSession
-            val qb = S.toIv(batch).select(col("vec_id").as("qid"), col("iv").as("qiv"))
-            // the full two-stage request per micro-batch: probe the
-            // artifact (pruned scan), re-rank the 16 candidates by
-            // exact distance against the corpus vectors
-            S.ivfadcServe(ss, idx, qb, iv, k = 256)
-              .write.mode("overwrite").parquet(s"$servesDir/b$bid")
-          }
-          .start()
-        query.awaitTermination()
-        s.read.option("recursiveFileLookup", "true").parquet(servesDir)
-          .orderBy(col("qid"), col("rn"))
+        microBatches(s, incoming, s"$work/ckpt") { (ss, batch, bid) =>
+          val qb = S.toIv(batch).select(col("vec_id").as("qid"), col("iv").as("qiv"))
+          // the full two-stage request per micro-batch: probe the
+          // artifact (pruned scan), re-rank the 16 candidates by
+          // exact distance against the corpus vectors
+          writeBatch(S.ivfadcServe(ss, idx, qb, iv, k = 256), servesDir, bid)
+        }
+        readBatches(s, servesDir).orderBy(col("qid"), col("rn"))
       },
       Some(graft.queries.SimilarityOps.ivfadcServeOracleSql())
     ),
@@ -1316,34 +1241,24 @@ object StreamOps {
           .filter(col("vec_id") < 20)
           .select(col("vec_id").as("qid"), col("iv").as("qiv"))
           .localCheckpoint()
-        val stream = s.readStream
-          .schema(s.read.parquet(incoming).schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(incoming)
-        val query = stream.writeStream
-          .option("checkpointLocation", s"$work/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            val ss = batch.sparkSession
-            // exactly-once retraction: the tombstone append carries the
-            // batch watermark, so a crashed-then-replayed batch no-ops
-            graft.operators.TieredIndex.delete(
-              ss, codesDir, batch.select(col("vec_id")), batchId = bid)
-            // the delete-aware maintenance cycle, live per batch
-            graft.operators.TieredIndex
-              .maintain(ss, codesDir, Seq(col("ccid"), col("vec_id"))): Unit
-            // probe the SHRUNK index this batch just committed —
-            // batch bid's retractions must already be gone (idempotent
-            // overwrite: the probe is deterministic in the committed
-            // index state, q214's replay rationale)
+        microBatches(s, incoming, s"$work/ckpt") { (ss, batch, bid) =>
+          // exactly-once retraction: the tombstone append carries the
+          // batch watermark, so a crashed-then-replayed batch no-ops
+          graft.operators.TieredIndex.delete(
+            ss, codesDir, batch.select(col("vec_id")), batchId = bid)
+          // the delete-aware maintenance cycle, live per batch
+          graft.operators.TieredIndex
+            .maintain(ss, codesDir, Seq(col("ccid"), col("vec_id"))): Unit
+          // probe the SHRUNK index this batch just committed —
+          // batch bid's retractions must already be gone (idempotent
+          // overwrite: the probe is deterministic in the committed
+          // index state, q214's replay rationale)
+          writeBatch(
             S.ivfadcProbeIndex(ss, work.toString, q, k = 256)
-              .select(lit(bid).as("batch_id"), col("qid"), col("rn"), col("vec_id"), col("ad"))
-              .write.mode("overwrite").parquet(s"$probesDir/b$bid")
-          }
-          .start()
-        query.awaitTermination()
-        s.read.option("recursiveFileLookup", "true").parquet(probesDir)
-          .orderBy(col("batch_id"), col("qid"), col("rn"))
+              .select(lit(bid).as("batch_id"), col("qid"), col("rn"), col("vec_id"), col("ad")),
+            probesDir, bid)
+        }
+        readBatches(s, probesDir).orderBy(col("batch_id"), col("qid"), col("rn"))
       },
       Some(graft.queries.SimilarityOps.ivfadcStreamDeleteOracleSql)
     ),
@@ -1372,26 +1287,14 @@ object StreamOps {
           graft.Engine.table(s, dir, "embeddings").filter(col("vec_id") < 20),
           work.toString, expr("vec_id div 5"), 4)
         val probesDir = s"$work/probes"
-        val stream = s.readStream
-          .schema(s.read.parquet(incoming).schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(incoming)
-        val query = stream.writeStream
-          .option("checkpointLocation", s"$work/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            val ss = batch.sparkSession
-            val qb = S.toIv(batch).select(col("vec_id").as("qid"), col("iv").as("qiv"))
-            // per-batch probe through the one artifact-serving path —
-            // here the pruning bites hardest: 5 queries probe <= 10 of
-            // the 16 lists, and the pushed literal skips the rest
-            S.ivfadcProbeIndex(ss, idx, qb, k = 16)
-              .write.mode("overwrite").parquet(s"$probesDir/b$bid")
-          }
-          .start()
-        query.awaitTermination()
-        s.read.option("recursiveFileLookup", "true").parquet(probesDir)
-          .orderBy(col("qid"), col("rn"))
+        microBatches(s, incoming, s"$work/ckpt") { (ss, batch, bid) =>
+          val qb = S.toIv(batch).select(col("vec_id").as("qid"), col("iv").as("qiv"))
+          // per-batch probe through the one artifact-serving path —
+          // here the pruning bites hardest: 5 queries probe <= 10 of
+          // the 16 lists, and the pushed literal skips the rest
+          writeBatch(S.ivfadcProbeIndex(ss, idx, qb, k = 16), probesDir, bid)
+        }
+        readBatches(s, probesDir).orderBy(col("qid"), col("rn"))
       },
       Some(graft.queries.SimilarityOps.ivfadcProbeOracleSql)
     ),
@@ -1448,44 +1351,32 @@ object StreamOps {
         // frozen-quantizer frames hoisted out of the per-batch loop
         val coarse = s.read.parquet(s"$work/coarse")
         val codebook = s.read.parquet(s"$work/codebook")
-        val stream = s.readStream
-          .schema(s.read.parquet(incoming).schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(incoming)
-        val query = stream.writeStream
-          .option("checkpointLocation", s"$work/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            val ss = batch.sparkSession
-            // UPSERT half — watermark-guarded (skipping a replayed
-            // batch spares the frozen-encode recompute; append itself
-            // no-ops on the watermark regardless)
-            if (bid > graft.operators.TieredIndex.lastBatch(codesDir)) {
-              val enc = S.ivfadcEncode(
-                S.toIv(batch.filter(col("op") === "add")), coarse, codebook)
-              graft.operators.TieredIndex
-                .append(ss, codesDir, S.packCodesHex(enc), batchId = bid)
-            }
-            // RETRACT half — exactly-once against the SEPARATE delete
-            // watermark; same batchId as the append, both commit
-            graft.operators.TieredIndex.delete(
-              ss, codesDir,
-              batch.filter(col("op") === "del").select(col("vec_id")),
-              batchId = bid)
+        microBatches(s, incoming, s"$work/ckpt") { (ss, batch, bid) =>
+          // UPSERT half — watermark-guarded (skipping a replayed
+          // batch spares the frozen-encode recompute; append itself
+          // no-ops on the watermark regardless)
+          if (bid > graft.operators.TieredIndex.lastBatch(codesDir)) {
+            val enc = S.ivfadcEncode(
+              S.toIv(batch.filter(col("op") === "add")), coarse, codebook)
             graft.operators.TieredIndex
-              .maintain(ss, codesDir, Seq(col("ccid"), col("vec_id"))): Unit
-            // TWO-STAGE serve of the live index this batch just
-            // mutated (idempotent overwrite — q214's replay rationale)
-            S.ivfadcServe(ss, work.toString, q, iv, k = 256)
-              .select(
-                lit(bid).as("batch_id"), col("qid"), col("rn"),
-                col("vec_id"), col("d"))
-              .write.mode("overwrite").parquet(s"$servesDir/b$bid")
+              .append(ss, codesDir, S.packCodesHex(enc), batchId = bid)
           }
-          .start()
-        query.awaitTermination()
-        s.read.option("recursiveFileLookup", "true").parquet(servesDir)
-          .orderBy(col("batch_id"), col("qid"), col("rn"))
+          // RETRACT half — exactly-once against the SEPARATE delete
+          // watermark; same batchId as the append, both commit
+          graft.operators.TieredIndex.delete(
+            ss, codesDir,
+            batch.filter(col("op") === "del").select(col("vec_id")),
+            batchId = bid)
+          graft.operators.TieredIndex
+            .maintain(ss, codesDir, Seq(col("ccid"), col("vec_id"))): Unit
+          // TWO-STAGE serve of the live index this batch just
+          // mutated (idempotent overwrite — q214's replay rationale)
+          writeBatch(
+            S.ivfadcServe(ss, work.toString, q, iv, k = 256)
+              .select(lit(bid).as("batch_id"), col("qid"), col("rn"), col("vec_id"), col("d")),
+            servesDir, bid)
+        }
+        readBatches(s, servesDir).orderBy(col("batch_id"), col("qid"), col("rn"))
       },
       Some(graft.queries.SimilarityOps.ivfadcLiveServeOracleSql)
     ),
@@ -1542,10 +1433,8 @@ object StreamOps {
           // rank against the LIVE index this batch just committed
           // into; unconditional idempotent overwrite (q214's
           // replay-window rationale)
-          bm25Top5(T.read(ss, s"$w/postings"), terms, bid)
-            .write.mode("overwrite").parquet(s"$w/ranks/b$bid"))
-        s.read.option("recursiveFileLookup", "true").parquet(s"$work/ranks")
-          .orderBy(col("batch_id"), col("rk"))
+          writeBatch(bm25Top5(T.read(ss, s"$w/postings"), terms, bid), s"$w/ranks", bid))
+        readBatches(s, s"$work/ranks").orderBy(col("batch_id"), col("rk"))
       },
       Some(bm25PrefixRanksOracleSql)
     ),
@@ -1705,12 +1594,9 @@ object StreamOps {
         val work = bm25StreamIngest(
           s, dir, "q246",
           postFn = R.positionalPostingsOf,
-          afterCreate = (ss, w) =>
-            ranks(ss, w, -1L).write.mode("overwrite").parquet(s"$w/ranks/bm1"),
-          afterBatch = (ss, bid, w) =>
-            ranks(ss, w, bid).write.mode("overwrite").parquet(s"$w/ranks/b$bid"))
-        s.read.option("recursiveFileLookup", "true").parquet(s"$work/ranks")
-          .orderBy(col("batch_id"), col("phrase"), col("rk"))
+          afterCreate = (ss, w) => writeBatch(ranks(ss, w, -1L), s"$w/ranks", -1L),
+          afterBatch = (ss, bid, w) => writeBatch(ranks(ss, w, bid), s"$w/ranks", bid))
+        readBatches(s, s"$work/ranks").orderBy(col("batch_id"), col("phrase"), col("rk"))
       },
       Some(phrasePrefixRanksOracleSql)
     ),
@@ -1751,7 +1637,7 @@ object StreamOps {
             val stats = R.statsOf(dl).localCheckpoint()
             val w5 = org.apache.spark.sql.expressions.Window
               .orderBy(col("score").desc, col("doc_id"))
-            qsets.map { case (tag, words) =>
+            val pages = qsets.map { case (tag, words) =>
               R.bm25Score(R.termTfPushed(post, words), dl, stats)
                 .orderBy(col("score").desc, col("doc_id"))
                 .limit(5)
@@ -1759,11 +1645,10 @@ object StreamOps {
                 .select(
                   lit(bid).as("batch_id"), lit(tag).as("qset"),
                   col("rk"), col("doc_id"), col("score"))
-            }.reduce(_ unionAll _)
-              .write.mode("overwrite").parquet(s"$w/ranks/b$bid")
+            }
+            writeBatch(pages.reduce(_ unionAll _), s"$w/ranks", bid)
           })
-        s.read.option("recursiveFileLookup", "true").parquet(s"$work/ranks")
-          .orderBy(col("batch_id"), col("qset"), col("rk"))
+        readBatches(s, s"$work/ranks").orderBy(col("batch_id"), col("qset"), col("rk"))
       },
       Some(bm25EpochCachedOracleSql)
     ),
@@ -1867,8 +1752,7 @@ object StreamOps {
       (s, dir) => {
         val (work, _) = retrainSwapIngest(
           s, dir, "q253", graft.operators.TieredIndex.Policy(), recordServes = true)
-        s.read.option("recursiveFileLookup", "true").parquet(s"$work/serves")
-          .orderBy(col("batch_id"), col("qid"), col("rn"))
+        readBatches(s, s"$work/serves").orderBy(col("batch_id"), col("qid"), col("rn"))
       },
       Some(streamRetrainSwapOracleSql)
     ),
@@ -2196,47 +2080,34 @@ object StreamOps {
                 .otherwise(lit("upd"))),
           work.toString, expr("(doc_id div 5) % 4"), 4)
         val ranksDir = s"$work/ranks"
-        val stream = s.readStream
-          .schema(s.read.parquet(incoming).schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(incoming)
-        val query = stream.writeStream
-          .option("checkpointLocation", s"$work/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            val ss = batch.sparkSession
-            val adds = batch.filter(col("op") === "add")
-            val dels = batch.filter(col("op") === "del")
-            val upds = batch.filter(col("op") === "upd")
-              .withColumn("text", concat(col("text"), lit(s" $phraseCdcSuffix")))
-            // tombstone FIRST (retractions + superseded content — the
-            // doc-keyed mask covers every positions row of the doc),
-            // fresh positional postings second: the order contract
-            T.delete(
+        microBatches(s, incoming, s"$work/ckpt") { (ss, batch, bid) =>
+          val adds = batch.filter(col("op") === "add")
+          val dels = batch.filter(col("op") === "del")
+          val upds = batch.filter(col("op") === "upd")
+            .withColumn("text", concat(col("text"), lit(s" $phraseCdcSuffix")))
+          // tombstone FIRST (retractions + superseded content — the
+          // doc-keyed mask covers every positions row of the doc),
+          // fresh positional postings second: the order contract
+          T.delete(
+            ss, postDir,
+            dels.select(col("doc_id")).unionAll(upds.select(col("doc_id"))),
+            batchId = bid)
+          if (bid > T.lastBatch(postDir))
+            T.append(
               ss, postDir,
-              dels.select(col("doc_id")).unionAll(upds.select(col("doc_id"))),
-              batchId = bid)
-            if (bid > T.lastBatch(postDir))
-              T.append(
-                ss, postDir,
-                R.positionalPostingsOf(adds.unionByName(upds)), batchId = bid)
-            T.maintain(ss, postDir, Seq(col("word"), col("doc_id"))): Unit
-            // serve BOTH phrase arities from the live positional index
-            val post = T.read(ss, postDir)
-            gatePhrases
-              .map { case (tag, p) =>
-                R.phraseRank(post, p, topN = 20)
-                  .select(
-                    lit(bid).as("batch_id"), lit(tag).as("phrase"),
-                    col("rk"), col("doc_id"), col("n"))
-              }
-              .reduce(_ unionAll _)
-              .write.mode("overwrite").parquet(s"$ranksDir/b$bid")
+              R.positionalPostingsOf(adds.unionByName(upds)), batchId = bid)
+          T.maintain(ss, postDir, Seq(col("word"), col("doc_id"))): Unit
+          // serve BOTH phrase arities from the live positional index
+          val post = T.read(ss, postDir)
+          val pages = gatePhrases.map { case (tag, p) =>
+            R.phraseRank(post, p, topN = 20)
+              .select(
+                lit(bid).as("batch_id"), lit(tag).as("phrase"),
+                col("rk"), col("doc_id"), col("n"))
           }
-          .start()
-        query.awaitTermination()
-        s.read.option("recursiveFileLookup", "true").parquet(ranksDir)
-          .orderBy(col("batch_id"), col("phrase"), col("rk"))
+          writeBatch(pages.reduce(_ unionAll _), ranksDir, bid)
+        }
+        readBatches(s, ranksDir).orderBy(col("batch_id"), col("phrase"), col("rk"))
       },
       Some(phraseCdcRanksOracleSql)
     ),
@@ -2303,23 +2174,13 @@ object StreamOps {
     val incoming = stageBatches(
       docs.filter(col("doc_id") % 5 === 0),
       work.toString, expr("(doc_id div 5) % 4"), 4)
-    val stream = s.readStream
-      .schema(s.read.parquet(incoming).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(incoming)
-    val query = stream.writeStream
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-        val ss = batch.sparkSession
-        if (bid > T.lastBatch(store)) {
-          T.append(ss, store, postFn(batch), batchId = bid)
-          T.maintain(ss, store, Seq(col("word"), col("doc_id")), policy): Unit
-        }
-        afterBatch(ss, bid, work.toString)
+    microBatches(s, incoming, s"$work/ckpt") { (ss, batch, bid) =>
+      if (bid > T.lastBatch(store)) {
+        T.append(ss, store, postFn(batch), batchId = bid)
+        T.maintain(ss, store, Seq(col("word"), col("doc_id")), policy): Unit
       }
-      .start()
-    query.awaitTermination()
+      afterBatch(ss, bid, work.toString)
+    }
     work.toString
   }
 
@@ -2374,8 +2235,9 @@ object StreamOps {
     * the postings TieredIndex and the IVFADC artifacts (at `work`, or
     * blue `ann/gen-00000` committed at mark -1) over the standing
     * population (every doc but the arrivals); the stream then runs each
-    * `phases` element as one query on the ONE checkpoint dir (q262's
-    * stop/restart: the resumed query recovers from the offsets log).
+    * `phases` element as one [[microBatches]] call on the ONE checkpoint
+    * dir (q262's stop/restart: the resumed query recovers from the
+    * offsets log).
     * Per batch, the lexical and dense legs run concurrently — each
     * tombstones the batch's retracted and superseded docs, appends its
     * fresh rows exactly-once, and maintains — the generation policy
@@ -2527,34 +2389,24 @@ object StreamOps {
     try {
       for (slices <- h.phases) {
         val incoming = stageBatchSlices(staged, work.toString, slice("doc_id"), slices)
-        s.readStream
-          .schema(s.read.parquet(incoming).schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(incoming)
-          .writeStream
-          .option("checkpointLocation", s"$work/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            val ss = batch.sparkSession
-            legsInParallel(legs)(lexical(ss, bid, batch)) {
-              if (h.gens == SwapRollback && bid == swapAt) retrain(ss, bid - 1, mark = bid)
-              dense(ss, live(), bid, batch)
-              // green regressed: roll back to blue with ingest
-              // continuing; the catch-up re-drives each missed batch
-              // from the retained staged source through the same leg
-              if (h.gens == SwapRollback && bid == swapAt + 1 &&
-                  G.resolve(root).endsWith("gen-00001"))
-                rollbackCatchUp(root, "gen-00000", upTo = bid, mark = bid) { (tgt, b) =>
-                  dense(ss, tgt, b, ss.read.parquet(incoming).filter(slice("doc_id") === b))
-                }
-            }
-            // SwapAfter waits for BOTH legs: batch 2's dense ops land
-            // in blue before the swap
-            if (h.gens == SwapAfter && bid == swapAt) retrain(ss, bid, mark = bid)
-            serve(ss, bid).write.mode("overwrite").parquet(s"$work/pages/b$bid")
+        microBatches(s, incoming, s"$work/ckpt") { (ss, batch, bid) =>
+          legsInParallel(legs)(lexical(ss, bid, batch)) {
+            if (h.gens == SwapRollback && bid == swapAt) retrain(ss, bid - 1, mark = bid)
+            dense(ss, live(), bid, batch)
+            // green regressed: roll back to blue with ingest
+            // continuing; the catch-up re-drives each missed batch
+            // from the retained staged source through the same leg
+            if (h.gens == SwapRollback && bid == swapAt + 1 &&
+                G.resolve(root).endsWith("gen-00001"))
+              rollbackCatchUp(root, "gen-00000", upTo = bid, mark = bid) { (tgt, b) =>
+                dense(ss, tgt, b, ss.read.parquet(incoming).filter(slice("doc_id") === b))
+              }
           }
-          .start()
-          .awaitTermination()
+          // SwapAfter waits for BOTH legs: batch 2's dense ops land
+          // in blue before the swap
+          if (h.gens == SwapAfter && bid == swapAt) retrain(ss, bid, mark = bid)
+          writeBatch(serve(ss, bid), s"$work/pages", bid)
+        }
       }
     } finally legs.shutdown()
     work.toString
@@ -2564,8 +2416,7 @@ object StreamOps {
   private def hybridPages(
       s: org.apache.spark.sql.SparkSession, dir: String, h: Hybrid)
       : org.apache.spark.sql.DataFrame = {
-    val pages = s.read.option("recursiveFileLookup", "true")
-      .parquet(s"${runHybrid(s, dir, h)}/pages")
+    val pages = readBatches(s, s"${runHybrid(s, dir, h)}/pages")
     h.serve match {
       case LegPages(_) => pages.orderBy(col("batch_id"), col("leg"), col("rk"))
       case FusedPage => pages.orderBy(col("batch_id"), col("rk"))
@@ -2678,45 +2529,34 @@ object StreamOps {
     // per-generation frozen-quantizer memo (read once per generation,
     // not once per batch)
     val quant = quantReader()
-    val stream = s.readStream
-      .schema(s.read.parquet(incoming).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(incoming)
-    val query = stream.writeStream
-      .option("checkpointLocation", s"$work/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-        val ss = batch.sparkSession
-        // append to the LIVE generation (resolved per batch — after
-        // the swap this is gen-00001, whose seeded watermark makes a
-        // replayed pre-swap batch a no-op)
-        val cur = G.resolve(root)
-        if (bid > T.lastBatch(s"$cur/codes")) {
-          val (cc, cb) = quant(ss, cur)
-          val enc = S.ivfadcEncode(S.toIv(batch), cc, cb)
-          T.append(ss, s"$cur/codes", S.packCodes(enc), batchId = bid)
-          T.maintain(ss, s"$cur/codes", Seq(col("ccid"), col("vec_id")), policy): Unit
-        }
-        if (bid == 2 && G.resolve(root).endsWith("gen-00000")) {
-          // MID-STREAM RETRAIN: everything ingested so far; the
-          // un-pointed orphan from a crashed attempt — overwrite
-          graft.Engine.deleteRecursively(new java.io.File(s"$root/gen-00001"))
-          val pop = iv.filter(
-            col("vec_id") % 5 =!= 0 || expr("(vec_id div 5) % 4") <= 2)
-          S.writeIvfAdcArtifacts(
-            ss, s"$root/gen-00001", pop, k = 16, rounds = 1,
-            trainIv = Some(pop.filter(S.sampledTrainCol)), seedBatch = bid)
-          G.commit(root, "gen-00001", mark = bid)
-        }
-        if (recordServes && bid >= 2)
-          S.ivfadcServe(ss, G.resolve(root), q, iv, k = 16)
-            .select(
-              lit(bid).as("batch_id"), col("qid"), col("rn"),
-              col("vec_id"), col("d"))
-            .write.mode("overwrite").parquet(s"$servesDir/b$bid")
+    microBatches(s, incoming, s"$work/ckpt") { (ss, batch, bid) =>
+      // append to the LIVE generation (resolved per batch — after
+      // the swap this is gen-00001, whose seeded watermark makes a
+      // replayed pre-swap batch a no-op)
+      val cur = G.resolve(root)
+      if (bid > T.lastBatch(s"$cur/codes")) {
+        val (cc, cb) = quant(ss, cur)
+        val enc = S.ivfadcEncode(S.toIv(batch), cc, cb)
+        T.append(ss, s"$cur/codes", S.packCodes(enc), batchId = bid)
+        T.maintain(ss, s"$cur/codes", Seq(col("ccid"), col("vec_id")), policy): Unit
       }
-      .start()
-    query.awaitTermination()
+      if (bid == 2 && G.resolve(root).endsWith("gen-00000")) {
+        // MID-STREAM RETRAIN: everything ingested so far; the
+        // un-pointed orphan from a crashed attempt — overwrite
+        graft.Engine.deleteRecursively(new java.io.File(s"$root/gen-00001"))
+        val pop = iv.filter(
+          col("vec_id") % 5 =!= 0 || expr("(vec_id div 5) % 4") <= 2)
+        S.writeIvfAdcArtifacts(
+          ss, s"$root/gen-00001", pop, k = 16, rounds = 1,
+          trainIv = Some(pop.filter(S.sampledTrainCol)), seedBatch = bid)
+        G.commit(root, "gen-00001", mark = bid)
+      }
+      if (recordServes && bid >= 2)
+        writeBatch(
+          S.ivfadcServe(ss, G.resolve(root), q, iv, k = 16)
+            .select(lit(bid).as("batch_id"), col("qid"), col("rn"), col("vec_id"), col("d")),
+          servesDir, bid)
+    }
     (work.toString, root)
   }
 

@@ -106,9 +106,7 @@ class GroupStageSpec extends AnyFunSuite {
         false -> (k => Math.floorMod(k.hashCode, 3)), true -> (k => rank(k) % 3))) {
       assertGroups(3, parity, expected(3, partition), budget)
       // each reducer receives one run per distinct line, in code-point order
-      val (grouped, persisted) = MapReduceJob.groupedRdd(spark, spec(3, parity), budget)
-      val parts = grouped.glom().collect().toSeq
-      persisted.foreach(_.unpersist())
+      val parts = MapReduceJob.withGrouped(spark, spec(3, parity), budget)(_.glom().collect().toSeq)
       val want = Seq.tabulate(3)(i =>
         distinct.filter(d => partition(key(d._1)) == i).sortBy(_._1)(byCodePoint).map { case (l, n) => (l, n.toLong) })
       assert(parts.map(_.toSeq) == want, s"parity=$parity")
@@ -132,10 +130,38 @@ class GroupStageSpec extends AnyFunSuite {
     assert(Files.exists(marker), "the flaky reducer never failed")
     assert(bytes(out) == expected(3, k => Math.floorMod(k.hashCode, 3)))
 
-    val failing = spec(3, parity = false, reducer = "cat; exit 1")
-    val outDir = new File(failing.outputDir, "out")
-    intercept[org.apache.spark.SparkException](MapReduceJob.run(spark, failing.copy(outputDir = outDir.toString)))
-    assert(!outDir.exists, s"a failed job left ${Option(outDir.list).fold("")(_.mkString(", "))}")
+    // a failing reducer, then a failing mapper (in parity mode it fails
+    // the rank pass): no output, and parity mode's persisted map output
+    // is released
+    def persisted() = spark.sparkContext.getPersistentRDDs.keySet
+    for (parity <- Seq(false, true)) {
+      val before = persisted()
+      val failing = spec(3, parity, reducer = "cat; exit 1")
+      val outDir = new File(failing.outputDir, "out")
+      intercept[org.apache.spark.SparkException](MapReduceJob.run(spark, failing.copy(outputDir = outDir.toString)))
+      assert(!outDir.exists, s"a failed job left ${Option(outDir.list).fold("")(_.mkString(", "))}")
+      assert(persisted() == before, s"parity=$parity: a failed job left a persisted RDD")
+
+      val badMap = spec(3, parity).copy(mapperCmd = "cat; exit 1")
+      val groupDir = new File(badMap.outputDir, "group")
+      for (job <- Seq[() => Any](() => MapReduceJob.run(spark, badMap),
+                                  () => MapReduceJob.mapAndGroup(spark, badMap, groupDir.toString)))
+        intercept[org.apache.spark.SparkException](job())
+      assert(!groupDir.exists && !new File(badMap.outputDir, "outputfile01").exists)
+      assert(persisted() == before, s"parity=$parity: a failing mapper left a persisted RDD")
+    }
+  }
+
+  test("pipePartition deletes its graft-reduce-* file when the runs iterator throws") {
+    val tmp = new File(System.getProperty("java.io.tmpdir"))
+    def spilled(): Set[String] =
+      Option(tmp.list()).fold(Set.empty[String])(_.filter(_.startsWith("graft-reduce-")).toSet)
+    val before = spilled()
+    val runs = Iterator(("a\t1", 2L), ("b\t1", 1L)) ++
+      Iterator.continually[(String, Long)](throw new java.io.IOException("fetch failed")).take(1)
+    val e = intercept[java.io.IOException](Pipes.pipePartition("cat", runs))
+    assert(e.getMessage == "fetch failed")
+    assert(spilled() -- before == Set.empty)
   }
 
   test("a job leaves no graft-mr-* staging directory in java.io.tmpdir") {

@@ -1,13 +1,17 @@
 package graft.streaming
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicBoolean
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The hybrid lifecycle runner's two building blocks with a failure
-  * contract: the concurrent index legs and the micro-batch staging.
+/** The lifecycle building blocks with a contract of their own: the
+  * concurrent index legs, the micro-batch staging, and the micro-batch
+  * driver every file-stream lifecycle runs on.
   */
 class LifecycleHelpersSpec extends AnyFunSuite {
   private lazy val spark = graft.Engine.session("test")
@@ -46,6 +50,27 @@ class LifecycleHelpersSpec extends AnyFunSuite {
     assert(e.getMessage.contains("phases must be disjoint"), e.getMessage)
     assert(listing == before)
     assert(!new java.io.File(work, "stage_tmp").exists)
+    graft.Engine.deleteRecursively(new java.io.File(work))
+  }
+
+  test("microBatches runs staged slice k as batch id k, in order, and resumes from its checkpoint") {
+    val work = Files.createTempDirectory("graft-driver-").toString
+    val df = spark.range(0, 40).toDF("doc_id")
+    val slice = col("doc_id") % 4
+    def rows(k: Int): Set[Long] = (0L until 40L).filter(_ % 4 == k).toSet
+    // one call of the driver on the ONE checkpoint dir: (batch id, rows) per body run
+    def drive(incoming: String): Seq[(Long, Set[Long])] = {
+      val seen = new ConcurrentLinkedQueue[(Long, Set[Long])]()
+      StreamOps.microBatches(spark, incoming, s"$work/ckpt") { (_, batch, bid) =>
+        seen.add(bid -> batch.collect().map(_.getLong(0)).toSet): Unit
+      }
+      seen.asScala.toSeq
+    }
+    val incoming = StreamOps.stageBatchSlices(df, work, slice, 0 to 2)
+    assert(drive(incoming) == (0 to 2).map(k => (k.toLong, rows(k))))
+    // a restart after a fourth slice lands: only id 3 runs
+    StreamOps.stageBatchSlices(df, work, slice, Seq(3))
+    assert(drive(incoming) == Seq((3L, rows(3))))
     graft.Engine.deleteRecursively(new java.io.File(work))
   }
 }
