@@ -179,15 +179,16 @@ object Graft {
     */
   def ingestGate(docs: DataFrame): DataFrame = queries.CurationOps.ingestGate(docs)
 
-  /** Distributed BPE merge learning (q190): `steps` rounds of pair
-    * counting -> broadcast argmax -> merge-everywhere over a one-column
-    * `word` DataFrame; returns the learned (step, a, b, cnt) table.
-    * The application side (encode a word under the literal merge
+  /** BPE merge learning (q190): a distributed (word, freq) count of a
+    * one-column `word` DataFrame, then `steps` rounds of pair counting
+    * -> argmax -> merge-everywhere inside one task (exactness rules in
+    * [[queries.Bpe.trainMerges]]); returns the learned (step, a, b, cnt)
+    * table. The application side (encode a word under the literal merge
     * table, count per-doc tokens) is [[queries.Bpe]]'s SQL builders —
     * q188/q189/q191's kernel.
     */
   def bpeTrainMerges(words: DataFrame, steps: Int): DataFrame =
-    queries.Bpe.trainMerges(words, steps)
+    queries.Bpe.trainMerges(words, steps).select("step", "a", "b", "cnt")
 
   /** Trained per-subspace PQ codebook over `{dir}/embeddings.parquet`
     * (M=8 x K=16, the q202 exact-integer Lloyd recipe) — 128 rows

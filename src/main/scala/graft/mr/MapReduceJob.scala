@@ -218,8 +218,8 @@ object MapReduceJob {
     try {
       val dir = staging.toString
       runs.sparkContext.runJob(runs, (ctx: TaskContext, part: Iterator[(String, Long)]) => {
-        val name = f"part-${ctx.partitionId}%05d"
-        val attempt = Paths.get(dir, s"$name.attempt-${ctx.taskAttemptId}")
+        val name = f"part-${ctx.partitionId()}%05d"
+        val attempt = Paths.get(dir, s"$name.attempt-${ctx.taskAttemptId()}")
         Pipes.writeRuns(attempt, part)
         Files.move(attempt, Paths.get(dir, name), StandardCopyOption.ATOMIC_MOVE): Unit
       })

@@ -1,6 +1,10 @@
 package graft.queries
 
+import scala.collection.mutable
+
 import graft.{Engine, QueryDef}
+import graft.mr.MapReduceJob
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Byte-pair-encoding merge APPLICATION — the last standard stage of a
@@ -45,6 +49,11 @@ import org.apache.spark.sql.functions._
   * narrow work, no shuffle, no UDF; the DuckDB oracle applies the SAME
   * table via the same wrap/replace/count pipeline (only the two
   * engines' regex-replacement spellings differ: `$1` vs `\1`).
+  *
+  * Merge LEARNING has one trainer, [[Bpe.trainMerges]]: a distributed
+  * vocabulary count, then every merge round inside one task. Its
+  * scaladoc states the exactness rules (tie-break order, merge,
+  * n_affected, exhaustion) that the training oracles replay.
   */
 object Bpe {
 
@@ -143,261 +152,98 @@ object Bpe {
     s"CAST(coalesce(list_sum(list_transform($toksCol, " +
       s"w -> ${symCountDuck(encodeDuck("w"))})), 0) AS BIGINT)"
 
-  /** Spark SQL: adjacent symbol pairs (`a|b`) of an encoded stream
-    * column named `s` — the unit BPE TRAINING counts. The `size >= 2`
-    * guard matters: `sequence(1, 0)` DESCENDS in Spark (the engine-wide
-    * gotcha), so a single-symbol word must short-circuit to the empty
-    * array, exactly as DuckDB's empty `generate_series(1, 0)` does.
+  /** DuckDB: adjacent symbol pairs (`a|b`) of a symbol list column
+    * named `sy` — the unit the training oracles count (the series is
+    * empty when len < 2).
     */
-  val pairsSpark: String =
-    s"case when size(sy) >= 2 then transform(sequence(1, size(sy) - 1), " +
-      "i -> concat(element_at(sy, i), '|', element_at(sy, i + 1))) " +
-      "else array() end"
-
-  /** DuckDB mirror of [[pairsSpark]] (empty series when len < 2). */
   val pairsDuck: String =
     "list_transform(generate_series(1, len(sy) - 1), i -> sy[i] || '|' || sy[i + 1])"
 
-  /** The BPE merge-learning loop (q190's body, factored out so BpeSpec
-    * can drive it on a hand-computable fixture): `steps` rounds of
-    * count-pairs -> global argmax -> merge-everywhere over a one-column
-    * `word` DataFrame. The loop runs on the PRE-AGGREGATED (word, freq)
-    * VOCABULARY — the Sennrich training shape: pair counts are
-    * freq-weighted sums, which equal instance counts exactly, but each
-    * round rescans |vocab| symbol streams instead of |corpus| (the
-    * round-9 change that took q190 from the bench's top cost to
-    * sub-second; at 100 TB the vocab/corpus ratio is ~1e-6). A corpus
-    * with fewer than `steps` mergeable pair generations fails LOUDLY:
-    * the learned rows carry a lazy raise_error guard, so exhaustion
-    * (an all-null argmax row) aborts the consuming query with a clear
-    * message instead of null-cascading through the merge-back (no
-    * extra action per round — the guard rides the existing plan).
-    * Returns (step, a, b, cnt).
+  /** BPE merge learning, the Sennrich et al. induction loop (q190's
+    * body; `Graft.bpeTrainMerges`): `steps` rounds of count adjacent
+    * symbol pairs -> take the most frequent pair -> merge it everywhere,
+    * over a one-column `word` DataFrame. Returns (step, a, b, cnt,
+    * n_affected), ordered by step.
+    *
+    * It is one map -> group -> reduce pass. The distributed
+    * `groupBy(word)` count is the only step that grows with the corpus;
+    * it also splits each vocabulary word into its initial symbols
+    * (`symsSpark(wrapSpark(word))`). The (symbols, freq) table, bounded
+    * by the word types, is then coalesced into ONE task that runs every
+    * round in plain Scala. Pair counts, and the words that hold each
+    * pair, are kept by exact freq-weighted deltas: a round subtracts the
+    * old pairs of the words the merge touches and adds their new ones,
+    * and leaves every other word alone. The state stays in that task.
+    *
+    * Exactness rules (the DuckDB oracles replay them by string replace
+    * and a full recount per round; BpeSpec pins them against an
+    * independent recount):
+    *   - argmax: the highest `cnt`; ties break on the smallest `a|b` in
+    *     UTF-8 byte (code point) order, [[graft.mr.MapReduceJob.utf8Ordering]],
+    *     as the oracles' `ORDER BY cnt DESC, pr` does. `String.compareTo`
+    *     is UTF-16 order, which differs above U+FFFF;
+    *   - merge: adjacent (a, b) becomes ab, left to right, without
+    *     overlaps — `replace(s, ' a  b ', ' ab ')` on the wrapped form;
+    *   - n_affected: the vocabulary words that contain the pair before
+    *     the merge (the q209 oracle's `contains` count);
+    *   - exhaustion: with no pair left at step t the task throws "bpe
+    *     training exhausted: no mergeable pair at step t — ...".
+    * Symbols hold no space (they come from a split on spaces); a word
+    * whose symbols hold '|' makes the `a|b` spelling ambiguous, here as
+    * in the oracles.
     */
-  /** The SHALLOW-depth trainer: per-round full pair recount over the
-    * vocabulary — q190/q194/q195/q196's loop. Round 11 added the
-    * incremental-maintenance loop ([[trainMergesStats]], gated 256
-    * deep by q209) and MEASURED the crossing point rather than
-    * assuming it: on this corpus's toy vocabulary (31 distinct words;
-    * bigram pretokens ~961) the recount's per-round data cost is
-    * trivial, so the delta loop's two extra small stages per round
-    * made q196 ~40% slower at 64 steps — the recount stays the
-    * shallow-depth dispatch and the delta loop is the depth/scale
-    * path, exactly the hash-vs-sort style cost dispatch a real engine
-    * ships. At a real vocabulary (>=1e5 words) the recount is
-    * O(vocab)/round while deltas touch only affected words (q209's
-    * measured n_affected: 277 -> 1), so the crossing point sits far
-    * below production depth. BpeSpec pins the two loops EQUAL
-    * merge-for-merge on fixtures; q209's oracle proves the delta loop
-    * against a full-recount replay at depth 256.
-    */
-  def trainMerges(words: org.apache.spark.sql.DataFrame, steps: Int): org.apache.spark.sql.DataFrame = {
-    var vocab = words
+  def trainMerges(words: DataFrame, steps: Int): DataFrame =
+    words
       .groupBy(col("word"))
       .agg(count(lit(1)).as("freq"))
-      .select(expr(wrapSpark("word")).as("s"), col("freq"))
-      // NOT single-partitioned, unlike trainMergesStatsLoop's state:
-      // measured at sf0.1, coalesce(1) here is a slight LOSS (9.1 ->
-      // 9.7 s on q196) — the recount re-explodes the whole vocabulary
-      // every round, so it actually uses the partition parallelism the
-      // delta loop's kilobyte updates cannot
-      .localCheckpoint(eager = false) // re-read every round
-    val learned = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-    for (t <- 1 to steps) {
-      val best = vocab
-        .select(expr(symsSpark("s")).as("sy"), col("freq"))
-        .select(explode(expr(pairsSpark)).as("pr"), col("freq"))
-        .groupBy(col("pr"))
-        .agg(sum(col("freq")).as("cnt"))
-        .agg(min(struct((-col("cnt")).as("neg"), col("pr"), col("cnt"))).as("m"))
-        .select(
-          split(col("m.pr"), "\\|").getItem(0).as("a"),
-          split(col("m.pr"), "\\|").getItem(1).as("b"),
-          col("m.cnt").as("cnt"))
-        .localCheckpoint(eager = false) // consumed twice: output + merge-back
-      val guard = (c: org.apache.spark.sql.Column) =>
-        when(c.isNotNull, c).otherwise(raise_error(lit(
-          s"bpe training exhausted: no mergeable pair at step $t — " +
-            "corpus vocabulary too small for the requested depth")))
-      learned += best.select(lit(t.toLong).as("step"), guard(col("a")).as("a"), guard(col("b")).as("b"), col("cnt"))
-      vocab = vocab
-        .crossJoin(broadcast(best))
-        .select(
-          expr("replace(s, concat(' ', a, '  ', b, ' '), concat(' ', a, b, ' '))").as("s"),
-          col("freq"))
-        .localCheckpoint(eager = false)
-    }
-    learned.reduce(_ unionAll _).orderBy(col("step"))
-  }
-
-  /** The INCREMENTAL-maintenance trainer (the round-10 verdict's "BPE
-    * training depth" item) — the depth/scale dispatch of
-    * [[trainMerges]], semantically EQUAL merge-for-merge (BpeSpec pins
-    * it) and additionally exposing the per-step maintenance
-    * observable: returns (step, a, b, cnt, n_affected) where
-    * n_affected is the number of vocabulary entries the step's merge
-    * touched.
-    *
-    * The full pairs-explode + hash aggregate runs ONCE to seed the
-    * pair-count table, and each round then (1) takes the argmax from
-    * the standing counts, (2) finds the AFFECTED vocabulary rows — the
-    * ones whose symbol stream contains the merged pair's ' a  b '
-    * spelling, i.e. exactly the rows replace() would change, (3)
-    * subtracts their old pair multisets and adds their post-merge ones
-    * (freq-weighted integer deltas — exact, not approximate), and (4)
-    * folds the deltas into the counts table, dropping zeroed pairs.
-    * Unaffected words — the overwhelming majority once common pairs
-    * are consumed — contribute NOTHING to a round: per-round
-    * explode/agg work is O(affected words x word length) + O(pair
-    * domain) for the argmax, instead of O(vocab x word length) for the
-    * full recount. At a real ~50k-merge depth the affected set shrinks
-    * toward a handful of rare words per round while vocab stays
-    * ~constant — the difference between O(vocab x rounds) and
-    * O(vocab + total edits). q209 gates this loop at 256 steps against
-    * a DuckDB replay of the RECOUNT algorithm with n_affected in the
-    * hashed output — the cost driver itself is cross-engine-verified,
-    * not just asserted. (See [[trainMerges]] for the measured
-    * crossing point that keeps the recount as the shallow dispatch.)
-    *
-    * Exhaustion semantics are [[trainMerges]]'s: an empty pair table
-    * yields an all-null argmax row whose lazy raise_error guard aborts
-    * the consuming query with the step number; the merge-back treats
-    * the null pattern as a no-op, so no null cascades into state.
-    */
-  def trainMergesStats(words: org.apache.spark.sql.DataFrame, steps: Int): org.apache.spark.sql.DataFrame = {
-    // AQE is scoped OFF for the training loop (restored in the finally
-    // below): adaptive re-optimization pays off on data-sized shuffle
-    // stages, but this loop's frames are kilobytes at ANY corpus scale
-    // (the pair domain is vocabulary-bound, not corpus-bound) and its
-    // 256 sequential rounds turn the per-stage re-planning into pure
-    // driver overhead — measured at ~26% of the whole query at sf0.1.
-    // The toggle is session-global, so this assumes the session runs
-    // one query at a time (true for the Verify/Bench harness and the
-    // specs — the registry executes serially); a concurrently-planning
-    // query would silently lose AQE for its lifetime. The returned
-    // table is materialized EAGERLY inside the try: without that, the
-    // lazy learned-union (and the tail rounds when steps % 32 != 0)
-    // would actually execute after the finally restores AQE, leaking
-    // part of the loop back into adaptive re-planning.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqeWas = words.sparkSession.conf.get(aqeKey)
-    words.sparkSession.conf.set(aqeKey, "false")
-    try trainMergesStatsLoop(words, steps).localCheckpoint()
-    finally words.sparkSession.conf.set(aqeKey, aqeWas)
-  }
-
-  private def trainMergesStatsLoop(
-      words: org.apache.spark.sql.DataFrame, steps: Int): org.apache.spark.sql.DataFrame = {
-    // BOTH state frames are single-partitioned for the whole loop, and
-    // every per-round stage then plans with ZERO exchanges: the frames
-    // are kilobytes (~961 rows each on this corpus) while the loop runs
-    // `steps` SEQUENTIAL rounds, so at 256 rounds the wall cost is
-    // per-round scheduling/re-planning, not data (measured x1.14 at
-    // sf1). A SinglePartition child satisfies every distribution
-    // requirement (clustered AND all-tuples), so once the state is
-    // coalesce(1)-ed, the in-loop groupBy/argmax-agg plan WITHOUT an
-    // exchange — each round is one narrow task chain, and AQE (whose
-    // per-stage re-optimization was measured at ~26% of this query) has
-    // no stage boundaries left to re-plan inside the loop. A real ~50k-
-    // word vocab would raise the partition count with its size — the
-    // knob is the frame's partitioning, not the algorithm.
-    //
-    // `best` stays an AGGREGATE on purpose: an aggregate is a size-
-    // estimation BARRIER. Spelling it as filter(rank = 1) instead lets
-    // SizeInBytesOnlyStats flow the previous round's estimate through
-    // the cross join, whose stats MULTIPLY — the BigInt digit count
-    // then compounds Fibonacci-style across rounds and by round ~30 the
-    // driver is doing million-digit multiplications inside the stats
-    // visitor on every localCheckpoint (measured: the loop never
-    // finished; thread dump showed BigInteger.multiplyToomCook3 under
-    // LogicalRDD.rewriteStatsAndConstraints).
-    var vocab = words
-      .groupBy(col("word"))
-      .agg(count(lit(1)).as("freq"))
-      .select(expr(wrapSpark("word")).as("s"), col("freq"))
+      .select(expr(symsSpark(wrapSpark("word"))).as("sy"), col("freq"))
       .coalesce(1)
-      .localCheckpoint(eager = false) // re-read every round
-    // the ONE full pair count — every later round maintains it by deltas
-    var counts = vocab
-      .select(expr(symsSpark("s")).as("sy"), col("freq"))
-      .select(explode(expr(pairsSpark)).as("pr"), col("freq").as("f"))
-      .groupBy(col("pr"))
-      .agg(sum(col("f")).as("cnt"))
-      .localCheckpoint(eager = false)
-    val learned = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-    for (t <- 1 to steps) {
-      val best = counts
-        .agg(min(struct((-col("cnt")).as("neg"), col("pr"), col("cnt"))).as("m"))
-        .select(
-          split(col("m.pr"), "\\|").getItem(0).as("a"),
-          split(col("m.pr"), "\\|").getItem(1).as("b"),
-          col("m.cnt").as("cnt"))
-      // tag each vocab row with whether this round's merge touches it;
-      // checkpointed once, consumed four ways (stats row, old-pair
-      // deltas, new-pair deltas, next vocab)
-      val tagged = vocab
-        .crossJoin(broadcast(best))
-        .withColumn("hit", expr("contains(s, concat(' ', a, '  ', b, ' '))"))
-        .localCheckpoint(eager = false)
-      val guard = (c: org.apache.spark.sql.Column) =>
-        when(c.isNotNull, c).otherwise(raise_error(lit(
-          s"bpe training exhausted: no mergeable pair at step $t — " +
-            "corpus vocabulary too small for the requested depth")))
-      // a, b, cnt are constants across tagged (1-row broadcast): min()
-      // reads them back deterministically in the same agg that counts
-      // the affected rows
-      learned += tagged
-        .agg(
-          min(col("a")).as("a0"),
-          min(col("b")).as("b0"),
-          min(col("cnt")).as("c0"),
-          sum(when(coalesce(col("hit"), lit(false)), 1L).otherwise(0L)).as("n_affected"))
-        .select(
-          lit(t.toLong).as("step"),
-          guard(col("a0")).as("a"),
-          guard(col("b0")).as("b"),
-          col("c0").as("cnt"),
-          col("n_affected"))
-      val aff = tagged
-        .filter(col("hit"))
-        .withColumn(
-          "s2",
-          expr("replace(s, concat(' ', a, '  ', b, ' '), concat(' ', a, b, ' '))"))
-      // exact integer deltas: affected rows' old pairs out, new pairs in
-      val deltas = aff
-        .select(expr(symsSpark("s")).as("sy"), (-col("freq")).as("f"))
-        .select(explode(expr(pairsSpark)).as("pr"), col("f"))
-        .unionAll(aff
-          .select(expr(symsSpark("s2")).as("sy"), col("freq").as("f"))
-          .select(explode(expr(pairsSpark)).as("pr"), col("f")))
-      // LAZY checkpoints defer RDD materialization — and therefore
-      // lineage TRUNCATION — to the final action, whose task closures
-      // then nest one level per round: at 64 rounds (q196) that
-      // serializes, at 256 it is a deserialization StackOverflowError.
-      // Materializing the two state tables EAGERLY every 32 rounds
-      // forces every pending lazy checkpoint behind them, so lineage
-      // depth stays bounded at ~32 rounds regardless of total depth —
-      // 2 small extra jobs per 32 rounds, the price of unbounded depth.
-      val eager = t % 32 == 0
-      counts = counts
-        .select(col("pr"), col("cnt").as("f"))
-        .unionAll(deltas)
-        // coalesce BEFORE the groupBy: the union's three single-
-        // partition legs merge narrowly, and the aggregate on a
-        // SinglePartition child plans with no exchange at all
-        .coalesce(1)
-        .groupBy(col("pr"))
-        .agg(sum(col("f")).as("cnt"))
-        .filter(col("cnt") > 0)
-        .localCheckpoint(eager = eager)
-      vocab = tagged
-        .select(
-          expr("if(coalesce(hit, false), " +
-            "replace(s, concat(' ', a, '  ', b, ' '), concat(' ', a, b, ' ')), s)").as("s"),
-          col("freq"))
-        .localCheckpoint(eager = eager)
+      .mapPartitions { rows =>
+        val vocab = rows.filterNot(_.isNullAt(0)).map(r => (r.getSeq[String](0).toArray, r.getLong(1)))
+        mergeRounds(vocab.toArray, steps)
+      }(Encoders.tuple(
+        Encoders.scalaLong, Encoders.STRING, Encoders.STRING, Encoders.scalaLong, Encoders.scalaLong))
+      .toDF("step", "a", "b", "cnt", "n_affected")
+      .orderBy(col("step"))
+
+  /** [[trainMerges]]' rounds over one task's (symbols, freq) vocabulary. */
+  private def mergeRounds(
+      vocab: Array[(Array[String], Long)], steps: Int): Iterator[(Long, String, String, Long, Long)] = {
+    val syms = vocab.map(_._1)
+    val cnt = mutable.HashMap.empty[(String, String), Long]
+    val holders = mutable.HashMap.empty[(String, String), mutable.Set[Int]]
+    def account(w: Int, sign: Long): Unit =
+      syms(w).iterator.zip(syms(w).iterator.drop(1)).foreach { p =>
+        val c = cnt.getOrElse(p, 0L) + sign * vocab(w)._2
+        if (c == 0L) { cnt -= p; holders -= p }
+        else {
+          cnt(p) = c
+          val h = holders.getOrElseUpdate(p, mutable.Set.empty)
+          if (sign > 0) h += w else h -= w
+        }
+      }
+    def merge(sy: Array[String], a: String, b: String): Array[String] = {
+      val out = mutable.ArrayBuffer.empty[String]
+      var i = 0
+      while (i < sy.length) {
+        if (i + 1 < sy.length && sy(i) == a && sy(i + 1) == b) { out += a + b; i += 2 }
+        else { out += sy(i); i += 1 }
+      }
+      out.toArray
     }
-    learned.reduce(_ unionAll _).orderBy(col("step"))
+    def pr(p: (String, String)): String = p._1 + "|" + p._2
+    syms.indices.foreach(account(_, 1L))
+    (1 to steps).map { t =>
+      if (cnt.isEmpty)
+        throw new IllegalStateException(s"bpe training exhausted: no mergeable pair at step $t — " +
+          "corpus vocabulary too small for the requested depth")
+      val ((a, b), c) = cnt.reduce { (x, y) =>
+        if (y._2 > x._2 || y._2 == x._2 && MapReduceJob.utf8Ordering.lt(pr(y._1), pr(x._1))) y else x
+      }
+      val hit = holders((a, b)).toArray
+      hit.foreach { w => account(w, -1L); syms(w) = merge(syms(w), a, b); account(w, 1L) }
+      (t.toLong, a, b, c, hit.length.toLong)
+    }.iterator
   }
 
   /** Collapse a learned merge table (step, a, b, ...) into ONE row with
@@ -498,24 +344,17 @@ object BpeOps {
     // --------------------------------------------------------------- q190
     // Distributed BPE merge LEARNING — the tokenizer-TRAINING side of
     // q188's application: 6 rounds of (count adjacent symbol pairs ->
-    // take the globally most frequent pair -> merge it everywhere),
-    // the Sennrich et al. BPE induction loop as distributed dataflow,
-    // run on the PRE-AGGREGATED (word, freq) VOCABULARY with
-    // freq-weighted pair counts (the real training shape: one corpus
-    // scan builds the vocab, then every round rescans |vocab| streams,
-    // not |corpus| — the difference between 8.5 s and sub-second here,
-    // and between feasible and not at 100 TB). Each round is ONE hash
-    // aggregate over exploded pairs (map-side partial combine; the pair
-    // domain, not the corpus, is the shuffle) + ONE single-row
-    // broadcast argmax folded back via crossJoin — the q183/q101
-    // per-round economics: no collect(), no window. Deterministic:
-    // argmax ties break on the pair string, mirrored by the oracle's
-    // ORDER BY cnt DESC, pr LIMIT 1. The ORACLE deliberately counts
-    // token INSTANCES (no vocab pre-aggregation): the hash gate then
-    // PROVES freq-weighted vocab counting equals instance counting —
-    // two algorithms, one contract. Output: the learned merge table
-    // (step, a, b, count); a real run does ~50k steps, same per-round
-    // shape.
+    // take the globally most frequent pair -> merge it everywhere), the
+    // Sennrich et al. BPE induction loop, through Bpe.trainMerges: one
+    // distributed (word, freq) VOCABULARY count, then every round in one
+    // task over freq-weighted pair counts (at 100 TB the vocabulary is
+    // bounded by word types, not corpus size). Deterministic: argmax
+    // ties break on the pair string, mirrored by the oracle's ORDER BY
+    // cnt DESC, pr LIMIT 1. The ORACLE deliberately counts token
+    // INSTANCES (no vocab pre-aggregation): the hash gate then PROVES
+    // freq-weighted vocab counting equals instance counting — two
+    // algorithms, one contract. Output: the learned merge table (step,
+    // a, b, count); a real run does ~50k steps.
     QueryDef(
       "q190_bpe_train",
       (s, dir) =>
@@ -523,7 +362,8 @@ object BpeOps {
           Engine
             .table(s, dir, "documents")
             .select(explode(Tokenize.toksExpr).as("word")),
-          steps = 6),
+          steps = 6)
+          .select(col("step"), col("a"), col("b"), col("cnt")),
       Some {
         val steps = 6
         val unions = (1 to steps)
@@ -627,10 +467,9 @@ object BpeOps {
     // --------------------------------------------------------------- q196
     // Deep learned-vocabulary fertility — q191's datacard metric under
     // a 64-step LEARNED table (the verdict-9 "beyond 6 merges" depth):
-    // train 64 Sennrich rounds on the corpus vocabulary (q190's loop —
-    // per-round cost is one hash agg over the VOCAB's exploded pairs +
-    // one broadcast argmax, so depth scales the round count, not the
-    // corpus cost), then report per-language tokens-per-word under
+    // train 64 Sennrich rounds on the corpus vocabulary (q190's trainer —
+    // the rounds run in one task over the VOCAB, so depth scales the
+    // round count, not the corpus cost), then report per-language tokens-per-word under
     // those merges via the native encoder. 64 levels exercise genuinely
     // multi-level merge stacks (symbols built from symbols built from
     // symbols), the regime where greedy merge-rank order and the
@@ -735,31 +574,27 @@ object BpeOps {
              FROM d GROUP BY lang ORDER BY lang""")
     ),
     // --------------------------------------------------------------- q209
-    // 256-STEP incremental training gate — the depth at which the
-    // round-10 verdict asked the trainer to stop paying a full pair
-    // recount per round (q196's 64 rounds were all per-round overhead;
-    // at production ~50k-merge depth the recount is O(vocab x rounds)).
-    // trainMergesStats seeds the pair-count table ONCE and maintains it
-    // by exact freq-weighted deltas over only the AFFECTED vocabulary
-    // rows; the gated output carries n_affected per step, so the cost
-    // driver itself — the shrinking per-round touched set — is part of
-    // the cross-engine-hashed contract, not a wall-clock anecdote. The
+    // 256-STEP training gate with the per-step maintenance observable:
+    // Bpe.trainMerges keeps its pair counts by exact freq-weighted
+    // deltas over only the AFFECTED vocabulary words, and the gated
+    // output carries n_affected per step, so the cost driver itself —
+    // the shrinking per-round touched set — is part of the
+    // cross-engine-hashed contract, not a wall-clock anecdote. The
     // training units are SentencePiece-style PRETOKENS — adjacent token
     // bigrams joined by a '_' marker (not in the [a-z0-9] token
     // alphabet) — so merges cross word boundaries the way
     // GPT-2/SentencePiece vocabularies do; necessarily so HERE, because
     // the synthetic corpus holds only 31 distinct words (~107 possible
     // within-word merges — q196's 64 steps fit, 256 cannot), while the
-    // bigram pretoken universe carries ~9.6k. The DuckDB oracle
-    // deliberately replays the OLD algorithm — a per-round full recount
-    // on the freq-weighted vocabulary — so the 256-deep hash equality
-    // PROVES the delta maintenance exact: 256 argmaxes, 256
-    // merge-backs, and 256 affected-counts all agree between two
-    // different algorithms.
+    // bigram pretoken universe carries ~9.6k. The DuckDB oracle replays
+    // a different algorithm — a per-round full recount on the
+    // freq-weighted vocabulary — so the 256-deep hash equality PROVES
+    // the delta maintenance exact: 256 argmaxes, 256 merge-backs, and
+    // 256 affected-counts all agree.
     QueryDef(
       "q209_bpe_incremental_train",
       (s, dir) =>
-        Bpe.trainMergesStats(
+        Bpe.trainMerges(
           Engine
             .table(s, dir, "documents")
             .select(Tokenize.toksExpr.as("toks"))
@@ -786,8 +621,8 @@ object BpeOps {
     */
   private def IncSteps: Int = 256
 
-  /** q209's oracle: a per-round FULL-recount replay (the algorithm the
-    * incremental trainer replaced) on the freq-weighted vocabulary, at
+  /** q209's oracle: a per-round FULL-recount replay (not the trainer's
+    * delta maintenance) on the freq-weighted vocabulary, at
     * `steps` depth, emitting each round's argmax (pr, cnt) AND its
     * affected-vocabulary-row count. MATERIALIZED on every CTE
     * referenced twice — the q196 depth lesson (default inlining

@@ -17,16 +17,8 @@ class ConcurrencySpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
   private lazy val spark = Engine.session("test")
 
-  test("six concurrent registry queries on one session match their serial results") {
+  private def assertConcurrentMatchesSerial(names: Seq[String]): Unit = {
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val names = Seq(
-      "q01_pricing_summary",
-      "q04_brand_volume",
-      "q11_topk_orders",
-      "q30_events_hourly",
-      "q50_exact_dedup",
-      "q65_token_zipf"
-    )
     def run(n: String): Seq[String] =
       SparkEntry.queries(n)(spark, dir).collect().map(_.toString).toSeq
     val serial = names.map(n => n -> run(n)).toMap
@@ -34,5 +26,29 @@ class ConcurrencySpec extends AnyFunSuite {
       .result(Future.sequence(names.map(n => Future(n -> run(n)))), 180.seconds)
       .toMap
     names.foreach(n => assert(concurrent(n) == serial(n), s"$n diverged under concurrency"))
+  }
+
+  test("six concurrent registry queries on one session match their serial results") {
+    assertConcurrentMatchesSerial(Seq(
+      "q01_pricing_summary",
+      "q04_brand_volume",
+      "q11_topk_orders",
+      "q30_events_hourly",
+      "q50_exact_dedup",
+      "q65_token_zipf"
+    ))
+  }
+
+  test("BPE trainers run beside other queries on one session and leave AQE on") {
+    // the trainer holds its state inside one task: no session conf
+    // toggle, no checkpoint in the block store
+    assertConcurrentMatchesSerial(Seq(
+      "q01_pricing_summary",
+      "q65_token_zipf",
+      "q190_bpe_train",
+      "q194_bpe_train_apply",
+      "q196_bpe_deep_fertility"
+    ))
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
   }
 }

@@ -140,6 +140,14 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!p.contains("Exchange hashpartitioning"), p.take(1500))
   }
 
+  test("q209: BPE training is one vocabulary exchange, then every merge round in one task") {
+    val p = plan("q209_bpe_incremental_train")
+    // the (word, freq) count is the only shuffle; the 256 rounds and
+    // the step sort run in the coalesced task
+    assert("Exchange".r.findAllMatchIn(p).length == 1, p.take(2500))
+    assert(p.contains("Coalesce 1") && p.contains("MapPartitions"), p.take(2500))
+  }
+
   test("q183: the adjacency cap is a bounded aggregate — no per-src window sort") {
     val p = plan("q183_random_walks")
     // the <=32-neighbor cap must come from the MinKByKey bounded

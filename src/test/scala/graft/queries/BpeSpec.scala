@@ -319,50 +319,52 @@ class BpeSpec extends AnyFunSuite {
     assert(one.mkString == words.head, "symbols must concatenate back to the word")
   }
 
-  test("q190 training loop matches a hand-computed fixture") {
+  private def trained(words: Seq[String], steps: Int): Seq[(Long, String, String, Long, Long)] = {
     import spark.implicits._
+    Bpe
+      .trainMerges(words.toDF("word"), steps)
+      .collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3), r.getLong(4)))
+      .toSeq
+  }
+
+  test("q190 training loop matches a hand-computed fixture") {
     // corpus: the, the, then, and, and, and
     //   round 1: pairs t|h x3, h|e x3, e|n x1, a|n x3, n|d x3
     //            -> cnt-3 tie breaks on pair string: a|n
     //   round 2: an|d x3 beats h|e / t|h on the string -> an|d
     //   round 3: h|e x3 beats t|h -> h|e
     //   round 4: t|he x3 (the/then now ' t  he ..') -> t|he
-    val words = Seq("the", "the", "then", "and", "and", "and").toDF("word")
-    val got = Bpe
-      .trainMerges(words, steps = 4)
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-      .toSeq
-    assert(got == Seq((1L, "a", "n", 3L), (2L, "an", "d", 3L), (3L, "h", "e", 3L), (4L, "t", "he", 3L)))
-    // the incremental maintenance observable (q209): n_affected counts
-    // VOCABULARY entries touched per round — round 1 merges (a, n)
-    // inside 'and' only (1 of 3 vocab entries), round 3's (h, e) sits
-    // in both 'the' and 'then'
-    val stats = Bpe
-      .trainMergesStats(words, steps = 4)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(4)))
-      .toSeq
-    assert(stats == Seq((1L, 1L), (2L, 1L), (3L, 2L), (4L, 2L)), s"n_affected drifted: $stats")
+    // n_affected counts VOCABULARY entries touched per round — round 1
+    // merges (a, n) inside 'and' only (1 of 3 vocab entries), round 3's
+    // (h, e) sits in both 'the' and 'then'
+    assert(trained(Seq("the", "the", "then", "and", "and", "and"), steps = 4) == Seq(
+      (1L, "a", "n", 3L, 1L), (2L, "an", "d", 3L, 1L), (3L, "h", "e", 3L, 2L), (4L, "t", "he", 3L, 2L)))
   }
 
   test("incremental trainer == full-recount trainer, merge for merge") {
-    import spark.implicits._
-    // the two dispatches of the trainer (recount = shallow path,
-    // delta maintenance = depth path, see trainMerges' scaladoc) must
-    // learn IDENTICAL tables — same argmaxes, same tie-breaks, same
-    // counts — on any corpus; 24 steps over a random 5-letter-alphabet
-    // vocabulary exercises multi-level stacks and count collisions
+    // the trainer keeps its pair counts by deltas over the affected
+    // words; BpeFolds recounts every pair each round by string replace,
+    // as the DuckDB oracles do. Both must learn IDENTICAL tables — same
+    // argmaxes, tie-breaks, counts and n_affected — on any corpus; 24
+    // steps over a random 5-letter-alphabet vocabulary exercises
+    // multi-level stacks and count collisions
     val rnd = new scala.util.Random(7)
-    val words = Seq
-      .fill(400)((0 until (3 + rnd.nextInt(6))).map(_ => ('a' + rnd.nextInt(5)).toChar).mkString)
-      .toDF("word")
-    val recount = Bpe.trainMerges(words, steps = 24).collect().map(_.toSeq).toSeq
-    val incr = Bpe
-      .trainMergesStats(words, steps = 24)
-      .select(col("step"), col("a"), col("b"), col("cnt"))
-      .collect().map(_.toSeq).toSeq
-    assert(incr == recount, "delta-maintained training diverged from the recount")
+    val words = Seq.fill(400)((0 until (3 + rnd.nextInt(6))).map(_ => ('a' + rnd.nextInt(5)).toChar).mkString)
+    assert(trained(words, 24) == BpeFolds.trainMerges(words, 24),
+      "delta-maintained training diverged from the recount")
+  }
+
+  test("argmax ties break in code-point order, not UTF-16 order") {
+    // U+FFFD|a and U+1F600|a tie at count 2: U+FFFD is the smaller code
+    // point, but U+1F600's UTF-16 high surrogate (0xD83D) sorts below
+    // 0xFFFD, so a String.compareTo tie-break would learn U+1F600|a first
+    val replacement = "\uFFFD"
+    val grinning = new String(Character.toChars(0x1F600))
+    val words = Seq.fill(2)(s"${replacement}a") ++ Seq.fill(2)(s"${grinning}a")
+    val want = Seq((1L, replacement, "a", 2L, 1L), (2L, grinning, "a", 2L, 1L))
+    assert(BpeFolds.trainMerges(words, 2) == want)
+    assert(trained(words, 2) == want)
   }
 
   test("training exhaustion fails loudly, not with a null cascade") {
