@@ -16,6 +16,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     `sum(int)` -> HUGEINT, `length` -> BIGINT, Spark `row_number` ->
   *     INT...) are cast to BIGINT on both sides
   *   - every query has a deterministic ORDER BY with a unique tiebreak
+  *
+  * Oracle text that two or more builders share is written once, as a
+  * `def` fragment in `queries.OracleSql` (distances, kNN ranks, recall
+  * and ranking-metric tails, shingle/MinHash chains, ...): compose from
+  * it rather than paste. The dumped oracle text is pinned per query by
+  * `OracleTextSpec`.
   */
 final case class QueryDef(
     name: String,

@@ -26,9 +26,16 @@ object Verify {
       }
       Engine.releaseScratch(spark) // drop this query's checkpoint/cache blocks
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(SparkEntry.oracleSql))
+    spark.stop()
+  }
+
+  /** The `oracle_sql.json` text: one JSON object, query name -> oracle SQL,
+    * in the map's iteration order. The string escape covers backslash,
+    * quote and ALL control chars (<0x20): a tab or CR in builder-authored
+    * SQL would otherwise make the driver's json.load fail and silently
+    * zero the round's correctness. `OracleTextSpec` pins its output. */
+  def oracleJson(sql: Map[String, String]): String = {
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -38,9 +45,6 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    sql.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
   }
 }

@@ -45,67 +45,6 @@ object Layout {
     spark.read.parquet(outDir)
   }
 
-  /** In-place maintenance compaction for an append-accumulating parquet
-    * directory — the periodic cycle that keeps a LONG-RUNNING ingest's
-    * persisted index operational: the streaming dedup indexes
-    * (q174/q176/q181) grow by one small file set per micro-batch, and
-    * without re-compaction a month of arrivals means thousands of tiny
-    * files (per-file open/footer overhead, no vectorized row groups)
-    * and the loss of the sorted-stats pruning the day-0 [[compact]]
-    * bought. This rewrites the current contents as `targetFiles`
-    * range-clustered, sorted files and swaps them in; the CONTENT — and
-    * therefore every anti-join/gate downstream — is unchanged
-    * (StreamIncrementalSpec pins both halves: bounded file count with
-    * disjoint per-file key ranges, and byte-identical query results).
-    *
-    * The swap is rename-based: the new generation is fully written
-    * before the old one is dropped, so a crash leaves a complete file
-    * set — at the live path, or (if the kill lands between the two
-    * renames) parked at `dir + ".old"`, which the NEXT call repairs by
-    * renaming it back before doing anything destructive; stale
-    * `.compacting`/`.old` leftovers are only discarded once the live
-    * path exists. (On an object store this is a manifest/pointer
-    * swap — same shape, different commit primitive.) Caller must
-    * ensure no reader holds an open plan over `dir` across the call.
-    *
-    * NOTE (round 10): for a LONG-RUNNING maintained index this
-    * whole-directory rewrite is superseded by [[TieredIndex]], whose
-    * manifest-swap generations remove the crash-repair window entirely,
-    * tolerate concurrent readers, and compact deltas at O(delta) cost
-    * instead of O(index) per cycle — the streaming dedup indexes
-    * (q174/q176/q181) now live there. This stays as the one-shot
-    * "rewrite this directory in place" maintenance job it is.
-    */
-  def compactInPlace(
-      spark: SparkSession,
-      dir: String,
-      targetFiles: Int,
-      clusterCols: Column*
-  ): Unit = {
-    val target = new java.io.File(dir)
-    val tmp = new java.io.File(dir + ".compacting")
-    val old = new java.io.File(dir + ".old")
-    // crash repair FIRST: a kill between "retire" and "commit" below
-    // leaves the live path absent and the previous generation at .old
-    // — restore it (deleting .old here instead would destroy the only
-    // surviving index; round-9 review finding)
-    if (!target.exists && old.exists)
-      require(old.renameTo(target), s"compactInPlace: cannot restore $old")
-    require(target.exists, s"compactInPlace: $dir does not exist")
-    graft.Engine.deleteRecursively(tmp)
-    graft.Engine.deleteRecursively(old)
-    spark.read
-      .parquet(dir)
-      .repartitionByRange(targetFiles, clusterCols: _*)
-      .sortWithinPartitions(clusterCols: _*)
-      .write
-      .mode("overwrite")
-      .parquet(tmp.toString)
-    require(target.renameTo(old), s"compactInPlace: cannot retire $dir")
-    require(tmp.renameTo(target), s"compactInPlace: cannot commit $tmp")
-    graft.Engine.deleteRecursively(old)
-  }
-
   /** Deterministic, engine-portable training-shard assignment: two hex
     * nibbles of md5(key) -> [0, 256) -> mod nShards. Built from ascii()
     * arithmetic only, so a manifest computed by any engine (the DuckDB

@@ -6,6 +6,7 @@ import graft.{Engine, QueryDef}
 import graft.mr.MapReduceJob
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+import OracleSql._
 
 /** Byte-pair-encoding merge APPLICATION — the last standard stage of a
   * training-data pipeline the engine was missing: every published
@@ -331,15 +332,7 @@ object BpeOps {
       },
       Some(s"""WITH t AS (SELECT doc_id, ${Tokenize.toksSql} AS toks FROM documents),
              st AS (SELECT doc_id, ${Bpe.docTokensDuck("toks")} AS nt FROM t),
-             c AS (
-               SELECT doc_id, nt,
-                 coalesce(sum(nt) OVER (ORDER BY doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS s
-               FROM st)
-             SELECT doc_id, CAST(nt AS BIGINT) AS n_tokens,
-               CAST(s // 2048 AS BIGINT) AS pack_id,
-               CAST(s % 2048 AS BIGINT) AS pack_offset
-             FROM c ORDER BY doc_id""")
+             $packSql""")
     ),
     // --------------------------------------------------------------- q190
     // Distributed BPE merge LEARNING — the tokenizer-TRAINING side of
@@ -660,7 +653,7 @@ object BpeOps {
                  i -> toks[i] || '_' || toks[i + 1])) AS word FROM t),
              v AS (SELECT word, count(*) AS freq FROM wl GROUP BY word),
              s0 AS MATERIALIZED (SELECT ${Bpe.wrapDuck("word")} AS s, freq FROM v),
-             ${stepCtes.mkString(",\n             ")}
+             ${stepCtes.mkString(cteSep)}
              SELECT step, string_split(pr, '|')[1] AS a, string_split(pr, '|')[2] AS b,
                CAST(cnt AS BIGINT) AS cnt, CAST(na AS BIGINT) AS n_affected
              FROM $unions u ORDER BY step"""
@@ -729,7 +722,7 @@ object BpeOps {
              wl AS MATERIALIZED (SELECT lang, unnest(toks) AS word FROM t),
              v AS (SELECT word, count(*) AS freq FROM wl GROUP BY word),
              s0 AS MATERIALIZED (SELECT ${Bpe.wrapDuck("word")} AS s, freq FROM v),
-             ${stepCtes.mkString(",\n             ")},
+             ${stepCtes.mkString(cteSep)},
              m AS (SELECT $pivots FROM $froms),
              wc AS (SELECT word, CAST(${Bpe.symCountDuck(chain)} AS BIGINT) AS c
                FROM (SELECT DISTINCT word FROM wl) dw, m),
@@ -769,6 +762,6 @@ object BpeOps {
     s"""WITH t AS (SELECT ${Tokenize.toksSql} AS toks FROM documents),
              w AS (SELECT unnest(toks) AS word FROM t),
              s0 AS (SELECT ${Bpe.wrapDuck("word")} AS s FROM w),
-             ${stepCtes.mkString(",\n             ")}"""
+             ${stepCtes.mkString(cteSep)}"""
   }
 }

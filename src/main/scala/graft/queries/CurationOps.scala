@@ -4,6 +4,7 @@ import graft.{Engine, QueryDef}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import OracleSql._
 
 /** Corpus-curation operators a large-scale training-data pipeline runs
   * between raw ingestion and tokenization: benchmark decontamination,
@@ -403,10 +404,7 @@ object CurationOps {
             md5(concat_ws(" ", col("col"))).as("chunk_md5")
           )
           .orderBy(col("doc_id"), col("chunk_id")),
-      Some(s"""WITH t AS (
-               SELECT doc_id,
-                 ${Tokenize.toksSql} AS toks
-               FROM documents),
+      Some(s"""WITH $toksCte,
              c AS (
                SELECT doc_id, unnest(generate_series(0, (len(toks) - 1) // 24)) AS i, toks
                FROM t WHERE len(toks) >= 1)
@@ -444,10 +442,7 @@ object CurationOps {
           .select(col("doc_id"), col("n_tokens"), col("cum_tokens"))
           .orderBy(col("doc_id"))
       },
-      Some(s"""WITH t AS (
-               SELECT doc_id,
-                 ${Tokenize.toksSql} AS toks
-               FROM documents),
+      Some(s"""WITH $toksCte,
              st AS (SELECT doc_id, len(toks) AS nt, len(list_distinct(toks)) AS nd FROM t),
              c AS (
                SELECT doc_id, nt,
@@ -613,20 +608,9 @@ object CurationOps {
           )
           .orderBy(col("doc_id"))
       },
-      Some(s"""WITH t AS (
-               SELECT doc_id,
-                 ${Tokenize.toksSql} AS toks
-               FROM documents),
+      Some(s"""WITH $toksCte,
              st AS (SELECT doc_id, len(toks) AS nt FROM t),
-             c AS (
-               SELECT doc_id, nt,
-                 coalesce(sum(nt) OVER (ORDER BY doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS s
-               FROM st)
-             SELECT doc_id, CAST(nt AS BIGINT) AS n_tokens,
-               CAST(s // 2048 AS BIGINT) AS pack_id,
-               CAST(s % 2048 AS BIGINT) AS pack_offset
-             FROM c ORDER BY doc_id""")
+             $packSql""")
     ),
     // --------------------------------------------------------------- q130
     // Deterministic train/val/test split manifest: every doc lands in a
@@ -1135,31 +1119,7 @@ object CurationOps {
                      * 1000000 // greatest(n_kept, 1) >= 800000),
              ex AS (SELECT * FROM q
                QUALIFY row_number() OVER (PARTITION BY clean_md5 ORDER BY doc_id) = 1),
-             shq AS (SELECT doc_id, list_distinct(list_transform(
-                 generate_series(1, len(kept) - 2),
-                 i -> kept[i] || ' ' || kept[i+1] || ' ' || kept[i+2])) AS sg
-               FROM ex WHERE len(kept) >= 3),
-             mq AS (SELECT doc_id,
-                 ${graft.functions.TextHashOps.sigSql()} AS sig
-               FROM shq),
-             bq AS (SELECT doc_id, ${graft.functions.TextHashOps.bandBucketsSql("sig", 4, 2)} AS bucket FROM mq),
-             dropf AS (SELECT DISTINCT b1.doc_id
-               FROM bq b1 JOIN (SELECT bucket, min(doc_id) AS m FROM bq GROUP BY bucket) bm
-                 ON b1.bucket = bm.bucket AND bm.m < b1.doc_id),
-             sv AS (SELECT * FROM ex
-               WHERE NOT EXISTS (SELECT 1 FROM dropf WHERE dropf.doc_id = ex.doc_id)),
-             qs AS (SELECT doc_id, lang, source, n_kept,
-                 CASE WHEN row_number() OVER (PARTITION BY lang, source
-                        ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id)
-                        <= (count(*) OVER (PARTITION BY lang, source) + 19) // 20
-                      THEN 'val' ELSE 'train' END AS split
-               FROM sv)
-             SELECT doc_id, lang, source, n_kept, split,
-               CAST(row_number() OVER (ORDER BY md5('s42|' || CAST(doc_id AS VARCHAR)), doc_id) - 1
-                 AS BIGINT) AS pos,
-               CAST((row_number() OVER (ORDER BY md5('s42|' || CAST(doc_id AS VARCHAR)), doc_id) - 1)
-                 % 16 AS BIGINT) AS shard
-             FROM qs ORDER BY pos""")
+             ${recipeTailSql("kept", "doc_id, lang, source, n_kept")}""")
     ),
     // --------------------------------------------------------------- q173
     // The COMPLETE published-recipe composite — q167 extended with the
@@ -1251,13 +1211,7 @@ object CurationOps {
              blq AS (SELECT * FROM tk
                WHERE len(list_filter(toks, x -> list_contains([$BlocklistSql], x))) = 0),
              ft AS (SELECT *, CAST(len(toks) AS BIGINT) AS n_words,
-                 CAST(list_sum(list_transform(toks, x -> length(x)))
-                   * 1000000 // len(toks) AS BIGINT) AS mean_wlen_micro,
-                 CAST(len(list_filter(toks, x -> regexp_matches(x, '[a-z]')))
-                   * 1000000 // len(toks) AS BIGINT) AS alpha_ppm,
-                 CAST(len(list_distinct(toks)) * 1000000 // len(toks) AS BIGINT) AS ttr_ppm,
-                 CAST(len(list_intersect(list_distinct(toks),
-                   ['the','be','to','of','and','that','have','with'])) AS BIGINT) AS stop_hits
+                 $qualityFeatures
                FROM blq WHERE len(toks) >= 1),
              q AS (SELECT *, CAST(${TextOps.qualityLogitSql} AS BIGINT) AS logit_micro FROM ft
                WHERE n_words >= 20
@@ -1267,31 +1221,7 @@ object CurationOps {
              ex AS (SELECT * FROM q
                QUALIFY row_number() OVER (PARTITION BY md5(array_to_string(toks, ' '))
                  ORDER BY doc_id) = 1),
-             shq AS (SELECT doc_id, list_distinct(list_transform(
-                 generate_series(1, len(toks) - 2),
-                 i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sg
-               FROM ex WHERE len(toks) >= 3),
-             mq AS (SELECT doc_id,
-                 ${graft.functions.TextHashOps.sigSql()} AS sig
-               FROM shq),
-             bq AS (SELECT doc_id, ${graft.functions.TextHashOps.bandBucketsSql("sig", 4, 2)} AS bucket FROM mq),
-             dropf AS (SELECT DISTINCT b1.doc_id
-               FROM bq b1 JOIN (SELECT bucket, min(doc_id) AS m FROM bq GROUP BY bucket) bm
-                 ON b1.bucket = bm.bucket AND bm.m < b1.doc_id),
-             sv AS (SELECT * FROM ex
-               WHERE NOT EXISTS (SELECT 1 FROM dropf WHERE dropf.doc_id = ex.doc_id)),
-             qs AS (SELECT doc_id, lang, source, domain, n_words, pii_ppm, logit_micro,
-                 CASE WHEN row_number() OVER (PARTITION BY lang, source
-                        ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id)
-                        <= (count(*) OVER (PARTITION BY lang, source) + 19) // 20
-                      THEN 'val' ELSE 'train' END AS split
-               FROM sv)
-             SELECT doc_id, lang, source, domain, n_words, pii_ppm, logit_micro, split,
-               CAST(row_number() OVER (ORDER BY md5('s42|' || CAST(doc_id AS VARCHAR)), doc_id) - 1
-                 AS BIGINT) AS pos,
-               CAST((row_number() OVER (ORDER BY md5('s42|' || CAST(doc_id AS VARCHAR)), doc_id) - 1)
-                 % 16 AS BIGINT) AS shard
-             FROM qs ORDER BY pos""")
+             ${recipeTailSql("toks", "doc_id, lang, source, domain, n_words, pii_ppm, logit_micro")}""")
     ),
     // --------------------------------------------------------------- q178
     // Bloom-prefiltered decontamination — q64's semantics through the
@@ -1460,13 +1390,7 @@ object CurationOps {
       Some(s"""WITH t AS (SELECT doc_id, source, ${Tokenize.toksSql} AS toks FROM documents),
              f AS (SELECT doc_id, source,
                  CAST(len(toks) AS BIGINT) AS n_words,
-                 CAST(list_sum(list_transform(toks, x -> length(x)))
-                   * 1000000 // len(toks) AS BIGINT) AS mean_wlen_micro,
-                 CAST(len(list_filter(toks, x -> regexp_matches(x, '[a-z]')))
-                   * 1000000 // len(toks) AS BIGINT) AS alpha_ppm,
-                 CAST(len(list_distinct(toks)) * 1000000 // len(toks) AS BIGINT) AS ttr_ppm,
-                 CAST(len(list_intersect(list_distinct(toks),
-                   ['the','be','to','of','and','that','have','with'])) AS BIGINT) AS stop_hits
+                 $qualityFeatures
                FROM t WHERE len(toks) >= 1),
              sc AS (SELECT doc_id, source,
                  CAST(${TextOps.qualityLogitSql} AS BIGINT) AS logit_micro FROM f),
@@ -1558,14 +1482,8 @@ object CurationOps {
                  md5(text) AS h
                FROM documents),
              hc AS (SELECT h, count(*) AS hn FROM st GROUP BY h),
-             shq AS (SELECT doc_id, list_distinct(list_transform(
-                 generate_series(1, len(toks) - 2),
-                 i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sg
-               FROM st WHERE len(toks) >= 3),
-             mq AS (SELECT doc_id,
-                 ${graft.functions.TextHashOps.sigSql()} AS sig
-               FROM shq),
-             bq AS (SELECT doc_id, ${graft.functions.TextHashOps.bandBucketsSql("sig", 4, 2)} AS bucket FROM mq),
+             ${shingleMinhashCtes("toks", "st")},
+             $bandBucketCte,
              bm AS (SELECT bucket FROM bq GROUP BY bucket HAVING count(DISTINCT doc_id) > 1),
              near AS (SELECT DISTINCT doc_id FROM bq JOIN bm USING (bucket)),
              f AS (SELECT st.lang, st.source,
@@ -1777,6 +1695,33 @@ object CurationOps {
     * paths all occur: 'dup' appears in a small minority of docs;
     * 'leak'/'spam' never.
     */
+  /** The shared end of the q167/q173 recipe oracles, after the
+    * exact-dedup survivors `ex`: fuzzy MinHash-band dedup over the
+    * shingles of token column `toks` (a bucket's smallest doc_id
+    * survives), the per-(lang, source) 5% validation split, and the
+    * seeded shard manifest over the columns `cols`.
+    */
+  private def recipeTailSql(toks: String, cols: String): String =
+    s"""${shingleMinhashCtes(toks, "ex")},
+             $bandBucketCte,
+             dropf AS (SELECT DISTINCT b1.doc_id
+               FROM bq b1 JOIN (SELECT bucket, min(doc_id) AS m FROM bq GROUP BY bucket) bm
+                 ON b1.bucket = bm.bucket AND bm.m < b1.doc_id),
+             sv AS (SELECT * FROM ex
+               WHERE NOT EXISTS (SELECT 1 FROM dropf WHERE dropf.doc_id = ex.doc_id)),
+             qs AS (SELECT $cols,
+                 CASE WHEN row_number() OVER (PARTITION BY lang, source
+                        ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id)
+                        <= (count(*) OVER (PARTITION BY lang, source) + 19) // 20
+                      THEN 'val' ELSE 'train' END AS split
+               FROM sv)
+             SELECT $cols, split,
+               CAST(row_number() OVER (ORDER BY md5('s42|' || CAST(doc_id AS VARCHAR)), doc_id) - 1
+                 AS BIGINT) AS pos,
+               CAST((row_number() OVER (ORDER BY md5('s42|' || CAST(doc_id AS VARCHAR)), doc_id) - 1)
+                 % 16 AS BIGINT) AS shard
+             FROM qs ORDER BY pos"""
+
   // a def: `entries` oracle strings interpolate eagerly at object init,
   // and this is declared after them (same rule as qualityScoreOracle)
   private def BlocklistSql: String = Seq("dup", "leak", "spam").map(w => s"'$w'").mkString(", ")

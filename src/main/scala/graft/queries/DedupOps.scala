@@ -4,6 +4,7 @@ import graft.{Engine, QueryDef}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import OracleSql._
 
 /** Deduplication operators over `documents` — the core of a training-data
   * pipeline. Exact dedup (hash group-by), shingle-set Jaccard near-dup,
@@ -98,12 +99,12 @@ object DedupOps {
        v AS (SELECT id_a, id_b, CAST(i AS DOUBLE) / (la + lb - i) AS j FROM v0
          WHERE CAST(i AS DOUBLE) / (la + lb - i) >= 0.3)"""
 
-  /** Transitive-closure clusters over the verified MinHash pairs as
-    * DuckDB SQL — the shared oracle of q58 (min-propagation CC) and
-    * q134 (large-star/small-star CC): both must produce exactly these
-    * clusters.
+  /** The connected components of the verified MinHash pairs `v`: the
+    * undirected edges `e`, their transitive closure `reach` (this opens
+    * a WITH RECURSIVE), and `name` = (id, `cluster`) with each node's
+    * smallest reachable id. A def, so vals below can interpolate it.
     */
-  private val minhashClustersSql: String =
+  private def minhashComponentsSql(name: String, cluster: String): String =
     s"""${minhashPairsSql.replaceFirst("WITH ", "WITH RECURSIVE ")},
              e AS (SELECT id_a AS src, id_b AS dst FROM v
                    UNION ALL SELECT id_b, id_a FROM v),
@@ -111,10 +112,18 @@ object DedupOps {
                SELECT src, dst FROM e
                UNION
                SELECT r.src, e.dst FROM reach r JOIN e ON r.dst = e.src),
-             comp AS (
-               SELECT n.id, least(n.id, min(r.dst)) AS cluster_id
+             $name AS (
+               SELECT n.id, least(n.id, min(r.dst)) AS $cluster
                FROM (SELECT DISTINCT src AS id FROM e) n
-               JOIN reach r ON r.src = n.id GROUP BY n.id),
+               JOIN reach r ON r.src = n.id GROUP BY n.id)"""
+
+  /** Transitive-closure clusters over the verified MinHash pairs as
+    * DuckDB SQL — the shared oracle of q58 (min-propagation CC) and
+    * q134 (large-star/small-star CC): both must produce exactly these
+    * clusters.
+    */
+  private val minhashClustersSql: String =
+    s"""${minhashComponentsSql("comp", "cluster_id")},
              sz AS (SELECT cluster_id, count(*) AS cluster_size
                     FROM comp GROUP BY cluster_id)
              SELECT comp.id AS doc_id, comp.cluster_id, sz.cluster_size
@@ -469,17 +478,7 @@ object DedupOps {
           )
           .orderBy(col("cluster_id"))
       },
-      Some(s"""${minhashPairsSql.replaceFirst("WITH ", "WITH RECURSIVE ")},
-             e AS (SELECT id_a AS src, id_b AS dst FROM v
-                   UNION ALL SELECT id_b, id_a FROM v),
-             reach(src, dst) AS (
-               SELECT src, dst FROM e
-               UNION
-               SELECT r.src, e.dst FROM reach r JOIN e ON r.dst = e.src),
-             comp AS (
-               SELECT n.id, least(n.id, min(r.dst)) AS cluster_id
-               FROM (SELECT DISTINCT src AS id FROM e) n
-               JOIN reach r ON r.src = n.id GROUP BY n.id),
+      Some(s"""${minhashComponentsSql("comp", "cluster_id")},
              mem AS (
                SELECT c.cluster_id, c.id, d.n_chars,
                  row_number() OVER (PARTITION BY c.cluster_id
@@ -589,10 +588,7 @@ object DedupOps {
           .withColumn("dup_ppm", expr("(n_dup_tiles * 1000000) div n_tiles"))
           .orderBy(col("doc_id"))
       },
-      Some(s"""WITH t AS (
-               SELECT doc_id,
-                 ${Tokenize.toksSql} AS toks
-               FROM documents),
+      Some(s"""WITH $toksCte,
              tiles AS (
                SELECT DISTINCT doc_id,
                  md5(array_to_string(toks[i*10+1 : i*10+10], ' ')) AS tile
@@ -1037,14 +1033,7 @@ object DedupOps {
           .filter(col("n_shared") >= 15)
           .orderBy(col("n_shared").desc, col("id_a"), col("id_b"))
       },
-      Some("""WITH t0 AS (SELECT doc_id, lower(text) AS t FROM documents),
-             t1 AS (SELECT doc_id,
-               list_transform(generate_series(1, length(t) - 4), i -> md5(substr(t, i, 5))) AS h
-               FROM t0 WHERE length(t) >= 8),
-             t2 AS (SELECT doc_id,
-               list_distinct(list_transform(generate_series(1, len(h) - 3),
-                 i -> list_aggregate(list_slice(h, i, i + 3), 'min'))) AS fps
-               FROM t1),
+      Some(s"""WITH $winnowCtes,
              fpx AS (SELECT doc_id, unnest(fps) AS fp FROM t2),
              fpc AS (SELECT doc_id, fp FROM fpx
                      QUALIFY count(*) OVER (PARTITION BY fp) <= 50),
@@ -1442,13 +1431,7 @@ object DedupOps {
           .orderBy(col("config"))
       },
       Some(s"""WITH t AS (SELECT doc_id, ${Tokenize.toksSql} AS toks FROM documents),
-             shq AS (SELECT doc_id, list_distinct(list_transform(
-                 generate_series(1, len(toks) - 2),
-                 i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sg
-               FROM t WHERE len(toks) >= 3),
-             mq AS (SELECT doc_id,
-                 ${graft.functions.TextHashOps.sigSql()} AS sig
-               FROM shq),
+             ${shingleMinhashCtes("toks", "t")},
              b AS (
                SELECT '8x1' AS config, doc_id, ${graft.functions.TextHashOps.bandBucketsSql("sig", 8, 1)} AS bucket
                  FROM mq
@@ -1521,17 +1504,7 @@ object DedupOps {
       },
       // the same clusters by transitive closure (the q58/q134 oracle
       // machinery), then the same two nibble draws per doc
-      Some(s"""${minhashPairsSql.replaceFirst("WITH ", "WITH RECURSIVE ")},
-             e AS (SELECT id_a AS src, id_b AS dst FROM v
-                   UNION ALL SELECT id_b, id_a FROM v),
-             reach(src, dst) AS (
-               SELECT src, dst FROM e
-               UNION
-               SELECT r.src, e.dst FROM reach r JOIN e ON r.dst = e.src),
-             compt AS (
-               SELECT n.id, least(n.id, min(r.dst)) AS comp
-               FROM (SELECT DISTINCT src AS id FROM e) n
-               JOIN reach r ON r.src = n.id GROUP BY n.id),
+      Some(s"""${minhashComponentsSql("compt", "comp")},
              k AS (SELECT d.doc_id, d.n_chars, coalesce(compt.comp, d.doc_id) AS ckey
                FROM documents d LEFT JOIN compt ON compt.id = d.doc_id),
              hh AS (SELECT doc_id, n_chars, ckey,

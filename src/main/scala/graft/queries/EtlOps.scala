@@ -79,6 +79,18 @@ object EtlOps {
     (old, changes)
   }
 
+  /** The two order snapshots as DuckDB CTEs: `old` = (k, p) and the
+    * derived `neu` (the same rules as the Spark side above). A def:
+    * `entries` interpolates eagerly.
+    */
+  private def snapshotsSql: String =
+    """old AS (SELECT o_orderkey AS k, o_totalprice AS p FROM orders),
+             neu AS (
+               SELECT k, CASE WHEN k % 10 = 0 THEN p + 1.0 ELSE p END AS p
+               FROM old WHERE k % 7 <> 0
+               UNION ALL
+               SELECT k + 1099511627776, p FROM old WHERE k % 13 = 0)"""
+
   val entries: Seq[QueryDef] = Seq(
     // --------------------------------------------------------------- q102
     // Salted fact-dim join: lineitem x orders on the order key with an
@@ -131,12 +143,7 @@ object EtlOps {
           .select(col("k").as("o_orderkey"), col("op").as("change_type"))
           .orderBy(col("o_orderkey"))
       },
-      Some("""WITH old AS (SELECT o_orderkey AS k, o_totalprice AS p FROM orders),
-             neu AS (
-               SELECT k, CASE WHEN k % 10 = 0 THEN p + 1.0 ELSE p END AS p
-               FROM old WHERE k % 7 <> 0
-               UNION ALL
-               SELECT k + 1099511627776, p FROM old WHERE k % 13 = 0),
+      Some(s"""WITH $snapshotsSql,
              d AS (
                SELECT coalesce(o.k, n.k) AS o_orderkey,
                  CASE WHEN o.k IS NULL THEN 'insert'
@@ -171,12 +178,7 @@ object EtlOps {
           .select(col("k").as("o_orderkey"), col("p").as("o_totalprice"))
           .orderBy(col("o_orderkey"))
       },
-      Some("""WITH old AS (SELECT o_orderkey AS k, o_totalprice AS p FROM orders),
-             neu AS (
-               SELECT k, CASE WHEN k % 10 = 0 THEN p + 1.0 ELSE p END AS p
-               FROM old WHERE k % 7 <> 0
-               UNION ALL
-               SELECT k + 1099511627776, p FROM old WHERE k % 13 = 0)
+      Some(s"""WITH $snapshotsSql
              SELECT k AS o_orderkey, p AS o_totalprice FROM neu ORDER BY k""")
     ),
     // --------------------------------------------------------------- q111

@@ -18,6 +18,35 @@ import org.apache.spark.sql.functions._
   */
 object EventOps {
 
+  /** q30's oracle: hourly event counts and value sums per type. q90's
+    * streaming replay shares it verbatim.
+    */
+  private[graft] def hourlyOracle: String =
+    """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour, event_type,
+             count(*) AS n, round(sum(value), 2) AS sum_value
+             FROM events GROUP BY 1, 2 ORDER BY hour, event_type"""
+
+  /** q37's oracle: the gap-based sessions derived with the lag/island
+    * trick (session end = last event + gap, Spark's semantics). q93's
+    * streaming sessions share it verbatim.
+    */
+  private[graft] def sessionWindowOracle: String =
+    """WITH e AS (
+               SELECT user_id, ts, value,
+                 CASE WHEN lag(ts) OVER w IS NULL
+                        OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
+                      THEN 1 ELSE 0 END AS new_s
+               FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)
+             ), se AS (
+               SELECT user_id, ts, value,
+                 sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+               FROM e)
+             SELECT user_id, CAST(min(ts) AS TIMESTAMP) AS session_start,
+               CAST(max(ts) + INTERVAL 30 MINUTE AS TIMESTAMP) AS session_end,
+               count(*) AS n, round(sum(value), 2) AS sum_value
+             FROM se GROUP BY user_id, sid ORDER BY user_id, session_start"""
+
   val entries: Seq[QueryDef] = Seq(
     // ---------------------------------------------------------------- q30
     QueryDef(
@@ -28,9 +57,7 @@ object EventOps {
           .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
           .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
           .orderBy(col("hour"), col("event_type")),
-      Some("""SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour, event_type,
-             count(*) AS n, round(sum(value), 2) AS sum_value
-             FROM events GROUP BY 1, 2 ORDER BY hour, event_type""")
+      Some(hourlyOracle)
     ),
     // ---------------------------------------------------------------- q31
     // Gap-based sessionization: new session when idle > 30 min.
@@ -181,21 +208,7 @@ object EventOps {
             col("sum_value")
           )
           .orderBy(col("user_id"), col("session_start")),
-      Some("""WITH e AS (
-               SELECT user_id, ts, value,
-                 CASE WHEN lag(ts) OVER w IS NULL
-                        OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-                      THEN 1 ELSE 0 END AS new_s
-               FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-             ), se AS (
-               SELECT user_id, ts, value,
-                 sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-               FROM e)
-             SELECT user_id, CAST(min(ts) AS TIMESTAMP) AS session_start,
-               CAST(max(ts) + INTERVAL 30 MINUTE AS TIMESTAMP) AS session_end,
-               count(*) AS n, round(sum(value), 2) AS sum_value
-             FROM se GROUP BY user_id, sid ORDER BY user_id, session_start""")
+      Some(sessionWindowOracle)
     ),
     // ---------------------------------------------------------------- q75
     // Approximate percentile sketch (the second sketch family next to

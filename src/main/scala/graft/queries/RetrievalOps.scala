@@ -4,6 +4,7 @@ import graft.{Engine, QueryDef}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import OracleSql._
 
 /** RETRIEVAL — the RAG stack's query-time surface over the corpus the
   * other modules curate and index: BM25 lexical ranking (q229),
@@ -385,6 +386,22 @@ object RetrievalOps {
       .agg(round(sum(col("c")), 4).as("score"))
   }
 
+  /** Document lengths `{p}dl` of the tokens `{p}tok`, and the corpus
+    * stats `{p}stats` (avgdl, n_docs): shared by both BM25 mirrors.
+    */
+  private def bm25StatsCtes(p: String): String =
+    s"""${p}dl AS (SELECT doc_id, count(*) AS dl FROM ${p}tok GROUP BY doc_id),
+             ${p}stats AS (SELECT CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl,
+               CAST(count(*) AS DOUBLE) AS n_docs FROM ${p}dl)"""
+
+  /** The Okapi sum over term rows `t`, df `d`, stats `s` and lengths
+    * `l`, rounded to 4dp ([[bm25Score]]'s arithmetic term by term).
+    */
+  private def bm25ScoreSql: String =
+    """round(sum(ln(1 + (s.n_docs - d.df + 0.5) / (d.df + 0.5))
+                   * t.tf * 2.2
+                   / (t.tf + 1.2 * (0.25 + 0.75 * CAST(l.dl AS DOUBLE) / s.avgdl))), 4) AS score"""
+
   /** [[bm25Batch]]'s DuckDB mirror: CTEs {p}tok/{p}dl/{p}stats/{p}qt/
     * {p}tf/{p}df ending in `{p}scored` (qid, doc_id, score), over
     * document relation `docsRel` and query-terms CTE `qtermsCte`
@@ -393,17 +410,13 @@ object RetrievalOps {
   private[graft] def bm25BatchSql(docsRel: String, qtermsCte: String, p: String = "h"): String =
     s"""${p}tok AS (SELECT doc_id, unnest(${Tokenize.toksSql}) AS word FROM $docsRel),
              ${p}qt AS ($qtermsCte),
-             ${p}dl AS (SELECT doc_id, count(*) AS dl FROM ${p}tok GROUP BY doc_id),
-             ${p}stats AS (SELECT CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl,
-               CAST(count(*) AS DOUBLE) AS n_docs FROM ${p}dl),
+             ${bm25StatsCtes(p)},
              ${p}tf AS (SELECT doc_id, word, CAST(count(*) AS DOUBLE) AS tf
                FROM ${p}tok JOIN (SELECT DISTINCT word FROM ${p}qt) USING (word)
                GROUP BY doc_id, word),
              ${p}df AS (SELECT word, CAST(count(*) AS DOUBLE) AS df FROM ${p}tf GROUP BY word),
              ${p}scored AS (SELECT q.qid, t.doc_id,
-                 round(sum(ln(1 + (s.n_docs - d.df + 0.5) / (d.df + 0.5))
-                   * t.tf * 2.2
-                   / (t.tf + 1.2 * (0.25 + 0.75 * CAST(l.dl AS DOUBLE) / s.avgdl))), 4) AS score
+                 $bm25ScoreSql
                FROM ${p}tf t JOIN ${p}qt q USING (word) JOIN ${p}df d USING (word)
                CROSS JOIN ${p}stats s
                JOIN ${p}dl l ON t.doc_id = l.doc_id
@@ -471,16 +484,12 @@ object RetrievalOps {
   private[graft] def bm25Sql(docsRel: String, termsCte: String, p: String = "b"): String =
     s"""${p}tok AS (SELECT doc_id, unnest(${Tokenize.toksSql}) AS word FROM $docsRel),
              ${p}terms AS ($termsCte),
-             ${p}dl AS (SELECT doc_id, count(*) AS dl FROM ${p}tok GROUP BY doc_id),
-             ${p}stats AS (SELECT CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl,
-               CAST(count(*) AS DOUBLE) AS n_docs FROM ${p}dl),
+             ${bm25StatsCtes(p)},
              ${p}tf AS (SELECT doc_id, word, CAST(count(*) AS DOUBLE) AS tf
                FROM ${p}tok JOIN ${p}terms USING (word) GROUP BY doc_id, word),
              ${p}df AS (SELECT word, CAST(count(*) AS DOUBLE) AS df FROM ${p}tf GROUP BY word),
              ${p}scored AS (SELECT t.doc_id,
-                 round(sum(ln(1 + (s.n_docs - d.df + 0.5) / (d.df + 0.5))
-                   * t.tf * 2.2
-                   / (t.tf + 1.2 * (0.25 + 0.75 * CAST(l.dl AS DOUBLE) / s.avgdl))), 4) AS score
+                 $bm25ScoreSql
                FROM ${p}tf t JOIN ${p}df d USING (word) CROSS JOIN ${p}stats s
                JOIN ${p}dl l ON t.doc_id = l.doc_id
                GROUP BY t.doc_id)"""
@@ -597,29 +606,17 @@ object RetrievalOps {
       Some(s"""WITH uni AS (
                SELECT d.doc_id, d.text FROM documents d
                WHERE d.doc_id IN (SELECT vec_id FROM embeddings)),
-             ${bm25Sql(
-          "uni",
-          "SELECT DISTINCT unnest(" + Tokenize.toksSql + ") AS word FROM documents WHERE doc_id = 7")},
-             lex AS (SELECT doc_id, lex_rk FROM (
-                 SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS lex_rk
-                 FROM bscored WHERE doc_id <> 7)
-               WHERE lex_rk <= 20),
-             t AS (SELECT vec_id, list_transform(embedding,
-                 x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT) + 16777216) AS iv
-               FROM embeddings),
+             ${bm25Sql("uni", doc7Terms)},
+             ${lexTop20Cte("lex", "bscored")},
+             $intVecCte,
              q7 AS (SELECT iv AS qiv FROM t WHERE vec_id = 7),
              vd AS (SELECT x.vec_id AS doc_id,
-                 list_sum(list_transform(generate_series(1, len(x.iv)),
-                   j -> (x.iv[j] - q.qiv[j]) * (x.iv[j] - q.qiv[j]))) AS d
+                 ${l2sq("x.iv", "q.qiv")} AS d
                FROM t x CROSS JOIN q7 q WHERE x.vec_id <> 7),
              vec AS (SELECT doc_id, vec_rk FROM (
                  SELECT doc_id, row_number() OVER (ORDER BY d, doc_id) AS vec_rk FROM vd)
                WHERE vec_rk <= 20),
-             fused AS (SELECT coalesce(lex.doc_id, vec.doc_id) AS doc_id,
-                 lex.lex_rk, vec.vec_rk,
-                 round(coalesce(CAST(1 AS DOUBLE) / (lex.lex_rk + 60), 0)
-                   + coalesce(CAST(1 AS DOUBLE) / (vec.vec_rk + 60), 0), 6) AS rrf
-               FROM lex FULL OUTER JOIN vec ON lex.doc_id = vec.doc_id),
+             ${rrfFusedCte("")},
              r AS (SELECT doc_id, rrf, lex_rk, vec_rk,
                row_number() OVER (ORDER BY rrf DESC, doc_id) AS rk FROM fused)
              SELECT CAST(rk AS BIGINT) AS rk, doc_id, rrf,
@@ -692,20 +689,15 @@ object RetrievalOps {
           .select(col("qid"), col("rk"), col("vec_id"), col("sim"))
           .orderBy(col("qid"), col("rk"))
       },
-      Some(s"""WITH t AS (SELECT vec_id, list_transform(embedding,
-                 x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT) + 16777216) AS iv
-               FROM embeddings),
+      Some(s"""WITH $intVecCte,
              c AS (SELECT vec_id, list_transform(embedding,
                  x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT)) AS civ
                FROM embeddings),
              wq AS (SELECT vec_id AS qid, iv AS qiv FROM t WHERE vec_id < 5),
              bd AS (SELECT q.qid, x.vec_id,
-                 list_sum(list_transform(generate_series(1, len(q.qiv)),
-                   j -> (q.qiv[j] - x.iv[j]) * (q.qiv[j] - x.iv[j]))) AS d
+                 ${l2sq("q.qiv", "x.iv")} AS d
                FROM wq q JOIN t x ON q.qid <> x.vec_id),
-             cand AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY d, vec_id) AS rn FROM bd)
-               WHERE rn <= 16),
+             ${knnTopK("cand", "d", "bd", 16)},
              qs AS (SELECT vec_id AS qid, mm.m AS qm,
                  list_slice(civ, mm.m * 16 + 1, mm.m * 16 + 16) AS qsv
                FROM c, (SELECT unnest(generate_series(0, 3)) AS m) mm WHERE vec_id < 5),
@@ -926,20 +918,11 @@ object RetrievalOps {
              uni AS (
                SELECT d.doc_id, d.text FROM documents d
                WHERE d.doc_id IN (SELECT vec_id FROM embeddings)),
-             ${bm25Sql(
-          "uni",
-          "SELECT DISTINCT unnest(" + Tokenize.toksSql + ") AS word FROM documents WHERE doc_id = 7")},
-             lex AS (SELECT doc_id, lex_rk FROM (
-                 SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS lex_rk
-                 FROM bscored WHERE doc_id <> 7)
-               WHERE lex_rk <= 20),
+             ${bm25Sql("uni", doc7Terms)},
+             ${lexTop20Cte("lex", "bscored")},
              vec AS (SELECT vec_id AS doc_id, rn AS vec_rk FROM wsrv
                WHERE qid = 7 AND rn <= 20),
-             fused AS (SELECT coalesce(lex.doc_id, vec.doc_id) AS doc_id,
-                 lex.lex_rk, vec.vec_rk,
-                 round(coalesce(CAST(1 AS DOUBLE) / (lex.lex_rk + 60), 0)
-                   + coalesce(CAST(1 AS DOUBLE) / (vec.vec_rk + 60), 0), 6) AS rrf
-               FROM lex FULL OUTER JOIN vec ON lex.doc_id = vec.doc_id),
+             ${rrfFusedCte("")},
              fr AS (SELECT doc_id, rrf, lex_rk, vec_rk,
                row_number() OVER (ORDER BY rrf DESC, doc_id) AS rk FROM fused)
              SELECT CAST(rk AS BIGINT) AS rk, doc_id, rrf,
@@ -1001,7 +984,6 @@ object RetrievalOps {
     QueryDef(
       "q252_hybrid_system_metrics",
       (s, dir) => {
-        import s.implicits._
         val S = SimilarityOps
         val idx = S.buildIvfAdcIndex(s, dir, k = 256, rounds = 2)
         val docs = Engine.table(s, dir, "documents")
@@ -1028,48 +1010,15 @@ object RetrievalOps {
         // fuse through the same helper — the metric gate and the page
         // gate cannot drift)
         val fused = rrfFuseKeyed(lex, vec)
-          .select(col("qid"), col("doc_id"), col("rk").as("p"))
-        val lab = emb.select(col("vec_id").as("doc_id"), col("label").cast("long").as("label"))
-        val qlab = emb
+          .select(col("qid"), col("doc_id").as("vec_id"), col("rk").as("p"))
+        val lab = emb.select(col("vec_id"), col("label").cast("long").as("label"))
+        val qlab = lab
           .filter(col("vec_id") < 20)
-          .select(col("vec_id").as("qid"), col("label").cast("long").as("qlabel"))
-        val wdf = S.dcgWeights.toDF("p", "w")
-        val perq = fused
-          .join(broadcast(qlab), "qid")
-          .join(lab, "doc_id")
-          .withColumn("rel", (col("label") === col("qlabel")).cast("int"))
-          .join(broadcast(wdf), "p")
-          .groupBy(col("qid"))
-          .agg(
-            sum(col("rel")).cast("long").as("n_rel10"),
-            round(sum(col("rel") * col("w")), 6).as("dcg"),
-            min(when(col("rel") === 1, col("p"))).as("frank"))
-        val labCount = emb
-          .select(col("label").cast("long").as("label"))
-          .groupBy(col("label")).agg(count(lit(1)).as("nl"))
-        val rq = qlab
-          .join(broadcast(labCount), col("qlabel") === col("label"))
-          .select(col("qid"), (col("nl") - 1).as("nrel"))
-        val idcg = rq
-          .crossJoin(broadcast(wdf))
-          .filter(col("p") <= least(col("nrel"), lit(10L)))
-          .groupBy(col("qid"))
-          .agg(round(sum(col("w")), 6).as("idcg"))
-        perq
-          .join(idcg, Seq("qid"), "left")
-          .select(
-            col("qid"), col("n_rel10"),
-            round(coalesce(lit(1.0) / col("frank"), lit(0.0)), 6).as("mrr"),
-            coalesce(round(col("dcg") / col("idcg"), 6), lit(0.0)).as("ndcg10"))
-          .orderBy(col("qid"))
+          .select(col("vec_id").as("qid"), col("label").as("qlabel"))
+        S.rankingMetrics(fused, qlab, lab).orderBy(col("qid"))
       },
-      Some {
-        val wRows = SimilarityOps.dcgWeights
-          .map { case (p, w) => s"SELECT $p AS p, CAST($w AS DOUBLE) AS w" }
-          .mkString(" UNION ALL ")
-        s"""${SimilarityOps.ivfadcServeCtesSql(nprobe = 4, candN = 32)},
-             uni AS (SELECT d.doc_id, d.text FROM documents d
-               WHERE d.doc_id IN (SELECT vec_id FROM embeddings)),
+      Some(s"""${SimilarityOps.ivfadcServeCtesSql(nprobe = 4, candN = 32)},
+             $uniCte,
              ${bm25BatchSql(
             "uni",
             "SELECT DISTINCT doc_id AS qid, unnest(" + Tokenize.toksSql +
@@ -1081,7 +1030,7 @@ object RetrievalOps {
              lab AS (SELECT vec_id AS doc_id, CAST(label AS BIGINT) AS label FROM embeddings),
              ql AS (SELECT vec_id AS qid, CAST(label AS BIGINT) AS qlabel
                FROM embeddings WHERE vec_id < 20),
-             w AS ($wRows),
+             $dcgWeightsCte,
              perq AS (SELECT f.qid, CAST(sum(CASE WHEN cl.label = ql.qlabel THEN 1 ELSE 0 END) AS BIGINT) AS n_rel10,
                  round(sum(CASE WHEN cl.label = ql.qlabel THEN 1 ELSE 0 END * w.w), 6) AS dcg,
                  min(CASE WHEN cl.label = ql.qlabel THEN f.p END) AS frank
@@ -1091,16 +1040,7 @@ object RetrievalOps {
                GROUP BY f.qid),
              lc AS (SELECT CAST(label AS BIGINT) AS label, count(*) AS nl
                FROM embeddings GROUP BY 1),
-             rq AS (SELECT ql.qid, lc.nl - 1 AS nrel
-               FROM ql JOIN lc ON ql.qlabel = lc.label),
-             idcg AS (SELECT rq.qid, round(sum(w.w), 6) AS idcg
-               FROM rq CROSS JOIN w WHERE w.p <= least(rq.nrel, 10)
-               GROUP BY rq.qid)
-             SELECT p.qid, p.n_rel10,
-               round(coalesce(CAST(1 AS DOUBLE) / p.frank, 0), 6) AS mrr,
-               coalesce(round(p.dcg / i.idcg, 6), CAST(0 AS DOUBLE)) AS ndcg10
-             FROM perq p LEFT JOIN idcg i ON p.qid = i.qid ORDER BY p.qid"""
-      }
+             $rankingMetricsTail""")
     ),
     // --------------------------------------------------------------- q263
     // BATCHED HYBRID MSEARCH FROM THE PERSISTED INDEXES — the request

@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
+import OracleSql._
 
 /** Similarity search over the `embeddings` table (64-dim float vectors).
   *
@@ -556,6 +557,49 @@ object SimilarityOps {
     p -> BigDecimal(1.0 / (math.log(p + 1.0) / math.log(2.0)))
       .setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP)
       .toDouble
+  }
+
+  /** MRR and nDCG@10 of ranked results: `top10` = (qid, p, vec_id) with
+    * positions p in 1..10, `qlab` = (qid, qlabel) and `lab` = (vec_id,
+    * label) over the whole corpus; a result is relevant when its label
+    * is its query's. Returns (qid, n_rel10, mrr, ndcg10), one row per
+    * query with results; the label tables and discounts join by
+    * broadcast. IDCG truncates the ideal gains at min(relevant, 10).
+    * The oracle twin is `OracleSql.rankingMetricsCtes`.
+    */
+  private[graft] def rankingMetrics(top10: DataFrame, qlab: DataFrame, lab: DataFrame): DataFrame = {
+    val spark = top10.sparkSession
+    import spark.implicits._
+    val wdf = dcgWeights.toDF("p", "w")
+    val perq = top10
+      .join(broadcast(qlab), "qid")
+      .join(lab, "vec_id")
+      .withColumn("rel", (col("label") === col("qlabel")).cast("int"))
+      .join(broadcast(wdf), "p")
+      .groupBy(col("qid"))
+      .agg(
+        sum(col("rel")).cast("long").as("n_rel10"),
+        round(sum(col("rel") * col("w")), 6).as("dcg"),
+        min(when(col("rel") === 1, col("p"))).as("frank"))
+    val labCount = lab.groupBy(col("label")).agg(count(lit(1)).as("nl"))
+    val idcg = qlab
+      .join(broadcast(labCount), col("qlabel") === col("label"))
+      .select(col("qid"), (col("nl") - 1).as("nrel"))
+      .crossJoin(broadcast(wdf))
+      .filter(col("p") <= least(col("nrel"), lit(10L)))
+      .groupBy(col("qid"))
+      .agg(round(sum(col("w")), 6).as("idcg"))
+    // LEFT join: a query whose label has no other corpus member
+    // (nrel = 0) has no idcg row, and an inner join would silently
+    // DROP it from the metrics — overstating aggregate MRR/nDCG.
+    // It stays as one row with mrr = ndcg10 = 0, keeping the "one
+    // metrics row per query" contract.
+    perq
+      .join(idcg, Seq("qid"), "left")
+      .select(
+        col("qid"), col("n_rel10"),
+        round(coalesce(lit(1.0) / col("frank"), lit(0.0)), 6).as("mrr"),
+        coalesce(round(col("dcg") / col("idcg"), 6), lit(0.0)).as("ndcg10"))
   }
 
   val entries: Seq[QueryDef] = Seq(
@@ -1329,28 +1373,19 @@ object SimilarityOps {
              pqs AS (SELECT qid, mm.m, list_slice(iv, mm.m * 8 + 1, mm.m * 8 + 8) AS qsv
                FROM pqq, (SELECT unnest(generate_series(0, 7)) AS m) mm),
              pdt AS (SELECT q.qid, q.m, c.cid,
-                 list_sum(list_transform(generate_series(1, len(q.qsv)),
-                   j -> (q.qsv[j] - c.cv[j]) * (q.qsv[j] - c.cv[j]))) AS pd
+                 ${l2sq("q.qsv", "c.cv")} AS pd
                FROM pqs q JOIN pc1 c ON q.m = c.m),
              adc AS (SELECT p.qid, a.vec_id, CAST(sum(p.pd) AS BIGINT) AS ad
                FROM pa2 a JOIN pdt p ON a.m = p.m AND a.cid = p.cid
                WHERE a.rk = 1 AND p.qid <> a.vec_id GROUP BY p.qid, a.vec_id),
-             adc3 AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY ad, vec_id) AS rn FROM adc)
-               WHERE rn <= 3),
+             ${knnTopK("adc3", "ad", "adc", 3)},
              bsc AS (SELECT q.qid, x.vec_id,
-                 list_sum(list_transform(generate_series(1, len(q.iv)),
-                   j -> (q.iv[j] - x.iv[j]) * (q.iv[j] - x.iv[j]))) AS d
+                 ${l2sq("q.iv", "x.iv")} AS d
                FROM pqq q JOIN t x ON q.qid <> x.vec_id),
-             pb3 AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY d, vec_id) AS rn FROM bsc)
-               WHERE rn <= 3),
+             ${knnTopK("pb3", "d", "bsc", 3)},
              ph AS (SELECT pb3.qid, count(*) AS hits_pq FROM pb3
                JOIN adc3 USING (qid, vec_id) GROUP BY pb3.qid)
-             SELECT b.qid, CAST(3 AS BIGINT) AS k,
-               CAST(coalesce(ph.hits_pq, 0) AS BIGINT) AS hits_pq
-             FROM (SELECT DISTINCT qid FROM pb3) b
-             LEFT JOIN ph USING (qid) ORDER BY qid""")
+             ${recallTail("hits_pq", "ph", "pb3")}""")
     ),
     // --------------------------------------------------------------- q204
     // IVFADC — the COMPOSED system q63 + q202/q203 point at (Jegou et
@@ -1406,22 +1441,11 @@ object SimilarityOps {
           .orderBy(col("qid"))
       },
       Some(s"""${ivfadcSql(16, 1)},
-             wad3 AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY ad, vec_id) AS rn FROM wadc)
-               WHERE rn <= 3),
-             wbs AS (SELECT q.qid, x.vec_id,
-                 list_sum(list_transform(generate_series(1, len(q.qiv)),
-                   j -> (q.qiv[j] - x.iv[j]) * (q.qiv[j] - x.iv[j]))) AS d
-               FROM wq q JOIN t x ON q.qid <> x.vec_id),
-             wb3 AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY d, vec_id) AS rn FROM wbs)
-               WHERE rn <= 3),
+             ${knnTopK("wad3", "ad", "wadc", 3)},
+             $bruteTop3Ctes,
              wh AS (SELECT wb3.qid, count(*) AS hits_ivfadc FROM wb3
                JOIN wad3 USING (qid, vec_id) GROUP BY wb3.qid)
-             SELECT b.qid, CAST(3 AS BIGINT) AS k,
-               CAST(coalesce(wh.hits_ivfadc, 0) AS BIGINT) AS hits_ivfadc
-             FROM (SELECT DISTINCT qid FROM wb3) b
-             LEFT JOIN wh USING (qid) ORDER BY qid""")
+             ${recallTail("hits_ivfadc", "wh", "wb3")}""")
     ),
     // --------------------------------------------------------------- q206
     // PERSISTED IVFADC INDEX — build once, probe many (the round-10
@@ -1544,22 +1568,11 @@ object SimilarityOps {
           .orderBy(col("qid"))
       },
       Some(s"""${ivfadcSql(256, 2)},
-             wad3 AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY ad, vec_id) AS rn FROM wadc)
-               WHERE rn <= 3),
-             wbs AS (SELECT q.qid, x.vec_id,
-                 list_sum(list_transform(generate_series(1, len(q.qiv)),
-                   j -> (q.qiv[j] - x.iv[j]) * (q.qiv[j] - x.iv[j]))) AS d
-               FROM wq q JOIN t x ON q.qid <> x.vec_id),
-             wb3 AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY d, vec_id) AS rn FROM wbs)
-               WHERE rn <= 3),
+             ${knnTopK("wad3", "ad", "wadc", 3)},
+             $bruteTop3Ctes,
              wh AS (SELECT wb3.qid, count(*) AS hits_deep FROM wb3
                JOIN wad3 USING (qid, vec_id) GROUP BY wb3.qid)
-             SELECT b.qid, CAST(3 AS BIGINT) AS k,
-               CAST(coalesce(wh.hits_deep, 0) AS BIGINT) AS hits_deep
-             FROM (SELECT DISTINCT qid FROM wb3) b
-             LEFT JOIN wh USING (qid) ORDER BY qid""")
+             ${recallTail("hits_deep", "wh", "wb3")}""")
     ),
     // --------------------------------------------------------------- q211
     // IVF PROBE-CEILING ledger on the TRAINED coarse quantizer — the
@@ -1612,22 +1625,13 @@ object SimilarityOps {
           .orderBy(col("qid"))
       },
       Some(s"""${ivfCoarseSql("", 2)},
-             wbs AS (SELECT q.qid, x.vec_id,
-                 list_sum(list_transform(generate_series(1, len(q.qiv)),
-                   j -> (q.qiv[j] - x.iv[j]) * (q.qiv[j] - x.iv[j]))) AS d
-               FROM wq q JOIN t x ON q.qid <> x.vec_id),
-             wb3 AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY d, vec_id) AS rn FROM wbs)
-               WHERE rn <= 3),
+             $bruteTop3Ctes,
              wh AS (SELECT b.qid, count(*) AS hits_ceiling FROM wb3 b
                JOIN wca a ON b.vec_id = a.vec_id
                WHERE EXISTS (SELECT 1 FROM wpr p
                  WHERE p.qid = b.qid AND p.ccid = a.ccid)
                GROUP BY b.qid)
-             SELECT b.qid, CAST(3 AS BIGINT) AS k,
-               CAST(coalesce(wh.hits_ceiling, 0) AS BIGINT) AS hits_ceiling
-             FROM (SELECT DISTINCT qid FROM wb3) b
-             LEFT JOIN wh USING (qid) ORDER BY qid""")
+             ${recallTail("hits_ceiling", "wh", "wb3")}""")
     ),
     // --------------------------------------------------------------- q212
     // IVFADC + EXACT RE-RANK — production two-stage serving (FAISS's
@@ -1668,30 +1672,13 @@ object SimilarityOps {
           .orderBy(col("qid"))
       },
       Some(s"""${ivfadcSql(256, 2)},
-             wad16 AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY ad, vec_id) AS rn FROM wadc)
-               WHERE rn <= 16),
-             wrr AS (SELECT c.qid, c.vec_id,
-                 list_sum(list_transform(generate_series(1, len(q.qiv)),
-                   j -> (q.qiv[j] - x.iv[j]) * (q.qiv[j] - x.iv[j]))) AS d
-               FROM wad16 c JOIN wq q ON c.qid = q.qid
-               JOIN t x ON c.vec_id = x.vec_id),
-             wr3 AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY d, vec_id) AS rn FROM wrr)
-               WHERE rn <= 3),
-             wbs AS (SELECT q.qid, x.vec_id,
-                 list_sum(list_transform(generate_series(1, len(q.qiv)),
-                   j -> (q.qiv[j] - x.iv[j]) * (q.qiv[j] - x.iv[j]))) AS d
-               FROM wq q JOIN t x ON q.qid <> x.vec_id),
-             wb3 AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY d, vec_id) AS rn FROM wbs)
-               WHERE rn <= 3),
+             ${knnTopK("wad16", "ad", "wadc", 16)},
+             ${rerankCte("wrr", "wad16")},
+             ${knnTopK("wr3", "d", "wrr", 3)},
+             $bruteTop3Ctes,
              wh AS (SELECT wb3.qid, count(*) AS hits_rerank FROM wb3
                JOIN wr3 USING (qid, vec_id) GROUP BY wb3.qid)
-             SELECT b.qid, CAST(3 AS BIGINT) AS k,
-               CAST(coalesce(wh.hits_rerank, 0) AS BIGINT) AS hits_rerank
-             FROM (SELECT DISTINCT qid FROM wb3) b
-             LEFT JOIN wh USING (qid) ORDER BY qid""")
+             ${recallTail("hits_rerank", "wh", "wb3")}""")
     ),
     // --------------------------------------------------------------- q213
     // PERSISTED DEEP index, probe-only — the production store gets the
@@ -1719,11 +1706,7 @@ object SimilarityOps {
         ivfadcProbeIndex(s, idx, q, k = 256).orderBy(col("qid"), col("rn"))
       },
       Some(s"""${ivfadcSql(256, 2)}
-             SELECT qid, CAST(rn AS BIGINT) AS rn, vec_id, ad FROM (
-               SELECT qid, vec_id, ad,
-                 row_number() OVER (PARTITION BY qid ORDER BY ad, vec_id) AS rn
-               FROM wadc) r
-             WHERE rn <= 3 ORDER BY qid, rn""")
+             ${positionedTop3("ad", "wadc", "ad")}""")
     ),
     // --------------------------------------------------------------- q216
     // The COMPLETE SERVING PATH, end to end from the persisted deep
@@ -1815,21 +1798,12 @@ object SimilarityOps {
              FROM (SELECT DISTINCT qid FROM wb3) b
              LEFT JOIN (SELECT wb3.qid, count(*) AS hits FROM wb3
                JOIN (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                   row_number() OVER (PARTITION BY qid ORDER BY ad, vec_id) AS rn
+                   ${knnRank("ad")} AS rn
                  FROM wnp WHERE prn <= $np) WHERE rn <= 3) s
                USING (qid, vec_id) GROUP BY wb3.qid) h USING (qid)"""
-        }.mkString("\n             UNION ALL\n             ")
-        s"""${ivfadcSql(256, 2, nprobe = 16)},
-             wnp AS MATERIALIZED (SELECT a.qid, a.vec_id, a.ad, p.prn
-               FROM wadc a JOIN wca l ON a.vec_id = l.vec_id
-               JOIN wpr p ON p.qid = a.qid AND p.ccid = l.ccid),
-             wbs AS (SELECT q.qid, x.vec_id,
-                 list_sum(list_transform(generate_series(1, len(q.qiv)),
-                   j -> (q.qiv[j] - x.iv[j]) * (q.qiv[j] - x.iv[j]))) AS d
-               FROM wq q JOIN t x ON q.qid <> x.vec_id),
-             wb3 AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY d, vec_id) AS rn FROM wbs)
-               WHERE rn <= 3)
+        }.mkString(unionAllSep)
+        s"""$allProbesSql,
+             $bruteTop3Ctes
              $perNp
              ORDER BY qid, nprobe"""
       }
@@ -1896,37 +1870,20 @@ object SimilarityOps {
       },
       Some {
         val perNpCtes = Seq(1, 2, 4, 8).map { np =>
-          s"""rc$np AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY ad, vec_id) AS rn
-               FROM wnp WHERE prn <= $np) WHERE rn <= 16),
-             rr$np AS (SELECT c.qid, c.vec_id,
-                 list_sum(list_transform(generate_series(1, len(q.qiv)),
-                   j -> (q.qiv[j] - x.iv[j]) * (q.qiv[j] - x.iv[j]))) AS d
-               FROM rc$np c JOIN wq q ON c.qid = q.qid
-               JOIN t x ON c.vec_id = x.vec_id),
-             rs$np AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY d, vec_id) AS rn FROM rr$np)
-               WHERE rn <= 3)"""
-        }.mkString(",\n             ")
+          s"""${knnTopKWhere(s"rc$np", "ad", s"wnp WHERE prn <= $np", 16)},
+             ${rerankCte(s"rr$np", s"rc$np")},
+             ${knnTopK(s"rs$np", "d", s"rr$np", 3)}"""
+        }.mkString(cteSep)
         val perNp = Seq(1, 2, 4, 8).map { np =>
           s"""SELECT b.qid, CAST($np AS BIGINT) AS nprobe, CAST(3 AS BIGINT) AS k,
                CAST(coalesce(h.hits, 0) AS BIGINT) AS hits
              FROM (SELECT DISTINCT qid FROM wb3) b
              LEFT JOIN (SELECT wb3.qid, count(*) AS hits FROM wb3
                JOIN rs$np s USING (qid, vec_id) GROUP BY wb3.qid) h USING (qid)"""
-        }.mkString("\n             UNION ALL\n             ")
-        s"""${ivfadcSql(256, 2, nprobe = 16)},
-             wnp AS MATERIALIZED (SELECT a.qid, a.vec_id, a.ad, p.prn
-               FROM wadc a JOIN wca l ON a.vec_id = l.vec_id
-               JOIN wpr p ON p.qid = a.qid AND p.ccid = l.ccid),
+        }.mkString(unionAllSep)
+        s"""$allProbesSql,
              $perNpCtes,
-             wbs AS (SELECT q.qid, x.vec_id,
-                 list_sum(list_transform(generate_series(1, len(q.qiv)),
-                   j -> (q.qiv[j] - x.iv[j]) * (q.qiv[j] - x.iv[j]))) AS d
-               FROM wq q JOIN t x ON q.qid <> x.vec_id),
-             wb3 AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY d, vec_id) AS rn FROM wbs)
-               WHERE rn <= 3)
+             $bruteTop3Ctes
              $perNp
              ORDER BY qid, nprobe"""
       }
@@ -2008,11 +1965,7 @@ object SimilarityOps {
         ivfadcProbeIndex(s, work.toString, q, k = 256).orderBy(col("qid"), col("rn"))
       },
       Some(s"""${ivfadcSql(256, 2)}
-             SELECT qid, CAST(rn AS BIGINT) AS rn, vec_id, ad FROM (
-               SELECT qid, vec_id, ad,
-                 row_number() OVER (PARTITION BY qid ORDER BY ad, vec_id) AS rn
-               FROM wadc WHERE vec_id % 14 <> 10) r
-             WHERE rn <= 3 ORDER BY qid, rn""")
+             ${positionedTop3("ad", "wadc WHERE vec_id % 14 <> 10", "ad")}""")
     ),
     // --------------------------------------------------------------- q224
     // FILTERED ANN SEARCH — metadata-constrained serving, the most
@@ -2118,23 +2071,14 @@ object SimilarityOps {
           denom <- Seq(2, 4, 8, 16)
           np <- Seq(4, 8, 16)
         } yield {
-          s"""f${denom}_$np AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY ad, vec_id) AS rn
-               FROM wnp WHERE vec_id % $denom = 1 AND prn <= $np) WHERE rn <= 16),
-             g${denom}_$np AS (SELECT c.qid, c.vec_id,
-                 list_sum(list_transform(generate_series(1, len(q.qiv)),
-                   j -> (q.qiv[j] - x.iv[j]) * (q.qiv[j] - x.iv[j]))) AS d
-               FROM f${denom}_$np c JOIN wq q ON c.qid = q.qid
-               JOIN t x ON c.vec_id = x.vec_id),
-             s${denom}_$np AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY d, vec_id) AS rn FROM g${denom}_$np)
-               WHERE rn <= 3)"""
-        }).mkString(",\n             ")
+          s"""${knnTopKWhere(
+            s"f${denom}_$np", "ad", s"wnp WHERE vec_id % $denom = 1 AND prn <= $np", 16)},
+             ${rerankCte(s"g${denom}_$np", s"f${denom}_$np")},
+             ${knnTopK(s"s${denom}_$np", "d", s"g${denom}_$np", 3)}"""
+        }).mkString(cteSep)
         val bruteCtes = Seq(2, 4, 8, 16).map { denom =>
-          s"""fb$denom AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY d, vec_id) AS rn
-               FROM wbs WHERE vec_id % $denom = 1) WHERE rn <= 3)"""
-        }.mkString(",\n             ")
+          knnTopKWhere(s"fb$denom", "d", s"wbs WHERE vec_id % $denom = 1", 3)
+        }.mkString(cteSep)
         val unions = (for {
           denom <- Seq(2, 4, 8, 16)
           np <- Seq(4, 8, 16)
@@ -2144,14 +2088,10 @@ object SimilarityOps {
              FROM (SELECT DISTINCT qid FROM fb$denom) b
              LEFT JOIN (SELECT fb$denom.qid, count(*) AS hits FROM fb$denom
                JOIN s${denom}_$np s USING (qid, vec_id) GROUP BY fb$denom.qid) h USING (qid)"""
-        }).mkString("\n             UNION ALL\n             ")
-        s"""${ivfadcSql(256, 2, nprobe = 16)},
-             wnp AS MATERIALIZED (SELECT a.qid, a.vec_id, a.ad, p.prn
-               FROM wadc a JOIN wca l ON a.vec_id = l.vec_id
-               JOIN wpr p ON p.qid = a.qid AND p.ccid = l.ccid),
+        }).mkString(unionAllSep)
+        s"""$allProbesSql,
              wbs AS MATERIALIZED (SELECT q.qid, x.vec_id,
-                 list_sum(list_transform(generate_series(1, len(q.qiv)),
-                   j -> (q.qiv[j] - x.iv[j]) * (q.qiv[j] - x.iv[j]))) AS d
+                 ${l2sq("q.qiv", "x.iv")} AS d
                FROM wq q JOIN t x ON q.qid <> x.vec_id),
              $perCellCtes,
              $bruteCtes
@@ -2242,19 +2182,9 @@ object SimilarityOps {
                  JOIN lab ql ON a.qid = ql.vec_id
                  JOIN lab cl ON a.vec_id = cl.vec_id
                  WHERE cl.label <> ql.label),
-             wad16 AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY ad, vec_id) AS rn
-               FROM wneg) WHERE rn <= 16),
-             wrr AS (SELECT c.qid, c.vec_id,
-                 list_sum(list_transform(generate_series(1, len(q.qiv)),
-                   j -> (q.qiv[j] - x.iv[j]) * (q.qiv[j] - x.iv[j]))) AS d
-               FROM wad16 c JOIN wq q ON c.qid = q.qid
-               JOIN t x ON c.vec_id = x.vec_id)
-             SELECT qid, CAST(rn AS BIGINT) AS rn, vec_id, CAST(d AS BIGINT) AS d FROM (
-               SELECT qid, vec_id, d,
-                 row_number() OVER (PARTITION BY qid ORDER BY d, vec_id) AS rn
-               FROM wrr) r
-             WHERE rn <= 3 ORDER BY qid, rn""")
+             ${knnTopKWhere("wad16", "ad", "wneg", 16)},
+             ${rerankCte("wrr", "wad16")}
+             ${positionedTop3("d", "wrr", "CAST(d AS BIGINT) AS d")}""")
     ),
     // --------------------------------------------------------------- q235
     // FLAT SQ8 SERVING — the OTHER standard quantization family
@@ -2303,9 +2233,7 @@ object SimilarityOps {
           .select(col("qid"), col("vec_id"))
         exactRerank(cand, q, iv).orderBy(col("qid"), col("rn"))
       },
-      Some(s"""WITH t AS (SELECT vec_id, list_transform(embedding,
-                 x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT) + 16777216) AS iv
-               FROM embeddings),
+      Some(s"""WITH $intVecCte,
              ex AS (SELECT vec_id, unnest(generate_series(1, len(iv))) AS j FROM t),
              exv AS (SELECT e.vec_id, e.j, t.iv[e.j] AS v
                FROM ex e JOIN t ON e.vec_id = t.vec_id),
@@ -2317,22 +2245,11 @@ object SimilarityOps {
              rv AS (SELECT vec_id, list(r ORDER BY j) AS rv FROM rc GROUP BY vec_id),
              wq AS (SELECT vec_id AS qid, iv AS qiv FROM t WHERE vec_id < 20),
              sc AS (SELECT q.qid, x.vec_id,
-                 list_sum(list_transform(generate_series(1, len(q.qiv)),
-                   j -> (q.qiv[j] - x.rv[j]) * (q.qiv[j] - x.rv[j]))) AS ad
+                 ${l2sq("q.qiv", "x.rv")} AS ad
                FROM wq q JOIN rv x ON q.qid <> x.vec_id),
-             c16 AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY ad, vec_id) AS rn
-               FROM sc) WHERE rn <= 16),
-             wrr AS (SELECT c.qid, c.vec_id,
-                 list_sum(list_transform(generate_series(1, len(q.qiv)),
-                   j -> (q.qiv[j] - x.iv[j]) * (q.qiv[j] - x.iv[j]))) AS d
-               FROM c16 c JOIN wq q ON c.qid = q.qid
-               JOIN t x ON c.vec_id = x.vec_id)
-             SELECT qid, CAST(rn AS BIGINT) AS rn, vec_id, CAST(d AS BIGINT) AS d FROM (
-               SELECT qid, vec_id, d,
-                 row_number() OVER (PARTITION BY qid ORDER BY d, vec_id) AS rn
-               FROM wrr) r
-             WHERE rn <= 3 ORDER BY qid, rn""")
+             ${knnTopKWhere("c16", "ad", "sc", 16)},
+             ${rerankCte("wrr", "c16")}
+             ${positionedTop3("d", "wrr", "CAST(d AS BIGINT) AS d")}""")
     ),
     // --------------------------------------------------------------- q238
     // RETRIEVAL QUALITY METRICS (MRR / nDCG@10) — the evaluation
@@ -2354,7 +2271,6 @@ object SimilarityOps {
     QueryDef(
       "q238_retrieval_metrics",
       (s, dir) => {
-        import s.implicits._
         val iv = ivecs(s, dir)
         val lab = Engine.table(s, dir, "embeddings")
           .select(col("vec_id"), col("label").cast("long").as("label"))
@@ -2372,75 +2288,22 @@ object SimilarityOps {
             graft.functions.VectorOps.l2sqLong(col("qiv"), col("iv")).as("d"))
           .withColumn("p", row_number().over(wB))
           .filter(col("p") <= 10)
-          .join(broadcast(qlab), "qid")
-          .join(lab, "vec_id")
-          .withColumn("rel", (col("label") === col("qlabel")).cast("int"))
-        val wdf = dcgWeights.toDF("p", "w")
-        val perq = top10
-          .join(broadcast(wdf), "p")
-          .groupBy(col("qid"))
-          .agg(
-            sum(col("rel")).cast("long").as("n_rel10"),
-            round(sum(col("rel") * col("w")), 6).as("dcg"),
-            min(when(col("rel") === 1, col("p"))).as("frank"))
-        val labCount = lab.groupBy(col("label")).agg(count(lit(1)).as("nl"))
-        val rq = qlab
-          .join(broadcast(labCount), col("qlabel") === col("label"))
-          .select(col("qid"), (col("nl") - 1).as("nrel"))
-        val idcg = rq
-          .crossJoin(broadcast(wdf))
-          .filter(col("p") <= least(col("nrel"), lit(10L)))
-          .groupBy(col("qid"))
-          .agg(round(sum(col("w")), 6).as("idcg"))
-        // LEFT join: a query whose label has no other corpus member
-        // (nrel = 0) has no idcg row, and an inner join would silently
-        // DROP it from the metrics — overstating aggregate MRR/nDCG
-        // (round-14 ADVICE). It stays as one row with mrr = ndcg10 = 0,
-        // keeping the "one metrics row per query" contract.
-        perq
-          .join(idcg, Seq("qid"), "left")
-          .select(
-            col("qid"), col("n_rel10"),
-            round(coalesce(lit(1.0) / col("frank"), lit(0.0)), 6).as("mrr"),
-            coalesce(round(col("dcg") / col("idcg"), 6), lit(0.0)).as("ndcg10"))
-          .orderBy(col("qid"))
+        rankingMetrics(top10, qlab, lab).orderBy(col("qid"))
       },
-      Some {
-        val wRows = dcgWeights
-          .map { case (p, w) => s"SELECT $p AS p, CAST($w AS DOUBLE) AS w" }
-          .mkString(" UNION ALL ")
-        s"""WITH t AS (SELECT vec_id, list_transform(embedding,
-                 x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT) + 16777216) AS iv
-               FROM embeddings),
+      Some(s"""WITH $intVecCte,
              lab AS (SELECT vec_id, CAST(label AS BIGINT) AS label FROM embeddings),
              wq AS (SELECT vec_id AS qid, iv AS qiv FROM t WHERE vec_id < 20),
              ql AS (SELECT vec_id AS qid, label AS qlabel FROM lab WHERE vec_id < 20),
              dd AS (SELECT q.qid, x.vec_id,
-                 list_sum(list_transform(generate_series(1, len(q.qiv)),
-                   j -> (q.qiv[j] - x.iv[j]) * (q.qiv[j] - x.iv[j]))) AS d
+                 ${l2sq("q.qiv", "x.iv")} AS d
                FROM wq q JOIN t x ON q.qid <> x.vec_id),
              r AS (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY d, vec_id) AS p FROM dd),
+                 ${knnRank("d")} AS p FROM dd),
              top10 AS (SELECT r.qid, r.vec_id, r.p,
                  CASE WHEN cl.label = ql.qlabel THEN 1 ELSE 0 END AS rel
                FROM r JOIN lab cl ON r.vec_id = cl.vec_id
                JOIN ql ON r.qid = ql.qid WHERE r.p <= 10),
-             w AS ($wRows),
-             perq AS (SELECT t10.qid, CAST(sum(rel) AS BIGINT) AS n_rel10,
-                 round(sum(rel * w.w), 6) AS dcg,
-                 min(CASE WHEN rel = 1 THEN t10.p END) AS frank
-               FROM top10 t10 JOIN w ON t10.p = w.p GROUP BY t10.qid),
-             lc AS (SELECT label, count(*) AS nl FROM lab GROUP BY label),
-             rq AS (SELECT ql.qid, lc.nl - 1 AS nrel
-               FROM ql JOIN lc ON ql.qlabel = lc.label),
-             idcg AS (SELECT rq.qid, round(sum(w.w), 6) AS idcg
-               FROM rq CROSS JOIN w WHERE w.p <= least(rq.nrel, 10)
-               GROUP BY rq.qid)
-             SELECT p.qid, p.n_rel10,
-               round(coalesce(CAST(1 AS DOUBLE) / p.frank, 0), 6) AS mrr,
-               coalesce(round(p.dcg / i.idcg, 6), CAST(0 AS DOUBLE)) AS ndcg10
-             FROM perq p LEFT JOIN idcg i ON p.qid = i.qid ORDER BY p.qid"""
-      }
+             $rankingMetricsCtes""")
     ),
     // --------------------------------------------------------------- q239
     // IVF-SQ8 — the remaining rung of the quantization ladder (FAISS
@@ -2519,24 +2382,13 @@ object SimilarityOps {
                    j -> p.qiv[j] - c.ccv[j] + 16777216) AS qrv
                FROM wpr p JOIN wcc c ON p.ccid = c.ccid),
              ssc AS (SELECT q.qid, a.vec_id,
-                 list_sum(list_transform(generate_series(1, len(q.qrv)),
-                   j -> (q.qrv[j] - x.rq[j]) * (q.qrv[j] - x.rq[j]))) AS ad
+                 ${l2sq("q.qrv", "x.rq")} AS ad
                FROM sqr q JOIN wca a ON a.ccid = q.ccid
                JOIN srq x ON a.vec_id = x.vec_id
                WHERE q.qid <> a.vec_id),
-             s16 AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY ad, vec_id) AS rn
-               FROM ssc) WHERE rn <= 16),
-             wrr AS (SELECT c.qid, c.vec_id,
-                 list_sum(list_transform(generate_series(1, len(q.qiv)),
-                   j -> (q.qiv[j] - x.iv[j]) * (q.qiv[j] - x.iv[j]))) AS d
-               FROM s16 c JOIN wq q ON c.qid = q.qid
-               JOIN t x ON c.vec_id = x.vec_id)
-             SELECT qid, CAST(rn AS BIGINT) AS rn, vec_id, CAST(d AS BIGINT) AS d FROM (
-               SELECT qid, vec_id, d,
-                 row_number() OVER (PARTITION BY qid ORDER BY d, vec_id) AS rn
-               FROM wrr) r
-             WHERE rn <= 3 ORDER BY qid, rn""")
+             ${knnTopKWhere("s16", "ad", "ssc", 16)},
+             ${rerankCte("wrr", "s16")}
+             ${positionedTop3("d", "wrr", "CAST(d AS BIGINT) AS d")}""")
     ),
     // --------------------------------------------------------------- q240
     // INDEX STATS / EXPLAIN — the health check every vector-store ops
@@ -2597,7 +2449,6 @@ object SimilarityOps {
     QueryDef(
       "q245_served_metrics",
       (s, dir) => {
-        import s.implicits._
         val idx = buildIvfAdcIndex(s, dir, k = 256, rounds = 2)
         val iv = ivecs(s, dir)
         val lab = Engine.table(s, dir, "embeddings")
@@ -2610,61 +2461,16 @@ object SimilarityOps {
           .select(col("vec_id").as("qid"), col("label").as("qlabel"))
         val top10 = ivfadcServe(s, idx, q, iv, k = 256, nprobe = 4, candN = 32, topN = 10)
           .select(col("qid"), col("rn").cast("int").as("p"), col("vec_id"))
-          .join(broadcast(qlab), "qid")
-          .join(lab, "vec_id")
-          .withColumn("rel", (col("label") === col("qlabel")).cast("int"))
-        val wdf = dcgWeights.toDF("p", "w")
-        val perq = top10
-          .join(broadcast(wdf), "p")
-          .groupBy(col("qid"))
-          .agg(
-            sum(col("rel")).cast("long").as("n_rel10"),
-            round(sum(col("rel") * col("w")), 6).as("dcg"),
-            min(when(col("rel") === 1, col("p"))).as("frank"))
-        val labCount = lab.groupBy(col("label")).agg(count(lit(1)).as("nl"))
-        val rq = qlab
-          .join(broadcast(labCount), col("qlabel") === col("label"))
-          .select(col("qid"), (col("nl") - 1).as("nrel"))
-        val idcg = rq
-          .crossJoin(broadcast(wdf))
-          .filter(col("p") <= least(col("nrel"), lit(10L)))
-          .groupBy(col("qid"))
-          .agg(round(sum(col("w")), 6).as("idcg"))
-        perq
-          .join(idcg, Seq("qid"), "left")
-          .select(
-            col("qid"), col("n_rel10"),
-            round(coalesce(lit(1.0) / col("frank"), lit(0.0)), 6).as("mrr"),
-            coalesce(round(col("dcg") / col("idcg"), 6), lit(0.0)).as("ndcg10"))
-          .orderBy(col("qid"))
+        rankingMetrics(top10, qlab, lab).orderBy(col("qid"))
       },
-      Some {
-        val wRows = dcgWeights
-          .map { case (p, w) => s"SELECT $p AS p, CAST($w AS DOUBLE) AS w" }
-          .mkString(" UNION ALL ")
-        s"""${ivfadcServeCtesSql(nprobe = 4, candN = 32)},
+      Some(s"""${ivfadcServeCtesSql(nprobe = 4, candN = 32)},
              lab AS (SELECT vec_id, CAST(label AS BIGINT) AS label FROM embeddings),
              ql AS (SELECT vec_id AS qid, label AS qlabel FROM lab WHERE vec_id < 20),
              top10 AS (SELECT s.qid, s.vec_id, s.rn AS p,
                  CASE WHEN cl.label = ql.qlabel THEN 1 ELSE 0 END AS rel
                FROM wsrv s JOIN lab cl ON s.vec_id = cl.vec_id
                JOIN ql ON s.qid = ql.qid WHERE s.rn <= 10),
-             w AS ($wRows),
-             perq AS (SELECT t10.qid, CAST(sum(rel) AS BIGINT) AS n_rel10,
-                 round(sum(rel * w.w), 6) AS dcg,
-                 min(CASE WHEN rel = 1 THEN t10.p END) AS frank
-               FROM top10 t10 JOIN w ON t10.p = w.p GROUP BY t10.qid),
-             lc AS (SELECT label, count(*) AS nl FROM lab GROUP BY label),
-             rq AS (SELECT ql.qid, lc.nl - 1 AS nrel
-               FROM ql JOIN lc ON ql.qlabel = lc.label),
-             idcg AS (SELECT rq.qid, round(sum(w.w), 6) AS idcg
-               FROM rq CROSS JOIN w WHERE w.p <= least(rq.nrel, 10)
-               GROUP BY rq.qid)
-             SELECT p.qid, p.n_rel10,
-               round(coalesce(CAST(1 AS DOUBLE) / p.frank, 0), 6) AS mrr,
-               coalesce(round(p.dcg / i.idcg, 6), CAST(0 AS DOUBLE)) AS ndcg10
-             FROM perq p LEFT JOIN idcg i ON p.qid = i.qid ORDER BY p.qid"""
-      }
+             $rankingMetricsCtes""")
     ),
     // --------------------------------------------------------------- q247
     // QUANTIZER RETRAIN + BLUE/GREEN SWAP — the one lifecycle event a
@@ -3521,7 +3327,7 @@ object SimilarityOps {
                FROM $prev LEFT JOIN (
                  SELECT m, cid, list(mn ORDER BY pos) AS nv FROM $mP$r GROUP BY m, cid) x
                  ON $prev.m = x.m AND $prev.cid = x.cid)"""
-    }.mkString(",\n             ")
+    }.mkString(cteSep)
 
   /** The final assignment CTE against the refined codebook `cb` —
     * rk=1 rows are (vec_id, m, cid, dist); [[lloydAssign]]'s mirror.
@@ -3568,8 +3374,7 @@ object SimilarityOps {
             coarseRounds, s"${p}gsub", s"${p}gini", s"${p}ga", s"${p}gm", s"${p}gc")},
              ${p}wcc AS MATERIALIZED (SELECT cid AS ccid, cv AS ccv FROM ${p}gc$coarseRounds)"""
     s"""${if (lead) "WITH " else ""}${p}t AS (
-               SELECT vec_id, list_transform(embedding,
-                 x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT) + 16777216) AS iv
+               SELECT vec_id, $intVec AS iv
                FROM $tSrc),
              $coarseCtes,
              ${p}wca AS MATERIALIZED (SELECT vec_id, ccid FROM (
@@ -3628,8 +3433,7 @@ object SimilarityOps {
                  list_slice(qrv, mm.m * 8 + 1, mm.m * 8 + 8) AS qsv
                FROM ${p}wqr, (SELECT unnest(generate_series(0, 7)) AS m) mm),
              ${p}wpd AS (SELECT q.qid, q.ccid, q.m, c.cid,
-                 list_sum(list_transform(generate_series(1, len(q.qsv)),
-                   j -> (q.qsv[j] - c.cv[j]) * (q.qsv[j] - c.cv[j]))) AS pd
+                 ${l2sq("q.qsv", "c.cv")} AS pd
                FROM ${p}wqs q JOIN $fin c ON q.m = c.m),
              ${p}wadc AS (SELECT p.qid, a.vec_id, CAST(sum(p.pd) AS BIGINT) AS ad
                FROM ${p}wfa a JOIN ${p}wca l ON a.vec_id = l.vec_id
@@ -3637,6 +3441,18 @@ object SimilarityOps {
                WHERE a.rk = 1 AND p.qid <> a.vec_id
                GROUP BY p.qid, a.vec_id)"""
   }
+
+  /** The deep (256, 2) chain probing all 16 cells, and `wnp` = each
+    * candidate's ADC distance with the probe rank `prn` of its list.
+    * Filtering prn <= np replays an np-probe search exactly: a
+    * candidate's ADC distance does not depend on how many lists are
+    * open. Shared by the q217/q220/q225 operating curves.
+    */
+  private def allProbesSql: String =
+    s"""${ivfadcSql(256, 2, nprobe = 16)},
+             wnp AS MATERIALIZED (SELECT a.qid, a.vec_id, a.ad, p.prn
+               FROM wadc a JOIN wca l ON a.vec_id = l.vec_id
+               JOIN wpr p ON p.qid = a.qid AND p.ccid = l.ccid)"""
 
   /** The q206 positioned-top-3 probe oracle — full-population (16, 1)
     * train + probe closed by the (qid, rn, vec_id, ad) SELECT. Shared
@@ -3647,11 +3463,7 @@ object SimilarityOps {
     */
   private[graft] def ivfadcProbeOracleSql: String =
     s"""${ivfadcSql(16, 1)}
-             SELECT qid, CAST(rn AS BIGINT) AS rn, vec_id, ad FROM (
-               SELECT qid, vec_id, ad,
-                 row_number() OVER (PARTITION BY qid ORDER BY ad, vec_id) AS rn
-               FROM wadc) r
-             WHERE rn <= 3 ORDER BY qid, rn"""
+             ${positionedTop3("ad", "wadc", "ad")}"""
 
   /** The q216 end-to-end serving oracle — deep (256, 2) train + probe,
     * ADC top-16 per query, exact-integer re-rank, positioned top-3
@@ -3691,16 +3503,12 @@ object SimilarityOps {
         k, rounds, trainWhere = trainWhere, nprobe = nprobe, p = p,
         lead = lead, tSrc = tSrc)},
              ${p}wad16 AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY ad, vec_id) AS rn
+                 ${knnRank("ad")} AS rn
                FROM ${p}wadc${if (whereSql.isEmpty) "" else s" WHERE $whereSql"})
                WHERE rn <= $candN),
-             ${p}wrr AS (SELECT c.qid, c.vec_id,
-                 list_sum(list_transform(generate_series(1, len(q.qiv)),
-                   j -> (q.qiv[j] - x.iv[j]) * (q.qiv[j] - x.iv[j]))) AS d
-               FROM ${p}wad16 c JOIN ${p}wq q ON c.qid = q.qid
-               JOIN ${p}t x ON c.vec_id = x.vec_id),
+             ${rerankCte(s"${p}wrr", s"${p}wad16", t = s"${p}t", wq = s"${p}wq")},
              ${p}wsrv AS (SELECT qid, vec_id, d,
-                 row_number() OVER (PARTITION BY qid ORDER BY d, vec_id) AS rn
+                 ${knnRank("d")} AS rn
                FROM ${p}wrr)"""
 
   /** q223's oracle — the DELETE symmetric of [[ivfadcStreamSearchOracleSql]]:
@@ -3715,12 +3523,8 @@ object SimilarityOps {
     */
   private[graft] def ivfadcStreamDeleteOracleSql: String = {
     val perBatch = (0 until 4).map { b =>
-      s"""SELECT CAST($b AS BIGINT) AS batch_id, qid, CAST(rn AS BIGINT) AS rn, vec_id, ad
-             FROM (SELECT qid, vec_id, ad,
-                 row_number() OVER (PARTITION BY qid ORDER BY ad, vec_id) AS rn
-               FROM wadc WHERE vec_id % 5 <> 0 OR (vec_id // 5) % 4 > $b)
-             WHERE rn <= 3"""
-    }.mkString("\n             UNION ALL\n             ")
+      batchAdcTop3Row(b, s"vec_id % 5 <> 0 OR (vec_id // 5) % 4 > $b")
+    }.mkString(unionAllSep)
     s"""${ivfadcSql(256, 2)}
              $perBatch
              ORDER BY batch_id, qid, rn"""
@@ -3746,12 +3550,8 @@ object SimilarityOps {
       if (sampleWhere.isEmpty) "vec_id % 5 <> 0"
       else s"vec_id % 5 <> 0 AND ($sampleWhere)"
     val perBatch = (0 until 4).map { b =>
-      s"""SELECT CAST($b AS BIGINT) AS batch_id, qid, CAST(rn AS BIGINT) AS rn, vec_id, ad
-             FROM (SELECT qid, vec_id, ad,
-                 row_number() OVER (PARTITION BY qid ORDER BY ad, vec_id) AS rn
-               FROM wadc WHERE vec_id % 5 <> 0 OR (vec_id // 5) % 4 <= $b)
-             WHERE rn <= 3"""
-    }.mkString("\n             UNION ALL\n             ")
+      batchAdcTop3Row(b, s"vec_id % 5 <> 0 OR (vec_id // 5) % 4 <= $b")
+    }.mkString(unionAllSep)
     s"""${ivfadcSql(k, rounds, trainWhere = trainWhere)}
              $perBatch
              ORDER BY batch_id, qid, rn"""
@@ -3776,25 +3576,12 @@ object SimilarityOps {
     val perBatch = (0 until 4).map { b =>
       val pop = s"""((vec_id % 5 = 0 AND (vec_id // 5) % 4 <= $b)
                OR (vec_id % 5 <> 0 AND NOT (vec_id % 5 = 1 AND (vec_id // 5) % 4 <= $b)))"""
-      s"""l16$b AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY ad, vec_id) AS rn
-               FROM wadc WHERE $pop) WHERE rn <= 16),
-             lrr$b AS (SELECT c.qid, c.vec_id,
-                 list_sum(list_transform(generate_series(1, len(q.qiv)),
-                   j -> (q.qiv[j] - x.iv[j]) * (q.qiv[j] - x.iv[j]))) AS d
-               FROM l16$b c JOIN wq q ON c.qid = q.qid
-               JOIN t x ON c.vec_id = x.vec_id)"""
-    }.mkString(",\n             ")
-    val unions = (0 until 4).map { b =>
-      s"""SELECT CAST($b AS BIGINT) AS batch_id, qid, CAST(rn AS BIGINT) AS rn, vec_id,
-               CAST(d AS BIGINT) AS d
-             FROM (SELECT qid, vec_id, d,
-                 row_number() OVER (PARTITION BY qid ORDER BY d, vec_id) AS rn
-               FROM lrr$b) WHERE rn <= 3"""
-    }.mkString("\n             UNION ALL\n             ")
+      s"""${knnTopKWhere(s"l16$b", "ad", s"wadc WHERE $pop", 16)},
+             ${rerankCte(s"lrr$b", s"l16$b")}"""
+    }.mkString(cteSep)
     s"""${ivfadcSql(256, 2, trainWhere = "vec_id % 5 <> 0")},
              $perBatch
-             $unions
+             ${(0 until 4).map(batchRerankTop3Row).mkString(unionAllSep)}
              ORDER BY batch_id, qid, rn"""
   }
 
@@ -3806,11 +3593,7 @@ object SimilarityOps {
     */
   private[graft] def ivfadcIncrementalOracleSql: String =
     s"""${ivfadcSql(16, 1, trainWhere = "vec_id % 5 <> 0")}
-             SELECT qid, CAST(rn AS BIGINT) AS rn, vec_id, ad FROM (
-               SELECT qid, vec_id, ad,
-                 row_number() OVER (PARTITION BY qid ORDER BY ad, vec_id) AS rn
-               FROM wadc) r
-             WHERE rn <= 3 ORDER BY qid, rn"""
+             ${positionedTop3("ad", "wadc", "ad")}"""
 
   /** DuckDB replay of [[pqCodebookDeep]] + [[pqAssign]] at (k, rounds)
     * — ends at `pfa` whose rk=1 rows are the final (vec_id, m, cid,
@@ -3820,8 +3603,7 @@ object SimilarityOps {
     */
   private def pqDeepSql(k: Int, rounds: Int): String =
     s"""WITH t AS (
-               SELECT vec_id, list_transform(embedding,
-                 x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT) + 16777216) AS iv
+               SELECT vec_id, $intVec AS iv
                FROM embeddings),
              psub AS MATERIALIZED (
                SELECT vec_id, mm.m, list_slice(iv, mm.m * 8 + 1, mm.m * 8 + 8) AS sv

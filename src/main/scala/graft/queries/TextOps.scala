@@ -3,6 +3,7 @@ package graft.queries
 import graft.{Engine, QueryDef}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import OracleSql._
 
 /** Text-analysis operators over the `documents` table.
   *
@@ -291,14 +292,7 @@ object TextOps {
             array_min(col("fps")).as("min_fp")
           )
           .orderBy(col("doc_id")),
-      Some("""WITH t0 AS (SELECT doc_id, lower(text) AS t FROM documents),
-             t1 AS (SELECT doc_id,
-               list_transform(generate_series(1, length(t) - 4), i -> md5(substr(t, i, 5))) AS h
-               FROM t0 WHERE length(t) >= 8),
-             t2 AS (SELECT doc_id,
-               list_distinct(list_transform(generate_series(1, len(h) - 3),
-                 i -> list_aggregate(list_slice(h, i, i + 3), 'min'))) AS fps
-               FROM t1)
+      Some(s"""WITH $winnowCtes
              SELECT doc_id, CAST(len(fps) AS BIGINT) AS n_fp, list_aggregate(fps, 'min') AS min_fp
              FROM t2 ORDER BY doc_id""")
     ),
@@ -795,10 +789,7 @@ object TextOps {
           .select(col("a"), col("b"), col("n"), round(col("n").cast("double") / col("na"), 6).as("p"))
           .orderBy(col("a"), col("n").desc, col("b"))
       },
-      Some(s"""WITH t AS (
-               SELECT doc_id,
-                 ${Tokenize.toksSql} AS toks
-               FROM documents),
+      Some(s"""WITH $toksCte,
              bi AS (
                SELECT p[1] AS a, p[2] AS b, count(*) AS n FROM (
                  SELECT unnest(list_transform(generate_series(1, len(toks) - 1),
@@ -1131,10 +1122,8 @@ object TextOps {
                  CAST((length(text) - length(replace(text, '#', ''))
                    + (length(text) - length(replace(text, '...', ''))) // 3)
                    * 1000000 // len(toks) AS BIGINT) AS symbol_ppm,
-                 CAST(len(list_filter(toks, x -> regexp_matches(x, '[a-z]')))
-                   * 1000000 // len(toks) AS BIGINT) AS alpha_ppm,
-                 CAST(len(list_intersect(list_distinct(toks),
-                   ['the','be','to','of','and','that','have','with'])) AS BIGINT) AS stop_hits,
+                 $alphaPpm,
+                 $stopHits,
                  CAST((len(lines) - len(list_distinct(lines)))
                    * 1000000 // len(lines) AS BIGINT) AS dup_line_ppm,
                  CAST((list_sum(list_transform(lines, x -> length(x)))
@@ -1468,13 +1457,7 @@ object TextOps {
              f AS (
                SELECT doc_id,
                  CAST(len(toks) AS BIGINT) AS n_words,
-                 CAST(list_sum(list_transform(toks, x -> length(x)))
-                   * 1000000 // len(toks) AS BIGINT) AS mean_wlen_micro,
-                 CAST(len(list_filter(toks, x -> regexp_matches(x, '[a-z]')))
-                   * 1000000 // len(toks) AS BIGINT) AS alpha_ppm,
-                 CAST(len(list_distinct(toks)) * 1000000 // len(toks) AS BIGINT) AS ttr_ppm,
-                 CAST(len(list_intersect(list_distinct(toks),
-                   ['the','be','to','of','and','that','have','with'])) AS BIGINT) AS stop_hits
+                 $qualityFeatures
                FROM t WHERE len(toks) >= 1)
              SELECT doc_id, n_words, mean_wlen_micro, alpha_ppm, ttr_ppm, stop_hits,
                CAST($qualityLogitSql AS BIGINT) AS logit_micro,

@@ -6,6 +6,7 @@ import graft.QueryDef
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import graft.queries.OracleSql._
 
 /** Driver-registry entries for the Structured Streaming surface: each
   * replays a finite table (events for the windowed/stateful family;
@@ -379,9 +380,7 @@ object StreamOps {
           .runToMemory(s, EventStreaming.hourlyCounts(stream), sinkName("q90"))
           .orderBy(col("hour"), col("event_type"))
       },
-      Some("""SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour, event_type,
-             count(*) AS n, round(sum(value), 2) AS sum_value
-             FROM events GROUP BY 1, 2 ORDER BY hour, event_type""")
+      Some(graft.queries.EventOps.hourlyOracle)
     ),
     // ---------------------------------------------------------------- q91
     QueryDef(
@@ -448,21 +447,7 @@ object StreamOps {
           .runToMemory(s, stream, sinkName("q93"))
           .orderBy(col("user_id"), col("session_start"))
       },
-      Some("""WITH e AS (
-               SELECT user_id, ts, value,
-                 CASE WHEN lag(ts) OVER w IS NULL
-                        OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-                      THEN 1 ELSE 0 END AS new_s
-               FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-             ), se AS (
-               SELECT user_id, ts, value,
-                 sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-               FROM e)
-             SELECT user_id, CAST(min(ts) AS TIMESTAMP) AS session_start,
-               CAST(max(ts) + INTERVAL 30 MINUTE AS TIMESTAMP) AS session_end,
-               count(*) AS n, round(sum(value), 2) AS sum_value
-             FROM se GROUP BY user_id, sid ORDER BY user_id, session_start""")
+      Some(graft.queries.EventOps.sessionWindowOracle)
     ),
     // ---------------------------------------------------------------- q94
     // Stream-static join: the event stream enriched against the static
@@ -913,14 +898,8 @@ object StreamOps {
       },
       Some(s"""WITH t AS (SELECT doc_id, lang, source, ${graft.queries.Tokenize.toksSql} AS toks
                FROM documents),
-             shq AS (SELECT doc_id, list_distinct(list_transform(
-                 generate_series(1, len(toks) - 2),
-                 i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS sg
-               FROM t WHERE len(toks) >= 3),
-             mq AS (SELECT doc_id,
-                 ${graft.functions.TextHashOps.sigSql()} AS sig
-               FROM shq),
-             bq AS (SELECT doc_id, ${graft.functions.TextHashOps.bandBucketsSql("sig", 4, 2)} AS bucket FROM mq),
+             ${shingleMinhashCtes("toks", "t")},
+             $bandBucketCte,
              dropd AS (SELECT DISTINCT m.doc_id FROM bq m JOIN bq e
                  ON m.bucket = e.bucket
                  AND (e.doc_id % 5 <> 0 OR e.doc_id < m.doc_id)
@@ -2638,13 +2617,13 @@ object StreamOps {
       s"""pop$b AS (SELECT doc_id, text FROM documents
                WHERE doc_id % 5 <> 0 OR (doc_id // 5) % 4 <= $b),
              ${graft.queries.RetrievalOps.bm25Sql(s"pop$b", termsCte, s"p$b")}"""
-    }.mkString(",\n             ")
+    }.mkString(cteSep)
     val unions = (0 until 4).map { b =>
       s"""SELECT CAST($b AS BIGINT) AS batch_id, CAST(rk AS BIGINT) AS rk, doc_id, score
              FROM (SELECT doc_id, score,
                  row_number() OVER (ORDER BY score DESC, doc_id) AS rk
                FROM p${b}scored) WHERE rk <= 5"""
-    }.mkString("\n             UNION ALL\n             ")
+    }.mkString(unionAllSep)
     s"""WITH $chains
              $unions
              ORDER BY batch_id, rk"""
@@ -2703,10 +2682,10 @@ object StreamOps {
                WHERE $cond),
              cnt$tag$t AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n
                FROM ph$tag$t GROUP BY doc_id)"""
-      }.mkString(",\n             ")
+      }.mkString(cteSep)
       s"""${tlCtes(b)},
              $perPhrase"""
-    }.mkString(",\n             ")
+    }.mkString(cteSep)
     val unions = (for {
       b <- batches
       (tag, _) <- gatePhrases
@@ -2717,7 +2696,7 @@ object StreamOps {
              FROM (SELECT doc_id, n,
                  row_number() OVER (ORDER BY n DESC, doc_id) AS rk
                FROM cnt$tag$t) WHERE rk <= 20"""
-    }).mkString("\n             UNION ALL\n             ")
+    }).mkString(unionAllSep)
     s"""WITH $chains
              $unions
              ORDER BY batch_id, phrase, rk"""
@@ -2771,9 +2750,8 @@ object StreamOps {
                CAST(rk AS BIGINT) AS rk, doc_id, score
              FROM (SELECT doc_id, score,
                  row_number() OVER (ORDER BY score DESC, doc_id) AS rk
-               FROM $p${b}scored) WHERE rk <= 5""").mkString(
-      "\n             UNION ALL\n             ")
-    s"""WITH ${(pops ++ chains).mkString(",\n             ")}
+               FROM $p${b}scored) WHERE rk <= 5""").mkString(unionAllSep)
+    s"""WITH ${(pops ++ chains).mkString(cteSep)}
              $unions
              ORDER BY batch_id, qset, rk"""
   }
@@ -2791,29 +2769,22 @@ object StreamOps {
     val S = graft.queries.SimilarityOps
     val trainWhere =
       s"(vec_id % 5 <> 0 OR (vec_id // 5) % 4 <= 2) AND (${S.sampledTrainWhereSql})"
-    val perBatch = (2 to 3).map { b =>
-      s"""l16$b AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY ad, vec_id) AS rn
-               FROM wadc WHERE vec_id % 5 <> 0 OR (vec_id // 5) % 4 <= $b)
-               WHERE rn <= 16),
-             lrr$b AS (SELECT c.qid, c.vec_id,
-                 list_sum(list_transform(generate_series(1, len(q.qiv)),
-                   j -> (q.qiv[j] - x.iv[j]) * (q.qiv[j] - x.iv[j]))) AS d
-               FROM l16$b c JOIN wq q ON c.qid = q.qid
-               JOIN t x ON c.vec_id = x.vec_id)"""
-    }.mkString(",\n             ")
-    val unions = (2 to 3).map { b =>
-      s"""SELECT CAST($b AS BIGINT) AS batch_id, qid, CAST(rn AS BIGINT) AS rn, vec_id,
-               CAST(d AS BIGINT) AS d
-             FROM (SELECT qid, vec_id, d,
-                 row_number() OVER (PARTITION BY qid ORDER BY d, vec_id) AS rn
-               FROM lrr$b) WHERE rn <= 3"""
-    }.mkString("\n             UNION ALL\n             ")
     s"""${S.ivfadcSql(16, 1, trainWhere = trainWhere)},
-             $perBatch
-             $unions
+             ${(2 to 3).map(prefixServeCtes(_, "")).mkString(cteSep)}
+             ${(2 to 3).map(batchRerankTop3Row).mkString(unionAllSep)}
              ORDER BY batch_id, qid, rn"""
   }
+
+  /** Batch `b`'s two-stage serve on chain `p` over the prefix-b
+    * population (day-0 plus arrival slices 0..b): the ADC top-16
+    * `l16{b}` and its exact re-rank `lrr{b}`.
+    */
+  private def prefixServeCtes(b: Int, p: String): String =
+    s"""l16$b AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
+                 ${knnRank("ad")} AS rn
+               FROM ${p}wadc WHERE vec_id % 5 <> 0 OR (vec_id // 5) % 4 <= $b)
+               WHERE rn <= 16),
+             ${rerankCte(s"lrr$b", s"l16$b", t = s"${p}t", wq = s"${p}wq")}"""
 
   /** q256's oracle — BOTH quantizer chains side by side (the
     * prefixed-CTE composition): the BLUE chain trains on the
@@ -2831,19 +2802,11 @@ object StreamOps {
     val greenTrain =
       s"(vec_id % 5 <> 0 OR (vec_id // 5) % 4 <= 2) AND (${S.sampledTrainWhereSql})"
     def leg(b: Int, p: String, gen: String): (String, String) = {
-      val ctes = s"""l16$b AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY ad, vec_id) AS rn
-               FROM ${p}wadc WHERE vec_id % 5 <> 0 OR (vec_id // 5) % 4 <= $b)
-               WHERE rn <= 16),
-             lrr$b AS (SELECT c.qid, c.vec_id,
-                 list_sum(list_transform(generate_series(1, len(q.qiv)),
-                   j -> (q.qiv[j] - x.iv[j]) * (q.qiv[j] - x.iv[j]))) AS d
-               FROM l16$b c JOIN ${p}wq q ON c.qid = q.qid
-               JOIN ${p}t x ON c.vec_id = x.vec_id)"""
+      val ctes = prefixServeCtes(b, p)
       val sel = s"""SELECT CAST($b AS BIGINT) AS batch_id, '$gen' AS gen, qid,
                CAST(rn AS BIGINT) AS rn, vec_id, CAST(d AS BIGINT) AS d
              FROM (SELECT qid, vec_id, d,
-                 row_number() OVER (PARTITION BY qid ORDER BY d, vec_id) AS rn
+                 ${knnRank("d")} AS rn
                FROM lrr$b) WHERE rn <= 3"""
       (ctes, sel)
     }
@@ -2851,8 +2814,8 @@ object StreamOps {
       if (b < 2) leg(b, "", "gen-00000") else leg(b, "g", "gen-00001"))
     s"""${S.ivfadcSql(16, 1, trainWhere = blueTrain)},
              ${S.ivfadcSql(16, 1, trainWhere = greenTrain, p = "g", lead = false)},
-             ${legs.map(_._1).mkString(",\n             ")}
-             ${legs.map(_._2).mkString("\n             UNION ALL\n             ")}
+             ${legs.map(_._1).mkString(cteSep)}
+             ${legs.map(_._2).mkString(unionAllSep)}
              ORDER BY batch_id, qid, rn"""
   }
 
@@ -2885,17 +2848,11 @@ object StreamOps {
                UNION ALL
                SELECT qid, vec_id, ad FROM wadc
                  WHERE qid = 7 AND NOT ${upd("vec_id", b)}),
-             l32$b AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY ad, vec_id) AS rn
-               FROM adc$b) WHERE rn <= 32),
+             ${knnTopKWhere(s"l32$b", "ad", s"adc$b", 32)},
              tb$b AS (SELECT vec_id, iv FROM ut WHERE ${upd("vec_id", b)}
                UNION ALL SELECT vec_id, iv FROM t WHERE NOT ${upd("vec_id", b)}),
-             lrr$b AS (SELECT c.qid, c.vec_id,
-                 list_sum(list_transform(generate_series(1, len(q.qiv)),
-                   j -> (q.qiv[j] - x.iv[j]) * (q.qiv[j] - x.iv[j]))) AS d
-               FROM l32$b c JOIN wq q ON c.qid = q.qid
-               JOIN tb$b x ON c.vec_id = x.vec_id)"""
-    }.mkString(",\n             ")
+             ${rerankCte(s"lrr$b", s"l32$b", t = s"tb$b")}"""
+    }.mkString(cteSep)
     val unions = (0 until 4).flatMap { b =>
       Seq(
         s"""SELECT CAST($b AS BIGINT) AS batch_id, 'lex' AS leg,
@@ -2909,7 +2866,7 @@ object StreamOps {
              FROM (SELECT vec_id, d,
                  row_number() OVER (ORDER BY d, vec_id) AS rk
                FROM lrr$b) WHERE rk <= 10""")
-    }.mkString("\n             UNION ALL\n             ")
+    }.mkString(unionAllSep)
     s"""${S.ivfadcSql(16, 1, trainWhere = "vec_id % 7 <> 3")},
              emb2 AS (SELECT vec_id,
                  CASE WHEN vec_id % 7 = 3 THEN list_reverse(embedding)
@@ -2918,8 +2875,7 @@ object StreamOps {
              ${S.ivfadcSql(
         16, 1, trainWhere = "vec_id % 7 <> 3", p = "u", lead = false,
         tSrc = "emb2")},
-             uni AS (SELECT d.doc_id, d.text FROM documents d
-               WHERE d.doc_id IN (SELECT vec_id FROM embeddings)),
+             $uniCte,
              $perBatch
              $unions
              ORDER BY batch_id, leg, rk"""
@@ -2932,24 +2888,16 @@ object StreamOps {
   // the lex page, the exact re-rank join, the RRF fusion tail, and
   // the gated page row must never fork between them).
 
-  /** The sparse leg's positioned top-20 over `x{b}scored` (the
-    * bm25Sql chain's output), query doc excluded.
+  /** The dense leg of batch `b`: query 7's top-32 ADC candidates
+    * `l32{b}` among the `{p}wadc` rows in `pop`, and their exact
+    * re-rank `lrr{b}` against chain `p`'s corpus and query batch.
     */
-  private def hybridLexCte(b: Int): String =
-    s"""lex$b AS (SELECT doc_id, lex_rk FROM (
-                 SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS lex_rk
-                 FROM x${b}scored WHERE doc_id <> 7)
-               WHERE lex_rk <= 20)"""
-
-  /** The exact-integer re-rank distances of candidate set `l32{b}`
-    * against corpus `tRel` and query batch `wqRel`.
-    */
-  private def hybridRerankCte(b: Int, tRel: String = "t", wqRel: String = "wq"): String =
-    s"""lrr$b AS (SELECT c.qid, c.vec_id,
-                 list_sum(list_transform(generate_series(1, len(q.qiv)),
-                   j -> (q.qiv[j] - x.iv[j]) * (q.qiv[j] - x.iv[j]))) AS d
-               FROM l32$b c JOIN $wqRel q ON c.qid = q.qid
-               JOIN $tRel x ON c.vec_id = x.vec_id)"""
+  private def hybridDenseCtes(b: Int, pop: String, p: String = ""): String =
+    s"""l32$b AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
+                 ${knnRank("ad")} AS rn
+               FROM ${p}wadc WHERE qid = 7
+                 AND $pop) WHERE rn <= 32),
+             ${rerankCte(s"lrr$b", s"l32$b", t = s"${p}t", wq = s"${p}wq")}"""
 
   /** The dense top-20 from `lrr{b}` and the RRF fusion tail ending at
     * `fr{b}` (rk-positioned page rows).
@@ -2958,19 +2906,25 @@ object StreamOps {
     s"""vec$b AS (SELECT vec_id AS doc_id, vec_rk FROM (
                  SELECT vec_id, row_number() OVER (ORDER BY d, vec_id) AS vec_rk
                  FROM lrr$b) WHERE vec_rk <= 20),
-             fused$b AS (SELECT coalesce(lex$b.doc_id, vec$b.doc_id) AS doc_id,
-                 lex$b.lex_rk, vec$b.vec_rk,
-                 round(coalesce(CAST(1 AS DOUBLE) / (lex$b.lex_rk + 60), 0)
-                   + coalesce(CAST(1 AS DOUBLE) / (vec$b.vec_rk + 60), 0), 6) AS rrf
-               FROM lex$b FULL OUTER JOIN vec$b ON lex$b.doc_id = vec$b.doc_id),
+             ${rrfFusedCte(b.toString)},
              fr$b AS (SELECT doc_id, rrf, lex_rk, vec_rk,
                row_number() OVER (ORDER BY rrf DESC, doc_id) AS rk FROM fused$b)"""
 
-  /** Batch `b`'s gated top-10 page row over `fr{b}`. */
-  private def hybridPageRowSql(b: Int): String =
-    s"""SELECT CAST($b AS BIGINT) AS batch_id, CAST(rk AS BIGINT) AS rk, doc_id, rrf,
+  /** The closing CTE and SELECT every hybrid gate shares: the `uni`
+    * universe, the four batches' CTEs `perBatch`, and each batch's
+    * gated top-10 page rows over `fr{b}`.
+    */
+  private def hybridPagesSql(perBatch: String): String = {
+    val pages = (0 until 4).map { b =>
+      s"""SELECT CAST($b AS BIGINT) AS batch_id, CAST(rk AS BIGINT) AS rk, doc_id, rrf,
                CAST(lex_rk AS BIGINT) AS lex_rk, CAST(vec_rk AS BIGINT) AS vec_rk
              FROM fr$b WHERE rk <= 10"""
+    }
+    s"""$uniCte,
+             $perBatch
+             ${pages.mkString(unionAllSep)}
+             ORDER BY batch_id, rk"""
+  }
 
   /** q260's oracle — FOUR quantizer chains (blue/green generations x
     * original/updated content, all via the prefixed-CTE + tSrc
@@ -3014,8 +2968,6 @@ object StreamOps {
   private def hybridFullCdcOracleSql(
       greenPrefix: Int, chainOf: Int => (String, String)): String = {
     val S = graft.queries.SimilarityOps
-    val terms = "SELECT DISTINCT unnest(" + graft.queries.Tokenize.toksSql +
-      ") AS word FROM documents WHERE doc_id = 7"
     def pop(v: String, b: Int): String =
       s"""(($v % 5 = 2 OR $v % 5 = 3 OR $v % 5 = 4)
                  OR ($v % 5 = 1 AND ($v // 5) % 4 > $b)
@@ -3032,23 +2984,19 @@ object StreamOps {
                  CASE WHEN ${upd("doc_id", b)}
                    THEN text || ' graft refreshed revision' ELSE text END AS text
                FROM uni WHERE ${pop("doc_id", b)}),
-             ${graft.queries.RetrievalOps.bm25Sql(s"pop$b", terms, s"x$b")},
-             ${hybridLexCte(b)},
+             ${graft.queries.RetrievalOps.bm25Sql(s"pop$b", doc7Terms, s"x$b")},
+             ${lexTop20Cte(s"lex$b", s"x${b}scored")},
              adc$b AS (SELECT qid, vec_id, ad FROM ${pu}wadc
                  WHERE qid = 7 AND ${pop("vec_id", b)} AND ${upd("vec_id", b)}
                UNION ALL
                SELECT qid, vec_id, ad FROM ${po}wadc
                  WHERE qid = 7 AND ${pop("vec_id", b)} AND NOT ${upd("vec_id", b)}),
-             l32$b AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY ad, vec_id) AS rn
-               FROM adc$b) WHERE rn <= 32),
+             ${knnTopKWhere(s"l32$b", "ad", s"adc$b", 32)},
              tb$b AS (SELECT vec_id, iv FROM vt WHERE ${upd("vec_id", b)}
                UNION ALL SELECT vec_id, iv FROM t WHERE NOT ${upd("vec_id", b)}),
-             ${hybridRerankCte(b, tRel = s"tb$b")},
+             ${rerankCte(s"lrr$b", s"l32$b", t = s"tb$b")},
              ${hybridFuseCtes(b)}"""
-    }.mkString(",\n             ")
-    val unions = (0 until 4).map(hybridPageRowSql)
-      .mkString("\n             UNION ALL\n             ")
+    }.mkString(cteSep)
     s"""${S.ivfadcSql(16, 1, trainWhere = blueTrain)},
              emb2 AS (SELECT vec_id,
                  CASE WHEN vec_id % 5 = 3 THEN list_reverse(embedding)
@@ -3059,11 +3007,7 @@ object StreamOps {
              ${S.ivfadcSql(16, 1, trainWhere = greenTrain, p = "g", lead = false)},
              ${S.ivfadcSql(
         16, 1, trainWhere = greenTrain, p = "h", lead = false, tSrc = "emb2")},
-             uni AS (SELECT d.doc_id, d.text FROM documents d
-               WHERE d.doc_id IN (SELECT vec_id FROM embeddings)),
-             $perBatch
-             $unions
-             ORDER BY batch_id, rk"""
+             ${hybridPagesSql(perBatch)}"""
   }
 
   /** q250's oracle — four per-prefix hybrid pages: each batch's sparse
@@ -3076,28 +3020,16 @@ object StreamOps {
     * rule.
     */
   private def hybridLiveServeOracleSql: String = {
-    val terms = "SELECT DISTINCT unnest(" + graft.queries.Tokenize.toksSql +
-      ") AS word FROM documents WHERE doc_id = 7"
     val perBatch = (0 until 4).map { b =>
       s"""pop$b AS (SELECT doc_id, text FROM uni
                WHERE doc_id % 5 <> 0 OR (doc_id // 5) % 4 <= $b),
-             ${graft.queries.RetrievalOps.bm25Sql(s"pop$b", terms, s"x$b")},
-             ${hybridLexCte(b)},
-             l32$b AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY ad, vec_id) AS rn
-               FROM wadc WHERE qid = 7
-                 AND (vec_id % 5 <> 0 OR (vec_id // 5) % 4 <= $b)) WHERE rn <= 32),
-             ${hybridRerankCte(b)},
+             ${graft.queries.RetrievalOps.bm25Sql(s"pop$b", doc7Terms, s"x$b")},
+             ${lexTop20Cte(s"lex$b", s"x${b}scored")},
+             ${hybridDenseCtes(b, s"(vec_id % 5 <> 0 OR (vec_id // 5) % 4 <= $b)")},
              ${hybridFuseCtes(b)}"""
-    }.mkString(",\n             ")
-    val unions = (0 until 4).map(hybridPageRowSql)
-      .mkString("\n             UNION ALL\n             ")
+    }.mkString(cteSep)
     s"""${graft.queries.SimilarityOps.ivfadcSql(16, 1, trainWhere = "vec_id % 5 <> 0")},
-             uni AS (SELECT d.doc_id, d.text FROM documents d
-               WHERE d.doc_id IN (SELECT vec_id FROM embeddings)),
-             $perBatch
-             $unions
-             ORDER BY batch_id, rk"""
+             ${hybridPagesSql(perBatch)}"""
   }
 
   /** q257's oracle — q250's per-prefix hybrid replay with the dense
@@ -3138,8 +3070,6 @@ object StreamOps {
   private def hybridGenerationSwapOracleSql(
       greenPrefix: Int, chainOf: Int => String): String = {
     val S = graft.queries.SimilarityOps
-    val terms = "SELECT DISTINCT unnest(" + graft.queries.Tokenize.toksSql +
-      ") AS word FROM documents WHERE doc_id = 7"
     val blueTrain = "(vec_id % 5 <> 0) AND (vec_id < 32 OR vec_id % 2 = 0)"
     val greenTrain =
       s"(vec_id % 5 <> 0 OR (vec_id // 5) % 4 <= $greenPrefix) AND (${S.sampledTrainWhereSql})"
@@ -3147,24 +3077,14 @@ object StreamOps {
       val p = chainOf(b)
       s"""pop$b AS (SELECT doc_id, text FROM uni
                WHERE doc_id % 5 <> 0 OR (doc_id // 5) % 4 <= $b),
-             ${graft.queries.RetrievalOps.bm25Sql(s"pop$b", terms, s"x$b")},
-             ${hybridLexCte(b)},
-             l32$b AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY ad, vec_id) AS rn
-               FROM ${p}wadc WHERE qid = 7
-                 AND (vec_id % 5 <> 0 OR (vec_id // 5) % 4 <= $b)) WHERE rn <= 32),
-             ${hybridRerankCte(b, tRel = s"${p}t", wqRel = s"${p}wq")},
+             ${graft.queries.RetrievalOps.bm25Sql(s"pop$b", doc7Terms, s"x$b")},
+             ${lexTop20Cte(s"lex$b", s"x${b}scored")},
+             ${hybridDenseCtes(b, s"(vec_id % 5 <> 0 OR (vec_id // 5) % 4 <= $b)", p)},
              ${hybridFuseCtes(b)}"""
-    }.mkString(",\n             ")
-    val unions = (0 until 4).map(hybridPageRowSql)
-      .mkString("\n             UNION ALL\n             ")
+    }.mkString(cteSep)
     s"""${S.ivfadcSql(16, 1, trainWhere = blueTrain)},
              ${S.ivfadcSql(16, 1, trainWhere = greenTrain, p = "g", lead = false)},
-             uni AS (SELECT d.doc_id, d.text FROM documents d
-               WHERE d.doc_id IN (SELECT vec_id FROM embeddings)),
-             $perBatch
-             $unions
-             ORDER BY batch_id, rk"""
+             ${hybridPagesSql(perBatch)}"""
   }
 
   /** q255's oracle — q250's four per-prefix hybrid replays with the
@@ -3179,8 +3099,6 @@ object StreamOps {
     * A def — eager interpolation rule.
     */
   private def hybridCdcRetractOracleSql: String = {
-    val terms = "SELECT DISTINCT unnest(" + graft.queries.Tokenize.toksSql +
-      ") AS word FROM documents WHERE doc_id = 7"
     def popWhere(idc: String, b: Int): String =
       s"""(($idc % 5 <> 0 AND $idc % 5 <> 1)
                  OR ($idc % 5 = 0 AND ($idc // 5) % 4 <= $b)
@@ -3188,22 +3106,12 @@ object StreamOps {
     val perBatch = (0 until 4).map { b =>
       s"""pop$b AS (SELECT doc_id, text FROM uni
                WHERE ${popWhere("doc_id", b)}),
-             ${graft.queries.RetrievalOps.bm25Sql(s"pop$b", terms, s"x$b")},
-             ${hybridLexCte(b)},
-             l32$b AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-                 row_number() OVER (PARTITION BY qid ORDER BY ad, vec_id) AS rn
-               FROM wadc WHERE qid = 7
-                 AND ${popWhere("vec_id", b)}) WHERE rn <= 32),
-             ${hybridRerankCte(b)},
+             ${graft.queries.RetrievalOps.bm25Sql(s"pop$b", doc7Terms, s"x$b")},
+             ${lexTop20Cte(s"lex$b", s"x${b}scored")},
+             ${hybridDenseCtes(b, popWhere("vec_id", b))},
              ${hybridFuseCtes(b)}"""
-    }.mkString(",\n             ")
-    val unions = (0 until 4).map(hybridPageRowSql)
-      .mkString("\n             UNION ALL\n             ")
+    }.mkString(cteSep)
     s"""${graft.queries.SimilarityOps.ivfadcSql(16, 1, trainWhere = "vec_id % 5 <> 0")},
-             uni AS (SELECT d.doc_id, d.text FROM documents d
-               WHERE d.doc_id IN (SELECT vec_id FROM embeddings)),
-             $perBatch
-             $unions
-             ORDER BY batch_id, rk"""
+             ${hybridPagesSql(perBatch)}"""
   }
 }

@@ -31,7 +31,7 @@ class BloomFilterSpec extends AnyFunSuite {
     // no false negatives: the pruned set contains the true join input
     val trueMatches = orders
       .join(highValue.select(col("c_custkey")), col("o_custkey") === col("c_custkey"), "left_semi")
-    assert(trueMatches.except(pruned.select(trueMatches.columns.map(col): _*)).count() == 0)
+    assert(trueMatches.except(pruned.select(trueMatches.columns.toIndexedSeq.map(col): _*)).count() == 0)
 
     // pruning is effective: survivors are close to the true match count
     val nTrue = trueMatches.count().toDouble

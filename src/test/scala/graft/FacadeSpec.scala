@@ -19,7 +19,7 @@ class FacadeSpec extends AnyFunSuite {
     assert(r.columns.contains("rnk") && r.columns.contains("n"))
     assert(r.filter(col("rnk") > col("n")).count() == 0)
     val p = Graft.distributedPrefixSum(df, Seq(col("id")), col("v"), inclusive = true)
-    assert(p.agg(max(col("psum"))).head.getLong(0) == df.agg(sum(col("v"))).head.getLong(0))
+    assert(p.agg(max(col("psum"))).head().getLong(0) == df.agg(sum(col("v"))).head().getLong(0))
   }
 
   test("bloom probe and band buckets reachable through the façade") {
@@ -37,7 +37,7 @@ class FacadeSpec extends AnyFunSuite {
       .select(graft.functions.TextHashOps
         .minhashSig(array_distinct(graft.functions.TextHashOps.gramsText(col("toks"), 3)), 8)
         .as("sig"))
-    val b = sig.select(Graft.bandBuckets(col("sig"), 4, 2).as("bk")).head
+    val b = sig.select(Graft.bandBuckets(col("sig"), 4, 2).as("bk")).head()
     assert(b.getSeq[String](0).length == 4)
   }
 

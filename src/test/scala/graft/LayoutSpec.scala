@@ -47,58 +47,6 @@ class LayoutSpec extends AnyFunSuite {
     }
   }
 
-  test("compactInPlace: append-accumulated index recompacts in place, content identical") {
-    // simulate a streaming index's life: a compacted day-0 generation
-    // plus 5 per-batch appends (each its own small file set)
-    val docs = Engine.table(spark, dir, "documents").select(md5(col("text")).as("h"))
-    val idxDir = tmp("graft-inplace-") + "/idx"
-    Layout.compact(spark, docs.filter(col("h") < lit("8")), idxDir, 4, col("h"))
-    (0 until 5).foreach { i =>
-      docs
-        .filter(col("h") >= lit("8"))
-        .filter(abs(hash(col("h"))) % 5 === i)
-        .repartition(3)
-        .write.mode("append").parquet(idxDir)
-    }
-    val before = spark.read.parquet(idxDir).collect().map(_.getString(0)).toSet
-    val nBefore = new java.io.File(idxDir).listFiles.count(_.getName.endsWith(".parquet"))
-    assert(nBefore >= 15, s"append accumulation missing: $nBefore files")
-
-    Layout.compactInPlace(spark, idxDir, 4, col("h"))
-
-    // bounded file count, identical content, disjoint sorted ranges —
-    // the day-0 layout is fully recovered
-    val nAfter = new java.io.File(idxDir).listFiles.count(_.getName.endsWith(".parquet"))
-    assert(nAfter <= 4, s"expected <= 4 files after compaction, got $nAfter")
-    val after = spark.read.parquet(idxDir).collect().map(_.getString(0)).toSet
-    assert(after == before, s"content drifted: ${after.size} vs ${before.size} keys")
-    val ranges = spark.read
-      .parquet(idxDir)
-      .select(col("h"), input_file_name().as("f"))
-      .groupBy(col("f"))
-      .agg(min(col("h")).as("lo"), max(col("h")).as("hi"))
-      .collect()
-      .map(r => (r.getString(1), r.getString(2)))
-      .sortBy(_._1)
-    ranges.sliding(2).foreach {
-      case Array((_, hi1), (lo2, _)) => assert(hi1 < lo2, s"overlapping ranges: $hi1 >= $lo2")
-      case _                         =>
-    }
-    // no leftover generation dirs from the swap
-    assert(!new java.io.File(idxDir + ".compacting").exists())
-    assert(!new java.io.File(idxDir + ".old").exists())
-
-    // CRASH-WINDOW REPAIR: simulate a kill between "retire" and
-    // "commit" (live path gone, previous generation parked at .old) —
-    // the next call must restore and recompact, never delete the only
-    // surviving generation
-    assert(new java.io.File(idxDir).renameTo(new java.io.File(idxDir + ".old")))
-    Layout.compactInPlace(spark, idxDir, 4, col("h"))
-    val recovered = spark.read.parquet(idxDir).collect().map(_.getString(0)).toSet
-    assert(recovered == before, "crash repair lost index content")
-    assert(!new java.io.File(idxDir + ".old").exists())
-  }
-
   test("z-order: interleaving is correct and a 2-D box prunes most z-clustered files") {
     // known values: a=0b11 (bits 0,2), b=0b10 (bit 3) -> z = 0b1101? check directly
     val z = spark

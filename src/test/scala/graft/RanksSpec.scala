@@ -51,7 +51,7 @@ class RanksSpec extends AnyFunSuite {
     val df = mkDf(5)
     val got = operators.Ranks
       .distributedRank(df, Seq("st"), Seq(col("id")), partitions = 32)
-      .agg(sum(col("rnk"))).head.getLong(0)
+      .agg(sum(col("rnk"))).head().getLong(0)
     // each stratum's ranks are 1..k; total = sum over strata of k*(k+1)/2
     val expected = mkDf(5)
       .groupBy("st").count().collect()

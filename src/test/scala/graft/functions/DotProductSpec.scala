@@ -26,7 +26,7 @@ class DotProductSpec extends AnyFunSuite {
 
   test("graft_dot is callable from SQL") {
     val r = spark.sql("SELECT graft_dot(array(1.0d, 2.0d, 3.0d), array(4.0d, 5.0d, 6.0d)) AS d")
-    assert(r.head.getDouble(0) == 32.0)
+    assert(r.head().getDouble(0) == 32.0)
   }
 
   test("unequal-length arrays yield NULL, agreeing with the HOF form") {
@@ -62,7 +62,7 @@ class DotProductSpec extends AnyFunSuite {
       .select(VectorOps.dot(col("r"), col("r")).as("d"))
     val opt = q.queryExecution.optimizedPlan.toString
     assert(opt.contains("graft_norm2"), opt.take(800))
-    assert(q.head.getDouble(0) == 14.0) // order-invariant: 1+4+9
+    assert(q.head().getDouble(0) == 14.0) // order-invariant: 1+4+9
   }
 
   test("RewriteSelfDot leaves INLINE non-deterministic self-dots alone") {
@@ -85,7 +85,7 @@ class DotProductSpec extends AnyFunSuite {
 
   test("graft_norm2 is callable from SQL") {
     val r = spark.sql("SELECT graft_norm2(array(3.0d, 4.0d)) AS n")
-    assert(r.head.getDouble(0) == 25.0)
+    assert(r.head().getDouble(0) == 25.0)
   }
 
   test("dot product matches scala computation on seeded random vectors") {

@@ -35,7 +35,7 @@ class IntL2SqSpec extends AnyFunSuite {
 
   test("graft_l2sq is callable from SQL") {
     val r = spark.sql("SELECT graft_l2sq(array(1L, 2L), array(4L, 6L)) AS d")
-    assert(r.head.getLong(0) == 25L)
+    assert(r.head().getLong(0) == 25L)
   }
 
   test("unequal-length arrays yield NULL") {

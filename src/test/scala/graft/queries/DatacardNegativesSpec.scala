@@ -27,7 +27,7 @@ class DatacardNegativesSpec extends AnyFunSuite {
     // exists because a real datacard must carry it)
     val exactRecount = docs
       .groupBy(md5(col("text"))).agg(count(lit(1)).as("c"))
-      .filter(col("c") > 1).agg(coalesce(sum(col("c")), lit(0L))).head.getLong(0)
+      .filter(col("c") > 1).agg(coalesce(sum(col("c")), lit(0L))).head().getLong(0)
     assert(agg.getLong(2) == exactRecount)
     // the corpus DOES carry near-duplicates; the headline statistic
     // must not be vacuously zero

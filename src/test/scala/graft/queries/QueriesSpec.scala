@@ -31,7 +31,7 @@ class QueriesSpec extends AnyFunSuite {
 
   test("q01 pricing summary: counts partition the filtered table") {
     val df = graft.SparkEntry.queries("q01_pricing_summary")(spark, dir)
-    val total = df.agg(sum(col("count_order"))).head.getLong(0)
+    val total = df.agg(sum(col("count_order"))).head().getLong(0)
     val expected = graft.Engine
       .table(spark, dir, "lineitem")
       .filter(col("l_shipdate") <= to_timestamp(lit("1998-09-01")))
@@ -41,7 +41,7 @@ class QueriesSpec extends AnyFunSuite {
 
   test("q40 wordcount total equals token count") {
     val wc = graft.SparkEntry.queries("q40_wordcount")(spark, dir)
-    val totalFromWc = wc.agg(sum(col("n"))).head.getLong(0)
+    val totalFromWc = wc.agg(sum(col("n"))).head().getLong(0)
     val totalTokens = graft.Engine
       .table(spark, dir, "documents")
       .select(explode(expr("filter(split(lower(text), '[^a-z0-9]+'), x -> length(x) > 0)")))
@@ -191,7 +191,7 @@ class QueriesSpec extends AnyFunSuite {
   test("q50 exact dedup: keep_ids are distinct and group sizes sum to table size") {
     val df = graft.SparkEntry.queries("q50_exact_dedup")(spark, dir)
     val nDocs = graft.Engine.table(spark, dir, "documents").count()
-    assert(df.agg(sum(col("n_dups"))).head.getLong(0) == nDocs)
+    assert(df.agg(sum(col("n_dups"))).head().getLong(0) == nDocs)
     assert(df.select(col("keep_id")).distinct().count() == df.count())
   }
 
@@ -276,7 +276,7 @@ class QueriesSpec extends AnyFunSuite {
 
   test("q65 zipf spectrum weights sum to the distinct vocabulary size") {
     val zipf = graft.SparkEntry.queries("q65_token_zipf")(spark, dir)
-    val vocabFromZipf = zipf.agg(sum(col("n_words"))).head.getLong(0)
+    val vocabFromZipf = zipf.agg(sum(col("n_words"))).head().getLong(0)
     val vocab = graft.SparkEntry.queries("q40_wordcount")(spark, dir).count()
     // q65 is limit 50; at tiny scale there are fewer than 50 distinct
     // frequencies, so the spectrum covers the whole vocabulary

@@ -38,7 +38,7 @@ class ForeachBatchSpec extends AnyFunSuite {
     finally q.stop()
 
     val sunk = spark.read.parquet(out)
-    val totalSunk = sunk.agg(sum(col("n"))).head.getLong(0)
+    val totalSunk = sunk.agg(sum(col("n"))).head().getLong(0)
     val expected = graft.Engine.table(spark, dir, "events").count()
     assert(totalSunk == expected)
     // per-type totals across batches match the batch query
