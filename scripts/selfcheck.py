@@ -6,8 +6,14 @@ written by graft.Verify. Usage:
 
 SPARK_GRAFT_ONLY=q250,q255 checks only the queries Verify ran under the
 same filter (its prefix rule); the rest are counted on one SKIP line.
+
+Every run, filtered or not, writes <verifyOutDir>/selfcheck.json: for
+each checked query its hash_match, row count, and the sha256 of the
+canonical Spark frame and of the canonical oracle frame. Diffing two such
+files shows which results moved between two builds.
 """
 import glob
+import hashlib
 import json
 import os
 import sys
@@ -23,6 +29,25 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     if len(df):
         df = df.sort_values(by=list(df.columns), ignore_index=True)
     return df.reset_index(drop=True)
+
+
+def frame_sha256(df: pd.DataFrame) -> str:
+    """sha256 of a canonical frame: its column names and dtypes, then
+    every row as CSV (floats at full precision)."""
+    h = hashlib.sha256()
+    h.update("\n".join(f"{c}:{t}" for c, t in zip(df.columns, df.dtypes)).encode())
+    h.update(df.to_csv(index=False, float_format="%.17g").encode())
+    return h.hexdigest()
+
+
+def record(ok, got=None, want=None) -> dict:
+    """One query's selfcheck.json entry; a frame not read is null."""
+    return {
+        "hash_match": ok,
+        "rows": None if got is None else len(got),
+        "spark_sha256": None if got is None else frame_sha256(got),
+        "oracle_sha256": None if want is None else frame_sha256(want),
+    }
 
 
 def selection():
@@ -50,16 +75,17 @@ def main(sf_dir: str, out_dir: str) -> int:
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not files:
             print(f"FAIL {name}: no spark result written")
-            results[name] = {"hash_match": False}
+            results[name] = record(False)
             n_missing += 1
             n_fail += 1
             continue
+        got = None
         try:
             got = canon(con.sql(f"SELECT * FROM '{out_dir}/{name}/*.parquet'").df())
             want = canon(con.sql(oracle[name]).df())
         except Exception as e:
             print(f"FAIL {name}: {e}")
-            results[name] = {"hash_match": False}
+            results[name] = record(False, got)
             n_fail += 1
             continue
         ok = list(got.columns) == list(want.columns) and len(got) == len(want)
@@ -84,7 +110,7 @@ def main(sf_dir: str, out_dir: str) -> int:
                 detail = str(e).split("\n")[0]
         else:
             detail = f"cols {list(got.columns)} vs {list(want.columns)}; rows {len(got)} vs {len(want)}"
-        results[name] = {"hash_match": ok}
+        results[name] = record(ok, got, want)
         if ok:
             print(f"PASS {name} ({len(got)} rows)")
             n_pass += 1
@@ -101,7 +127,9 @@ def main(sf_dir: str, out_dir: str) -> int:
         if name in oracle or not selected(name, only):
             continue
         files = glob.glob(f"{path}/*.parquet")
-        n = len(con.sql(f"SELECT * FROM '{path}/*.parquet'").df()) if files else 0
+        got = canon(con.sql(f"SELECT * FROM '{path}/*.parquet'").df()) if files else None
+        n = 0 if got is None else len(got)
+        results[name] = record(None, got)
         status = "PASS" if n > 0 else "FAIL"
         print(f"{status} {name} (rows-only: {n} rows)")
         if n > 0:
@@ -112,14 +140,20 @@ def main(sf_dir: str, out_dir: str) -> int:
     if n_skip:
         print(f"SKIP {n_skip} (SPARK_GRAFT_ONLY)")
     print(f"== {n_pass} pass / {n_fail} fail")
+    json.dump(
+        {"sf_dir": sf_dir, "pass": n_pass, "fail": n_fail, "queries": results},
+        open(f"{out_dir}/selfcheck.json", "w"),
+        indent=1,
+        sort_keys=True,
+    )
     # Machine-readable mirror of the driver gate's per-query shape, so
     # RegistryDoc can label queries added SINCE the last driver gate
     # from local evidence instead of leaving them "pending". Written
     # only for a FULL run (a SPARK_GRAFT_ONLY-filtered Verify leaves
     # most queries unwritten, which must not read as evidence).
-    if only is None and n_missing == 0 and len(results) == len(oracle):
+    if only is None and n_missing == 0 and all(n in results for n in oracle):
         json.dump(
-            {"sf_dir": sf_dir, "queries": results},
+            {"sf_dir": sf_dir, "queries": {n: {"hash_match": results[n]["hash_match"]} for n in sorted(oracle)}},
             open("SELFCHECK.json", "w"),
             indent=1,
         )

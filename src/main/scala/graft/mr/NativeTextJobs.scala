@@ -1,5 +1,7 @@
 package graft.mr
 
+import java.util.Locale
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,23 +14,26 @@ object NativeTextJobs {
 
   /** Word count with wc_map.sh/wc_reduce.sh semantics
     * (`/root/reference/tests/testdata/exec/wc_map.sh:12`): lowercase each
-    * line and split it where `tr '[ \t]' '\n'` does — at each of '[',
-    * space, TAB and ']' (empty tokens count: `tr` emits them) — then
-    * count per token. Result columns (word, n).
+    * line as `tr '[:upper:]' '[:lower:]'` does (ASCII A-Z only) and split
+    * it where `tr '[ \t]' '\n'` does — at each of '[', space, TAB and ']'
+    * (empty tokens count: `tr` emits them) — then count per token.
+    * Result columns (word, n).
     */
   def wordCount(spark: SparkSession, inputDir: String): DataFrame = {
     import spark.implicits._
     spark.read
       .textFile(inputDir)
-      .flatMap(line => tokens(line.toLowerCase))
+      .flatMap(line => tokens(line))
       .toDF("word")
       .groupBy(col("word"))
       .agg(count(lit(1)).as("n"))
   }
 
   /** The fields of `line` between the separators '[', space, TAB and ']',
-    * empty fields included, found with a char scan (a regex split
-    * compiles a Pattern for every line).
+    * empty fields included, with ASCII A-Z lowercased, found with one
+    * char scan (a regex split compiles a Pattern for every line, and
+    * `String.toLowerCase` would fold all of Unicode in the default
+    * locale, which `tr` does not).
     */
   private[mr] def tokens(line: String): Iterator[String] = new Iterator[String] {
     private var start = 0 // the next field's first char; > length once done
@@ -36,12 +41,29 @@ object NativeTextJobs {
     def next(): String = {
       if (!hasNext) throw new NoSuchElementException("no more tokens")
       var end = start
-      while (end < line.length && !isSeparator(line.charAt(end))) end += 1
-      val token = line.substring(start, end)
+      var upper = false
+      while (end < line.length && !isSeparator(line.charAt(end))) {
+        upper |= isAsciiUpper(line.charAt(end))
+        end += 1
+      }
+      val token =
+        if (!upper) line.substring(start, end)
+        else {
+          val cs = new Array[Char](end - start)
+          line.getChars(start, end, cs, 0)
+          var i = 0
+          while (i < cs.length) {
+            if (isAsciiUpper(cs(i))) cs(i) = (cs(i) + ('a' - 'A')).toChar
+            i += 1
+          }
+          new String(cs)
+        }
       start = end + 1
       token
     }
   }
+
+  private def isAsciiUpper(c: Char): Boolean = c >= 'A' && c <= 'Z'
 
   private def isSeparator(c: Char): Boolean = c == ' ' || c == '\t' || c == '[' || c == ']'
 
@@ -54,7 +76,7 @@ object NativeTextJobs {
     import spark.implicits._
     spark.read
       .textFile(inputDir)
-      .filter(line => line.nonEmpty && line.toLowerCase.contains(term))
+      .filter(line => line.nonEmpty && line.toLowerCase(Locale.ROOT).contains(term))
       .toDF("line")
       .orderBy(col("line"))
   }

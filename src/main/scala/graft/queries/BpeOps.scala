@@ -282,7 +282,7 @@ object BpeOps {
 
   /** q188 AND q192's oracle — the same SQL string object. */
   private[graft] def tokenCountsOracleSql: String =
-    s"""WITH t AS (SELECT doc_id, ${Tokenize.toksSql} AS toks FROM documents)
+    s"""WITH $toksCte
              SELECT doc_id,
                CAST(len(toks) AS BIGINT) AS n_words,
                CAST(coalesce(list_sum(list_transform(toks, w -> length(w))), 0) AS BIGINT)
@@ -330,7 +330,7 @@ object BpeOps {
           )
           .orderBy(col("doc_id"))
       },
-      Some(s"""WITH t AS (SELECT doc_id, ${Tokenize.toksSql} AS toks FROM documents),
+      Some(s"""WITH $toksCte,
              st AS (SELECT doc_id, ${Bpe.docTokensDuck("toks")} AS nt FROM t),
              $packSql""")
     ),

@@ -1301,7 +1301,7 @@ object CurationOps {
           )
           .withColumn("verdict", when(col("hits") >= 1L, lit("drop")).otherwise(lit("keep")))
           .orderBy(col("doc_id")),
-      Some(s"""WITH t AS (SELECT doc_id, ${Tokenize.toksSql} AS toks FROM documents)
+      Some(s"""WITH $toksCte
              SELECT doc_id,
                CAST(len(list_filter(toks, x -> list_contains([$BlocklistSql], x))) AS BIGINT) AS hits,
                CAST(len(list_intersect(toks, [$BlocklistSql])) AS BIGINT) AS terms,

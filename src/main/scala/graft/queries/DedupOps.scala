@@ -267,7 +267,7 @@ object DedupOps {
     * (Declared before `entries`, which interpolates it eagerly.)
     */
   private[queries] val dupSpansSql: String =
-    s"""WITH t AS (SELECT doc_id, ${Tokenize.toksSql} AS toks FROM documents),
+    s"""WITH $toksCte,
              g AS (SELECT doc_id, i AS pos,
                  md5(array_to_string(list_slice(toks, i, i + 9), ' ')) AS gh
                FROM (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 9)) AS i
@@ -834,7 +834,7 @@ object DedupOps {
           )
           .orderBy(col("doc_id"))
       },
-      Some(s"""WITH t AS (SELECT doc_id, ${Tokenize.toksSql} AS toks FROM documents),
+      Some(s"""WITH $toksCte,
              d AS (SELECT doc_id, toks FROM t WHERE len(toks) >= 10),
              th AS (SELECT doc_id, i, md5(array_to_string(toks[i*10+1 : i*10+10], ' ')) AS th
                FROM (SELECT doc_id, toks,
@@ -1430,7 +1430,7 @@ object DedupOps {
             coalesce(col("multi_buckets"), lit(0L)).as("multi_buckets"))
           .orderBy(col("config"))
       },
-      Some(s"""WITH t AS (SELECT doc_id, ${Tokenize.toksSql} AS toks FROM documents),
+      Some(s"""WITH $toksCte,
              ${shingleMinhashCtes("toks", "t")},
              b AS (
                SELECT '8x1' AS config, doc_id, ${graft.functions.TextHashOps.bandBucketsSql("sig", 8, 1)} AS bucket

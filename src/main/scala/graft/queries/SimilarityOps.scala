@@ -465,87 +465,34 @@ object SimilarityOps {
     * k lowest vec_ids; argmin ties to the lower cluster id; empty
     * clusters keep their previous centroid). Returns (vec_id, cid, d)
     * of the final assignment — the shared core of q147 and q148's
-    * SemDeDup. At the gate scales (n = 500/2000) k stays at the floor
-    * of 16; the synthetic sf1 replica (n = 20000) drives k to 79, so
-    * the scaled path is what PERF.md measures.
+    * SemDeDup. One [[lloydRefine]] round and the final [[lloydAssign]]
+    * over the whole vectors as one subspace (M = 1), the same two
+    * helpers the PQ and coarse codebooks train through. At the gate
+    * scales (n = 500/2000) k stays at the floor of 16; the synthetic
+    * sf1 replica (n = 20000) drives k to 79, so the scaled path is what
+    * PERF.md measures.
     */
   private[graft] def kmeansAssign(s: SparkSession, dir: String): DataFrame = {
     val iv = ivecs(s, dir)
-    val init = iv
-      .orderBy(col("vec_id"))
-      .limit(kmeansK(s, dir))
-      .select(col("vec_id").as("cvid"), col("iv").as("cv"))
-      .withColumn(
-        "cid",
-        (row_number().over(Window.orderBy(col("cvid"))) - 1).cast("long")
-      )
-      .select(col("cid"), col("cv"))
-    def assign(cents: DataFrame): DataFrame =
-      iv.crossJoin(broadcast(cents))
-        // codegen'd native integer L2 (IntL2Sq): same Long arithmetic
-        // as the composable aggregate() form it replaced, ~100x less
-        // per-eval cost — the assign is (vectors x k) evaluations and
-        // was the plan's dominant stage with the interpreted HOF
-        .withColumn("d", graft.functions.VectorOps.l2sqLong(col("iv"), col("cv")))
-        .groupBy(col("vec_id"))
-        .agg(min(struct(col("d"), col("cid"))).as("best"))
-        .select(col("vec_id"), col("best.cid").as("cid"), col("best.d").as("d"))
-    val round1 = assign(init)
-    val means = round1
-      .join(iv, "vec_id")
-      .select(col("cid"), posexplode(col("iv")).as(Seq("pos", "v")))
-      .groupBy(col("cid"), col("pos"))
-      .agg(expr("sum(v) div count(1)").as("m"))
-      .groupBy(col("cid"))
-      .agg(expr("transform(array_sort(collect_list(struct(pos, m))), p -> p.m)").as("nv"))
-    val cents1 = init
-      .join(means, Seq("cid"), "left")
-      .select(col("cid"), coalesce(col("nv"), col("cv")).as("cv"))
-    assign(cents1)
+    val sub = wholeSubs(iv)
+    val seed = lowestRanked(iv, kmeansK(s, dir))
+      .select(lit(0).as("m"), col("cid"), col("iv").as("cv"))
+    lloydAssign(sub, lloydRefine(sub, seed, 1)).select(col("vec_id"), col("cid"), col("d"))
   }
 
-  /** DuckDB CTE chain mirroring [[kmeansAssign]]; ends with `a2` whose
-    * rk=1 rows are the final (vec_id, cid, dist) assignment.
+  /** DuckDB CTE chain mirroring [[kmeansAssign]]: one
+    * [[lloydRoundCtesSql]] round over `ksub` (the m = 0 view of `t`),
+    * then `a2`, whose rk=1 rows are the final (vec_id, m, cid, dist)
+    * assignment. A def — `entries` oracle strings interpolate eagerly.
     */
-  private val kmeansSql: String =
-    """WITH t AS (
-         SELECT vec_id, list_transform(embedding,
-           x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT) + 16777216) AS iv
-         FROM embeddings),
-       kk AS (
-         SELECT greatest(16, (count(*) + 255) // 256) AS k FROM t),
-       c0 AS (
-         SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, iv AS cv
-         FROM t QUALIFY cid < (SELECT k FROM kk)),
-       a1 AS (
-         SELECT vec_id, cid, dist,
-           row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rk
-         FROM (
-           SELECT t.vec_id, c0.cid,
-             list_sum(list_transform(generate_series(1, len(t.iv)),
-               j -> (t.iv[j] - c0.cv[j]) * (t.iv[j] - c0.cv[j]))) AS dist
-           FROM t CROSS JOIN c0)),
-       m1 AS (
-         SELECT a.cid, u.pos, CAST(sum(u.v) // count(*) AS BIGINT) AS m
-         FROM a1 a JOIN t ON a.vec_id = t.vec_id,
-           LATERAL (SELECT unnest(t.iv) AS v,
-             unnest(generate_series(1, len(t.iv))) AS pos) u
-         WHERE a.rk = 1
-         GROUP BY a.cid, u.pos),
-       c1 AS (
-         SELECT c0.cid,
-           coalesce(mm.nv, c0.cv) AS cv
-         FROM c0 LEFT JOIN (
-           SELECT cid, list(m ORDER BY pos) AS nv FROM m1 GROUP BY cid) mm
-           ON c0.cid = mm.cid),
-       a2 AS (
-         SELECT vec_id, cid, dist,
-           row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rk
-         FROM (
-           SELECT t.vec_id, c1.cid,
-             list_sum(list_transform(generate_series(1, len(t.iv)),
-               j -> (t.iv[j] - c1.cv[j]) * (t.iv[j] - c1.cv[j]))) AS dist
-           FROM t CROSS JOIN c1))"""
+  private def kmeansSql: String =
+    s"""WITH $intVecCte,
+             kk AS (SELECT greatest(16, (count(*) + 255) // 256) AS k FROM t),
+             ksub AS MATERIALIZED (SELECT vec_id, 0 AS m, iv AS sv FROM t),
+             kc0 AS (SELECT 0 AS m, row_number() OVER (ORDER BY vec_id) - 1 AS cid, iv AS cv
+               FROM t QUALIFY cid < (SELECT k FROM kk)),
+             ${lloydRoundCtesSql(1, "ksub", "kc0", "ka", "km", "kc")},
+             ${lloydFinalAssignSql("a2", "ksub", "kc1")}"""
 
   /** nDCG's 1/log2(p+1) position discounts for p = 1..10, rounded to
     * 6dp — computed ONCE here and interpolated into BOTH the Spark
@@ -858,83 +805,36 @@ object SimilarityOps {
     // engine-recomputable codebook standing in for trained centroids),
     // so a vector stores as 8 half-byte codes: 64 float32s -> 4 bytes,
     // 64x compression. All arithmetic happens in integer micro-units
-    // (floor(x*1e6 + 0.5), the q72 rounding) so distances, argmins, and
-    // the reconstruction error are engine-exact integers — no float
-    // accumulation anywhere. Scale shape: the codebook (16 rows)
-    // broadcasts; assignment is a narrow map per vector; one hash-agg
-    // reassembles codes. Exactly IVF-PQ's compression stage.
+    // (floor(x*1e6 + 0.5), the q72 rounding, with the +2^24 offset that
+    // cancels in every distance) so distances, argmins, and the
+    // reconstruction error are engine-exact integers — no float
+    // accumulation anywhere. The assignment is the PQ family's own
+    // lloydAssign over pqSubs, against the fixed 8 x 16-row book.
+    // Scale shape: the codebook (128 rows) broadcasts; assignment is a
+    // narrow map per subvector; one hash-agg reassembles codes.
+    // Exactly IVF-PQ's compression stage.
     QueryDef(
       "q145_pq_codes",
       (s, dir) => {
-        val iv = Engine
-          .table(s, dir, "embeddings")
-          .select(
-            col("vec_id"),
-            expr("transform(cast(embedding as array<double>), " +
-              "x -> cast(floor(x * 1000000 + 0.5d) as bigint))").as("iv")
-          )
-        val codes = iv
-          .orderBy(col("vec_id"))
-          .limit(16)
-          .select(col("vec_id").as("code_vec"), col("iv").as("cv"))
-          .withColumn(
-            "code_id",
-            (row_number().over(Window.orderBy(col("code_vec"))) - 1).cast("long")
-          )
-          .select(col("code_id"), col("cv"))
-        val assigned = iv
-          .crossJoin(broadcast(codes))
-          .select(
-            col("vec_id"),
-            col("code_id"),
-            // per-subspace distance via the codegen'd graft_l2sq over
-            // 8-element slices (same Long arithmetic as the interpreted
-            // aggregate() it replaced; the slice alloc is 8 longs — the
-            // inner loop is native, which is what dominates at
-            // (vectors x 16 codes x 8 subspaces) volume)
-            explode(expr(
-              "transform(sequence(0, 7), s -> named_struct('sub', s, 'dist', " +
-                "graft_l2sq(slice(iv, s*8+1, 8), slice(cv, s*8+1, 8))))"
-            )).as("sd")
-          )
-          .select(col("vec_id"), col("code_id"), col("sd.sub").as("sub"), col("sd.dist").as("dist"))
-          .groupBy(col("vec_id"), col("sub"))
-          .agg(min(struct(col("dist"), col("code_id"))).as("best"))
-          .select(
-            col("vec_id"), col("sub"),
-            col("best.code_id").as("code"), col("best.dist").as("dist")
-          )
-        assigned
+        val book = subspaces(lowestRanked(ivecs(s, dir), 16), "iv", "cid")
+          .select(col("m"), col("cid"), col("sv").as("cv"))
+        lloydAssign(pqSubs(s, dir), book)
           .groupBy(col("vec_id"))
           .agg(
             concat_ws(",", expr(
-              "transform(array_sort(collect_list(struct(sub, code))), p -> cast(p.code as string))"
+              "transform(array_sort(collect_list(struct(m, cid))), p -> cast(p.cid as string))"
             )).as("pq_codes"),
-            sum(col("dist")).as("err_sq")
+            sum(col("d")).as("err_sq")
           )
           .orderBy(col("vec_id"))
       },
-      Some("""WITH t AS (
-               SELECT vec_id, list_transform(embedding,
-                 x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT)) AS iv
-               FROM embeddings),
-             c AS (
-               SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code_id, iv AS cv
-               FROM t ORDER BY vec_id LIMIT 16),
-             d AS (
-               SELECT t.vec_id, c.code_id, ss.s AS sub,
-                 list_sum(list_transform(generate_series(1, 8),
-                   j -> (t.iv[ss.s*8 + j] - c.cv[ss.s*8 + j])
-                      * (t.iv[ss.s*8 + j] - c.cv[ss.s*8 + j]))) AS dist
-               FROM t CROSS JOIN c
-               CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS s) ss),
-             b AS (
-               SELECT vec_id, sub, code_id, dist,
-                 row_number() OVER (PARTITION BY vec_id, sub
-                   ORDER BY dist, code_id) AS rk
-               FROM d)
+      Some(s"""$pqSubsSql,
+             c AS (SELECT s.m, r.cid, s.sv AS cv FROM psub s JOIN (
+                 SELECT vec_id, row_number() OVER (ORDER BY vec_id) - 1 AS cid
+                 FROM t ORDER BY vec_id LIMIT 16) r ON s.vec_id = r.vec_id),
+             ${lloydFinalAssignSql("b", "psub", "c")}
              SELECT vec_id,
-               string_agg(CAST(code_id AS VARCHAR), ',' ORDER BY sub) AS pq_codes,
+               string_agg(CAST(cid AS VARCHAR), ',' ORDER BY m) AS pq_codes,
                CAST(sum(dist) AS BIGINT) AS err_sq
              FROM b WHERE rk = 1 GROUP BY vec_id ORDER BY vec_id""")
     ),
@@ -1142,7 +1042,7 @@ object SimilarityOps {
           .select(col("doc_id"), col("n_toks"), col("dot_micro"), col("cos_milli"), col("verdict"))
           .orderBy(col("doc_id"))
       },
-      Some(s"""WITH t AS (SELECT doc_id, ${Tokenize.toksSql} AS toks FROM documents),
+      Some(s"""WITH $toksCte,
              tk AS (SELECT doc_id, unnest(toks) AS tok FROM t),
              b0 AS (SELECT doc_id,
                  CAST(list_sum(list_transform(generate_series(1, 4),
@@ -1303,11 +1203,11 @@ object SimilarityOps {
             sum(col("d")).as("qerr"))
           .orderBy(col("vec_id"))
       },
-      Some(s"""$pqSql
+      Some(s"""${pqDeepSql(16, 1)}
              SELECT vec_id,
                CAST(sum(cid * (CAST(1 AS BIGINT) << (4 * m))) AS BIGINT) AS code,
                CAST(sum(dist) AS BIGINT) AS qerr
-             FROM pa2 WHERE rk = 1 GROUP BY vec_id ORDER BY vec_id""")
+             FROM pfa WHERE rk = 1 GROUP BY vec_id ORDER BY vec_id""")
     ),
     // --------------------------------------------------------------- q203
     // PQ ASYMMETRIC-DISTANCE search with recall@3 — the query half PQ
@@ -1335,17 +1235,11 @@ object SimilarityOps {
         val cb = pqCodebook(s, dir).localCheckpoint(eager = false)
         val a2 = pqAssign(s, dir, cb)
         val q = iv.filter(col("vec_id") < 20).select(col("vec_id").as("qid"), col("iv").as("qiv"))
-        val qsubs = q
-          .select(
-            col("qid"),
-            explode(expr("transform(sequence(0, 7), " +
-              "m -> named_struct('m', m, 'qsv', slice(qiv, m * 8 + 1, 8)))")).as("x"))
-          .select(col("qid"), col("x.m").as("m"), col("x.qsv").as("qsv"))
-        val pdt = qsubs
+        val pdt = subspaces(q, "qiv", "qid")
           .join(broadcast(cb), Seq("m"))
           .select(
             col("qid"), col("m"), col("cid"),
-            graft.functions.VectorOps.l2sqLong(col("qsv"), col("cv")).as("pd"))
+            graft.functions.VectorOps.l2sqLong(col("sv"), col("cv")).as("pd"))
         val adc = a2
           .join(broadcast(pdt), Seq("m", "cid"))
           .filter(col("qid") =!= col("vec_id"))
@@ -1368,15 +1262,15 @@ object SimilarityOps {
           .select(col("qid"), lit(3L).as("k"), coalesce(col("hits_pq"), lit(0L)).as("hits_pq"))
           .orderBy(col("qid"))
       },
-      Some(s"""$pqSql,
+      Some(s"""${pqDeepSql(16, 1)},
              pqq AS (SELECT vec_id AS qid, iv FROM t WHERE vec_id < 20),
              pqs AS (SELECT qid, mm.m, list_slice(iv, mm.m * 8 + 1, mm.m * 8 + 8) AS qsv
                FROM pqq, (SELECT unnest(generate_series(0, 7)) AS m) mm),
              pdt AS (SELECT q.qid, q.m, c.cid,
                  ${l2sq("q.qsv", "c.cv")} AS pd
-               FROM pqs q JOIN pc1 c ON q.m = c.m),
+               FROM pqs q JOIN pb1 c ON q.m = c.m),
              adc AS (SELECT p.qid, a.vec_id, CAST(sum(p.pd) AS BIGINT) AS ad
-               FROM pa2 a JOIN pdt p ON a.m = p.m AND a.cid = p.cid
+               FROM pfa a JOIN pdt p ON a.m = p.m AND a.cid = p.cid
                WHERE a.rk = 1 AND p.qid <> a.vec_id GROUP BY p.qid, a.vec_id),
              ${knnTopK("adc3", "ad", "adc", 3)},
              bsc AS (SELECT q.qid, x.vec_id,
@@ -1598,7 +1492,7 @@ object SimilarityOps {
       (s, dir) => {
         val iv = ivecs(s, dir)
         val cc = coarseCells(iv, rounds = 2).localCheckpoint(eager = false)
-        val ca = coarseAssign(iv, cc)
+        val ca = lloydAssign(wholeSubs(iv), cellBook(cc)).select(col("vec_id"), col("cid").as("ccid"))
         val q = iv
           .filter(col("vec_id") < 20)
           .select(col("vec_id").as("qid"), col("iv").as("qiv"))
@@ -2325,7 +2219,7 @@ object SimilarityOps {
       (s, dir) => {
         val iv = ivecs(s, dir)
         val cc = coarseCells(iv, 2).localCheckpoint(eager = false)
-        val ca = coarseAssign(iv, cc)
+        val ca = lloydAssign(wholeSubs(iv), cellBook(cc)).select(col("vec_id"), col("cid").as("ccid"))
         val rv = iv
           .join(ca, "vec_id")
           .join(broadcast(cc), "ccid")
@@ -2592,16 +2486,44 @@ object SimilarityOps {
     )
   )
 
+  /** `df`'s vector column `v` split into M = 8 contiguous 8-dim
+    * subspaces: one row per (row, m) holding the `keep` columns, `m`
+    * and the slice `sv`. THE one Spark spelling of the subspace split —
+    * corpus subvectors ([[pqSubs]]), residuals ([[residualSubs]]),
+    * codebook rows and query lookup tables all cut the same slices.
+    */
+  private def subspaces(df: DataFrame, v: String, keep: String*): DataFrame =
+    df.select(keep.map(col) :+ explode(expr("transform(sequence(0, 7), " +
+        s"m -> named_struct('m', m, 'sv', slice($v, m * 8 + 1, 8)))")).as("x"): _*)
+      .select(keep.map(col) ++ Seq(col("x.m").as("m"), col("x.sv").as("sv")): _*)
+
   /** PQ subvector rows (vec_id, m, sv): the 64-dim integer micro-unit
     * vector split into M=8 contiguous 8-dim subspaces.
     */
   private def pqSubs(s: SparkSession, dir: String): DataFrame =
-    ivecs(s, dir)
-      .select(
-        col("vec_id"),
-        explode(expr("transform(sequence(0, 7), " +
-          "m -> named_struct('m', m, 'sv', slice(iv, m * 8 + 1, 8)))")).as("x"))
-      .select(col("vec_id"), col("x.m").as("m"), col("x.sv").as("sv"))
+    subspaces(ivecs(s, dir), "iv", "vec_id")
+
+  /** A vector frame (vec_id, iv) as ONE subspace (vec_id, m = 0, sv):
+    * how k-means and the coarse quantizer run [[lloydAssign]] and
+    * [[lloydRefine]] at M = 1.
+    */
+  private def wholeSubs(iv: DataFrame): DataFrame =
+    iv.select(col("vec_id"), lit(0).as("m"), col("iv").as("sv"))
+
+  /** Coarse cells (ccid, ccv) as the M = 1 codebook (m = 0, cid, cv)
+    * that [[lloydAssign]] reads over [[wholeSubs]].
+    */
+  private def cellBook(cc: DataFrame): DataFrame =
+    cc.select(lit(0).as("m"), col("ccid").as("cid"), col("ccv").as("cv"))
+
+  /** The `k` lowest vec_ids of `iv` with cid = their rank from 0
+    * (vec_id, iv, cid): the fixed seeds of k-means (q147) and q145's
+    * code book.
+    */
+  private def lowestRanked(iv: DataFrame, k: Int): DataFrame =
+    iv.orderBy(col("vec_id"))
+      .limit(k)
+      .withColumn("cid", (row_number().over(Window.orderBy(col("vec_id"))) - 1).cast("long"))
 
   /** The refined per-subspace codebook (m, cid, cv): init = the 16
     * lowest vec_ids' subvectors (cid = vec_id, the q63 convention), one
@@ -2630,16 +2552,17 @@ object SimilarityOps {
       rounds)
   }
 
-  /** Per-(vec_id, m) argmin assignment of subvector rows against a
-    * broadcast codebook — ties to the lower cid; `d` is the winning
-    * exact-integer squared L2. THE one Spark spelling of the Lloyd
-    * assignment, shared by the PQ family (q202/q203/q207 via
-    * [[pqAssign]]) and the IVFADC family (q204/q206/q208 via
-    * [[ivfadcTrain]]) — its invariants (tie-break, exact-integer
-    * kernel) must never fork between the two (round-11 review item).
-    * Extra columns on `sub` ride along untouched.
+  /** Per-(vec_id, m) argmin assignment (vec_id, m, cid, d) of subvector
+    * rows `sub` (vec_id, m, sv) against a broadcast codebook `cb` (m,
+    * cid, cv) — ties to the lower cid; `d` is the winning exact-integer
+    * squared L2. THE one Spark spelling of the Lloyd assignment: the PQ
+    * family (q145, q202/q203/q207 via [[pqAssign]]), k-means at M = 1
+    * (q147/q148/q159/q168 via [[kmeansAssign]]), the coarse quantizer
+    * at M = 1 (q211, q239, [[ivfadcTrainIv]], [[ivfadcEncode]]) and the
+    * IVFADC residual codes — its invariants (tie-break, exact-integer
+    * kernel) cannot fork between them.
     */
-  private def lloydAssign(sub: DataFrame, cb: DataFrame): DataFrame =
+  private[queries] def lloydAssign(sub: DataFrame, cb: DataFrame): DataFrame =
     sub
       .join(broadcast(cb), Seq("m"))
       .withColumn("d", graft.functions.VectorOps.l2sqLong(col("sv"), col("cv")))
@@ -2652,9 +2575,9 @@ object SimilarityOps {
     * (assign -> floor-divided means on non-negative micro-units, so
     * Spark div == DuckDB // -> empty cells keep their PREVIOUS round's
     * value, not necessarily their seed; the oracle chains coalesce per
-    * round identically).
+    * round identically). Zero rounds return the seed.
     */
-  private def lloydRefine(sub: DataFrame, seed: DataFrame, rounds: Int): DataFrame = {
+  private[queries] def lloydRefine(sub: DataFrame, seed: DataFrame, rounds: Int): DataFrame = {
     var cb = seed
     for (r <- 1 to rounds) {
       val means = lloydAssign(sub, cb)
@@ -2687,49 +2610,6 @@ object SimilarityOps {
     */
   private[graft] def pqAssign(s: SparkSession, dir: String, cb: DataFrame): DataFrame =
     lloydAssign(pqSubs(s, dir), cb)
-
-  /** DuckDB CTE chain mirroring [[pqCodebook]] + [[pqAssign]]: ends with
-    * `pa2` whose rk=1 rows are the final (vec_id, m, cid, dist)
-    * assignment, with `pc1` the refined codebook and `t` the integer
-    * vectors. A def — `entries` oracle strings interpolate eagerly.
-    */
-  private def pqSql: String =
-    """WITH t AS (
-         SELECT vec_id, list_transform(embedding,
-           x -> CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT) + 16777216) AS iv
-         FROM embeddings),
-       psub AS (
-         SELECT vec_id, mm.m, list_slice(iv, mm.m * 8 + 1, mm.m * 8 + 8) AS sv
-         FROM t, (SELECT unnest(generate_series(0, 7)) AS m) mm),
-       pc0 AS (SELECT m, vec_id AS cid, sv AS cv FROM psub WHERE vec_id < 16),
-       pa1 AS (
-         SELECT vec_id, m, cid,
-           row_number() OVER (PARTITION BY vec_id, m ORDER BY dist, cid) AS rk
-         FROM (
-           SELECT s.vec_id, s.m, c.cid,
-             list_sum(list_transform(generate_series(1, len(s.sv)),
-               j -> (s.sv[j] - c.cv[j]) * (s.sv[j] - c.cv[j]))) AS dist
-           FROM psub s JOIN pc0 c ON s.m = c.m)),
-       pm1 AS (
-         SELECT a.m, a.cid, u.pos, CAST(sum(u.v) // count(*) AS BIGINT) AS mn
-         FROM pa1 a JOIN psub s ON a.vec_id = s.vec_id AND a.m = s.m,
-           LATERAL (SELECT unnest(s.sv) AS v,
-             unnest(generate_series(1, len(s.sv))) AS pos) u
-         WHERE a.rk = 1
-         GROUP BY a.m, a.cid, u.pos),
-       pc1 AS (
-         SELECT pc0.m, pc0.cid, coalesce(x.nv, pc0.cv) AS cv
-         FROM pc0 LEFT JOIN (
-           SELECT m, cid, list(mn ORDER BY pos) AS nv FROM pm1 GROUP BY m, cid) x
-           ON pc0.m = x.m AND pc0.cid = x.cid),
-       pa2 AS (
-         SELECT vec_id, m, cid, dist,
-           row_number() OVER (PARTITION BY vec_id, m ORDER BY dist, cid) AS rk
-         FROM (
-           SELECT s.vec_id, s.m, c.cid,
-             list_sum(list_transform(generate_series(1, len(s.sv)),
-               j -> (s.sv[j] - c.cv[j]) * (s.sv[j] - c.cv[j]))) AS dist
-           FROM psub s JOIN pc1 c ON s.m = c.m))"""
 
   // ------------------------------------------------------- IVFADC system
 
@@ -2767,7 +2647,7 @@ object SimilarityOps {
     // trained cells are a computed plan consumed three ways (coarse
     // assign, residual map, the caller's probe) — materialize once
     val cc = coarseCells(iv, coarseRounds).localCheckpoint(eager = false)
-    val ca = coarseAssign(iv, cc)
+    val ca = lloydAssign(wholeSubs(iv), cellBook(cc)).select(col("vec_id"), col("cid").as("ccid"))
     val rsub = residualSubs(iv, ca, cc)
     val seed = rsub
       .filter(col("vec_id") >= 16 && col("vec_id") < (16 + k))
@@ -2778,48 +2658,33 @@ object SimilarityOps {
     (cc, ca, cb, lloydAssign(rsub, cb).select(col("vec_id"), col("m"), col("cid")))
   }
 
-  /** The 16 coarse cells of a vector frame, Lloyd-TRAINED: seeds = the
-    * frame's vec_ids < 16 (raw vectors — for the incremental family
-    * the frame is the day-0 corpus, so arrivals can never shift the
-    * cells), refined by `rounds` exact-integer Lloyd rounds over the
-    * FULL 64-dim vectors — [[lloydRefine]] at M = 1, the same single
-    * definition site as every residual codebook, so the floor-division
-    * / (dist, cid) tie-break / empty-cell-coalesce invariants cannot
-    * fork between the coarse and fine levels. MEASURED at sf0.01
-    * (refuting the hypothesis that raw cells capped the probe
-    * ceiling): the 2-probe ceiling does NOT move with training —
-    * 52/60 raw, 49 at 1 round, 52 at 2, 49 at 3; on this isotropic
-    * corpus true neighbors straddle list boundaries wherever the
-    * cells sit (q211 gates the trained number cross-engine). What
+  /** The 16 coarse cells (ccid, ccv) of a vector frame, Lloyd-TRAINED:
+    * seeds = the frame's vec_ids < 16 (raw vectors — for the
+    * incremental family the frame is the day-0 corpus, so arrivals can
+    * never shift the cells), refined by `rounds` exact-integer Lloyd
+    * rounds over the FULL 64-dim vectors — [[lloydRefine]] at M = 1,
+    * the same single definition site as every residual codebook, so
+    * the floor-division / (dist, cid) tie-break / empty-cell-coalesce
+    * invariants cannot fork between the coarse and fine levels.
+    * MEASURED at sf0.01 (refuting the hypothesis that raw cells capped
+    * the probe ceiling): the 2-probe ceiling does NOT move with
+    * training — 52/60 raw, 49 at 1 round, 52 at 2, 49 at 3; on this
+    * isotropic corpus true neighbors straddle list boundaries wherever
+    * the cells sit (q211 gates the trained number cross-engine). What
     * training DOES buy is smaller residuals (cells move to population
-    * means), i.e. finer residual quantization at the same code
-    * budget: deep (K=256, 2-round) ADC conversion measured 25/60 ->
-    * 31/60, re-ranked recall 51/60 (q208/q212). 2 rounds is the
-    * adopted family default.
+    * means), i.e. finer residual quantization at the same code budget:
+    * deep (K=256, 2-round) ADC conversion measured 25/60 -> 31/60,
+    * re-ranked recall 51/60 (q208/q212). 2 rounds is the adopted family
+    * default. A vector's cell is [[lloydAssign]] over [[wholeSubs]]
+    * against [[cellBook]] of these cells (ties to the lower ccid).
     */
   private def coarseCells(iv: DataFrame, rounds: Int): DataFrame = {
     val raw = iv
       .filter(col("vec_id") < 16)
       .select(col("vec_id").as("ccid"), col("iv").as("ccv"))
-    if (rounds <= 0) raw
-    else
-      lloydRefine(
-        iv.select(col("vec_id"), lit(0).as("m"), col("iv").as("sv")),
-        raw.select(lit(0).as("m"), col("ccid").as("cid"), col("ccv").as("cv")),
-        rounds)
-        .select(col("cid").as("ccid"), col("cv").as("ccv"))
+    lloydRefine(wholeSubs(iv), cellBook(raw), rounds)
+      .select(col("cid").as("ccid"), col("cv").as("ccv"))
   }
-
-  /** Coarse argmin assignment (vec_id, ccid) against the broadcast
-    * cells — exact-integer L2, ties to the lower ccid ([[lloydAssign]]'s
-    * tie rule, coarse edition; the oracle's wca mirrors both).
-    */
-  private def coarseAssign(iv: DataFrame, cc: DataFrame): DataFrame =
-    iv.crossJoin(broadcast(cc))
-      .withColumn("cd", graft.functions.VectorOps.l2sqLong(col("iv"), col("ccv")))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("cd"), col("ccid"))).as("b"))
-      .select(col("vec_id"), col("b.ccid").as("ccid"))
 
   /** Residual subvector rows (vec_id, ccid, m, sv) under assignment
     * `ca`: residual = vector - centroid + 2^24 (residuals are NEGATIVE
@@ -2836,11 +2701,7 @@ object SimilarityOps {
         col("vec_id"), col("ccid"),
         expr("zip_with(iv, ccv, (a, b) -> a - b + 16777216L)").as("rv"))
       .localCheckpoint(eager = false)
-    rv.select(
-        col("vec_id"), col("ccid"),
-        explode(expr("transform(sequence(0, 7), " +
-          "m -> named_struct('m', m, 'sv', slice(rv, m * 8 + 1, 8)))")).as("x"))
-      .select(col("vec_id"), col("ccid"), col("x.m").as("m"), col("x.sv").as("sv"))
+    subspaces(rv, "rv", "vec_id", "ccid")
   }
 
   /** FROZEN-codebook IVFADC encode — (vec_id, ccid, m, cid) of `iv`
@@ -2848,10 +2709,11 @@ object SimilarityOps {
     * with zero training: the q210 streaming appends run this per
     * micro-batch on the arrivals, against the day-0 artifacts read
     * back from disk. Same argmin/tie/offset invariants as training's
-    * own final assign, by construction (shared helpers).
+    * own final assign, by construction (both levels assign through
+    * [[lloydAssign]]).
     */
   private[graft] def ivfadcEncode(iv: DataFrame, cc: DataFrame, cb: DataFrame): DataFrame = {
-    val ca = coarseAssign(iv, cc)
+    val ca = lloydAssign(wholeSubs(iv), cellBook(cc)).select(col("vec_id"), col("cid").as("ccid"))
     lloydAssign(residualSubs(iv, ca, cc), cb)
       .join(ca, "vec_id")
       .select(col("vec_id"), col("ccid"), col("m"), col("cid"))
@@ -2928,17 +2790,11 @@ object SimilarityOps {
       .select(
         col("qid"), col("ccid"), col("prn"),
         expr("zip_with(qiv, ccv, (a, b) -> a - b + 16777216L)").as("qrv"))
-    val qsubs = probes
-      .select(
-        col("qid"), col("ccid"), col("prn"),
-        explode(expr("transform(sequence(0, 7), " +
-          "m -> named_struct('m', m, 'qsv', slice(qrv, m * 8 + 1, 8)))")).as("x"))
-      .select(col("qid"), col("ccid"), col("prn"), col("x.m").as("m"), col("x.qsv").as("qsv"))
-    val pdt = qsubs
+    val pdt = subspaces(probes, "qrv", "qid", "ccid", "prn")
       .join(broadcast(cb), Seq("m"))
       .select(
         col("qid"), col("ccid"), col("prn"), col("m"), col("cid"),
-        graft.functions.VectorOps.l2sqLong(col("qsv"), col("cv")).as("pd"))
+        graft.functions.VectorOps.l2sqLong(col("sv"), col("cv")).as("pd"))
     codes
       .join(broadcast(pdt), Seq("ccid", "m", "cid"))
       .filter(col("qid") =!= col("vec_id"))
@@ -3290,17 +3146,6 @@ object SimilarityOps {
     root.toString
   }
 
-  /** DuckDB replay of [[ivfadcTrain]] + the probe path at (k, rounds) —
-    * the chain ends at `wadc` (qid, vec_id, ad), with `t` (integer
-    * vectors) and `wq` (the query batch) still in scope for recall
-    * consumers. ONE definition site for q204 (16, 1), q206 (16, 1 —
-    * the artifact gate replays train+probe inline, proving the
-    * write -> read -> unpack round-trip loses nothing) and q208
-    * (256, 2). MATERIALIZED on the multiply-referenced CTEs (wca,
-    * wsub, per-round codebooks) — the q196 lesson: default inlining
-    * re-expands iterative chains exponentially. A def — `entries`
-    * oracle strings interpolate eagerly.
-    */
   /** `steps` Lloyd-round CTE triples (assign/means/codebook) over
     * subvector rows `sub`, seeded from `seed`, CTE names prefixed
     * `aP/mP/cP` — THE one DuckDB spelling of the refinement round
@@ -3312,12 +3157,7 @@ object SimilarityOps {
       steps: Int, sub: String, seed: String, aP: String, mP: String, cP: String): String =
     (1 to steps).map { r =>
       val prev = if (r == 1) seed else s"$cP${r - 1}"
-      s"""$aP$r AS (SELECT vec_id, m, cid,
-                 row_number() OVER (PARTITION BY vec_id, m ORDER BY dist, cid) AS rk
-               FROM (SELECT s.vec_id, s.m, c.cid,
-                   list_sum(list_transform(generate_series(1, len(s.sv)),
-                     j -> (s.sv[j] - c.cv[j]) * (s.sv[j] - c.cv[j]))) AS dist
-                 FROM $sub s JOIN $prev c ON s.m = c.m)),
+      s"""${lloydFinalAssignSql(s"$aP$r", sub, prev)},
              $mP$r AS (SELECT a.m, a.cid, u.pos, CAST(sum(u.v) // count(*) AS BIGINT) AS mn
                FROM $aP$r a JOIN $sub s ON a.vec_id = s.vec_id AND a.m = s.m,
                  LATERAL (SELECT unnest(s.sv) AS v,
@@ -3329,70 +3169,75 @@ object SimilarityOps {
                  ON $prev.m = x.m AND $prev.cid = x.cid)"""
     }.mkString(cteSep)
 
-  /** The final assignment CTE against the refined codebook `cb` —
-    * rk=1 rows are (vec_id, m, cid, dist); [[lloydAssign]]'s mirror.
+  /** The assignment CTE `name` of subvector rows `sub` (vec_id, m, sv)
+    * against codebook `cb` (m, cid, cv): its rk=1 rows are (vec_id, m,
+    * cid, dist), ties to the lower cid — [[lloydAssign]]'s mirror, and
+    * the assign step of every [[lloydRoundCtesSql]] round.
     */
   private def lloydFinalAssignSql(name: String, sub: String, cb: String): String =
     s"""$name AS (SELECT vec_id, m, cid, dist,
                  row_number() OVER (PARTITION BY vec_id, m ORDER BY dist, cid) AS rk
                FROM (SELECT s.vec_id, s.m, c.cid,
-                   list_sum(list_transform(generate_series(1, len(s.sv)),
-                     j -> (s.sv[j] - c.cv[j]) * (s.sv[j] - c.cv[j]))) AS dist
+                   ${l2sq("s.sv", "c.cv")} AS dist
                  FROM $sub s JOIN $cb c ON s.m = c.m))"""
 
-  /** `trainWhere` (optional, a predicate on vec_id) restricts the
-    * TRAINING population — coarse cells, PQ seeds, and every Lloyd
-    * round aggregate over it — while the frozen-codebook encode (wfa),
-    * the coarse assignment (wca), and the probe chain still cover ALL
-    * vectors: q210's incremental contract (day-0 trains, arrivals only
-    * encode). Empty = train on everything (q204/q206/q208).
-    */
   /** The shared PREFIX of every coarse-quantizer oracle: integer
-    * vectors `t`, the trained coarse cells `wcc` (raw vec_ids 0..15 at
-    * coarseRounds = 0, else the cells Lloyd-refined over the full
-    * vectors as ONE m = 0 subspace via the shared round fragment — the
-    * [[coarseCells]] mirror, so the two levels cannot fork), the
-    * corpus-wide coarse assignment `wca`, the query batch `wq`, and
-    * each query's 2 probed cells `wpr`. The training population is the
-    * coarse level's too (gsub carries trainWhere — q210's day-0
-    * contract). One definition site for [[ivfadcSql]] (the full ADC
-    * chain) and q211 (the probe-ceiling ledger).
+    * vectors `t`, their m = 0 view `gsub`, the coarse cells `wcc`
+    * Lloyd-refined `coarseRounds` (>= 1) deep over the full vectors as
+    * ONE subspace through the shared round fragment — the
+    * [[coarseCells]] mirror, so the two levels cannot fork — the
+    * corpus-wide coarse assignment `wca` (through
+    * [[lloydFinalAssignSql]], ties to the lower ccid), the query batch
+    * `wq`, and each query's `nprobe` probed cells `wpr`. `trainWhere`
+    * (optional, a predicate on vec_id) restricts the TRAINING
+    * population — coarse cells, PQ seeds, and every Lloyd round
+    * aggregate over it (`gsubt`) — while the frozen-codebook encode
+    * (wfa), the coarse assignment (wca), and the probe chain still
+    * cover ALL vectors: q210's incremental contract (day-0 trains,
+    * arrivals only encode). Empty = train on everything
+    * (q204/q206/q208). One definition site for [[ivfadcSql]] (the full
+    * ADC chain), q211 (the probe-ceiling ledger), q239 and q240.
     */
   private def ivfCoarseSql(
       trainWhere: String, coarseRounds: Int, nprobe: Int = 2,
       p: String = "", lead: Boolean = true, tSrc: String = "embeddings"): String = {
+    require(coarseRounds >= 1, s"coarseRounds $coarseRounds < 1")
     val ccWhere =
       if (trainWhere.isEmpty) "vec_id < 16" else s"vec_id < 16 AND ($trainWhere)"
-    val csubWhere = if (trainWhere.isEmpty) "" else s" WHERE $trainWhere"
-    val coarseCtes =
-      if (coarseRounds <= 0)
-        s"${p}wcc AS (SELECT vec_id AS ccid, iv AS ccv FROM ${p}t WHERE $ccWhere)"
-      else
-        s"""${p}gsub AS MATERIALIZED (SELECT vec_id, 0 AS m, iv AS sv FROM ${p}t$csubWhere),
-             ${p}gini AS (SELECT 0 AS m, vec_id AS cid, iv AS cv FROM ${p}t WHERE $ccWhere),
-             ${lloydRoundCtesSql(
-            coarseRounds, s"${p}gsub", s"${p}gini", s"${p}ga", s"${p}gm", s"${p}gc")},
-             ${p}wcc AS MATERIALIZED (SELECT cid AS ccid, cv AS ccv FROM ${p}gc$coarseRounds)"""
+    val trainSub = if (trainWhere.isEmpty) s"${p}gsub" else s"${p}gsubt"
+    val subtCte =
+      if (trainWhere.isEmpty) ""
+      else s"${p}gsubt AS MATERIALIZED (SELECT * FROM ${p}gsub WHERE $trainWhere),\n             "
+    val cells = s"${p}gc$coarseRounds"
     s"""${if (lead) "WITH " else ""}${p}t AS (
                SELECT vec_id, $intVec AS iv
                FROM $tSrc),
-             $coarseCtes,
-             ${p}wca AS MATERIALIZED (SELECT vec_id, ccid FROM (
-                 SELECT t.vec_id, c.ccid,
-                   row_number() OVER (PARTITION BY t.vec_id ORDER BY
-                     list_sum(list_transform(generate_series(1, len(t.iv)),
-                       j -> (t.iv[j] - c.ccv[j]) * (t.iv[j] - c.ccv[j]))), c.ccid) AS rk
-                 FROM ${p}t t CROSS JOIN ${p}wcc c) WHERE rk = 1),
+             ${p}gsub AS MATERIALIZED (SELECT vec_id, 0 AS m, iv AS sv FROM ${p}t),
+             $subtCte${p}gini AS (SELECT 0 AS m, vec_id AS cid, iv AS cv FROM ${p}t WHERE $ccWhere),
+             ${lloydRoundCtesSql(coarseRounds, trainSub, s"${p}gini", s"${p}ga", s"${p}gm", s"${p}gc")},
+             ${p}wcc AS MATERIALIZED (SELECT cid AS ccid, cv AS ccv FROM $cells),
+             ${lloydFinalAssignSql(s"${p}gfa", s"${p}gsub", cells)},
+             ${p}wca AS MATERIALIZED (SELECT vec_id, cid AS ccid FROM ${p}gfa WHERE rk = 1),
              ${p}wq AS (SELECT vec_id AS qid, iv AS qiv FROM ${p}t WHERE vec_id < 20),
              ${p}wpr AS (SELECT qid, ccid, qiv, prn FROM (
                  SELECT q.qid, c.ccid, q.qiv,
                    row_number() OVER (PARTITION BY q.qid ORDER BY
-                     list_sum(list_transform(generate_series(1, len(q.qiv)),
-                       j -> (q.qiv[j] - c.ccv[j]) * (q.qiv[j] - c.ccv[j]))), c.ccid) AS prn
+                     ${l2sq("q.qiv", "c.ccv")}, c.ccid) AS prn
                  FROM ${p}wq q CROSS JOIN ${p}wcc c) WHERE prn <= $nprobe)"""
   }
 
-  /** `p` prefixes every CTE name so TWO complete chains can coexist
+  /** DuckDB replay of [[ivfadcTrain]] + the probe path at (k, rounds) —
+    * the chain ends at `wadc` (qid, vec_id, ad), with `t` (integer
+    * vectors) and `wq` (the query batch) still in scope for recall
+    * consumers. ONE definition site for q204 (16, 1), q206 (16, 1 —
+    * the artifact gate replays train+probe inline, proving the
+    * write -> read -> unpack round-trip loses nothing) and q208
+    * (256, 2). MATERIALIZED on the multiply-referenced CTEs (wca,
+    * wsub, per-round codebooks) — the q196 lesson: default inlining
+    * re-expands iterative chains exponentially. A def — `entries`
+    * oracle strings interpolate eagerly.
+    *
+    * `p` prefixes every CTE name so TWO complete chains can coexist
     * in ONE oracle — the cross-generation gates need a BLUE and a
     * GREEN quantizer chain side by side (q256 time-travels across the
     * q253 swap; q257 retrains mid-hybrid), and the upsert gate (q258)
@@ -3595,19 +3440,26 @@ object SimilarityOps {
     s"""${ivfadcSql(16, 1, trainWhere = "vec_id % 5 <> 0")}
              ${positionedTop3("ad", "wadc", "ad")}"""
 
-  /** DuckDB replay of [[pqCodebookDeep]] + [[pqAssign]] at (k, rounds)
-    * — ends at `pfa` whose rk=1 rows are the final (vec_id, m, cid,
-    * dist) assignment. q207's oracle; structurally the depth
-    * generalization of [[pqSql]] (kept verbatim for q202/q203 — their
-    * gated hashes must not move). A def — eager interpolation rule.
+  /** The PQ oracles' prefix: integer vectors `t` and their M = 8
+    * subvector rows `psub` (vec_id, m, sv) — [[pqSubs]]' mirror. Shared
+    * by [[pqDeepSql]] and q145. A def — eager interpolation rule.
     */
-  private def pqDeepSql(k: Int, rounds: Int): String =
+  private def pqSubsSql: String =
     s"""WITH t AS (
                SELECT vec_id, $intVec AS iv
                FROM embeddings),
              psub AS MATERIALIZED (
                SELECT vec_id, mm.m, list_slice(iv, mm.m * 8 + 1, mm.m * 8 + 8) AS sv
-               FROM t, (SELECT unnest(generate_series(0, 7)) AS m) mm),
+               FROM t, (SELECT unnest(generate_series(0, 7)) AS m) mm)"""
+
+  /** DuckDB replay of [[pqCodebookDeep]] + [[pqAssign]] at (k, rounds)
+    * — ends at `pfa` whose rk=1 rows are the final (vec_id, m, cid,
+    * dist) assignment, with `pb{rounds}` the refined codebook. The
+    * oracle of q202/q203 (16, 1) and q207 (256, 2). A def — eager
+    * interpolation rule.
+    */
+  private def pqDeepSql(k: Int, rounds: Int): String =
+    s"""$pqSubsSql,
              pb0 AS (SELECT m, vec_id AS cid, sv AS cv FROM psub WHERE vec_id < $k),
              ${lloydRoundCtesSql(rounds, "psub", "pb0", "pa", "pm", "pb")},
              ${lloydFinalAssignSql("pfa", "psub", s"pb$rounds")}"""

@@ -140,9 +140,7 @@ object TextOps {
               .as("diversity")
           )
           .orderBy(col("doc_id")),
-      Some(s"""WITH t AS (
-               SELECT doc_id, ${Tokenize.toksSql} AS toks
-               FROM documents)
+      Some(s"""WITH $toksCte
              SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
                round(CAST(len(list_filter(toks, x -> x IN ($stopEn))) AS DOUBLE) / len(toks), 6) AS stop_ratio,
                round(CAST(list_sum(list_transform(toks, x -> length(x))) AS DOUBLE) / len(toks), 6) AS avg_tok_len,
@@ -171,9 +169,7 @@ object TextOps {
               .as("pred_lang")
           )
           .orderBy(col("doc_id")),
-      Some(s"""WITH t AS (
-               SELECT doc_id, ${Tokenize.toksSql} AS toks
-               FROM documents),
+      Some(s"""WITH $toksCte,
              c AS (
                SELECT doc_id,
                  len(list_filter(toks, x -> x IN ('the','and','of','to','in'))) AS c_en,
@@ -329,9 +325,7 @@ object TextOps {
             ).as("top_bigram_frac")
           )
           .orderBy(col("doc_id")),
-      Some(s"""WITH t AS (
-               SELECT doc_id, ${Tokenize.toksSql} AS toks
-               FROM documents),
+      Some(s"""WITH $toksCte,
              b AS (
                SELECT doc_id, toks,
                  list_transform(generate_series(1, len(toks) - 1),
@@ -842,9 +836,7 @@ object TextOps {
           )
           .orderBy(col("doc_id"))
       },
-      Some(s"""WITH t AS (
-               SELECT doc_id, ${Tokenize.toksSql} AS toks
-               FROM documents),
+      Some(s"""WITH $toksCte,
              db AS (
                SELECT doc_id, p[1] AS a, p[2] AS b, count(*) AS c FROM (
                  SELECT doc_id, unnest(list_transform(generate_series(1, len(toks) - 1),
@@ -892,9 +884,7 @@ object TextOps {
           .withColumn("oov_ppm", expr("(n_oov * 1000000) div n_tokens"))
           .orderBy(col("doc_id"))
       },
-      Some(s"""WITH t AS (
-               SELECT doc_id, ${Tokenize.toksSql} AS toks
-               FROM documents),
+      Some(s"""WITH $toksCte,
              tk AS (SELECT doc_id, unnest(toks) AS tok FROM t),
              v AS (SELECT tok FROM tk GROUP BY tok
                    ORDER BY count(*) DESC, tok LIMIT 1000)
@@ -953,7 +943,7 @@ object TextOps {
           )
           .orderBy(col("doc_id"))
       },
-      Some(s"""WITH t AS (SELECT doc_id, ${Tokenize.toksSql} AS toks FROM documents),
+      Some(s"""WITH $toksCte,
              g AS (SELECT doc_id,
                  unnest(list_distinct(list_transform(generate_series(1, len(toks) - 7),
                    i -> md5(array_to_string(list_slice(toks, i, i + 7), ' '))))) AS gram
@@ -1452,8 +1442,7 @@ object TextOps {
     * drift. (A def: `entries` vals interpolate eagerly.)
     */
   private[graft] def qualityScoreOracle: String =
-    s"""WITH t AS (
-               SELECT doc_id, ${Tokenize.toksSql} AS toks FROM documents),
+    s"""WITH $toksCte,
              f AS (
                SELECT doc_id,
                  CAST(len(toks) AS BIGINT) AS n_words,

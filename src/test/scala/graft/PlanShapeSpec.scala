@@ -211,7 +211,11 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("q145: the PQ codebook broadcasts; vectors never shuffle for assignment") {
     val p = plan("q145_pq_codes")
-    assert(p.contains("BroadcastNestedLoopJoin"), p.take(3000))
+    // the 128-row book joins each subvector row on its subspace m,
+    // broadcast (lloydAssign); nothing sort-merges or enumerates pairs
+    assert(p.contains("BroadcastHashJoin"), p.take(3000))
+    assert(!p.contains("SortMergeJoin"), p.take(3000))
+    assert(!p.contains("CartesianProduct"), p.take(3000))
   }
 
   test("q131: the per-source rate table broadcasts; the corpus side never shuffles for it") {

@@ -1,6 +1,8 @@
 package graft.mr
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
+import java.util.Locale
 import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,16 +20,42 @@ class NativeTextJobsSpec extends AnyFunSuite {
     assert(NativeTextJobs.tokens("a[b]c\t\t d").toSeq == Seq("a", "b", "c", "", "", "d"))
     assert(NativeTextJobs.tokens("").toSeq == Seq(""))
     assert(NativeTextJobs.tokens("[x] ").toSeq == Seq("", "x", "", ""))
-    val input = s"$fixtures/tests/testdata/input"
-    val lines = TextFolds.corpusLines(input)
-    assert(lines.exists(l => l.contains('[') && l.contains(']')), "the fixture corpus should hold brackets")
-    val got = NativeTextJobs
-      .wordCount(spark, input)
-      .collect()
-      .map(r => s"${r.getString(0)}\t${r.getLong(1)}")
-      .sorted(MapReduceJob.utf8Ordering)
-      .toSeq
-    assert(got == TextFolds.wordCount(lines))
+    // the fixture corpus plus a file of non-ASCII capitals, which
+    // `tr '[:upper:]' '[:lower:]'` leaves as they are
+    val input = Files.createTempDirectory("native-wc-in-")
+    try {
+      new java.io.File(s"$fixtures/tests/testdata/input").listFiles.foreach { f =>
+        Files.copy(f.toPath, input.resolve(f.getName))
+      }
+      Files.write(input.resolve("capitals"), "ÉCOLE İ Straße\n".getBytes(UTF_8))
+      val lines = TextFolds.corpusLines(input.toString)
+      assert(lines.exists(l => l.contains('[') && l.contains(']')), "the fixture corpus should hold brackets")
+      val got = NativeTextJobs
+        .wordCount(spark, input.toString)
+        .collect()
+        .map(r => s"${r.getString(0)}\t${r.getLong(1)}")
+        .sorted(MapReduceJob.utf8Ordering)
+        .toSeq
+      assert(got.contains("École\t1") && got.contains("İ\t1"), got.filterNot(_.forall(_ < 128)))
+      assert(got == TextFolds.wordCount(lines))
+    } finally graft.Engine.deleteRecursively(input.toFile)
+  }
+
+  test("native grep matches case-insensitively whatever the default locale, as grep_map.py") {
+    val input = Files.createTempDirectory("native-grep-in-")
+    val saved = Locale.getDefault
+    try {
+      Files.write(input.resolve("part0"),
+        "INVOICE 12\nnothing here\n\nInvoice x\ninvoice 7\n".getBytes(UTF_8))
+      spark.range(1).count(): Unit // the session starts under the usual locale
+      // Turkish lowercases 'I' to dotless 'ı': "INVOICE" would become "ınvoıce"
+      Locale.setDefault(Locale.forLanguageTag("tr"))
+      val got = NativeTextJobs.grep(spark, input.toString, "invoice").collect().map(_.getString(0)).toSeq
+      assert(got == Seq("INVOICE 12", "Invoice x", "invoice 7"))
+    } finally {
+      Locale.setDefault(saved)
+      graft.Engine.deleteRecursively(input.toFile)
+    }
   }
 
   test("native word count reproduces word_count_correct.txt") {

@@ -707,36 +707,67 @@ class QueriesSpec extends AnyFunSuite {
         r.getAs[Long]("vec_id") -> iv
       }
       .sortBy(_._1)
-    def d2(a: Array[Long], b: Array[Long]): Long = {
-      var s = 0L; var i = 0
-      while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
-      s
-    }
-    def assign(cents: Array[Array[Long]]): Map[Long, (Int, Long)] =
-      vecs.map { case (id, iv) =>
-        val best = cents.zipWithIndex.map { case (c, i) => (d2(iv, c), i) }.min
-        id -> (best._2, best._1)
-      }.toMap
-    var cents = vecs.take(16).map(_._2)
-    val a1 = assign(cents)
-    cents = (0 until 16).map { c =>
-      val members = vecs.filter { case (id, _) => a1(id)._1 == c }
-      if (members.isEmpty) cents(c)
-      else {
-        val dims = cents(0).length
-        Array.tabulate(dims)(j => members.map(_._2(j)).sum / members.length)
-      }
-    }.toArray
-    val a2 = assign(cents)
+    val seed = vecs.take(16).zipWithIndex.map { case ((_, iv), c) => c.toLong -> iv }.toMap
+    val book = LloydFolds.refine(vecs.map(_._2), seed, 1)
+    val a2 = vecs.map { case (id, iv) => id -> LloydFolds.nearest(iv, book) }.toMap
     assert(rows.length == vecs.length)
     rows.foreach { r =>
       val id = r.getAs[Long]("vec_id")
       val (ec, ed) = a2(id)
-      assert(r.getAs[Long]("cluster") == ec.toLong, s"vec $id cluster")
+      assert(r.getAs[Long]("cluster") == ec, s"vec $id cluster")
       assert(r.getAs[Long]("dist_sq") == ed, s"vec $id dist")
     }
     // the clustering is load-bearing: more than one cluster in use
     assert(rows.map(_.getAs[Long]("cluster")).distinct.length > 1)
+  }
+
+  test("lloydRefine + lloydAssign at M = 1 and M = 8 equal LloydFolds: lower-cid ties, emptied cells keep their value") {
+    import spark.implicits._
+    // One subspace's design on a line: seeds c0..c3 at 0, 10, 31, 50.
+    // Against the seeds x = 5 ties c0 and c1; c2 wins 21 and 39 and
+    // moves to 30; in round 2 c1 (now 16) takes 21 and c3 (now 44)
+    // takes 39, so c2 has no member and must stay at 30, not its seed.
+    val xs = Seq(0L, 5L, 14L, 18L, 21L, 39L, 42L, 46L)
+    val seeds = Seq(0L, 10L, 31L, 50L)
+    // subspace m scales the line by m + 1 (even m) or mirrors it (odd
+    // m), beside a constant coordinate m
+    def at(m: Int, x: Long): Seq[Long] = Seq(if (m % 2 == 0) x * (m + 1) else 1000L - x, m.toLong)
+    def seqs(b: LloydFolds.Book): Map[Long, Seq[Long]] = b.map { case (c, v) => c -> v.toSeq }
+    for (nm <- Seq(1, 8)) {
+      val sub = (for (m <- 0 until nm; (x, id) <- xs.zipWithIndex) yield (id.toLong, m, at(m, x)))
+        .toDF("vec_id", "m", "sv")
+      val seed = (for (m <- 0 until nm; (x, c) <- seeds.zipWithIndex) yield (m, c.toLong, at(m, x)))
+        .toDF("m", "cid", "cv")
+      // 2 rounds: the intermediate codebook takes the checkpoint path
+      val cb = SimilarityOps.lloydRefine(sub, seed, 2)
+      val gotBook = cb.collect().groupMap(_.getInt(0))(r => r.getLong(1) -> r.getSeq[Long](2).toSeq)
+      def assigned(book: org.apache.spark.sql.DataFrame): Map[(Long, Int), (Long, Long)] =
+        SimilarityOps.lloydAssign(sub, book).collect()
+          .map(r => (r.getLong(0), r.getInt(1)) -> (r.getLong(2), r.getLong(3))).toMap
+      val atSeed = assigned(seed)
+      val atEnd = assigned(cb)
+      assert(atEnd.size == xs.length * nm, s"M = $nm")
+      for (m <- 0 until nm) {
+        val vs = xs.map(x => at(m, x).toArray)
+        val seedBook = seeds.zipWithIndex.map { case (x, c) => c.toLong -> at(m, x).toArray }.toMap
+        val round1 = LloydFolds.refine(vs, seedBook, 1)
+        val want = LloydFolds.refine(vs, seedBook, 2)
+        assert(gotBook(m).toMap == seqs(want), s"M = $nm, m = $m codebook")
+        vs.indices.foreach { id =>
+          assert(atSeed((id.toLong, m)) == LloydFolds.nearest(vs(id), seedBook), s"M = $nm, m = $m, vec $id at seed")
+          assert(atEnd((id.toLong, m)) == LloydFolds.nearest(vs(id), want), s"M = $nm, m = $m, vec $id")
+        }
+        // the frame does what it is built for: vec 1 ties c0 and c1 at
+        // the seed and goes to c0; c2 has members in round 1, none in
+        // round 2, and keeps its round-1 centroid, which is not its seed
+        assert(LloydFolds.d2(vs(1), seedBook(0L)) == LloydFolds.d2(vs(1), seedBook(1L)))
+        assert(atSeed((1L, m))._1 == 0L)
+        assert(vs.exists(v => LloydFolds.nearest(v, seedBook)._1 == 2L))
+        assert(vs.forall(v => LloydFolds.nearest(v, round1)._1 != 2L))
+        assert(gotBook(m).toMap.apply(2L) == round1(2L).toSeq)
+        assert(round1(2L).toSeq != seedBook(2L).toSeq)
+      }
+    }
   }
 
   test("q148 SemDeDup: drops are real near-dups; no surviving same-cluster pair clears the bar") {
