@@ -146,11 +146,11 @@ def main(sf_dir: str, out_dir: str) -> int:
         indent=1,
         sort_keys=True,
     )
-    # Machine-readable mirror of the driver gate's per-query shape, so
-    # RegistryDoc can label queries added SINCE the last driver gate
-    # from local evidence instead of leaving them "pending". Written
-    # only for a FULL run (a SPARK_GRAFT_ONLY-filtered Verify leaves
-    # most queries unwritten, which must not read as evidence).
+    # Machine-readable mirror of the driver gate's per-query shape: the
+    # committed local evidence of the last full gate, diffable against
+    # the next one. Written only for a FULL run (a SPARK_GRAFT_ONLY-
+    # filtered Verify leaves most queries unwritten, which must not read
+    # as evidence).
     if only is None and n_missing == 0 and all(n in results for n in oracle):
         json.dump(
             {"sf_dir": sf_dir, "queries": {n: {"hash_match": results[n]["hash_match"]} for n in sorted(oracle)}},

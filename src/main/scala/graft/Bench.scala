@@ -1,17 +1,25 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
 
-/** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line {"metric":...,"queries":{...}}.
+/** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR
+  * through [[QueryRunner]] and ends stdout with ONE compact JSON line
+  * {"metric":"total",...}.
   *
-  * Methodology: a warmup pass first touches every table (parquet footers,
-  * filesystem cache) and runs every query once untimed (plan analysis +
-  * whole-stage-codegen compilation); then the WHOLE query list runs
-  * SPARK_GRAFT_PASSES (default 3) timed passes and each query reports its
-  * minimum across passes. Interleaving separates a query's samples by the
-  * full list duration so a transient external-load window on a shared box
-  * cannot capture all of a query's samples at once.
+  * Methodology: an untimed warm-up (`QueryRunner.warmUp`) touches every
+  * table and runs every query once (plan analysis + whole-stage-codegen
+  * compilation); then the WHOLE query list runs SPARK_GRAFT_PASSES
+  * (default 2) timed passes and each query reports its minimum across
+  * passes. Interleaving separates a query's samples by the full list
+  * duration so a transient external-load window on a shared box cannot
+  * capture all of a query's samples at once.
+  *
+  * Every timed run appends one [[QueryRecord]] (wall, jobs, job seconds,
+  * driver gap, shuffle/spill/input bytes, error, WARN/ERROR lines by
+  * logger) to `bench_records.jsonl`, next to `bench_queries.json`.
+  * `SPARK_GRAFT_PASSES=1` with a `SPARK_GRAFT_ONLY` list is the per-query
+  * job profile.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -21,56 +29,27 @@ object Bench {
     // environment the library ships, and q122 needs the SQL-registered
     // functions
     val spark = Engine.session("bench")
-    // Quieter logs FOR THE BENCH ONLY (round-18 measurement-robustness
-    // fix, motivated by BENCH_r17's rc=124: the driver keeps only the
-    // last ~2000 chars of combined output, and at WARN level the
-    // "locally checkpointed RDD" flood from the streaming family
-    // buries everything; at ERROR the per-pass summary lines below
-    // survive a mid-run kill as the parseable tail).
-    spark.sparkContext.setLogLevel("ERROR")
-
-    // warmup: touch every table + one shuffle to JIT common paths
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings")
-      .foreach(t => Engine.table(spark, sfDir, t).count())
-
-    // Optional focus list for local iteration: SPARK_GRAFT_ONLY=q52,q74
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = SparkEntry.queries.toSeq
-      .filter { case (n, _) => only.forall(f => f.exists(n.startsWith)) }
-
-    val ordered = selected.sortBy(_._1)
-
-    // One untimed pass pays plan analysis + whole-stage-codegen compilation
-    // (a fixed ~1-3 s/query cost that is irrelevant at scale).
-    ordered.foreach { case (_, fn) =>
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-      Engine.releaseScratch(spark) // warmup blocks must not skew the timed runs
-    }
+    // The console shows ERROR only, FOR THE BENCH ONLY: the driver keeps
+    // only the last ~2000 chars of combined output, and at WARN level
+    // the "locally checkpointed RDD" flood from the streaming family
+    // buries the summary lines (BENCH_r17's rc=124). The runner's log
+    // counter still sees every WARN.
+    val runner = new QueryRunner(spark, "bench_records.jsonl", quietConsole = true)
+    val ordered = QueryRunner.selected().sortBy(_._1)
+    runner.warmUp(sfDir, ordered)
 
     // PASS-INTERLEAVED timing: run the WHOLE list N times and take each
     // query's minimum ACROSS passes. Back-to-back repeats of one query sit
     // inside the same external-load window on a shared box (BENCH_r03
-    // showed q99 at 22.3 s in the driver's run vs 2.5 s isolated — both
-    // adjacent runs were inside the loaded window); interleaving separates
-    // a query's samples by the full list duration (~1 min at sf0.1), so
-    // min-across-passes converges on plan cost, not box weather. Cleanup
-    // stays outside the timers — checkpoint blocks accumulating across the
-    // run was the r2 contamination (4-12x on late queries).
-    // Default 4 passes (r7 ran 3): the min-across-passes converges and the
-    // >2x-spread "noisy" list shrinks with each extra interleaved sample —
-    // r7 flagged 17 sub-second queries on box weather alone. One more pass
-    // costs ~30 s at sf0.1 and buys each query a 4th sample separated by
-    // the full list duration.
-    val passes = sys.env.get("SPARK_GRAFT_PASSES").flatMap(_.toIntOption).getOrElse(4)
-    // AMBIENT-LOAD TRACE: two consecutive driver rounds flagged ~25
-    // sub-second queries as noisy (spread > 2x) while the same-session
-    // canonical profile flagged ~2 — the ambient-load hypothesis needs
-    // MEASUREMENT, not assertion (round-10 verdict #7). One /proc/loadavg
-    // 1-minute sample per pass boundary rides the summary line: a box
-    // whose load swings well above the worker count across passes
-    // explains the spread; a flat low trace would falsify it.
+    // showed q99 at 22.3 s in the driver's run vs 2.5 s isolated);
+    // interleaving separates a query's samples by the full list duration.
+    // The runner releases scratch after the wall clock stops (checkpoint
+    // blocks accumulating across the run was the r2 contamination).
+    // Default 2 passes: a full pass is ~900 s at sf0.1, and a minimum
+    // over fewer passes can only overstate a query's cost.
+    val passes = sys.env.get("SPARK_GRAFT_PASSES").flatMap(_.toIntOption).getOrElse(2)
+    // one /proc/loadavg 1-minute sample per pass boundary rides the
+    // summary line: load well above the worker count explains a spread
     def loadAvg(): String =
       try {
         val src = scala.io.Source.fromFile("/proc/loadavg")
@@ -78,110 +57,63 @@ object Bench {
         finally src.close()
       } catch { case _: Throwable => "-1" }
     val loads = scala.collection.mutable.ArrayBuffer(loadAvg())
-    val samples = scala.collection.mutable.Map
-      .empty[String, Vector[Double]].withDefaultValue(Vector.empty)
-    (0 until passes).foreach { p =>
-      ordered.foreach { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        Engine.releaseScratch(spark)
-        if (ok) samples(name) = samples(name) :+ dt
-      }
-      loads += loadAvg()
-      // PASS-BOUNDARY PARTIAL SUMMARY (round-18 measurement-robustness
-      // fix; BENCH_r17 was killed at the driver's timeout with NOTHING
-      // parseable on the tail — rc=124, parsed:null, an entire round's
-      // bench lost). After every pass the best-so-far totals ride one
-      // compact line in the FINAL summary's exact schema (plus
-      // "passes_done"), so a mid-run kill leaves the last completed
-      // pass's minima as a valid, conservative total (mins over fewer
-      // passes are >= the full-run mins — never an inflated result).
-      // The per-query map marker is BENCH-PARTIAL, never the canonical
-      // BENCH-QUERIES (which must appear exactly once, at the end).
-      if (p < passes - 1) {
-        val partial = ordered.map { case (k, _) =>
-          val ts = samples(k)
-          "\"" + k.takeWhile(_ != '_') + "\":" +
-            (if (ts.isEmpty) "-1"
-             else "%.3f".formatLocal(java.util.Locale.ROOT, ts.min))
-        }.mkString("{", ",", "}")
-        println(s"""BENCH-PARTIAL {"metric":"per_query","unit":"sec","queries":$partial,"sf":"$sfDir","passes_done":${p + 1}}""")
-        val tot = samples.values.collect { case ts if ts.nonEmpty => ts.min }.sum
-        println(
-          s"""{"metric":"total","value":${"%.3f".formatLocal(java.util.Locale.ROOT, tot)},"unit":"sec","n":${ordered.size},"passes_done":${p + 1},"sf":"$sfDir"}""")
-      }
-    }
-    // Per query: (min seconds across passes, max/min spread, succeeded).
-    // A query that throws in every pass is -1, listed under "errors".
-    val results = ordered.map { case (name, _) =>
-      val ts = samples(name)
-      if (ts.isEmpty) (name, -1.0, 0.0, false)
-      else (name, ts.min, ts.max / ts.min, true)
-    }
-    // The driver captures only the LAST ~2000 chars of stdout. In r5 the
-    // single JSON line carried all 153 per-query entries (~2.3 KB), so the
-    // HEAD of the line — including "metric" and "value" — fell outside the
-    // retention window and the driver recorded parsed:null. Split the
-    // output: the bulky per-query map goes to its own EARLIER line (plus a
-    // file for humans), and the LAST stdout line is a compact summary
-    // (total/errors/noisy/n, plus the top-5 slowest as a "top5" stub
-    // map) that stays well under the window at any registry size.
+    // successful wall seconds per query run so far; a query that has run
+    // but never succeeded maps to an empty vector and is an error
+    val samples = scala.collection.mutable.LinkedHashMap.empty[String, Vector[Double]]
+
     def short(name: String): String = name.takeWhile(_ != '_')
     def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    results.foreach { case (k, v, spread, ok) =>
-      val s = if (ok) fmt(v) + " s  (spread x" + fmt(spread) + ")" else "ERROR"
-      println(s"BENCH ${k.padTo(32, ' ')} $s")
-    }
-    val qs = results.map { case (k, v, _, ok) =>
-      "\"" + short(k) + "\":" + (if (ok) fmt(v) else "-1")
-    }.mkString("{", ",", "}")
-    println(s"""BENCH-QUERIES {"metric":"per_query","unit":"sec","queries":$qs,"sf":"$sfDir"}""")
-    try {
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("bench_queries.json"),
-        s"""{"metric":"per_query","unit":"sec","queries":$qs,"sf":"$sfDir"}\n"""
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      )
-    } catch { case _: Throwable => () } // best-effort; stdout line is canonical
-    // spread = max/min across interleaved passes; >2x means that query's
-    // samples all hit external load and its min is still suspect. Both
-    // lists are bounded so the summary line cannot outgrow the retention
-    // window again (errors/noisy beyond 8 entries collapse to "+N").
-    def bounded(xs: Seq[String]): String = {
+    def spread(ts: Vector[Double]): Double = ts.max / ts.min
+    // beyond 8 entries a list collapses to "+N", so the summary line
+    // cannot outgrow the driver's retention window at any registry size
+    def bounded(xs: Iterable[String]): String = {
       val shown = xs.take(8).map("\"" + _ + "\"")
       val extra = if (xs.size > 8) Seq("\"+" + (xs.size - 8) + "\"") else Nil
       (shown ++ extra).mkString("[", ",", "]")
     }
-    val noisy = bounded(results.collect { case (k, _, sp, true) if sp > 2.0 =>
-      short(k) + " x" + fmt(sp)
-    })
-    val errors = bounded(results.collect { case (k, _, _, false) => short(k) })
-    val top = results
-      .collect { case (k, v, _, true) => (k, v) }
-      .sortBy(-_._2)
-      .take(5)
-      .map { case (k, v) => "\"" + short(k) + "\":" + fmt(v) }
+    // The driver keeps only the LAST ~2000 chars of stdout (r5's single
+    // line with every query lost its head and parsed as null), so the
+    // per-query map rides an EARLIER line and a file, and this line is
+    // compact: the total over the `n` queries run so far (of `selected`),
+    // the top-5 slowest as "top5" (NOT "queries", so a consumer expecting
+    // the full map fails loudly; "queries_full" avoids the BENCH-QUERIES
+    // marker), spread = max/min across passes (> 2x: noisy), and the load
+    // samples. A partial total is conservative, never inflated.
+    def summary(passesDone: Int): String = {
+      val ok = samples.collect { case (k, ts) if ts.nonEmpty => k -> ts }
+      val top = ok.toSeq.map { case (k, ts) => (k, ts.min) }.sortBy(-_._2).take(5)
+        .map { case (k, v) => "\"" + short(k) + "\":" + fmt(v) }.mkString("{", ",", "}")
+      val noisy = bounded(ok.collect { case (k, ts) if spread(ts) > 2.0 => short(k) + " x" + fmt(spread(ts)) })
+      val errors = bounded(samples.collect { case (k, ts) if ts.isEmpty => short(k) })
+      val loadTrace = loads.map("\"" + _ + "\"").mkString("[", ",", "]")
+      s"""{"metric":"total","value":${fmt(ok.values.map(_.min).sum)},"unit":"sec","n":${samples.size},"selected":${ordered.size},"passes_done":$passesDone,"top5":$top,"queries_full":"bench_queries.json (full per-query map; also on the earlier BENCH QUERIES stdout line)","errors":$errors,"noisy":$noisy,"load":$loadTrace,"sf":"$sfDir"}"""
+    }
+
+    (1 to passes).foreach { p =>
+      ordered.zipWithIndex.foreach { case ((name, fn), i) =>
+        val r = runner.run(name, p)(fn(spark, sfDir).count(): Unit)
+        samples(name) = samples.getOrElse(name, Vector.empty) ++ (if (r.error.isEmpty) Seq(r.wallS) else Nil)
+        val passEnd = i == ordered.size - 1
+        if (passEnd) loads += loadAvg()
+        // after EVERY query, so a kill at any point leaves a parseable tail
+        println(summary(if (passEnd) p else p - 1))
+      }
+    }
+    runner.close()
+
+    val sampled = ordered.map { case (k, _) => k -> samples.getOrElse(k, Vector.empty) }
+    sampled.foreach { case (k, ts) =>
+      val s = if (ts.nonEmpty) fmt(ts.min) + " s  (spread x" + fmt(spread(ts)) + ")" else "ERROR"
+      println(s"BENCH ${k.padTo(32, ' ')} $s")
+    }
+    val qs = sampled.map { case (k, ts) => "\"" + short(k) + "\":" + (if (ts.nonEmpty) fmt(ts.min) else "-1") }
       .mkString("{", ",", "}")
-    val total = results.collect { case (_, v, _, true) => v }.sum
-    val n = results.size
-    // "top5" is deliberately the top-5 slowest ONLY (the full 170-entry
-    // map would blow the driver's ~2000-char stdout retention window).
-    // Named top5 — NOT "queries" — so a consumer expecting the full
-    // per-query map fails loudly on the missing key instead of silently
-    // reading a 5-entry stub; "queries_full" points at the complete map.
-    // queries_full deliberately does NOT contain the exact
-    // "BENCH-QUERIES" marker string — a consumer grepping for the full
-    // map without the ^ anchor must not match this summary line.
-    // load = /proc/loadavg 1-min samples at [start, after pass 1, ...,
-    // after pass N] — bounded at passes+1 entries (a handful), so it
-    // cannot outgrow the driver's stdout retention window.
-    val loadTrace = loads.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val line =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":$n,"top5":$top,"queries_full":"bench_queries.json (full per-query map; also on the earlier BENCH QUERIES stdout line)","errors":$errors,"noisy":$noisy,"load":$loadTrace,"sf":"$sfDir"}"""
-    println(line)
+    val perQuery = s"""{"metric":"per_query","unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+    println(s"BENCH-QUERIES $perQuery")
+    // best-effort; the stdout line is canonical
+    try Files.write(Paths.get("bench_queries.json"), (perQuery + "\n").getBytes(StandardCharsets.UTF_8)): Unit
+    catch { case _: Throwable => () }
+    println(summary(passes))
     spark.stop()
   }
 }

@@ -123,9 +123,7 @@ object Engine {
       // enough that genuinely data-carrying stages still fan out,
       // small enough that empty stages collapse to one task), in
       // production the guide's 64-256 MB band.
-      .config(
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       .config(
         "spark.sql.adaptive.advisoryPartitionSizeInBytes",
         sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "8m"))

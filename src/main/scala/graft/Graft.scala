@@ -5,8 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 /** The library façade — the one import a user of the reference needs to
   * switch engines. Everything here is a thin delegation to the module
   * that owns the implementation; the full per-operator query registry
-  * stays on [[SparkEntry]] (auto-documented in REGISTRY.md via
-  * `sbt "runMain RegistryDoc"`).
+  * stays on [[SparkEntry]].
   *
   * ```scala
   * val spark = Graft.session()
