@@ -133,11 +133,11 @@ object MapReduceJob {
     * intermediate RDD (the content of the reference's grouper-output) as
     * line runs — (line, n) stands for n adjacent copies of line, one run
     * per distinct line of a partition — and returns its result. Parity
-    * mode persists the map-stage RDD; it is released when this returns
-    * or throws (a failing mapper in the rank pass, a failing reducer or
-    * sink in `use`), so no job leaves it in the session.
-    * `combineBudget` is the map-side combine map's byte budget; jobs use
-    * [[LineRuns.CombineBudget]], tests shrink it to force early emits.
+    * mode persists the map stage's runs; they are released when this
+    * returns or throws (a failing mapper in the rank pass, a failing
+    * reducer or sink in `use`), so no job leaves them in the session.
+    * `combineBudget` is the map-side counter's byte budget; jobs use
+    * [[ByteRuns.CombineBudget]], tests shrink it to force early emits.
     */
   private[mr] def withGrouped[A](spark: SparkSession, spec: JobSpec, combineBudget: Long)(
       use: RDD[(String, Long)] => A): A = {
@@ -152,41 +152,44 @@ object MapReduceJob {
       .toSeq
     val tasks: Seq[Seq[String]] = roundRobin(files, spec.numMappers)
 
-    // --- map stage: one external process per input file (O1)
+    // --- map stage: one external process per input file (O1), its
+    // stdout split into lines as bytes and counted into (line, n) runs by
+    // one bounded counter per map task (Pipes.lineRuns over
+    // ByteRuns.combine, the Hadoop combiner).
     val mapperCmd = spec.mapperCmd
-    val mapped = sc
+    val runs = sc
       .parallelize(tasks, math.max(tasks.length, 1))
-      .flatMap(fileList => fileList.iterator.flatMap(f => Pipes.pipeFile(mapperCmd, f)))
+      .mapPartitions { fileLists =>
+        Pipes.lineRuns(fileLists.flatMap(_.iterator).map(Pipes.stdout(mapperCmd, _)), combineBudget)
+      }
 
     // --- group stage: shuffle on group key, external sort by full line
-    // (O2/O3/O5 collapse into Spark's shuffle). The shuffle carries line
-    // runs, not lines: each map task sums identical lines into (line, n)
-    // in a bounded hash map (LineRuns.combine, the Hadoop combiner), and
-    // the reducer sums runs again, so each reducer sorts only its
-    // distinct lines. Lossless because the sort key is the WHOLE line:
-    // the n copies of a line are always adjacent in a sorted partition,
-    // so expanding each run to n copies where the partition is written
-    // (Pipes.writeRuns: the reducer's stdin file, the reduceNN sink)
-    // gives back the same bytes.
+    // (O2/O3/O5 collapse into Spark's shuffle). The shuffle carries the
+    // map tasks' line runs, not lines, and the reducer sums runs again,
+    // so each reducer sorts only its distinct lines. Lossless because the
+    // sort key is the WHOLE line: the n copies of a line are always
+    // adjacent in a sorted partition, so expanding each run to n copies
+    // where the partition is written (Pipes.writeRuns: the reducer's
+    // stdin file, the reduceNN sink) gives back the same bytes.
     // The shuffle itself neither combines nor sorts on the map side
     // (setMapSideCombine(false)): up to 200 reducers Spark then writes
     // with BypassMergeSortShuffleWriter, straight to per-reducer files.
     // The reduce side merges runs in ExternalAppendOnlyMap and sorts them
     // in ExternalSorter; both spill.
     //
-    // Parity mode reads `mapped` twice (rank pass + shuffle): persist it
+    // Parity mode reads `runs` twice (rank pass + shuffle): persist them
     // so the mapper executables run exactly once — rerunning them would
     // both double the work and, for a non-deterministic mapper, emit
     // keys absent from the rank map. MEMORY_AND_DISK, not cache(): a
     // memory-only block evicted under pressure would be silently
     // recomputed, breaking exactly that invariant.
     if (spec.parityPartitioning)
-      mapped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      runs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val partitioner: Partitioner =
         if (spec.parityPartitioning) {
-          val ranks = mapped
-            .map(l => groupKey(l, spec.legacyKeyExtraction))
+          val ranks = runs
+            .map(r => groupKey(r._1, spec.legacyKeyExtraction))
             .distinct()
             .collect()
             .sorted(utf8Ordering)
@@ -195,12 +198,11 @@ object MapReduceJob {
           new KeyRankPartitioner(ranks, spec.numReducers, spec.legacyKeyExtraction)
         } else new GroupKeyPartitioner(spec.numReducers, spec.legacyKeyExtraction)
 
-      val runs = mapped.mapPartitions(lines => LineRuns.combine(lines, combineBudget))
       use(new ShuffledRDD[String, Long, Long](runs, partitioner)
         .setAggregator(new Aggregator[String, Long, Long](n => n, _ + _, _ + _))
         .setMapSideCombine(false)
         .setKeyOrdering(utf8Ordering))
-    } finally if (spec.parityPartitioning) mapped.unpersist(blocking = false): Unit
+    } finally if (spec.parityPartitioning) runs.unpersist(blocking = false): Unit
   }
 
   /** Write a run RDD's partitions as sequentially named files under
@@ -236,7 +238,7 @@ object MapReduceJob {
     * (exactly numReducers, named outputfileNN like
     * `mapreduce/manager/__main__.py:486-487`).
     */
-  def run(spark: SparkSession, spec: JobSpec): Seq[File] = run(spark, spec, LineRuns.CombineBudget)
+  def run(spark: SparkSession, spec: JobSpec): Seq[File] = run(spark, spec, ByteRuns.CombineBudget)
 
   private[mr] def run(spark: SparkSession, spec: JobSpec, combineBudget: Long): Seq[File] =
     withGrouped(spark, spec, combineBudget) { grouped =>
@@ -257,7 +259,7 @@ object MapReduceJob {
     * against the test_manager_08 goldens in MapReduceSpec).
     */
   def mapAndGroup(spark: SparkSession, spec: JobSpec, groupOutDir: String): Seq[File] =
-    mapAndGroup(spark, spec, groupOutDir, LineRuns.CombineBudget)
+    mapAndGroup(spark, spec, groupOutDir, ByteRuns.CombineBudget)
 
   private[mr] def mapAndGroup(
       spark: SparkSession,

@@ -2,9 +2,13 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.TaskContext
 import org.apache.spark.memory.TaskMemoryManager
-import org.apache.spark.sql.Column
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Bridge to Spark internals that are `private[sql]` or `private[spark]`;
   * extension libraries conventionally expose them from a package under
@@ -25,4 +29,13 @@ object Bridge {
     */
   def incPeakExecutionMemory(ctx: TaskContext, bytes: Long): Unit =
     ctx.taskMetrics().incPeakExecutionMemory(bytes)
+
+  /** A DataFrame's rows as Catalyst computes them (UnsafeRows, reused
+    * between calls to `next`).
+    */
+  def rows(df: DataFrame): RDD[InternalRow] = df.asInstanceOf[classic.DataFrame].queryExecution.toRdd
+
+  /** A DataFrame over rows already in Catalyst's form for `schema`. */
+  def dataFrame(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 }

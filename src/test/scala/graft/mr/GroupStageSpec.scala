@@ -69,7 +69,7 @@ class GroupStageSpec extends AnyFunSuite {
 
   /** Run the cat/cat job and mapAndGroup; both must give `want`. */
   private def assertGroups(n: Int, parity: Boolean, want: Seq[ArraySeq[Byte]],
-      combineBudget: Long = LineRuns.CombineBudget): Unit = {
+      combineBudget: Long = ByteRuns.CombineBudget): Unit = {
     val spec = this.spec(n, parity)
     val out = MapReduceJob.run(spark, spec, combineBudget)
     assert(out.map(_.getName) == Seq.tabulate(n)(i => f"outputfile${i + 1}%02d"))
@@ -94,11 +94,13 @@ class GroupStageSpec extends AnyFunSuite {
   }
 
   test("a combine budget below one partition's distinct lines emits runs early; outputs are unchanged") {
-    // 256 bytes holds about two distinct lines, so every map task emits a
-    // line in several runs and the reduce side must sum them again
+    // 256 bytes hold at most four distinct lines (the counter starts at
+    // 180 bytes and its first growth would pass 256), so every map task
+    // emits a line in several runs and the reduce side must sum them again
     val budget = 256L
-    val inOneTask = spark.sparkContext.parallelize(lines, 1)
-      .mapPartitions(ls => LineRuns.combine(ls, budget)).collect().toSeq
+    val corpus = lines.map(_ + "\n").mkString.getBytes(UTF_8)
+    val inOneTask = spark.sparkContext.parallelize(Seq(corpus), 1)
+      .mapPartitions(in => Pipes.lineRuns(in.map(new java.io.ByteArrayInputStream(_)), budget)).collect().toSeq
     assert(inOneTask.size > distinct.size, "the budget never made the combiner emit early")
     assert(inOneTask.groupMapReduce(_._1)(_._2)(_ + _) == distinct.map { case (l, n) => l -> n.toLong }.toMap)
     val rank = lines.map(key).distinct.sorted(byCodePoint).zipWithIndex.toMap

@@ -5,6 +5,8 @@ import java.nio.file.{Files, Paths}
 import java.util.Locale
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The Spark-native word count / grep must reproduce the reference's
@@ -17,9 +19,13 @@ class NativeTextJobsSpec extends AnyFunSuite {
   private lazy val spark = graft.Engine.session("test")
 
   test("native word count splits like wc_map.sh: the fixture corpus, brackets included") {
-    assert(NativeTextJobs.tokens("a[b]c\t\t d").toSeq == Seq("a", "b", "c", "", "", "d"))
-    assert(NativeTextJobs.tokens("").toSeq == Seq(""))
-    assert(NativeTextJobs.tokens("[x] ").toSeq == Seq("", "x", "", ""))
+    def tokens(line: String): Seq[String] = {
+      val t = new NativeTextJobs.Tokens(Iterator(InternalRow(UTF8String.fromString(line))))
+      Iterator.continually(t.next()).takeWhile(identity).map(_ => Pipes.decode(t.bytes, t.start, t.end)).toSeq
+    }
+    assert(tokens("a[b]c\t\t d") == Seq("a", "b", "c", "", "", "d"))
+    assert(tokens("") == Seq(""))
+    assert(tokens("[x] ") == Seq("", "x", "", ""))
     // the fixture corpus plus a file of non-ASCII capitals, which
     // `tr '[:upper:]' '[:lower:]'` leaves as they are
     val input = Files.createTempDirectory("native-wc-in-")
